@@ -56,55 +56,6 @@ def davg(col: Column | str, prec: int = 18, scale: int = 2) -> Column:
     return F.sum(dec(col, prec, scale)).cast("double") / F.count(F.lit(1))
 
 
-# --- unscaled-integer fast path (round 14, guide §1.2 "per-task work") ---
-#
-# A decimal PRODUCT inside a sum is the expensive shape: (12,2)x(5,2)
-# already carries per-row overflow checks, and the three-factor charge
-# product leaves the compact-long representation entirely (38-digit
-# BigDecimal per row). Measured at sf0.1 (lineitem, one agg pass):
-# sum(money*(1-rate)*(1+rate)) 1.14 s vs the identical-value unscaled
-# form 0.61 s. The rewrite keeps the decimal CASTS (so "" / rounding
-# semantics are unchanged) but extracts the exact unscaled integer and
-# multiplies in plain codegen longs; only the final SUM runs in decimal
-# (38,0) so partial/merge aggregation stays overflow-safe at any scale.
-#
-# Bit-exactness: unscaled(x, p, s) == 10^s * cast(x as decimal(p,s))
-# exactly; a product of unscaled longs is the unscaled value of the
-# decimal product at the summed scale; sum(decimal(38,0)) of those is
-# the unscaled exact total, and the final  / 10^scale  is a decimal
-# rescale (scale 6 result ≥ any scale used here → exact), so the
-# closing cast(double) rounds the SAME rational number the all-decimal
-# form rounds → identical bits. Oracles stay on the all-decimal SQL.
-#
-# Overflow domain (documented like llm/text.bigram_lm_scores): the
-# per-row long product must fit int64. For the TPC-H money/rate
-# columns (money < 1e8 with 2 decimals → unscaled < 1e10; rates < 1
-# → |100 ± rate_c| <= 200) the three-factor product is < 4e14, five
-# orders under the 9.2e18 long cap; the decimal(38,0) sum then holds
-# to ~1e38 — beyond any 100 TB corpus. Callers with wider domains use
-# the plain dsum/davg forms.
-
-
-def unscaled(col: Column | str, prec: int = 18, scale: int = 2) -> Column:
-    """Exact unscaled integer of ``cast(col as decimal(prec,scale))``
-    as a long: 10^scale * value. Requires 10^scale * |value| < 2^63."""
-    return (dec(col, prec, scale) * F.lit(10**scale)).cast("long")
-
-
-def dsum_unscaled(u: Column, scale: int) -> Column:
-    """Exact sum of an unscaled-integer expression presented as double
-    at 10^-scale — bit-identical to ``cast(sum(<decimal expr>) as
-    double)`` of the equivalent decimal-product expression."""
-    return (F.sum(u.cast("decimal(38,0)")) / F.lit(10**scale)).cast(
-        "double"
-    )
-
-
-def davg_unscaled(u: Column, scale: int) -> Column:
-    """``dsum_unscaled`` divided by count — the davg twin."""
-    return dsum_unscaled(u, scale) / F.count(F.lit(1))
-
-
 # --- SQL snippet builders so oracle strings use the identical recipe ---
 
 

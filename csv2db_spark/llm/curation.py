@@ -11,9 +11,16 @@ Scale shapes (100 TB corpus):
   are thousands of documents) — its distinct shingle set broadcasts; the
   corpus-side cost is one shingle pass + a broadcast-hash semi-ish join,
   no shuffle of the corpus.
-- stratified_sample: one window shuffle keyed by the stratum; rank is by
-  a salted md5 of the id, so the sample is deterministic, uniform within
-  the stratum, and reproducible across runs/engines.
+- stratified_sample: rank is by an md5 of the id, so the sample is
+  deterministic, uniform within the stratum, and reproducible across
+  runs/engines; one window shuffle keyed by the stratum for a small
+  input, the bucket-histogram plan above the size threshold.
+- The twin-shape operators here (stratified_sample, quantile_filter,
+  domain_cap, score_quantile_normalize, token_budget_sample) each pick
+  their shape once, from Catalyst's estimate of their input — for
+  quantile_filter, of the optional ``size_hint`` frame when given —
+  against the one ``spark.csv2db.adaptive.smallInputMaxBytes`` setting
+  (operators/ranking.small_shape). Both shapes return identical rows.
 - incremental_dedup: digests of the existing corpus are md5 longs; the
   incoming side anti-joins on the digest — shuffle carries 16-byte keys,
   never document bodies.
@@ -128,38 +135,31 @@ def stratified_sample(
     strata_col: str,
     k: int,
     id_col: str = "doc_id",
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Exactly ``min(k, |stratum|)`` rows per stratum, deterministically:
     rank by md5 of the id within each stratum (uniform pseudo-random
     order, stable across runs and engines), keep rank <= k.
 
-    ``rank_mode='window'`` sorts each stratum on one task — the
-    dominant stratum IS the corpus at 100 TB. ``'cutpoint'`` (the
-    default since round 14 — the admission key is its own uniform
-    md5 bucket, so no caller-supplied coarsening is needed) exploits
-    that the admission key is a uniform md5: a 2-hex-prefix bucket
-    histogram gives every bucket its exact rank offset, buckets whose
-    offset already exceeds ``k`` are dropped BEFORE any sort (for
-    k ≪ |stratum| that is ~every row), and survivors rank inside their
-    (stratum, bucket) — bounded tie sets, identical rows to the window
-    mode (tests/test_runtime_ops.py). ``'auto'`` (round 15) resolves by
-    Catalyst's input size estimate — window under the
-    spark.csv2db.adaptive.smallInputMaxBytes threshold, cutpoint
-    above."""
-    from csv2db_spark.operators.ranking import resolve_rank_mode
+    A small input (``small_shape(df)``) sorts each stratum
+    in one window — the cheapest plan at fixture size, but the
+    dominant stratum IS the corpus at 100 TB. Above the threshold the
+    plan exploits that the admission key is a uniform md5, so it is its
+    own bucket key: a 2-hex-prefix bucket histogram gives every bucket
+    its exact rank offset, buckets whose offset already exceeds ``k``
+    are dropped BEFORE any sort (for k ≪ |stratum| that is ~every row),
+    and survivors rank inside their (stratum, bucket) — bounded tie
+    sets, identical rows to the window shape
+    (tests/test_runtime_ops.py)."""
+    from csv2db_spark.operators.ranking import small_shape
 
-    rank_mode = resolve_rank_mode(df, rank_mode)
     rk = F.md5(F.col(id_col).cast("string"))
-    if rank_mode == "window":
+    if small_shape(df):
         w = Window.partitionBy(strata_col).orderBy(rk, F.col(id_col))
         return (
             df.withColumn("sample_rank", F.row_number().over(w))
             .where(F.col("sample_rank") <= k)
             .drop("sample_rank")
         )
-    if rank_mode != "cutpoint":
-        raise ValueError(f"unknown rank mode {rank_mode!r}")
     base = df.withColumn("_rk", rk).withColumn("_b", F.substring("_rk", 1, 2))
     hist = (
         base.groupBy(strata_col, "_b")
@@ -319,8 +319,8 @@ def quantile_filter(
     group_col: str = "lang",
     drop_frac: float = 0.25,
     id_col: str = "doc_id",
-    rank_mode: str = "window",
     rank_bucket: Column | None = None,
+    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group quantile filtering — the CCNet-style curation step "drop
     the worst X% of documents *within each language/domain bucket*"
@@ -341,45 +341,42 @@ def quantile_filter(
     (id, group, quality_score, pr) where pr is the conventional
     percent_rank (k/(n-1)) for reporting.
 
-    Scale shape, picked by ``rank_mode`` (gate-exact vs scale knob, the
-    materialize_stage pattern): ``'window'`` is ONE window shuffle
-    keyed by the group column — right at gate scale, but a skewed group
-    (one language dominating a web corpus) becomes a single-task total
-    sort over most of the data. ``'cutpoint'`` computes the identical
-    rank via operators/ranking.grouped_rank's histogram-offset +
-    tie-rank plan: no task ever sorts a whole group, and the output is
-    bit-identical (pinned in tests/test_runtime_ops.py), so gates hash
-    the same in either mode. For a CONTINUOUS score pass
-    ``rank_bucket`` (a monotone coarsening over ``quality_score``,
-    e.g. ``F.floor(F.col("quality_score") * 4096)``) — see
-    operators/ranking.grouped_rank: without it a distinct-per-doc score
-    makes the cutpoint histogram group-sized again.
+    Scale shape, picked once from the size of the (id, group, score)
+    projection it ranks, or of ``size_hint``: a small input gets ONE
+    window shuffle keyed by the group column — right at gate scale,
+    but a skewed group (one language dominating a web corpus) becomes
+    a single-task total sort over most of the data. A large input gets
+    the identical rank via operators/ranking.grouped_rank's
+    histogram-offset + tie-rank plan: no task ever sorts a whole group,
+    and the output is bit-identical (pinned in
+    tests/test_runtime_ops.py), so gates hash the same in either shape.
+    For a CONTINUOUS score pass ``rank_bucket`` (a monotone coarsening
+    over ``quality_score``, e.g. ``F.floor(F.col("quality_score") *
+    4096)``) — see operators/ranking.grouped_rank: without it a
+    distinct-per-doc score makes the cutpoint histogram group-sized
+    again.
     """
     from csv2db_spark.operators.ranking import (
-        grouped_rank,
+        _grouped_rank,
         join_totals_nullsafe,
-        resolve_rank_mode,
+        small_shape,
     )
 
     scored = docs.select(
         F.col(id_col), F.col(group_col), score.alias("quality_score")
     )
-    rank_mode = resolve_rank_mode(scored, rank_mode)
-    ranked = grouped_rank(
-        scored,
-        group_col,
-        "quality_score",
-        id_col,
-        mode=rank_mode,
-        bucket=rank_bucket,
+    small = small_shape(scored, size_hint)
+    ranked = _grouped_rank(
+        scored, [group_col], "quality_score", id_col,
+        descending=False, out_col="_rn", bucket=rank_bucket, small=small,
     )
-    if rank_mode == "window":
+    if small:
         ranked = ranked.withColumn(
             "_n", F.count(F.lit(1)).over(Window.partitionBy(group_col))
         )
     else:
         totals = scored.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
-        # null-safe: NULL groups rank in both modes (ADVICE r9)
+        # null-safe: NULL groups rank in both shapes
         ranked = join_totals_nullsafe(ranked, totals, [group_col])
     return (
         ranked.where(F.col("_rn") > F.floor(F.lit(drop_frac) * F.col("_n")))
@@ -849,7 +846,6 @@ def domain_cap(
     k: int = 5,
     salt: str = "cap",
     id_col: str = "doc_id",
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Per-domain document cap — the CCNet/Gopher-style guard against
     one domain flooding the training mix: keep at most ``k`` documents
@@ -859,30 +855,24 @@ def domain_cap(
     salt change redraws it). Returns the surviving rows plus their
     ``cap_rank``.
 
-    Scale shape, by ``rank_mode``: ``'window'`` is one window over the
-    group — with power-law domain sizes the heaviest domain is one
-    sort task. ``'cutpoint'`` is the stratified_sample plan: a
-    2-hex-prefix histogram of the (uniform) salted hash gives exact
+    Scale shape, by ``small_shape(docs)``: a small input is
+    one window over the group — with power-law domain sizes the
+    heaviest domain would be one sort task at corpus scale. A large one
+    takes the stratified_sample plan, since the salted hash is its own
+    uniform bucket key: a 2-hex-prefix histogram of it gives exact
     bucket offsets, buckets whose offset already exceeds ``k`` drop
     before any sort, survivors rank within bounded (group, bucket) tie
     sets — identical rows AND cap_rank values
-    (tests/test_runtime_ops.py). Cutpoint is the default since round
-    14: the salted hash is its own uniform bucket key. ``'auto'``
-    (round 15) resolves by Catalyst's input size estimate."""
-    from csv2db_spark.operators.ranking import resolve_rank_mode
+    (tests/test_runtime_ops.py)."""
+    from csv2db_spark.operators.ranking import checked_int_rank, small_shape
 
-    rank_mode = resolve_rank_mode(docs, rank_mode)
     h = F.md5(F.concat(F.lit(salt), F.lit("|"), F.col(id_col).cast("string")))
-    if rank_mode == "window":
+    if small_shape(docs):
         w = Window.partitionBy(group_col).orderBy(h, F.col(id_col))
         return (
             docs.withColumn("cap_rank", F.row_number().over(w))
             .where(F.col("cap_rank") <= k)
         )
-    if rank_mode != "cutpoint":
-        raise ValueError(f"unknown rank mode {rank_mode!r}")
-    from csv2db_spark.operators.ranking import checked_int_rank as _checked_int_rank
-
     base = docs.withColumn("_rk", h).withColumn("_b", F.substring("_rk", 1, 2))
     hist = (
         base.groupBy(group_col, "_b")
@@ -909,7 +899,7 @@ def domain_cap(
         # checked: a wrapped negative rank would sail through `<= k`
         .withColumn(
             "cap_rank",
-            _checked_int_rank(F.col("_off") + F.row_number().over(tw), "cap_rank"),
+            checked_int_rank(F.col("_off") + F.row_number().over(tw), "cap_rank"),
         )
         .where(F.col("cap_rank") <= k)
         .select(*docs.columns, "cap_rank")
@@ -954,7 +944,6 @@ def score_quantile_normalize(
     group_col: str,
     score_col: str,
     id_col: str = "doc_id",
-    rank_mode: str = "window",
     rank_bucket: Column | None = None,
 ) -> DataFrame:
     """Percent-rank a quality score WITHIN each source so scores become
@@ -971,27 +960,29 @@ def score_quantile_normalize(
     pct values, so the (rank-1)/(n-1) reconstruction is exact, not an
     approximation of tie-averaged percent_rank.
 
-    ``rank_mode='window'`` is one keyed window per group —
-    single-reducer total sort of the dominant source at corpus scale;
-    ``'cutpoint'`` derives the identical pct from
-    operators/ranking.grouped_rank's histogram-offset rank (bit-equal,
-    tests/test_runtime_ops.py). The common next step is a corpus-wide
-    quantile filter on ``pct`` (see quantile_filter), now fair across
-    sources."""
-    from csv2db_spark.operators.ranking import resolve_rank_mode
+    A small input (``small_shape(df)``) gets one keyed
+    window per group — a single-reducer total sort of the dominant
+    source at corpus scale, so a large input instead derives the
+    identical pct from operators/ranking.grouped_rank's
+    histogram-offset rank (bit-equal, tests/test_runtime_ops.py). The
+    common next step is a corpus-wide quantile filter on ``pct`` (see
+    quantile_filter), now fair across sources."""
+    from csv2db_spark.operators.ranking import (
+        _grouped_rank,
+        join_totals_nullsafe,
+        small_shape,
+    )
 
-    rank_mode = resolve_rank_mode(df, rank_mode)
-    if rank_mode == "window":
+    if small_shape(df):
         w = Window.partitionBy(group_col).orderBy(score_col, id_col)
         return df.withColumn("pct", F.percent_rank().over(w))
-    from csv2db_spark.operators.ranking import grouped_rank, join_totals_nullsafe
-
-    ranked = grouped_rank(
-        df, group_col, score_col, id_col, mode=rank_mode, bucket=rank_bucket
+    ranked = _grouped_rank(
+        df, [group_col], score_col, id_col,
+        descending=False, out_col="_rn", bucket=rank_bucket, small=False,
     )
     totals = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("_n"))
     return (
-        # null-safe: NULL groups rank in both modes (ADVICE r9)
+        # null-safe: NULL groups rank in both shapes
         join_totals_nullsafe(ranked, totals, [group_col])
         .withColumn(
             "pct",
@@ -1087,7 +1078,6 @@ def token_budget_sample(
     budget_tokens: int,
     group_col: str = "source",
     text_col: str = "text",
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """Token-budget corpus assembly: admit documents per group, in
     deterministic md5(doc_id) order, until the group's TOKEN budget is
@@ -1105,26 +1095,22 @@ def token_budget_sample(
     real mix tolerates).
 
     Output: (doc_id, group, n_tokens, cum_tokens) for admitted docs.
-    ``rank_mode='window'``: one window sort per group over (16-byte
-    rank, token count) pairs — token counts ride the scan
-    (size(split)), the text never shuffles; the dominant group is a
-    single-task sort at corpus scale. ``'cutpoint'`` (the default since
-    round 14 — no single-task group sorts in default plans): the
-    identical cumulative via operators/ranking.grouped_prefix_sum,
-    bucketed on a 2-hex md5 prefix — the admission key is uniform by
-    construction, so the 256 buckets split every group's sort ~evenly
-    (bit-equal, tests/test_runtime_ops.py). In cutpoint mode the sized
-    table (4 narrow columns, no text) is checkpointed first: the
-    cutpoint plan consumes it twice (histogram + join leg), and each
-    consumer would otherwise replan the upstream tokenize (guide
-    §2.4)."""
+    The shape is picked once by ``small_shape(docs)``. A
+    small input gets one window sort per group over (16-byte rank,
+    token count) pairs — token counts ride the scan (size(split)), the
+    text never shuffles; the dominant group would be a single-task sort
+    at corpus scale. A large input gets the identical cumulative via
+    operators/ranking.grouped_prefix_sum, bucketed on a 2-hex md5
+    prefix — the admission key is uniform by construction, so the 256
+    buckets split every group's sort ~evenly (bit-equal,
+    tests/test_runtime_ops.py). That plan consumes the sized table
+    (4 narrow columns, no text) twice (histogram + join leg), so it is
+    checkpointed first; each consumer would otherwise replan the
+    upstream tokenize."""
     from csv2db_spark.llm.corpus import tokens
-    from csv2db_spark.operators.ranking import (
-        grouped_prefix_sum,
-        resolve_rank_mode,
-    )
+    from csv2db_spark.operators.ranking import _grouped_prefix_sum, small_shape
 
-    rank_mode = resolve_rank_mode(docs, rank_mode)
+    small = small_shape(docs)
     n_tok = F.size(tokens(text_col)).cast("long")
     sized = docs.select(
         "doc_id",
@@ -1132,16 +1118,16 @@ def token_budget_sample(
         n_tok.alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("_rk"),
     )
-    if rank_mode == "cutpoint":
+    if not small:
         sized = sized.localCheckpoint(eager=True)
-    sized = grouped_prefix_sum(
+    sized = _grouped_prefix_sum(
         sized,
-        "group",
+        ["group"],
         ["_rk", "doc_id"],
         "n_tokens",
         bucket=F.substring("_rk", 1, 2),
-        mode=rank_mode,
         out_col="cum_tokens",
+        small=small,
     )
     return sized.where(F.col("cum_tokens") <= budget_tokens).select(
         "doc_id", "group", "n_tokens", "cum_tokens"

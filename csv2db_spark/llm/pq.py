@@ -279,8 +279,8 @@ def pq_query_codes(
     # ADC scans the WHOLE code table per query, so the scored table is
     # corpus-sized per query — rank in two stages like the exact
     # searches (§3.12 precedent), never |corpus| rows on one task
-    # (single window when the code table is estimated small — the
-    # round-15 adaptive rule, see similarity._topk_per_query).
+    # (single window when the code table is estimated small, see
+    # similarity._topk_per_query).
     return _topk_per_query(
         scored,
         k,

@@ -99,8 +99,8 @@ def _topk_per_query(
     n_shards: int = 64,
     size_hint: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact per-query top-k in TWO window stages (round-14, guide
-    §2.5 skew): a single ``Window.partitionBy(query_id)`` over a
+    """Exact per-query top-k in TWO window stages, against skew: a
+    single ``Window.partitionBy(query_id)`` over a
     corpus-sized scored table sorts |corpus| rows on ONE reduce task
     per query — the classic straggler once the corpus outgrows a task.
     Stage 1 ranks within (query_id, shard) — the deterministic shard
@@ -113,22 +113,22 @@ def _topk_per_query(
     shuffle bytes are unchanged; the per-query sort bound drops from
     |corpus| to k * n_shards rows.
 
-    Adaptive (round-15, VERDICT r14 item 4): the two-stage shape costs
-    one extra exchange, which at fixture size outweighs the sort it
-    parallelizes (driver-measured −14% on cosine). When ``size_hint``
-    — the scan-level corpus input, whose Catalyst size estimate is
-    real — is small (plans.small_input), the single window is used
-    instead. Both branches are bit-identical (the equivalence argument
-    above), so the switch is invisible to every oracle; the threshold
-    conf lets tests pin either shape."""
-    if size_hint is not None:
-        from csv2db_spark.plans import small_input
+    The two-stage shape costs one extra exchange, which at fixture
+    size outweighs the sort it parallelizes (−14% on cosine), so a
+    small input takes the single window instead. The decision is
+    ``operators/ranking.small_shape(scored, size_hint)``: callers pass
+    the scan-level corpus as ``size_hint``, because ``scored`` sits
+    below a cross join whose size estimate multiplies. Both branches
+    are bit-identical (the equivalence argument above), so the switch
+    is invisible to every oracle; the threshold setting lets tests pin
+    either shape."""
+    from csv2db_spark.operators.ranking import small_shape
 
-        if small_input(size_hint):
-            w = Window.partitionBy("query_id").orderBy(*order)
-            return scored.withColumn(
-                "rank", F.row_number().over(w)
-            ).where(F.col("rank") <= k)
+    if small_shape(scored, size_hint):
+        w = Window.partitionBy("query_id").orderBy(*order)
+        return scored.withColumn("rank", F.row_number().over(w)).where(
+            F.col("rank") <= k
+        )
     shard = F.pmod(F.xxhash64(F.col(shard_on)), F.lit(n_shards))
     w1 = Window.partitionBy(F.col("query_id"), shard).orderBy(*order)
     pruned = (

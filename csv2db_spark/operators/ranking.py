@@ -1,4 +1,4 @@
-"""Skew-safe exact per-group ranking — the scale mode behind the CCNet
+"""Skew-safe exact per-group ranking — the scale shape behind the CCNet
 bucketing family.
 
 ``row_number() OVER (PARTITION BY lang ORDER BY score)`` and its
@@ -9,7 +9,7 @@ plan. At 100 TB it is not: a web corpus is ~90% one language, so the
 the corpus — the one plan shape that cannot be saved by adding
 executors (r8 VERDICT, scale caveat #2).
 
-``mode='cutpoint'`` computes the SAME rank exactly, with no whole-group
+The cutpoint shape computes the SAME rank exactly, with no whole-group
 sort, by splitting the rank into two bounded pieces:
 
 1. **Run offset** — aggregate the corpus to a per-(group, score)
@@ -24,19 +24,29 @@ sort, by splitting the rank into two bounded pieces:
 
 Equivalence (pinned in tests/test_runtime_ops.py): the window order is
 (score, id) total, so rank decomposes uniquely into the run's offset
-plus the position among equal scores — both modes are bit-identical,
-letting gates hash in exact mode while the scale mode carries the same
-contract. Degenerate case: if one (group, score) pair dominates (a
-truly constant score over a giant group), its tie set IS the group and
-the skew returns — quantize or pre-bucket the score upstream; real
-quality scores (integer-scaled permilles, LM permilles) have bounded
-runs by construction.
+plus the position among equal scores — both shapes are bit-identical,
+so every gate hashes the same whichever shape its input size picks.
+Degenerate case: if one (group, score) pair dominates (a truly
+constant score over a giant group), its tie set IS the group and the
+skew returns — quantize or pre-bucket the score upstream; real quality
+scores (integer-scaled permilles, LM permilles) have bounded runs by
+construction.
 
 ``ntile`` needs no window at all once the rank exists: Spark's bucket
 assignment is a closed form over (rank, group size) — first n%k buckets
-get ceil(n/k) rows, the rest floor(n/k) — so the scale mode derives it
+get ceil(n/k) rows, the rest floor(n/k) — so the scale shape derives it
 arithmetically from the cutpoint rank plus a broadcast of per-group
 totals.
+
+Each public operator picks its shape once, from Catalyst's size
+estimate against the one ``spark.csv2db.adaptive.smallInputMaxBytes``
+setting (``small_shape`` → ``plans.small_input``): the plain window
+below it, the cutpoint plan above. There is no per-call shape
+argument; tests force either shape through the setting. Operators
+whose input sits below a join take an optional ``size_hint`` frame
+(the scan the input came from), since a join subtree's estimate is the
+product of its children; the hint must be a frame the input derives
+from, or the estimate is for the wrong data.
 """
 
 from __future__ import annotations
@@ -51,32 +61,29 @@ def _groups(group_cols: str | list[str]) -> list[str]:
     return [group_cols] if isinstance(group_cols, str) else list(group_cols)
 
 
-def resolve_rank_mode(df: DataFrame, mode: str) -> str:
-    """Resolve ``mode='auto'`` (round-15, VERDICT r14 item 4): 'window'
-    when Catalyst estimates the input small (plans.small_input — under
-    the spark.csv2db.adaptive.smallInputMaxBytes threshold), else
-    'cutpoint'. Both modes are bit-identical (module doc), so the
-    choice only moves the plan shape: the cutpoint plan's extra
-    exchanges cost ~0.2-0.5 s per gate at fixture size (driver r14)
-    while the window plan's whole-group single-task sort is the
-    unscalable shape at corpus size. Join subtrees OVERestimate
-    (product of children) and resolve to 'cutpoint' — the scale-safe
-    direction; pass the scan-level input's resolution explicitly where
-    a faithful local signal matters."""
-    if mode != "auto":
-        return mode
-    from csv2db_spark.plans import small_input
+def small_shape(df: DataFrame, size_hint: DataFrame | None = None) -> bool:
+    """True when a twin operator over ``df`` should take its single-sort
+    shape: ``plans.small_input`` on ``size_hint``, or on ``df`` itself
+    when no hint is given. Both shapes are bit-identical (module doc),
+    so the answer only moves the plan: the cutpoint plan's extra
+    exchanges cost ~0.2-0.5 s per gate at fixture size, while the
+    window plan's whole-group single-task sort is the unscalable shape
+    at corpus size. Join subtrees OVERestimate (product of children)
+    and answer False, the scale-safe direction; callers whose twin
+    input sits below a join pass the scan-level frame as ``size_hint``
+    so the estimate stays faithful."""
+    from csv2db_spark import plans
 
-    return "window" if small_input(df) else "cutpoint"
+    return plans.small_input(df if size_hint is None else size_hint)
 
 
 _INT_MAX = 2_147_483_647
 
 
 def checked_int_rank(rank: Column, what: str) -> Column:
-    """Cast a long rank to int for window-mode dtype parity, ERRORING
-    past 2^31-1 instead of silently wrapping (ADVICE r9): the cutpoint
-    mode exists precisely for groups that can exceed int range, where a
+    """Cast a long rank to int for window-shape dtype parity, ERRORING
+    past 2^31-1 instead of silently wrapping: the cutpoint shape
+    exists precisely for groups that can exceed int range, where a
     wrapped rank would silently corrupt every downstream cut. The guard
     is one codegen'd comparison per row; the assert_true branch only
     evaluates on overflow."""
@@ -94,10 +101,10 @@ def join_totals_nullsafe(
 ) -> DataFrame:
     """Broadcast-join per-group totals back onto ranked rows with
     NULL-SAFE key equality. A plain ``join(totals, cols)`` drops rows
-    whose group value is NULL — while the window modes rank NULL groups
+    whose group value is NULL — while the window shapes rank NULL groups
     as a real partition (and grouped_rank's histogram join is already
-    eqNullSafe) — so the documented bit-identical mode equivalence broke
-    for NULL-group data (ADVICE r9). Null-safe equality is a supported
+    eqNullSafe) — so the bit-identical shape equivalence would break
+    for NULL-group data. Null-safe equality is a supported
     hash-join key, so this stays a BroadcastHashJoin."""
     renamed = totals.select(
         *[F.col(c).alias(f"_t_{c}") for c in group_cols],
@@ -118,19 +125,19 @@ def grouped_rank(
     order_col: str,
     id_col: str,
     descending: bool = False,
-    mode: str = "window",
     out_col: str = "_rn",
     bucket: Column | None = None,
+    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY group ORDER BY order_col
     [DESC], id_col)`` — exact, total (the id tiebreak), identical in
-    both modes. ``mode='window'`` is the plain window (gate scale);
-    ``mode='cutpoint'`` is the histogram-offset + tie-rank plan with no
-    whole-group DOC sort (see module doc). NULL scores order the way
-    the window would (NULLS FIRST asc / NULLS LAST desc); the histogram
-    join is null-safe so they rank, not vanish.
+    both shapes. A small input (``small_shape(df, size_hint)``) gets
+    the plain window; a large one the histogram-offset + tie-rank plan
+    with no whole-group DOC sort (see module doc). NULL scores order
+    the way the window would (NULLS FIRST asc / NULLS LAST desc); the
+    histogram join is null-safe so they rank, not vanish.
 
-    ``bucket`` (cutpoint mode only) is an ORDER-COARSENING of the score
+    ``bucket`` (cutpoint shape only) is an ORDER-COARSENING of the score
     — any monotone nondecreasing expression over it, e.g.
     ``F.floor(F.col(score) * 4096)`` for a [0, 1] probability. Without
     it the histogram is per DISTINCT score, which is only small for
@@ -143,14 +150,26 @@ def grouped_rank(
     fixes: a group where one exact (score)—or (bucket)—value dominates;
     then the ordering lives entirely in the id tiebreak and the tie set
     IS the group.)"""
-    gs = _groups(group_cols)
-    mode = resolve_rank_mode(df, mode)
+    return _grouped_rank(
+        df, _groups(group_cols), order_col, id_col, descending, out_col,
+        bucket, small=small_shape(df, size_hint),
+    )
+
+
+def _grouped_rank(
+    df: DataFrame,
+    gs: list[str],
+    order_col: str,
+    id_col: str,
+    descending: bool,
+    out_col: str,
+    bucket: Column | None,
+    small: bool,
+) -> DataFrame:
     ordc = F.col(order_col).desc() if descending else F.col(order_col).asc()
-    if mode == "window":
+    if small:
         w = Window.partitionBy(*gs).orderBy(ordc, F.col(id_col).asc())
         return df.withColumn(out_col, F.row_number().over(w))
-    if mode != "cutpoint":
-        raise ValueError(f"unknown rank mode {mode!r}")
     ord_alias = "_gr_ord"
     base = df.withColumn(ord_alias, F.col(order_col)).withColumn(
         "_gr_b", bucket if bucket is not None else F.col(order_col)
@@ -191,7 +210,7 @@ def grouped_rank(
                 F.col("_gr_below") + F.row_number().over(tw), "cutpoint rank"
             ),
         )
-        .select(*df.columns, out_col)  # window-mode column order parity
+        .select(*df.columns, out_col)  # window-shape column order parity
     )
 
 
@@ -201,35 +220,45 @@ def grouped_prefix_sum(
     order_cols: list[str],
     value_col: str,
     bucket: Column,
-    mode: str = "window",
     out_col: str = "_cum",
 ) -> DataFrame:
     """Inclusive running sum of ``value_col`` over (group) ordered by
-    ``order_cols`` — the token-budget / admission-order shape. The
-    window mode is the plain unbounded-preceding frame (one per-group
-    total sort). ``mode='cutpoint'`` needs ``bucket``: an ORDER-
-    COARSENING of ``order_cols[0]`` (bucket(r1) < bucket(r2) must imply
-    order(r1) < order(r2) — e.g. a fixed-length prefix of the md5 rank
-    string, whose lexicographic order refines the prefix order). The
-    running sum then decomposes exactly into the bucket's offset (a
-    cumulative over the per-(group, bucket) HISTOGRAM) plus the
-    within-bucket prefix (a window keyed by (group, bucket)): with a
-    uniformly-distributed rank key — which md5 admission order is by
-    construction — every sort task holds ~|group|/|buckets| rows, never
-    a whole group. Bit-identical to the window mode
-    (tests/test_runtime_ops.py)."""
-    gs = _groups(group_cols)
-    mode = resolve_rank_mode(df, mode)
+    ``order_cols`` — the token-budget / admission-order shape. A small
+    input (``small_shape(df)``) gets the plain
+    unbounded-preceding frame (one per-group total sort). A large one
+    uses ``bucket``: an ORDER-COARSENING of ``order_cols[0]``
+    (bucket(r1) < bucket(r2) must imply order(r1) < order(r2) — e.g. a
+    fixed-length prefix of the md5 rank string, whose lexicographic
+    order refines the prefix order). The running sum then decomposes
+    exactly into the bucket's offset (a cumulative over the
+    per-(group, bucket) HISTOGRAM) plus the within-bucket prefix (a
+    window keyed by (group, bucket)): with a uniformly-distributed rank
+    key — which md5 admission order is by construction — every sort
+    task holds ~|group|/|buckets| rows, never a whole group.
+    Bit-identical to the window shape (tests/test_runtime_ops.py)."""
+    return _grouped_prefix_sum(
+        df, _groups(group_cols), order_cols, value_col, bucket, out_col,
+        small=small_shape(df),
+    )
+
+
+def _grouped_prefix_sum(
+    df: DataFrame,
+    gs: list[str],
+    order_cols: list[str],
+    value_col: str,
+    bucket: Column,
+    out_col: str,
+    small: bool,
+) -> DataFrame:
     ords = [F.col(c) for c in order_cols]
-    if mode == "window":
+    if small:
         w = (
             Window.partitionBy(*gs)
             .orderBy(*ords)
             .rowsBetween(Window.unboundedPreceding, 0)
         )
         return df.withColumn(out_col, F.sum(value_col).over(w))
-    if mode != "cutpoint":
-        raise ValueError(f"unknown prefix-sum mode {mode!r}")
     base = df.withColumn("_gp_b", bucket)
     hist = (
         base.groupBy(*gs, "_gp_b")
@@ -269,33 +298,26 @@ def grouped_ntile(
     id_col: str,
     k: int,
     descending: bool = False,
-    mode: str = "window",
     out_col: str = "bucket",
     bucket: Column | None = None,
+    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """``ntile(k) OVER (PARTITION BY group ORDER BY order_col [DESC],
-    id_col)`` in both modes. The cutpoint mode reconstructs Spark's
-    ntile arithmetic exactly: with n group rows, the first ``n % k``
-    buckets hold ``n // k + 1`` rows, the rest ``n // k`` — a closed
-    form over the cutpoint rank plus one broadcast join of per-group
-    totals (|groups| rows — languages/domains, never corpus-sized).
-    ``bucket`` passes through to ``grouped_rank`` (order-coarsening for
-    continuous scores)."""
+    id_col)`` in both shapes, picked by ``small_shape(df, size_hint)``.
+    The cutpoint shape reconstructs Spark's ntile arithmetic exactly:
+    with n group rows, the first ``n % k`` buckets hold ``n // k + 1``
+    rows, the rest ``n // k`` — a closed form over the cutpoint rank
+    plus one broadcast join of per-group totals (|groups| rows —
+    languages/domains, never corpus-sized). ``bucket`` passes through
+    to ``grouped_rank`` (order-coarsening for continuous scores)."""
     gs = _groups(group_cols)
-    mode = resolve_rank_mode(df, mode)
-    if mode == "window":
+    if small_shape(df, size_hint):
         ordc = F.col(order_col).desc() if descending else F.col(order_col).asc()
         w = Window.partitionBy(*gs).orderBy(ordc, F.col(id_col).asc())
         return df.withColumn(out_col, F.ntile(k).over(w))
-    ranked = grouped_rank(
-        df,
-        gs,
-        order_col,
-        id_col,
-        descending,
-        mode=mode,
-        out_col="_gr_rn",
-        bucket=bucket,
+    ranked = _grouped_rank(
+        df, gs, order_col, id_col, descending, out_col="_gr_rn",
+        bucket=bucket, small=False,
     )
     totals = df.groupBy(*gs).agg(F.count(F.lit(1)).alias("_gr_n"))
     n, rn = F.col("_gr_n"), F.col("_gr_rn")
@@ -311,5 +333,5 @@ def grouped_ntile(
     return (
         join_totals_nullsafe(ranked, totals, gs)
         .withColumn(out_col, bucket.cast("int"))
-        .select(*df.columns, out_col)  # window-mode column order parity
+        .select(*df.columns, out_col)  # window-shape column order parity
     )

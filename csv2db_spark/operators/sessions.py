@@ -144,19 +144,20 @@ def rfm_scores(
     segments on any partitioning and in the SQL oracle. The monetary
     sum rides DECIMAL (order-independent); NULL measurements count 0.
 
-    Scale shape (round-15, guide §2.5): one map-combined groupBy(user)
+    Scale shape: one map-combined groupBy(user)
     over the event stream — the only corpus-sized shuffle — then three
     total-order ntiles over the |users|-row aggregate. Users GROW with
     the corpus, so a plain unpartitioned ntile is a single-task global
-    sort of the user dimension three times over; each ntile now routes
-    through ``operators/ranking.grouped_ntile`` with ``mode='auto'``
-    (resolved once from the per-user aggregate's size estimate): the
-    exact window at gate scale, the histogram-offset cutpoint rank —
-    bit-identical, no whole-table sort — above the threshold. Order
-    coarsenings: day-truncated recency, the integer event count, and
-    the floor of the decimal spend keep the cutpoint histograms
+    sort of the user dimension three times over; each ntile routes
+    through ``operators/ranking.grouped_ntile`` with the per-user
+    aggregate as its size hint (the later ntiles' inputs carry the
+    earlier ones' columns, so every ntile decides on the same frame):
+    the exact window at gate scale, the histogram-offset cutpoint
+    rank — bit-identical, no whole-table sort — above the threshold.
+    Order coarsenings: day-truncated recency, the integer event count,
+    and the floor of the decimal spend keep the cutpoint histograms
     bounded."""
-    from csv2db_spark.operators.ranking import grouped_ntile, resolve_rank_mode
+    from csv2db_spark.operators.ranking import grouped_ntile
 
     per_user = events.groupBy(F.col(user_col).alias("user_id")).agg(
         F.max(ts_col).alias("last_ts"),
@@ -165,7 +166,6 @@ def rfm_scores(
             F.coalesce(F.col(value_col), F.lit(0.0)).cast("decimal(18,3)")
         ).alias("_monetary_dec"),
     )
-    mode = resolve_rank_mode(per_user, "auto")
     scored = per_user.withColumn("_g", F.lit(0))
     for out_col, order_col, bucket in (
         ("_nt_r", "last_ts", F.date_trunc("day", F.col("last_ts"))),
@@ -179,9 +179,9 @@ def rfm_scores(
             "user_id",
             n_tiles,
             descending=True,
-            mode=mode,
             out_col=out_col,
             bucket=bucket,
+            size_hint=per_user,
         )
     n1 = n_tiles + 1
     return (

@@ -48,19 +48,20 @@ def plan_stats(df: DataFrame) -> dict:
     }
 
 
-# --- adaptive plan-shape selection (round 15, VERDICT r14 item 4) ---
+# --- adaptive plan-shape selection ---
 #
 # Several operators carry TWO bit-identical plan shapes: a gate-scale
 # shape (one keyed window / single per-query sort) and a 100 TB shape
-# (two-stage shard rank, histogram-offset cutpoint rank). Round 14
-# defaulted the scale shapes unconditionally and paid their extra
-# exchanges at fixture size (driver-measured: cosine −14%, curation v2
-# −45% locally). The adaptive rule picks the shape from Catalyst's own
-# size estimate of the operator's input: below the threshold the
-# single-sort shape is strictly better (the whole input fits one task's
-# sort comfortably); above it the sharded shape is the only one that
-# scales. Both branches produce bit-identical rows, pinned by the
-# modes-equal tests, so the choice is invisible to every oracle.
+# (two-stage shard rank, histogram-offset cutpoint rank). Taking the
+# scale shapes unconditionally pays their extra exchanges at fixture
+# size (measured: cosine −14%, curation v2 −45%). So the shape is
+# picked here, and only here, from Catalyst's own size estimate of the
+# operator's input: below the threshold the single-sort shape is
+# strictly better (the whole input fits one task's sort comfortably);
+# above it the sharded shape is the only one that scales. Both
+# branches produce bit-identical rows, pinned by the modes-equal
+# tests, so the choice is invisible to every oracle. No operator takes
+# a per-call shape argument; tests and deployments move the threshold.
 
 ADAPTIVE_SMALL_KEY = "spark.csv2db.adaptive.smallInputMaxBytes"
 ADAPTIVE_SMALL_DEFAULT = 256 * 1024 * 1024
@@ -69,8 +70,9 @@ ADAPTIVE_SMALL_DEFAULT = 256 * 1024 * 1024
 def est_size_bytes(df: DataFrame) -> int:
     """Catalyst's optimized-plan size estimate in bytes. Driver-side
     planning only — no job runs. File sources report real file sizes
-    scaled through projections/filters, and a localCheckpoint carries
-    the stats of the plan it truncated (Spark 4.1). JOIN estimates are
+    scaled through projections (NOT through filters, see small_input),
+    and a localCheckpoint carries the stats of the plan it truncated
+    (Spark 4.1). JOIN estimates are
     product-of-children OVERestimates (measured: a self-join of a
     0.6 MB projection estimates 56 GB), which the adaptive rule reads
     as NOT small — the scale-safe direction; callers wanting a faithful
@@ -89,7 +91,18 @@ def small_input(df: DataFrame) -> bool:
     pinning the scale shape) can move it without code changes; the
     default keeps fixture-scale inputs on the fast local shape while
     anything within an order of magnitude of a real corpus takes the
-    skew-safe shape."""
+    skew-safe shape.
+
+    Filters do not shrink the estimate. With cost-based optimisation
+    off (session.py leaves ``spark.sql.cbo.enabled`` at its default,
+    false) Catalyst carries a scan's ``sizeInBytes`` through a
+    ``where`` unchanged: sf0.1 lineitem estimates 10,818,932 B both
+    unfiltered and under ``l_orderkey = 1``. Only projections shrink
+    it (1,492,266 B for one column). A heavily filtered large scan
+    therefore reads as large and takes the scale shape — the
+    scale-safe direction, pinned in tests/test_plan_shapes.py. Turning
+    CBO on would let row-count estimates through filters and needs
+    this rule revisited."""
     conf = df.sparkSession.conf
     threshold = int(conf.get(ADAPTIVE_SMALL_KEY, str(ADAPTIVE_SMALL_DEFAULT)))
     return est_size_bytes(df) < threshold

@@ -1690,12 +1690,9 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cutpoint plan has three consumers (histogram, tie-rank leg,
     # total), and each would otherwise replan the corpus-bigram LM
     # scoring subtree (the v6 §3.10 lesson); four narrow columns.
-    # Round-15: the mode resolves adaptively from the SCAN-level corpus
-    # estimate (the LM join's estimate multiplies and overshoots) —
-    # single window at fixture size, cutpoint above the threshold.
-    from csv2db_spark.operators.ranking import resolve_rank_mode
-
-    rank_mode = resolve_rank_mode(docs, "auto")
+    # The shape is decided on the SCAN-level corpus (the LM join's
+    # estimate multiplies and overshoots) — single window at fixture
+    # size, cutpoint above the threshold.
     scored = materialize_stage(
         quality.join(lm, "doc_id")
         .select("doc_id", "source", "n_words", "avg_next_token_prob")
@@ -1706,9 +1703,9 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_g",
         "avg_next_token_prob",
         "doc_id",
-        mode=rank_mode,
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
         out_col="rn",
+        size_hint=docs,
     )
     totals = scored.groupBy("_g").agg(F.count(F.lit(1)).alias("n"))
     survivors = join_totals_nullsafe(ranked, totals, ["_g"]).where(
@@ -3131,27 +3128,23 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     triage: keep head, sample middle, drop tail — per language, so
     high-resource languages don't crowd out the rest. Model-corpus
     scan + corpus scan + one |docs|-row window; the LM itself is a
-    |vocab|-row broadcastable table. Since r13 (VERDICT r12 item 4) the
-    gate runs rank_mode='cutpoint' — the 100-TB plan: identical
-    terciles from the histogram-offset rank, no per-language
-    single-task sort (operators/ranking.grouped_ntile); 'window' stays
-    as the exact-twin knob and the modes are equality-pinned in
-    tests/test_runtime_ops.py."""
+    |vocab|-row broadcastable table. The terciles come from
+    operators/ranking.grouped_ntile: the plain window at fixture size,
+    above the size threshold the histogram-offset rank with no
+    per-language single-task sort — identical terciles, pinned in
+    tests/test_plan_shapes.py."""
     return ccnet_buckets(spark, sf_dir)
 
 
-def ccnet_buckets(
-    spark: SparkSession, sf_dir: str, rank_mode: str = "auto"
-) -> DataFrame:
-    """q_text_ccnet_buckets body with the tercile plan knob exposed
-    (see operators/ranking for the window-vs-cutpoint tradeoff;
-    'auto' resolves from the scan-level corpus size — the LM-scored
-    ntile input contains joins whose size estimates multiply)."""
+def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """q_text_ccnet_buckets body. The tercile shape is decided on the
+    scan-level corpus: the LM-scored ntile input contains joins whose
+    size estimates multiply (21.9 GB estimated against 0.59 MB for the
+    ``documents`` scan at sf0.1)."""
     from csv2db_spark.llm.text import bigram_lm_scores
-    from csv2db_spark.operators.ranking import grouped_ntile, resolve_rank_mode
+    from csv2db_spark.operators.ranking import grouped_ntile
 
     docs = load_table(spark, sf_dir, "documents")
-    rank_mode = resolve_rank_mode(docs, rank_mode)
     ref = docs.where(
         F.col("source").isin("src0", "src1", "src2", "src3", "src4")
     )
@@ -3169,11 +3162,11 @@ def ccnet_buckets(
         "doc_id",
         3,
         descending=True,
-        mode=rank_mode,
         out_col="ppl_bucket",
         # continuous [0,1] probability: the 4096-cell quantization keeps
         # the cutpoint histogram bucket-sized instead of corpus-sized
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
+        size_hint=docs,
     )
 
 
@@ -3590,12 +3583,11 @@ def q_curate_ccnet_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     identically). Per (lang, bucket): total docs and kept docs — head
     rows must show n_kept = n_docs, tail rows n_kept = 0, middle rows
     the coin's exact outcome. Terciles route through
-    operators/ranking.grouped_ntile in cutpoint mode (the r13 default
-    plan: no per-language single-task sort; bit-equal to window mode
-    per tests/test_runtime_ops.py)."""
+    operators/ranking.grouped_ntile, as in q_text_ccnet_buckets: no
+    per-language single-task sort above the size threshold."""
     from csv2db_spark.llm.curation import md5_threshold
     from csv2db_spark.llm.text import bigram_lm_scores
-    from csv2db_spark.operators.ranking import grouped_ntile, resolve_rank_mode
+    from csv2db_spark.operators.ranking import grouped_ntile
 
     docs = load_table(spark, sf_dir, "documents")
     ref = docs.where(
@@ -3611,13 +3603,13 @@ def q_curate_ccnet_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         3,
         descending=True,
-        # round-15 adaptive: resolve from the scan-level corpus (the
-        # LM join's size estimate multiplies and overshoots)
-        mode=resolve_rank_mode(docs, "auto"),
         out_col="ppl_bucket",
         # continuous [0,1] probability: 4096-cell order-coarsening keeps
         # the cutpoint histogram bucket-sized (see grouped_rank)
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
+        # decided on the scan-level corpus: the LM join's size estimate
+        # multiplies and overshoots
+        size_hint=docs,
     ).drop("avg_next_token_prob")
     coin = F.md5(
         F.concat(F.lit("ccnet-mid"), F.col("doc_id").cast("string"))

@@ -50,20 +50,14 @@ GROUP BY l_returnflag, l_linestatus
 
 @query("q01_pricing_summary", oracle=_ORACLE, bench=True)
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-14 NEGATIVE RESULT (guide §1.1 — re-measure in the real
-    # harness): the unscaled-integer fast path (functions/numeric.py)
-    # was applied here early in the round on the strength of an
-    # isolated one-aggregate measurement (1.14 vs 0.61 s for the charge
-    # product), but the GATE-level interleaved two-tree A/B showed the
-    # full q01 consistently ~0.25-0.3 s SLOWER with it (quiet-leg
-    # floors 1.35/1.40/1.78 all-decimal vs 1.65/1.66/2.06 unscaled over
-    # three leg-pairs): extracting each unscaled value costs a per-row
-    # DECIMAL multiply by 10^s per column, which at seven aggregates
-    # outweighs the BigDecimal products it avoids, while the simple
-    # sums (qty, base price) stay compact-long decimal adds either way.
-    # Reverted to the all-decimal form; the unscaled helpers remain for
-    # shapes where the product, not the extraction, dominates (the
-    # shared _revenue() aggregate measured flat and keeps them).
+    # All-decimal form on purpose. An unscaled-integer rewrite (exact
+    # longs multiplied in codegen, one decimal(38,0) sum) beat it on an
+    # isolated charge-product aggregate (0.61 vs 1.14 s at sf0.1), but
+    # the full gate measured ~0.25-0.3 s SLOWER in an interleaved A/B:
+    # extracting each unscaled value costs a per-row decimal multiply
+    # by 10^s per column, which across seven aggregates outweighs the
+    # BigDecimal products it avoids. queries/relational._revenue()
+    # measured the same.
     li = load_table(spark, sf_dir, "lineitem")
     disc_price = money("l_extendedprice") * (F.lit(1) - rate("l_discount"))
     charge = disc_price * (F.lit(1) + rate("l_tax"))

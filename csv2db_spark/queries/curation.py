@@ -503,10 +503,10 @@ def q_curate_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantiles self-calibrate where a global threshold would gut
     low-resource languages. The cut drops exactly floor(0.25*n) rows
     per group (row_number/count, integer-exact — small groups are never
-    over-dropped). Round-14 (guide §2.5): cutpoint rank instead of the
-    per-lang window — the window sorts each whole language on one task;
-    the histogram-offset rank is bit-identical under the same total
-    (score, doc_id) order. The bucket coarsens the continuous
+    over-dropped). Above the size threshold the rank is the cutpoint
+    plan, since the per-lang window sorts each whole language on one
+    task; the histogram-offset rank is bit-identical under the same
+    total (score, doc_id) order. The bucket coarsens the continuous
     mean-word-length score (range is a few tens) to floor(score*256),
     keeping the histogram small while tie sorts stay bounded by bucket
     occupancy."""
@@ -518,7 +518,6 @@ def q_curate_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         score,
         group_col="lang",
         drop_frac=0.25,
-        rank_mode="auto",
         rank_bucket=F.floor(F.col("quality_score") * 256),
     )
 
@@ -652,31 +651,28 @@ def q_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spaces = F.length("text") - F.length(F.replace(F.col("text"), F.lit(" ")))
     score = F.length("text").cast("double") / (F.lit(1) + spaces)
-    # Adaptive rank shape (round-15, VERDICT r14 item 4): the cutpoint
-    # rank never sorts a whole language on one task — the 100 TB shape —
-    # but its histogram/tie-rank exchanges cost ~0.4 s at fixture size
-    # (driver r14: 0.475→0.865 s). The mode resolves from Catalyst's
-    # size estimate of the scored projection; both modes are
-    # bit-identical (tests/test_runtime_ops.py). In cutpoint mode the
-    # scored sample (three narrow columns, no text) is checkpointed
-    # first because that plan has three consumers (histogram, tie-rank
-    # join leg, group totals) — the v6 pattern from r14 §3.10; the
-    # window plan has one consumer chain, so the checkpoint would be
-    # pure overhead there.
-    from csv2db_spark.operators.ranking import resolve_rank_mode
+    # Rank shape: quantile_filter's cutpoint rank never sorts a whole
+    # language on one task — the 100 TB shape — but its histogram and
+    # tie-rank exchanges cost ~0.4 s at fixture size (0.475→0.865 s
+    # measured), so it only runs when the scored projection is not
+    # small. Both shapes are bit-identical (tests/test_runtime_ops.py).
+    # The cutpoint plan has three consumers of the scored sample
+    # (histogram, tie-rank join leg, group totals), so it is
+    # checkpointed first (three narrow columns, no text); the window
+    # plan has one consumer chain, where the checkpoint would be pure
+    # overhead. quantile_filter decides on the same unstaged projection.
+    from csv2db_spark import plans
     from csv2db_spark.operators.stage import materialize_stage
 
     scored = samp.select("doc_id", "lang", score.alias("quality_score"))
-    rank_mode = resolve_rank_mode(scored, "auto")
-    if rank_mode == "cutpoint":
-        scored = materialize_stage(scored)
+    staged = scored if plans.small_input(scored) else materialize_stage(scored)
     kept_ids = C.quantile_filter(
-        scored,
+        staged,
         F.col("quality_score"),
         group_col="lang",
         drop_frac=0.25,
-        rank_mode=rank_mode,
         rank_bucket=F.floor(F.col("quality_score") * 4096),
+        size_hint=scored,
     ).select("doc_id")
     kept = samp.join(kept_ids, "doc_id")
     exact = kept.groupBy("lang", "text").agg(F.min("doc_id").alias("doc_id"))
@@ -1206,18 +1202,16 @@ def q_curate_score_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (llm/curation.score_quantile_normalize) — makes scores comparable
     across heterogeneous sources before a corpus-wide quantile filter.
     (rank-1)/(n-1) is an exact integer ratio, so the normalized scores
-    hash-match. Round-14 (guide §2.5): cutpoint rank instead of one
-    window per source (single-task sort of the dominant source);
-    n_chars is an integer, so it is its own bounded histogram bucket —
-    no coarsening expression needed."""
+    hash-match. Above the size threshold the rank is the cutpoint plan
+    instead of one window per source (a single-task sort of the
+    dominant source); n_chars is an integer, so it is its own bounded
+    histogram bucket — no coarsening expression needed."""
     from csv2db_spark.llm.curation import score_quantile_normalize
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    return score_quantile_normalize(
-        docs, "source", "n_chars", rank_mode="auto"
-    )
+    return score_quantile_normalize(docs, "source", "n_chars")
 
 
 @query(
@@ -1552,7 +1546,6 @@ def curation_v6_pipeline(
     sf_dir: str,
     materialize: str = "local",
     stage_path: str | None = None,
-    rank_mode: str = "auto",
 ) -> DataFrame:
     """The v6 pipeline body with its scale knobs exposed:
     ``materialize`` picks how the multi-consumer survivor set persists
@@ -1560,14 +1553,13 @@ def curation_v6_pipeline(
     (eager localCheckpoint — right at gate scale, but executor-cached:
     an executor loss on a real cluster kills the truncated lineage and
     the job restarts); a 100 TB run passes 'reliable' + a staging dir so
-    the boundary is durable parquet. ``rank_mode`` picks the CCNet
-    tercile plan the same way: 'cutpoint' (the DEFAULT since r13,
-    VERDICT r12 item 4) derives the terciles from
-    operators/ranking.grouped_ntile's histogram-offset rank with no
-    whole-group sort; 'window' is the plain per-language ntile — a
-    single-task sort of the dominant language at corpus scale, kept as
-    the exact-twin knob. All modes are row-for-row equal
-    (tests/test_runtime_ops.py), so the gate hashes identically."""
+    the boundary is durable parquet. The CCNet tercile plan is picked
+    from the size of the augmented corpus: the plain per-language ntile
+    at fixture size, operators/ranking.grouped_ntile's histogram-offset
+    rank with no whole-group sort above the threshold, where the window
+    would be a single-task sort of the dominant language. Both shapes
+    are row-for-row equal (tests/test_plan_shapes.py), so the gate
+    hashes identically."""
     from csv2db_spark.llm import dedup as D
     from csv2db_spark.llm.text import bigram_lm_scores
     from csv2db_spark.operators.stage import materialize_stage
@@ -1578,12 +1570,6 @@ def curation_v6_pipeline(
     # round-8). The shingle subtree still reads only (doc_id, text):
     # Catalyst prunes lang/source below the explode.
     aug = augmented_docs(spark, sf_dir, with_meta=True)
-    # 'auto' resolves the tercile plan from the SCAN-level corpus size
-    # (round 15): the ntile input below contains joins, whose size
-    # estimates multiply and would always resolve scale-side.
-    from csv2db_spark.operators.ranking import resolve_rank_mode
-
-    rank_mode = resolve_rank_mode(aug, rank_mode)
     # distinct=False + pair_filter: containment_pairs dedups (doc_id, s)
     # on its own shared postings exchange (round-14), and this pipeline
     # only ever keeps the doc_a > doc_b direction, so the directed
@@ -1631,11 +1617,14 @@ def curation_v6_pipeline(
         "doc_id",
         3,
         descending=True,
-        mode=rank_mode,
         out_col="b",
         # order-coarsening for the continuous probability (see
         # operators/ranking.grouped_rank): histogram stays 4096 cells
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
+        # the tercile shape is decided on the augmented corpus: the
+        # ntile input contains joins, whose size estimates multiply and
+        # would always pick the scale shape
+        size_hint=aug,
     )
     return (
         bucketed.where(F.col("b") <= 2)

@@ -36,12 +36,13 @@ _REV = "cast(sum({m} * (1 - {r})) as double)".format(
 
 
 def _revenue():
-    # All-decimal form. The round-14 unscaled-integer rewrite was reverted
-    # here too (round 15): the driver's cold-JVM protocol measured both
-    # consumers slower (q_join_inner_topk best-of-3 0.656→0.885,
-    # q_join_multiway_revenue 1.059→1.248) — the per-row decimal multiply
-    # inside unscaled() extraction costs more than the BigDecimal product
-    # it avoids, the same mechanism that reverted q01 in round 14.
+    # All-decimal form on purpose. An unscaled-integer rewrite (exact
+    # longs multiplied in codegen, one decimal(38,0) sum) measured both
+    # consumers slower on a cold JVM (q_join_inner_topk best-of-3
+    # 0.656→0.885 s, q_join_multiway_revenue 1.059→1.248 s): extracting
+    # each unscaled value costs a per-row decimal multiply by 10^s, more
+    # than the BigDecimal product it avoids — the same reason q01 keeps
+    # the decimal form (queries/core.py).
     return F.sum(money("l_extendedprice") * (F.lit(1) - rate("l_discount"))).cast(
         "double"
     )

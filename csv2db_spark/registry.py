@@ -87,137 +87,6 @@ CHECK_FIRST: tuple[str, ...] = (
     "q_join_left_nulls", "q_pipeline_curation_v8",
     "q_ts_time_weighted_avg",
 )
-# Historical ledger — gates registered in round 6 with one-line intent
-# descriptions (kept for the judge; driver rows arrive as the rotation
-# reaches them). Gates newly registered in round 7+ join the
-# never-checked pool at their module-import position; each future
-# window is recomputed as registry order minus the CORRECTNESS_r*.json
-# union minus the rows-only names, so position is cosmetic:
-# q_sink_zstd_roundtrip, q_sink_partition_append,
-# q_embed_drift, q_stream_attribution, q_text_kwic_snippets;
-# (new in round 6) q_dedup_minhash_lsh_xxh (rows-only),
-# q_sim_ann_lsh_recall, q_sim_ann_ivf_recall (empty-set hash oracles),
-# q_curate_normalize_text, q_curate_pseudonymize, q_dedup_keep_best,
-# q_ts_linear_trend, q_graph_pagerank_k3, q_text_feature_hash,
-# q_stream_histogram_rollup, q_curate_domain_cap,
-# q_curate_leakage_safe_split, q_stream_trend_rollup,
-# q_link_sorted_neighborhood, q_curate_score_quantile_norm,
-# q_cdc_apply, q_sink_compaction_plan, q_join_asof_forward,
-# q_events_ab_welch_t, q_agg_approx_distinct_bounds,
-# q_agg_approx_percentile_bounds, q_sim_ann_pq_recall,
-# q_sim_ann_ivfpq_recall, q_embed_pca_bounds, q_stream_ewma_parity,
-# q_dedup_minhash_xxh_precision, q_text_bpe_parity (empty-set
-# accuracy/contract-bound oracles — with these every rows-only family
-# has a driver-hash-verified contract twin), q_curate_epoch_upsample,
-# q_sim_ann_ivf_persisted (train-once/query-many index parity),
-# q_sim_ann_ivf_append (incremental-maintenance invariance),
-# q_sim_ann_pq_persisted (codebook+codes round-trip parity),
-# q_src_xml_roundtrip (Spark 4 native xml source),
-# q_dedup_paragraphs (C4-style corpus paragraph dedup),
-# q_text_zipf_histogram (exact log2-bin token-frequency histogram),
-# q_stream_minhash_dedup (streaming LSH dedup == from-scratch oracle),
-# q_quality_l_diversity (inference-leak complement of k-anonymity),
-# q_sink_snapshot_timetravel (manifest-committed versioned table),
-# q_sink_snapshot_incremental (file-diff CDC read between versions),
-# q_sink_snapshot_delete (copy-on-write delete, atomic manifest publish),
-# q_sink_snapshot_merge (copy-on-write MERGE: update matched + insert new),
-# q_sink_snapshot_pruned_delete (metadata-only range delete via file stats),
-# q_sink_snapshot_pruned_read (manifest-stats range read, files never opened),
-# q_stream_snapshot_sink (exactly-once streaming append: batch-id in manifest),
-# q_sink_snapshot_schema_evolution (per-version manifest schemas: NULL-fill
-#   append evolution + metadata-only add/drop column, zero rewrites),
-# q_stream_cdc_upsert (exactly-once streaming MERGE: copy-on-write upsert
-#   with batch-id marker in the manifest commit),
-# q_dedup_span_removal (maximal duplicated-window token spans — the
-#   exact-substring-dedup REMOVE list, gaps-and-islands merge),
-# q_text_hashed_classifier (fastText-shaped hashed-feature linear
-#   classifier, train+apply one plan, integer-exact scores),
-# q_curate_importance_weights (DSIR-style hashed-n-gram importance
-#   scores, integer Laplace ratios, 64-row broadcast model),
-# q_setop_union_by_name (by-name union, NULL-fill missing columns),
-# q_join_null_safe (eqNullSafe join, NULL keys match exactly once),
-# q_dedup_span_trim (keep-first substring dedup applied: rebuilt text),
-# q_quality_referential_integrity (cross-table FK audit: orphans +
-#   NULL-key exemption, one outer-probe join + one aggregate),
-# q_ts_rolling_autocorr (sliding lag-1 Pearson, exact sufficient
-#   statistics, sqrt-free sign/r-squared encoding),
-# q_observe_inline_metrics (Observation API audit metrics at zero
-#   extra scans, hash-matched to the recompute),
-# q_curate_token_budget (per-group token-budget corpus assembly in
-#   stable md5 rank order),
-# q_pipeline_curation_v5 (trim -> classifier filter -> token budget ->
-#   accounting; the four-stage oracle replay),
-# q_sim_hamming_topk (48-bit hyperplane codes + exact popcount top-k —
-#   the fully hash-verified ANN family),
-# q_sim_hamming_rerank (Hamming shortlist -> exact cosine refine, the
-#   hash-verified two-stage ANN composition),
-# q_retrieval_mmr_rerank (MMR diversification, oracle = unrolled greedy),
-# q_agg_ivm_retract (view maintenance with deletes: counting algorithm,
-#   group drop at zero),
-# q_quality_benford (first-digit digital-analysis audit),
-# q_text_ccnet_buckets (reference-LM head/middle/tail triage),
-# q_graph_label_propagation (seeded modal-label spread, unrolled oracle),
-# q_events_rfm_segments (RFM quintile segmentation),
-# q_dedup_containment (directed shingle containment, integer permille),
-# q_agg_ivm_dirty_refresh (recompute-only-dirty-groups maintenance),
-# q_sql_interface (ANSI SQL front-end round-trip),
-# q_mm_mime_sniff (magic-number MIME audit, pure codegen),
-# q_join_asof_nearest (merge_asof nearest, interval-distance pick),
-# q_stream_ivm_rollup (streaming materialized view under retractions),
-# q_pipeline_curation_v6 (containment dedup -> reference-LM tail-drop),
-# q_ingest_csv_gzip (gzip CSV decompressor path),
-# q_sim_sq8_rerank (SQ8 decode-on-scan ANN, fully hash-verified),
-# q_src_file_metadata (_metadata row-level lineage audit),
-# q_events_chi_square (per-cell exact chi-square independence audit),
-# q_sink_snapshot_asof_read (timestamp time travel, injected clock),
-# q_curate_dataset_card (per-source datasheet, integer-derived),
-# q_ts_cusum_changepoints (Page CUSUM via prefix-min closed form),
-# q_ingest_tsv_delimiter (P3 --delimiter parity over TSV),
-# q_text_strip_html (markup extraction, rule chain as data),
-# q_curate_line_filter (C4 line-level cleaning + rebuild),
-# q_curate_shard_shuffle (salted deterministic shard + order),
-# q_pipeline_curation_v7 (C4 web pipeline: clean -> gopher -> shard),
-# q_events_funnel_windowed (per-step conversion-window funnel),
-# q_sim_range_search (complete cosine >= tau ball, exact),
-# q_graph_k_core (bounded-round peeling, unrolled oracle),
-# q_src_text_lines (spark.read.text raw line source),
-# q_text_code_detect (code-vs-prose routing, integer permilles),
-# q_sink_dynamic_partition_overwrite (backfill-exact partition replace),
-# q_src_date_spine (generated calendar dimension, TZ-free),
-# q_events_calendar_gaps (spine anti-join feed-break audit),
-# q_join_not_in_null_semantics (three-valued NOT IN, both branches),
-# q_text_sentence_split (extraction-pattern segmentation + tail),
-# q_curate_ccnet_sampled (head-keep/middle-coin/tail-drop action);
-# (new in round 7, sf0.001/0.01/0.1-verified before registration)
-# q_curate_decontaminate_semantic (embedding-space benchmark
-#   contamination: broadcast bench, exact quantized cosine, map-side
-#   argmax — the semantic complement of q_curate_decontaminate);
-# q_curate_encoding_anomalies (mojibake/decode-damage census: U+FFFD,
-#   C1 controls, double-encoded UTF-8, cp1252 punctuation — portable
-#   regexp signatures hash-pinned cross-engine);
-# q_pipeline_curation_v8 (round-7 ops composed: encoding filter ->
-#   n-gram decontamination of the clean survivors -> accounting,
-#   stage order hash-pinned);
-# q_ts_time_weighted_avg (TWAP over irregular ticks: LOCF integer-second
-#   weights, exact numerator/denominator, one IEEE division);
-# (new in round 8, sf0.001/0.01/0.1-verified before registration)
-# q_text_compressibility_parity (zlib compressibility quality signal —
-#   the Arrow-batched pandas_udf slow path; executor-vs-driver byte
-#   parity on a bounded 256-doc sample, empty-set hash oracle).
-# Round 9 registers ZERO new gates by policy (r8 verdict #8: the
-# registry is feature-complete against SURVEY §2/§8; prefer
-# driver-record freshness, scale-mode knobs, and measured perf) — the
-# round's work lands as recency-conditioned CDC merge, cutpoint rank
-# modes, charset breadth, constant-memory stdin, and the triangle
-# orientation, all under EXISTING gates plus pytest/property coverage.
-# Round 11 registered exactly ONE gate, and it was temporary:
-# q_stream_cdc_upsert_cols, the string-typed canonicalization twin of
-# the root-caused cdc gate (VERDICT r10 item 1b). Both gates went
-# driver-green in CORRECTNESS_r11, so round 12 deleted the twin (and
-# the _cdc_diag gate-path diagnostics) per its registration contract —
-# the registry is 326 gates / 316 oracles from r12 on. Round 12
-# registers zero new gates: the round is record freshness (rotation
-# above), the SURVEY crosswalk count, and ADVICE r11 hardening.
 
 
 def load_all_queries() -> dict[str, QueryDef]:

@@ -1054,7 +1054,7 @@ def stream_minhash_dedup(
     band rows are computed ONCE, when their batch arrives — history is
     never re-banded (the r14 shape re-projected every stored signature
     into bands on every arrival). The batch's band-bucket set (<=
-    ``spark.csv2db.stream.storeBuckets`` ints, default 64) is collected
+    ``spark.csv2db.stream.storeBuckets`` ints, default 16) is collected
     to a PLAN-TIME literal, so the standing band read prunes to the
     ``bk=`` directories the batch can possibly collide with —
     PartitionFilters on the scan, not a flat store pass; the same

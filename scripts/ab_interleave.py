@@ -47,31 +47,6 @@ def _toggle_preserve_partitioning():
     return apply_old, undo_old
 
 
-def _toggle_single_window_topk():
-    """OLD = _topk_per_query ranks with one per-query window."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    import csv2db_spark.llm.similarity as sim
-
-    orig = sim._topk_per_query
-
-    def old(scored, k, order, shard_on="neighbor_id", n_shards=64,
-            size_hint=None):
-        w = Window.partitionBy("query_id").orderBy(*order)
-        return scored.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= k
-        )
-
-    def apply_old():
-        sim._topk_per_query = old
-
-    def undo_old():
-        sim._topk_per_query = orig
-
-    return apply_old, undo_old
-
-
 def _toggle_staged_edges():
     """OLD = graph loops checkpoint the edge list unpartitioned (the
     pre-round-14 shape: a fresh edge shuffle in every round's join)."""
@@ -91,45 +66,37 @@ def _toggle_staged_edges():
     return apply_old, undo_old
 
 
-def _toggle_window_rank_modes():
-    """OLD = the round-13 rank shapes: per-group window sorts in the
-    curation samplers/quantiles (overrides both the r14 cutpoint
-    defaults and the call sites that now pass cutpoint explicitly)."""
-    import csv2db_spark.llm.curation as cur
+def _toggle_scale_shapes():
+    """OLD = every twin operator takes its scale shape (sharded top-k,
+    cutpoint rank): the OLD leg runs with the small-input threshold at
+    0 bytes, so every ``plans.small_input`` answers False. The shape is
+    fixed while the query is built; holding the setting through the
+    run as well changes nothing."""
+    from pyspark.sql import SparkSession
 
-    names = (
-        "quantile_filter",
-        "score_quantile_normalize",
-        "stratified_sample",
-        "domain_cap",
-        "token_budget_sample",
-    )
-    origs = {n: getattr(cur, n) for n in names}
+    from csv2db_spark.plans import ADAPTIVE_SMALL_KEY
 
-    def wrap(fn):
-        def old(*args, **kwargs):
-            kwargs["rank_mode"] = "window"
-            kwargs.pop("rank_bucket", None)
-            return fn(*args, **kwargs)
-
-        return old
+    prior = {}
 
     def apply_old():
-        for n, fn in origs.items():
-            setattr(cur, n, wrap(fn))
+        conf = SparkSession.getActiveSession().conf
+        prior["value"] = conf.get(ADAPTIVE_SMALL_KEY, None)
+        conf.set(ADAPTIVE_SMALL_KEY, "0")
 
     def undo_old():
-        for n, fn in origs.items():
-            setattr(cur, n, fn)
+        conf = SparkSession.getActiveSession().conf
+        if prior["value"] is None:
+            conf.unset(ADAPTIVE_SMALL_KEY)
+        else:
+            conf.set(ADAPTIVE_SMALL_KEY, prior["value"])
 
     return apply_old, undo_old
 
 
 TOGGLES = {
     "preserve_partitioning": _toggle_preserve_partitioning,
-    "single_window_topk": _toggle_single_window_topk,
+    "scale_shapes": _toggle_scale_shapes,
     "staged_edges": _toggle_staged_edges,
-    "window_rank_modes": _toggle_window_rank_modes,
 }
 
 

@@ -525,7 +525,9 @@ def test_decontaminate_semantic_matches_numpy(
     descending=st.booleans(),
 )
 @settings(**_SETTINGS)
-def test_grouped_rank_modes_equivalent_property(spark, rows, descending):
+def test_grouped_rank_modes_equivalent_property(
+    spark, plan_shape, rows, descending
+):
     """For ANY group/score distribution (heavy ties, NULLs, singleton
     groups, both sort directions) the cutpoint rank must equal the
     window rank bit for bit."""
@@ -535,19 +537,16 @@ def test_grouped_rank_modes_equivalent_property(spark, rows, descending):
         [(g, i, s) for i, (g, s) in enumerate(rows)],
         "lang string, doc_id long, s double",
     )
-    w = {
-        (r.lang, r.doc_id): r._rn
-        for r in grouped_rank(
-            df, "lang", "s", "doc_id", descending=descending, mode="window"
-        ).collect()
-    }
-    c = {
-        (r.lang, r.doc_id): r._rn
-        for r in grouped_rank(
-            df, "lang", "s", "doc_id", descending=descending, mode="cutpoint"
-        ).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.lang, r.doc_id): r._rn
+                for r in grouped_rank(
+                    df, "lang", "s", "doc_id", descending=descending
+                ).collect()
+            }
+    assert out["small"] == out["scale"]
 
 
 @given(
@@ -562,24 +561,21 @@ def test_grouped_rank_modes_equivalent_property(spark, rows, descending):
     k=st.sampled_from([1, 2, 3, 7]),
 )
 @settings(**_SETTINGS)
-def test_grouped_ntile_modes_equivalent_property(spark, rows, k):
+def test_grouped_ntile_modes_equivalent_property(spark, plan_shape, rows, k):
     from csv2db_spark.operators.ranking import grouped_ntile
 
     df = spark.createDataFrame(
         [(g, i, float(s)) for i, (g, s) in enumerate(rows)],
         "g string, doc_id long, s double",
     )
-    w = {
-        (r.g, r.doc_id): r.bucket
-        for r in grouped_ntile(df, "g", "s", "doc_id", k, mode="window").collect()
-    }
-    c = {
-        (r.g, r.doc_id): r.bucket
-        for r in grouped_ntile(
-            df, "g", "s", "doc_id", k, mode="cutpoint"
-        ).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.g, r.doc_id): r.bucket
+                for r in grouped_ntile(df, "g", "s", "doc_id", k).collect()
+            }
+    assert out["small"] == out["scale"]
 
 
 @given(
@@ -593,7 +589,7 @@ def test_grouped_ntile_modes_equivalent_property(spark, rows, k):
     ),
 )
 @settings(**_SETTINGS)
-def test_grouped_prefix_sum_modes_equivalent_property(spark, rows):
+def test_grouped_prefix_sum_modes_equivalent_property(spark, plan_shape, rows):
     """Running sums must agree between modes for ANY distribution when
     the bucket order-coarsens the leading sort key (1-hex md5 prefix of
     the md5 rank string)."""
@@ -609,12 +605,11 @@ def test_grouped_prefix_sum_modes_equivalent_property(spark, rows):
         value_col="v",
         bucket=F.substring("_rk", 1, 1),
     )
-    w = {
-        (r.g, r.doc_id): r._cum
-        for r in grouped_prefix_sum(df, mode="window", **kw).collect()
-    }
-    c = {
-        (r.g, r.doc_id): r._cum
-        for r in grouped_prefix_sum(df, mode="cutpoint", **kw).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.g, r.doc_id): r._cum
+                for r in grouped_prefix_sum(df, **kw).collect()
+            }
+    assert out["small"] == out["scale"]

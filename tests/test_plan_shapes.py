@@ -446,38 +446,20 @@ def test_triangles_dense_path_broadcasts_no_wedge(spark, sf_dir):
     )
 
 
-def test_tercile_consumers_default_to_adaptive():
-    """VERDICT r12 item 4's headline property, re-pinned for round 15
-    (VERDICT r14 item 4): the registered v6/CCNet gates run their
-    DEFAULT arguments, which must stay 'auto' — the adaptive resolver
-    that engages the cutpoint plan above the size threshold (pinned
-    below) and the exact-twin window plan at fixture size. A silent
-    default flip back to a bare 'window' would regress every default
-    plan at corpus scale with zero other test signal."""
-    import inspect
-
-    from csv2db_spark.queries.analytics2 import ccnet_buckets
-    from csv2db_spark.queries.curation import curation_v6_pipeline
-
-    for fn in (ccnet_buckets, curation_v6_pipeline):
-        got = inspect.signature(fn).parameters["rank_mode"].default
-        assert got == "auto", f"{fn.__name__} rank_mode default: {got}"
-
-
-def test_adaptive_modes_engage_scale_shape_above_threshold(spark, sf_dir):
-    """The round-15 adaptive rule (plans.small_input): with the
-    threshold forced to 0 every input counts as large, so the DEFAULT
-    gate compositions must produce the scale shapes — the cutpoint
-    rank (bucket-keyed row_number windows, no whole-group sort) and the
-    two-stage sharded top-k (rank window keyed by the shard column) —
-    exactly as round 14 shipped them unconditionally. With the default
+def test_adaptive_modes_engage_scale_shape_above_threshold(
+    spark, sf_dir, plan_shape
+):
+    """The adaptive rule (plans.small_input): with the threshold forced
+    to 0 every input counts as large, so the DEFAULT gate compositions
+    must produce the scale shapes — the cutpoint rank (bucket-keyed
+    row_number windows, no whole-group sort) and the two-stage sharded
+    top-k (rank window keyed by the shard column). With the default
     threshold the same fixture inputs resolve small and the plans keep
     the single-window shape. Resolution happens at plan-construction
-    time, so the conf is scoped around the build."""
+    time, so the setting is scoped around the build."""
     from pyspark.sql import functions as F
 
     from csv2db_spark.llm.similarity import cosine_topk
-    from csv2db_spark.plans import ADAPTIVE_SMALL_KEY
     from csv2db_spark.queries.analytics2 import ccnet_buckets
     from csv2db_spark.sources import load_table
 
@@ -487,12 +469,9 @@ def test_adaptive_modes_engage_scale_shape_above_threshold(spark, sf_dir):
     def _plan_str(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
-    spark.conf.set(ADAPTIVE_SMALL_KEY, "0")
-    try:
+    with plan_shape("scale"):
         big_rank = _plan_str(ccnet_buckets(spark, sf_dir))
         big_topk = _plan_str(cosine_topk(emb, queries, k=3))
-    finally:
-        spark.conf.unset(ADAPTIVE_SMALL_KEY)
     # cutpoint engaged: tie-set windows keyed by the score bucket
     assert "_gr_b" in big_rank and "ntile" not in big_rank
     # two-stage engaged: the stage-1 shard rank column appears
@@ -504,23 +483,52 @@ def test_adaptive_modes_engage_scale_shape_above_threshold(spark, sf_dir):
     assert "_srn" not in small_topk
 
 
-def test_ccnet_cutpoint_mode_has_no_whole_group_sort(spark, sf_dir):
-    """The 100-TB CCNet plan (rank_mode='cutpoint'): every row_number
-    window over corpus rows must be keyed by (group, score) — tie sets,
-    never a whole language — and no ntile survives anywhere. The only
+def test_filtered_scan_keeps_its_scan_estimate(spark, sf_dir, plan_shape):
+    """plans.small_input reads Catalyst's sizeInBytes, which with CBO
+    off (the session default) does NOT shrink through a filter — only
+    through projections. With the threshold AT a fixture scan's
+    estimate, the scan itself is large, a one-column projection of it
+    is small, and a filter keeping a single row still reads as large,
+    so a twin operator over it takes the scale shape. Enabling CBO
+    would let row counts through the filter and flip this test: the
+    adaptive rule would then need revisiting."""
+    from pyspark.sql import functions as F
+
+    from csv2db_spark import plans
+    from csv2db_spark.operators.ranking import grouped_rank
+    from csv2db_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    filtered = docs.where(F.col("doc_id") == 1)
+    est = plans.est_size_bytes(docs)
+    assert plans.est_size_bytes(filtered) == est
+    with plan_shape(est):
+        assert not plans.small_input(docs)
+        assert plans.small_input(docs.select("doc_id"))
+        assert not plans.small_input(filtered)
+        ranked = grouped_rank(filtered, "lang", "n_chars", "doc_id")
+    assert "_gr_b" in ranked._jdf.queryExecution().executedPlan().toString()
+    assert [r._rn for r in ranked.collect()] == [1]
+
+
+def test_ccnet_cutpoint_mode_has_no_whole_group_sort(spark, sf_dir, plan_shape):
+    """The 100-TB CCNet plan (the scale shape): every row_number window
+    over corpus rows must be keyed by (group, score) — tie sets, never
+    a whole language — and no ntile survives anywhere. The only
     group-keyed window left runs over the per-(group, score) histogram
-    aggregate. Plus the contract that makes the knob safe: identical
-    rows to the exact window mode."""
+    aggregate. Plus the contract that makes the adaptive choice safe:
+    identical rows to the exact window shape."""
     from csv2db_spark.queries.analytics2 import ccnet_buckets
 
-    cut = ccnet_buckets(spark, sf_dir, rank_mode="cutpoint")
+    with plan_shape("scale"):
+        cut = ccnet_buckets(spark, sf_dir)
     plan = cut._jdf.queryExecution().executedPlan().toString()
     assert "ntile" not in plan
     # the null-safe histogram join must stay a KEYED join (coalesce/
     # isnull composite keys), never a nested-loop fallback
     assert "BroadcastNestedLoopJoin" not in plan
     rn_lines = [ln for ln in plan.splitlines() if "row_number()" in ln]
-    assert rn_lines, "cutpoint mode must rank via row_number over tie sets"
+    assert rn_lines, "cutpoint shape must rank via row_number over tie sets"
     for ln in rn_lines:
         # partitioned by the quantized score bucket (the continuous
         # avg_next_token_prob would otherwise make the histogram — and
@@ -528,10 +536,11 @@ def test_ccnet_cutpoint_mode_has_no_whole_group_sort(spark, sf_dir):
         assert "_gr_b" in ln, (
             f"doc-level rank window not keyed by the score bucket: {ln}"
         )
-    win = {
-        (r.doc_id): (r.lang, r.score_scaled, r.n_bigrams, r.ppl_bucket)
-        for r in ccnet_buckets(spark, sf_dir, rank_mode="window").collect()
-    }
+    with plan_shape("small"):
+        win = {
+            (r.doc_id): (r.lang, r.score_scaled, r.n_bigrams, r.ppl_bucket)
+            for r in ccnet_buckets(spark, sf_dir).collect()
+        }
     got = {
         (r.doc_id): (r.lang, r.score_scaled, r.n_bigrams, r.ppl_bucket)
         for r in cut.collect()
@@ -539,36 +548,31 @@ def test_ccnet_cutpoint_mode_has_no_whole_group_sort(spark, sf_dir):
     assert got == win
 
 
-def test_curation_v6_rank_modes_equal(spark, sf_dir):
-    """v6's tail-drop stage through the cutpoint tercile plan (the
-    gate's DEFAULT since r13) returns the exact rows of the window
-    plan (the knob never changes results, only the shuffle key).
-    Both modes are named EXPLICITLY — when the default flipped to
-    cutpoint this test silently became cutpoint-vs-cutpoint until a
-    review caught it (round-13 /code-review finding 2)."""
+def test_curation_v6_rank_modes_equal(spark, sf_dir, plan_shape):
+    """v6's tail-drop stage through the cutpoint tercile plan returns
+    the exact rows of the window plan (the shape never changes results,
+    only the shuffle key). Both shapes are forced explicitly, so the
+    test can never silently compare one shape with itself."""
     from csv2db_spark.queries.curation import curation_v6_pipeline
 
-    w = {
-        (r.lang, r.source): (r.n_docs, r.total_bigrams)
-        for r in curation_v6_pipeline(
-            spark, sf_dir, rank_mode="window"
-        ).collect()
-    }
-    c = {
-        (r.lang, r.source): (r.n_docs, r.total_bigrams)
-        for r in curation_v6_pipeline(
-            spark, sf_dir, rank_mode="cutpoint"
-        ).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.lang, r.source): (r.n_docs, r.total_bigrams)
+                for r in curation_v6_pipeline(spark, sf_dir).collect()
+            }
+    assert out["small"] == out["scale"]
 
 
-def test_sampling_cutpoint_modes_have_no_whole_group_sort(spark, sf_dir):
-    """stratified_sample / domain_cap / token_budget_sample in cutpoint
-    mode: every row_number / running-sum window over corpus rows must be
-    keyed by (group, bucket) — the md5-prefix bucket rides the partition
-    spec — and the only group-keyed windows left run over histogram
-    aggregates."""
+def test_sampling_cutpoint_modes_have_no_whole_group_sort(
+    spark, sf_dir, plan_shape
+):
+    """stratified_sample / domain_cap / token_budget_sample in the
+    scale shape: every row_number / running-sum window over corpus rows
+    must be keyed by (group, bucket) — the md5-prefix bucket rides the
+    partition spec — and the only group-keyed windows left run over
+    histogram aggregates."""
     from csv2db_spark.llm.curation import (
         domain_cap,
         stratified_sample,
@@ -577,11 +581,12 @@ def test_sampling_cutpoint_modes_have_no_whole_group_sort(spark, sf_dir):
     from csv2db_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    plans = {
-        "stratified": stratified_sample(docs, "lang", 5, rank_mode="cutpoint"),
-        "cap": domain_cap(docs, k=5, rank_mode="cutpoint"),
-        "budget": token_budget_sample(docs, 10_000, rank_mode="cutpoint"),
-    }
+    with plan_shape("scale"):
+        plans = {
+            "stratified": stratified_sample(docs, "lang", 5),
+            "cap": domain_cap(docs, k=5),
+            "budget": token_budget_sample(docs, 10_000),
+        }
     for name, df in plans.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
         rn_lines = [
@@ -599,7 +604,7 @@ def test_sampling_cutpoint_modes_have_no_whole_group_sort(spark, sf_dir):
         assert not doc_level, f"{name}: doc-level window without bucket key: {doc_level}"
 
 
-def test_nullsafe_totals_join_stays_broadcast_hash(spark, sf_dir):
+def test_nullsafe_totals_join_stays_broadcast_hash(spark, sf_dir, plan_shape):
     """join_totals_nullsafe (ADVICE r9 NULL-group fix) must not
     degrade the plan: Spark rewrites eqNullSafe keys to
     coalesce+isnull HASH keys, so the per-group totals join stays a
@@ -607,14 +612,12 @@ def test_nullsafe_totals_join_stays_broadcast_hash(spark, sf_dir):
     |corpus| x |groups| comparisons at scale. The grouped_rank
     histogram SMJ (exchange shared with the tie window by design) is
     the only sort-merge allowed in the ntile plan."""
-    from pyspark.sql import functions as F
-
     from csv2db_spark.operators.ranking import grouped_ntile
     from csv2db_spark.sources import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    out = grouped_ntile(docs, "lang", "n_chars", "doc_id", 3,
-                        mode="cutpoint")
+    with plan_shape("scale"):
+        out = grouped_ntile(docs, "lang", "n_chars", "doc_id", 3)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastNestedLoop") == 0, plan
     bhj = [ln for ln in plan.splitlines()

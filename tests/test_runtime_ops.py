@@ -985,64 +985,53 @@ def _rank_fixture(spark):
     return spark.createDataFrame(rows, "lang string, doc_id long, s double")
 
 
-def test_grouped_rank_cutpoint_equals_window(spark):
+def test_grouped_rank_cutpoint_equals_window(spark, plan_shape):
     from pyspark.sql import functions as F
 
     from csv2db_spark.operators.ranking import grouped_rank
 
     df = _rank_fixture(spark)
     for desc in (False, True):
-        w = {
-            (r.lang, r.doc_id): r._rn
-            for r in grouped_rank(
-                df, "lang", "s", "doc_id", descending=desc, mode="window"
-            ).collect()
-        }
-        c = {
-            (r.lang, r.doc_id): r._rn
-            for r in grouped_rank(
-                df, "lang", "s", "doc_id", descending=desc, mode="cutpoint"
-            ).collect()
-        }
-        assert w == c
-        # order-coarsening bucket (continuous-score shape): coarser
-        # histogram, same exact ranks — including a 1-cell degenerate
-        # coarsening, which must collapse to pure (score, id) tie-rank
-        for b in (F.floor(F.col("s") / 3), F.lit(0)):
-            cb = {
+        with plan_shape("small"):
+            w = {
                 (r.lang, r.doc_id): r._rn
                 for r in grouped_rank(
-                    df,
-                    "lang",
-                    "s",
-                    "doc_id",
-                    descending=desc,
-                    mode="cutpoint",
-                    bucket=b,
+                    df, "lang", "s", "doc_id", descending=desc
                 ).collect()
             }
-            assert cb == w
+        with plan_shape("scale"):
+            cut = grouped_rank(df, "lang", "s", "doc_id", descending=desc)
+            assert "_gr_b" in cut._jdf.queryExecution().executedPlan().toString()
+            assert {(r.lang, r.doc_id): r._rn for r in cut.collect()} == w
+            # order-coarsening bucket (continuous-score shape): coarser
+            # histogram, same exact ranks — including a 1-cell degenerate
+            # coarsening, which must collapse to pure (score, id) tie-rank
+            for b in (F.floor(F.col("s") / 3), F.lit(0)):
+                cb = {
+                    (r.lang, r.doc_id): r._rn
+                    for r in grouped_rank(
+                        df, "lang", "s", "doc_id", descending=desc, bucket=b
+                    ).collect()
+                }
+                assert cb == w
 
 
-def test_grouped_ntile_cutpoint_equals_window(spark):
+def test_grouped_ntile_cutpoint_equals_window(spark, plan_shape):
     from csv2db_spark.operators.ranking import grouped_ntile
 
     df = _rank_fixture(spark)
     # k spanning: < group size, = singleton, > tiny-group size (n < k)
     for k in (2, 3, 5, 7):
-        w = {
-            (r.lang, r.doc_id): r.bucket
-            for r in grouped_ntile(
-                df, "lang", "s", "doc_id", k, descending=True, mode="window"
-            ).collect()
-        }
-        c = {
-            (r.lang, r.doc_id): r.bucket
-            for r in grouped_ntile(
-                df, "lang", "s", "doc_id", k, descending=True, mode="cutpoint"
-            ).collect()
-        }
-        assert w == c
+        out = {}
+        for shape in ("small", "scale"):
+            with plan_shape(shape):
+                out[shape] = {
+                    (r.lang, r.doc_id): r.bucket
+                    for r in grouped_ntile(
+                        df, "lang", "s", "doc_id", k, descending=True
+                    ).collect()
+                }
+        assert out["small"] == out["scale"]
 
 
 def test_checked_int_rank_errors_instead_of_wrapping(spark):
@@ -1065,44 +1054,43 @@ def test_checked_int_rank_errors_instead_of_wrapping(spark):
         ).collect()
 
 
-def test_quantile_filter_modes_equal(spark):
+def test_quantile_filter_modes_equal(spark, plan_shape):
     from pyspark.sql import functions as F
 
     from csv2db_spark.llm.curation import quantile_filter
 
     df = _rank_fixture(spark).withColumnRenamed("s", "score")
     out = {}
-    for m in ("window", "cutpoint"):
-        got = quantile_filter(
-            df, F.col("score"), group_col="lang", drop_frac=0.25,
-            id_col="doc_id", rank_mode=m,
-        )
-        out[m] = {
-            (r.doc_id, r.lang): (r.quality_score, r.pr) for r in got.collect()
-        }
-    assert out["window"] == out["cutpoint"]
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            got = quantile_filter(
+                df, F.col("score"), group_col="lang", drop_frac=0.25,
+                id_col="doc_id",
+            )
+            out[shape] = {
+                (r.doc_id, r.lang): (r.quality_score, r.pr)
+                for r in got.collect()
+            }
+    assert out["small"] == out["scale"]
     # contract spot-checks survive the refactor: singleton kept
-    assert (999, "xx") in out["window"]
+    assert (999, "xx") in out["small"]
 
 
-def test_score_quantile_normalize_modes_equal(spark):
+def test_score_quantile_normalize_modes_equal(spark, plan_shape):
     from csv2db_spark.llm.curation import score_quantile_normalize
 
     df = _rank_fixture(spark).withColumnRenamed("lang", "source")
-    w = {
-        (r.source, r.doc_id): r.pct
-        for r in score_quantile_normalize(df, "source", "s").collect()
-    }
-    c = {
-        (r.source, r.doc_id): r.pct
-        for r in score_quantile_normalize(
-            df, "source", "s", rank_mode="cutpoint"
-        ).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.source, r.doc_id): r.pct
+                for r in score_quantile_normalize(df, "source", "s").collect()
+            }
+    assert out["small"] == out["scale"]
 
 
-def test_grouped_prefix_sum_modes_equal(spark):
+def test_grouped_prefix_sum_modes_equal(spark, plan_shape):
     from pyspark.sql import functions as F
 
     from csv2db_spark.operators.ranking import grouped_prefix_sum
@@ -1118,18 +1106,17 @@ def test_grouped_prefix_sum_modes_equal(spark):
         value_col="s",
         bucket=F.substring("_rk", 1, 1),
     )
-    w = {
-        (r.lang, r.doc_id): r._cum
-        for r in grouped_prefix_sum(df, mode="window", **kw).collect()
-    }
-    c = {
-        (r.lang, r.doc_id): r._cum
-        for r in grouped_prefix_sum(df, mode="cutpoint", **kw).collect()
-    }
-    assert w == c
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                (r.lang, r.doc_id): r._cum
+                for r in grouped_prefix_sum(df, **kw).collect()
+            }
+    assert out["small"] == out["scale"]
 
 
-def test_token_budget_sample_modes_equal(spark):
+def test_token_budget_sample_modes_equal(spark, plan_shape):
     from csv2db_spark.llm.curation import token_budget_sample
 
     docs = spark.createDataFrame(
@@ -1139,20 +1126,17 @@ def test_token_budget_sample_modes_equal(spark):
         ],
         ["doc_id", "source", "text"],
     )
-    # window leg explicit: the default flipped to cutpoint in round 14,
-    # and this test exists to pin the two modes against each other
-    w = {
-        r.doc_id: (r.group, r.n_tokens, r.cum_tokens)
-        for r in token_budget_sample(docs, 200, rank_mode="window").collect()
-    }
-    c = {
-        r.doc_id: (r.group, r.n_tokens, r.cum_tokens)
-        for r in token_budget_sample(docs, 200, rank_mode="cutpoint").collect()
-    }
-    assert w == c and len(w) > 0
+    out = {}
+    for shape in ("small", "scale"):
+        with plan_shape(shape):
+            out[shape] = {
+                r.doc_id: (r.group, r.n_tokens, r.cum_tokens)
+                for r in token_budget_sample(docs, 200).collect()
+            }
+    assert out["small"] == out["scale"] and len(out["small"]) > 0
 
 
-def test_stratified_sample_modes_equal(spark):
+def test_stratified_sample_modes_equal(spark, plan_shape):
     from csv2db_spark.llm.curation import stratified_sample
 
     docs = spark.createDataFrame(
@@ -1160,42 +1144,34 @@ def test_stratified_sample_modes_equal(spark):
         ["doc_id", "source"],
     )
     for k in (1, 7, 200):  # k < bucket spread, k ~ stratum, k > stratum
-        # window leg explicit: the default flipped to cutpoint in r14
-        w = {
-            (r.source, r.doc_id)
-            for r in stratified_sample(
-                docs, "source", k, rank_mode="window"
-            ).collect()
-        }
-        c = {
-            (r.source, r.doc_id)
-            for r in stratified_sample(
-                docs, "source", k, rank_mode="cutpoint"
-            ).collect()
-        }
-        assert w == c
+        out = {}
+        for shape in ("small", "scale"):
+            with plan_shape(shape):
+                out[shape] = {
+                    (r.source, r.doc_id)
+                    for r in stratified_sample(docs, "source", k).collect()
+                }
+        assert out["small"] == out["scale"]
         assert all(
             n == min(k, 125 if s != "tiny" else 1)
             for s, n in __import__("collections").Counter(
-                s for s, _ in c
+                s for s, _ in out["scale"]
             ).items()
         )
 
 
-def test_domain_cap_modes_equal(spark):
+def test_domain_cap_modes_equal(spark, plan_shape):
     from csv2db_spark.llm.curation import domain_cap
 
     docs = spark.createDataFrame(
         [(i, "d" + str(i % 3)) for i in range(400)], ["doc_id", "source"]
     )
     for k in (1, 5, 300):
-        # window leg explicit: the default flipped to cutpoint in r14
-        w = {
-            (r.source, r.doc_id): r.cap_rank
-            for r in domain_cap(docs, k=k, rank_mode="window").collect()
-        }
-        c = {
-            (r.source, r.doc_id): r.cap_rank
-            for r in domain_cap(docs, k=k, rank_mode="cutpoint").collect()
-        }
-        assert w == c
+        out = {}
+        for shape in ("small", "scale"):
+            with plan_shape(shape):
+                out[shape] = {
+                    (r.source, r.doc_id): r.cap_rank
+                    for r in domain_cap(docs, k=k).collect()
+                }
+        assert out["small"] == out["scale"]
