@@ -70,13 +70,16 @@ def main() -> None:
     # steady-state executor throughput, which is what a long-running
     # cluster actually delivers.
     warm_dir = "/root/testdata/sf0.001"
+    # a warmup failure does not stop the bench; it is reported under
+    # `warmup_failed` instead of being swallowed
+    warmup_failed: set[str] = set()
     for wd in (warm_dir, sf_dir):
         if os.path.isdir(wd):
             for name, qd in sorted(bench_queries.items()):
                 try:
                     qd.fn(spark, wd).write.format("noop").mode("overwrite").save()
                 except Exception:
-                    pass
+                    warmup_failed.add(name)
 
     # Headline protocol continuity: `queries`/`value` are the FIRST timed
     # run after warmup, one query after another in the ORIGINAL order —
@@ -177,7 +180,7 @@ def main() -> None:
                 try:
                     qd.fn(spark, wd).write.format("noop").mode("overwrite").save()
                 except Exception:
-                    pass
+                    warmup_failed.add(name)
         series = []
         for _ in range(3):
             t0 = time.perf_counter()
@@ -200,6 +203,7 @@ def main() -> None:
                 "extended_protocol": "best_of_3_after_target_sf_warmup",
                 "extended_single_shot": ext_single,
                 "sf": sf,
+                "warmup_failed": sorted(warmup_failed),
             }
         )
     )

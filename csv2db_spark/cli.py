@@ -7,9 +7,9 @@ Mapping to the reference:
 - ``--url`` → a JDBC url (``jdbc:...``) handled by the real JDBC writer,
   or the engine-native ``parquet:/dir`` scheme backed by
   ParquetTableStore — same mode matrix either way (sink.py).
-- ``--input-file --`` reads stdin (csv2db.go:174-176) through
-  ``ingest_csv_stdin`` (constant-memory; spills big pipes
-  to executor-parsed chunks).
+- ``--input-file --`` reads stdin (csv2db.go:174-176): the file name
+  goes to ``ingest.ingest_csv`` like any path, which reads stdin
+  constant-memory and decodes it with ``--encoding``.
 - ``schema.table`` splits into schema + table (load_config.go:22-28);
   the qualified name is passed through to the database.
 - Presets (P23, config.go:100-165, load_config.go:9-64): a named config
@@ -103,8 +103,8 @@ _YAML_FIELD_MAP = {
 # writes the FULL YAML 1.1 single-char escape set — not just \t/\n — so
 # the decoder must accept all of them or a preset holding e.g. a \a or
 # \e byte makes _yaml_scalar raise and the whole file gets
-# warn-and-ignored, dropping every preset (ADVICE r11). \xXX/\uXXXX/
-# \UXXXXXXXX for other non-printables are handled in _yaml_scalar.
+# warn-and-ignored, dropping every preset. \xXX/\uXXXX/\UXXXXXXXX for
+# other non-printables are handled in _yaml_scalar.
 _DQ_ESCAPES = {
     "0": "\0", "a": "\a", "b": "\b", "t": "\t", "n": "\n",
     "v": "\v", "f": "\f", "r": "\r", "e": "\x1b", " ": " ",
@@ -137,11 +137,10 @@ def _yaml_scalar(val: str) -> object:
                 hexs = val[i + 2 : i + 2 + width] if width else ""
                 # strict hex only: int(, 16) alone would accept
                 # whitespace/'+'/'_' and silently decode a corrupted
-                # escape to the wrong char (code-review r12); lone
-                # surrogates are refused too — go strings are UTF-8 and
-                # the emitter can never produce one, and a surrogate-
-                # poisoned preset would crash far away on the first
-                # UTF-8 encode
+                # escape to the wrong char; lone surrogates are refused
+                # too — go strings are UTF-8 and the emitter can never
+                # produce one, and a surrogate-poisoned preset would
+                # crash far away on the first UTF-8 encode
                 if (
                     width
                     and len(hexs) == width
@@ -206,9 +205,9 @@ def _parse_flat_yaml(text: str) -> dict:
     ``presets:`` -> preset name -> flat scalar fields). Supports
     comments, blank lines, single/double-quoted scalars (including
     go-yaml backslash escapes like a "\\t" delimiter), trailing inline
-    comments, bools, and the emitter's WIDTH FOLDING (code-review r12:
-    go-yaml breaks any scalar longer than best_width=80 at a space —
-    quoted or plain — so a long file path used to make the whole config
+    comments, bools, and the emitter's WIDTH FOLDING (go-yaml breaks
+    any scalar longer than best_width=80 at a space — quoted or plain —
+    so without it a long file path makes the whole config
     warn-and-ignored). Folding decodes per the YAML flow rules: one
     break -> one space, n breaks -> n-1 newlines, an odd trailing
     backslash in double quotes escapes the break, and a '\\ ' at a
@@ -238,7 +237,7 @@ def _parse_flat_yaml(text: str) -> dict:
         # silently delete Zs spaces (U+2003, U+00A0, U+3000, ...) that
         # go-yaml emits RAW (they are printable and not is_space to its
         # emitter), corrupting the preset value — while YAML folding
-        # strips only space/tab (code-review r12)
+        # strips only space/tab
         body = ln.strip(" \t")
         if ":" not in body:
             raise ValueError(f"unsupported yaml line: {ln!r}")
@@ -525,7 +524,7 @@ def resolve_auth(
 
 
 def run(conf: Config, spark=None, password: str = "") -> int:
-    from csv2db_spark.ingest import ingest_csv, ingest_csv_stdin
+    from csv2db_spark.ingest import STDIN_PATHS, ingest_csv
     from csv2db_spark.sink import ParquetTableStore, write_jdbc
 
     if spark is None:
@@ -554,25 +553,14 @@ def run(conf: Config, spark=None, password: str = "") -> int:
             conf = replace(conf, db_url=clean_url)
 
     target = _target_schema(spark, conf, user, pw)
-    if conf.file_name in ("--", "-"):
-        # constant-memory stdin (csv2db.go:174-176 streams the pipe):
-        # small pipes parse on the driver; anything past the spill
-        # threshold chunks to temp files and parses executor-side
-        df = ingest_csv_stdin(
-            spark,
-            target=target,
-            has_header=conf.has_header,
-            delimiter=conf.delimiter,
-        )
-    else:
-        df = ingest_csv(
-            spark,
-            conf.file_name,
-            target,
-            conf.has_header,
-            conf.delimiter,
-            conf.encoding,
-        )
+    df = ingest_csv(
+        spark,
+        conf.file_name,
+        target,
+        conf.has_header,
+        conf.delimiter,
+        conf.encoding,
+    )
 
     # P21 progress (progress_bar.go:9-52): live task-completion meter on a
     # ticker thread while the load runs; engaged only above the reference's
@@ -581,7 +569,7 @@ def run(conf: Config, spark=None, password: str = "") -> int:
 
     in_bytes = (
         os.path.getsize(conf.file_name)
-        if conf.file_name not in ("--", "-") and os.path.exists(conf.file_name)
+        if conf.file_name not in STDIN_PATHS and os.path.exists(conf.file_name)
         else None
     )
     if conf.db_url.startswith("parquet:"):

@@ -4,15 +4,15 @@ Reference behaviors reproduced (file:line cites into /root/reference):
 
 - P1/P3: CSV source with configurable single-char delimiter
   (csv2db.go:170-205, config.go:67-72) → ``spark.read.csv`` options;
-  stdin (``--input-file --``, csv2db.go:174-176) → ``read_csv_stdin``:
-  constant-memory like the Go loop — small pipes parse driver-side,
-  larger ones stream into record-aligned chunk files for executor-side
-  parse (``read_csv_buffer`` is the in-memory-string sibling with the
-  same spill).
+  stdin (``--input-file --``, csv2db.go:174-176) is the same
+  ``read_csv`` call with path ``-``/``--``: constant-memory like the Go
+  loop — small pipes parse driver-side, larger ones stream into
+  record-aligned chunk files that the file scan parses executor-side.
 - P2: charset decode via ``--encoding`` (csv2db.go:190-199) →
   ``.option("encoding", ...)``, widened to the full JVM charset
   registry (shift_jis/euc-kr/cp1251/... via legacy.javaCharsets) with
-  the header sniff decoding under the same charset.
+  the header sniff decoding under the same charset; stdin bytes decode
+  under the same ``encoding`` before they are parsed.
 - P4: header row consumed as schema, else synthesized ``col0..colN``
   names (common/schema.go:144-169) → header option + rename.
 - P7: schema reconcile — intersect CSV columns with target columns by
@@ -34,8 +34,14 @@ parsing accepts Spark's cast vocabulary (adds ``y/yes/n/no`` to Go's
 
 from __future__ import annotations
 
+import codecs
 import csv as _pycsv
+import io
+import itertools
 import logging
+import os
+import sys
+import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +52,10 @@ log = logging.getLogger("csv2db_spark.ingest")
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _INT_RE = r"^[+-]?\d+$"
 
+# the reference's stdin marker is '--' (csv2db.go:174-176); '-' is the
+# usual Unix spelling and is accepted too
+STDIN_PATHS = ("-", "--")
+
 
 # Spark 4's CSV reader only accepts these charsets natively; anything
 # else (shift_jis, euc-kr, cp1251, ...) needs the JVM charset registry
@@ -54,8 +64,7 @@ _INT_RE = r"^[+-]?\d+$"
 # are Python-codec CANONICAL names (codecs.lookup(...).name), so any
 # alias a user writes — "UTF8", "latin1", "L1", "ansi_x3.4-1968" —
 # normalizes onto this set instead of spuriously enabling the legacy
-# JVM registry (ADVICE r9: the lower+underscore normalization missed
-# common aliases).
+# JVM registry (a lower+underscore normalization misses common aliases).
 _NATIVE_BY_CODEC_NAME = {
     "iso8859-1": "ISO-8859-1",
     "ascii": "US-ASCII",
@@ -75,32 +84,11 @@ def _normalize_charset(encoding: str) -> tuple[str, bool]:
     registry; genuinely non-native charsets (or names Python doesn't
     know — the JVM registry is then the arbiter) pass through with the
     registry flag."""
-    import codecs
-
     try:
         native = _NATIVE_BY_CODEC_NAME.get(codecs.lookup(encoding).name)
     except LookupError:
         return encoding, True
     return (native, False) if native else (encoding, True)
-
-
-def _needs_java_charsets(encoding: str) -> bool:
-    return _normalize_charset(encoding)[1]
-
-
-def _enable_charset(spark: SparkSession, encoding: str) -> None:
-    """Re-enable the full JVM charset registry for non-native encodings.
-
-    Deliberately SESSION-WIDE and not restored: Spark reads are lazy, so
-    the conf must still be set when the job actually RUNS — possibly long
-    after read_csv() returned — which makes a set/restore scope around
-    the read a correctness bug, not a courtesy. The flag only widens the
-    accepted charset list (it changes no decode result for native
-    charsets), so leaving it on is behavior-neutral for every other
-    query on the session; alias normalization above keeps it off unless
-    a genuinely non-native charset was requested."""
-    if _needs_java_charsets(encoding):
-        spark.conf.set("spark.sql.legacy.javaCharsets", "true")
 
 
 def _sniff_local(
@@ -111,31 +99,27 @@ def _sniff_local(
     The reference reads the header on the driver too (csv2db.go:88-106 —
     one buffered read of the first record before the load starts), and a
     Spark job just to learn the header costs two scheduler round-trips
-    per read (schema-inference pass + limit-1 collect — the r9 ingest
-    bench doubling, VERDICT r9 item 3). For the overwhelmingly common
-    case — ONE concrete local file — decode the first record in-process
-    under the requested codec (non-ASCII header names stay correct, the
-    r9 fix's point). Returns None when the path is not a single local
-    file (glob, directory, remote scheme, file:// with a non-local
-    host) or the codec name is unknown to Python, and — decoding
-    STRICT, not errors='replace' — when the header bytes are invalid in
-    the requested charset (ADVICE r10: a silent U+FFFD column name is
-    worse than handing the decode to the JVM reader); callers fall back
-    to the CSV-reader sniff in every None case. utf-8-sig for UTF-8
-    mirrors the JVM CSV reader's BOM skip."""
-    import codecs
-    import os
-
+    per read (schema-inference pass + limit-1 collect, which doubled the
+    ingest bench). For the overwhelmingly common case — ONE concrete
+    local file — decode the first record in-process under the requested
+    codec, so non-ASCII header names stay correct. Returns None when the
+    path is not a single local file (glob, directory, remote scheme,
+    file:// with a non-local host) or the codec name is unknown to
+    Python, and — decoding STRICT, not errors='replace' — when the
+    header bytes are invalid in the requested charset (a silent U+FFFD
+    column name is worse than handing the decode to the JVM reader);
+    callers fall back to the CSV-reader sniff in every None case.
+    utf-8-sig for UTF-8 mirrors the JVM CSV reader's BOM skip."""
     p = path
     if path.startswith("file:"):
         # all spellings: file:/p, file:///p, file://localhost/p — and
-        # file://otherhost/p, which is NOT this machine: fall back
-        # (ADVICE r10: the old exact-prefix strip left 'file:/p' with
-        # its scheme attached and silently took the Spark path).
+        # file://otherhost/p, which is NOT this machine: fall back (an
+        # exact-prefix strip would leave 'file:/p' with its scheme
+        # attached and silently take the Spark path).
         # Scheme/netloc are split BY HAND, not with urlparse: Hadoop's
         # Path treats '?' and '#' in a file name literally, while
         # urlparse would truncate u.path at them and the sniff would
-        # silently fall back on a perfectly local file (ADVICE r11).
+        # silently fall back on a perfectly local file.
         # NO percent-decoding either: Path treats %XX literally, so
         # unquoting here could sniff a DIFFERENT file than the JVM
         # read loads — the exact sniff-vs-reader parity bug class.
@@ -143,8 +127,7 @@ def _sniff_local(
         if rest.startswith("//"):
             netloc, slash, tail = rest[2:].partition("/")
             # RFC 3986 §3.2.2: host comparison is case-insensitive —
-            # file://LOCALHOST/p is this machine (ADVICE r12: urlparse
-            # lowercased netloc; the hand split must too).
+            # file://LOCALHOST/p is this machine
             if netloc.lower() not in ("", "localhost"):
                 return None
             p = slash + tail
@@ -198,7 +181,6 @@ def _sniff_first_line(
     local = _sniff_local(path, delimiter, encoding, multiline)
     if local is not None:
         return local
-    _enable_charset(spark, encoding)
     first = (
         spark.read.options(
             header="false",
@@ -217,54 +199,29 @@ def _sniff_first_line(
     return ["" if v is None else v for v in first[0]]
 
 
-def read_csv(
-    spark: SparkSession,
+def _string_schema(names: list[str]) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
+def scan_csv(
+    reader,
     path: str,
-    has_header: bool = True,
-    delimiter: str = ",",
+    names: list[str],
+    has_header: bool,
+    delimiter: str,
     encoding: str = "UTF-8",
     mode: str = "FAILFAST",
     multiline: bool = False,
 ) -> DataFrame:
-    """Read a CSV as all-string columns.
-
-    ``mode``: FAILFAST (default — reference parity: any malformed row
-    aborts the load, csv2db.go:84-86), PERMISSIVE (malformed fields ->
-    NULL-then-"" here), or DROPMALFORMED (skip bad rows) — the extension
-    modes for dirty corpora at scale.
-
-    Headerless inputs get ``col0..colN`` names (reference ``NColsSchema``,
-    common/schema.go:157-169). Missing/empty fields are normalized to ""
-    so downstream cast logic owns the empty-vs-NULL decision per target
-    nullability — never the reader (SURVEY.md §7.5 risk 1).
-
-    ``multiline=True`` parses quoted fields with embedded newlines —
-    the Go encoding/csv reader (csv2db.go:84) ALWAYS supports these;
-    Spark makes it opt-in because a multiline file cannot be split at
-    newlines, so each FILE becomes one task (the 100 TB tradeoff: ship
-    many medium files, not one giant one, when records span lines).
-
-    Charset breadth matches the reference's any-registered-encoding
-    contract (csv2db.go:190-199): Spark 4's native CSV allowlist is
-    UTF-8/16/32 + latin-1 + ascii, so other charsets (shift_jis,
-    euc-kr, cp1251, ...) re-enable the full JVM registry via
-    ``spark.sql.legacy.javaCharsets`` — and the header sniff goes
-    through the CSV reader under the same encoding, so non-ASCII header
-    NAMES decode correctly too (tests/test_ingest.py charset matrix).
-    """
-    if len(delimiter) != 1:
-        # config.go:67-72 rejects multi-char delimiters
-        raise ValueError(f"delimiter must be a single character, got {delimiter!r}")
-    # alias-normalize BEFORE anything touches Spark: "UTF8"/"latin1"
-    # become the allowlisted spelling, so the legacy JVM registry stays
-    # off unless the charset is genuinely non-native (ADVICE r9)
-    encoding, _ = _normalize_charset(encoding)
-    _enable_charset(spark, encoding)
-    first = _sniff_first_line(spark, path, delimiter, encoding, multiline)
-    names = first if has_header else [f"col{i}" for i in range(len(first))]
-    schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+    """The one CSV scan: ``reader`` is ``spark.read`` (a file, or the
+    chunk files of a spilled stdin) or ``spark.readStream`` (a watched
+    directory). Columns are all-string under ``names``; an empty field,
+    a quoted-empty one and a missing one all become "" — the Go csv
+    reader yields "" for each and NULL never originates in the reader,
+    so the cast owns the empty-vs-NULL decision per target nullability
+    (SURVEY.md §7.5 risk 1)."""
     df = (
-        spark.read.schema(schema)
+        reader.schema(_string_schema(names))
         .options(
             header=str(has_header).lower(),
             sep=delimiter,
@@ -276,325 +233,194 @@ def read_csv(
         )
         .csv(path)
     )
-    # empty field and quoted-empty both become "" — the Go csv reader
-    # yields "" for both and NULL never originates in the reader.
-    return df.select(
-        *[F.coalesce(F.col(n), F.lit("")).alias(n) for n in df.columns]
-    )
+    return df.select(*[F.coalesce(F.col(n), F.lit("")).alias(n) for n in df.columns])
 
 
-def read_csv_buffer(
+def read_csv(
     spark: SparkSession,
-    data: str,
+    path: str,
     has_header: bool = True,
     delimiter: str = ",",
-    spill_threshold: int = 32 << 20,
-    spill_dir: str | None = None,
+    encoding: str = "UTF-8",
+    mode: str = "FAILFAST",
+    multiline: bool = False,
 ) -> DataFrame:
-    """stdin-equivalent CSV source (reference ``--input-file --``,
-    csv2db.go:174-176): parse an in-memory string into the same all-string
-    frame ``read_csv`` produces.
+    """Read a CSV file, or stdin when ``path`` is ``-`` or ``--``, as
+    all-string columns.
 
-    Small buffers (the CLI-parity case) are parsed with Python's csv
-    module (full quoting semantics, embedded newlines) and handed to the
-    cluster via ``createDataFrame`` — there is nothing to distribute
-    until the rows exist. Ragged rows raise immediately, matching Go
-    encoding/csv's ErrFieldCount under the reference's FAILFAST posture.
+    ``mode``: FAILFAST (default — reference parity: any malformed row
+    aborts the load, csv2db.go:84-86), PERMISSIVE (malformed fields ->
+    NULL-then-"" here), or DROPMALFORMED (skip bad rows) — the extension
+    modes for dirty corpora at scale. Stdin is read FAILFAST only; any
+    other mode raises ValueError there.
 
-    Buffers past ``spill_threshold`` characters take the SPILL path: the
-    reference streams stdin constant-memory (csv2db.go:174-176), and a
-    multi-GB pipe parsed row-by-row on the driver then serialized
-    through ``createDataFrame`` is driver-bound twice over. The spill
-    splits the raw text into record-aligned chunks (boundaries only at
-    newlines with even quote parity, so quoted embedded newlines never
-    split a record — an O(n) scan that materializes no rows), writes
-    them under ``spill_dir`` (a tempdir by default), and returns a
-    distributed FAILFAST scan over the chunk files: one task per chunk
-    (``multiLine`` per-file parse), executor-side parsing, identical
-    rows to the driver path (pinned in tests/test_ingest.py). Semantics
-    deltas, documented not hidden: ragged rows surface as Spark's
-    FAILFAST read error at ACTION time (the distributed scan cannot
-    raise at build time), and the chunk files live until the caller is
-    done with the DataFrame — pass ``spill_dir`` to own cleanup, else
-    they age out with the system tempdir.
+    Headerless inputs get ``col0..colN`` names (reference ``NColsSchema``,
+    common/schema.go:157-169).
+
+    ``multiline=True`` parses quoted fields with embedded newlines —
+    the Go encoding/csv reader (csv2db.go:84) ALWAYS supports these;
+    Spark makes it opt-in because a multiline file cannot be split at
+    newlines, so each FILE becomes one task (the 100 TB tradeoff: ship
+    many medium files, not one giant one, when records span lines).
+    ``multiline=False`` is the caller's promise that no record spans a
+    line, which lets a file split anywhere. Stdin never needs that
+    trade: ``read_csv_stdin`` cuts it at record boundaries itself, so
+    quoted newlines parse there either way, and wherever the promise
+    holds the rows are the same.
+
+    Charset breadth matches the reference's any-registered-encoding
+    contract (csv2db.go:190-199): Spark 4's native CSV allowlist is
+    UTF-8/16/32 + latin-1 + ascii, so other charsets (shift_jis,
+    euc-kr, cp1251, ...) re-enable the full JVM registry via
+    ``spark.sql.legacy.javaCharsets`` — and the header sniff goes
+    through the CSV reader under the same encoding, so non-ASCII header
+    NAMES decode correctly too (tests/test_ingest.py charset matrix).
+    Stdin bytes are decoded by Python's codec of the same name (strict:
+    an invalid byte raises instead of loading U+FFFD); a charset Python
+    does not know raises ValueError there.
     """
     if len(delimiter) != 1:
+        # config.go:67-72 rejects multi-char delimiters
         raise ValueError(f"delimiter must be a single character, got {delimiter!r}")
-    import io
-
-    if len(data) > spill_threshold:
-        return _read_csv_buffer_spilled(
-            spark, data, has_header, delimiter, spill_threshold, spill_dir
+    # alias-normalize BEFORE anything touches Spark: "UTF8"/"latin1"
+    # become the allowlisted spelling, so the legacy JVM registry stays
+    # off unless the charset is genuinely non-native
+    encoding, legacy = _normalize_charset(encoding)
+    if path in STDIN_PATHS:
+        if mode.upper() != "FAILFAST":
+            raise ValueError(f"stdin is read FAILFAST only, got mode={mode!r}")
+        try:
+            codec = codecs.lookup(encoding).name
+        except LookupError:
+            raise ValueError(f"cannot decode stdin as {encoding!r}") from None
+        text = io.TextIOWrapper(
+            sys.stdin.buffer, encoding="utf-8-sig" if codec == "utf-8" else codec
         )
-    rows = list(_pycsv.reader(io.StringIO(data), delimiter=delimiter))
-    if not rows:
-        raise ValueError("empty CSV input: <buffer>")
-    names = rows[0] if has_header else [f"col{i}" for i in range(len(rows[0]))]
-    body = rows[1:] if has_header else rows
-    for i, r in enumerate(body):
-        if len(r) != len(names):
-            raise ValueError(
-                f"record {i + 1} has {len(r)} fields, want {len(names)}"
-            )
-    schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-    return spark.createDataFrame([tuple(r) for r in body], schema)
+        try:
+            return read_csv_stdin(spark, text, has_header, delimiter)
+        finally:
+            text.detach()  # leave sys.stdin's buffer open
+    if legacy:
+        # Deliberately SESSION-WIDE and not restored: Spark reads are
+        # lazy, so the conf must still be set when the job actually RUNS
+        # — possibly long after read_csv() returned — which makes a
+        # set/restore scope around the read a correctness bug. The flag
+        # only widens the accepted charset list (it changes no decode
+        # result for native charsets), so leaving it on is
+        # behavior-neutral for every other query on the session.
+        spark.conf.set("spark.sql.legacy.javaCharsets", "true")
+    first = _sniff_first_line(spark, path, delimiter, encoding, multiline)
+    names = first if has_header else [f"col{i}" for i in range(len(first))]
+    return scan_csv(
+        spark.read, path, names, has_header, delimiter, encoding, mode, multiline
+    )
 
 
-def _split_first_record(data: str) -> tuple[str, str]:
-    """(first_record_text, rest) split at the first record boundary — a
-    newline with even running quote parity, so a quoted header name with
-    an embedded newline stays whole. Doubled quotes ("") flip parity
-    twice, a no-op, which is exactly RFC-4180 escaping."""
+def _records(head: str, stream, block: int = 1 << 20):
+    """Record texts of ``head`` followed by the rest of ``stream``, read
+    in ``block``-char pieces — constant memory (one block plus one
+    pending record). A newline with odd running quote parity lies inside
+    a quoted field and continues the record; doubled quotes ("") flip
+    the parity twice, which is exactly RFC-4180 escaping. Blank lines
+    are skipped, as the univocity and Go readers skip them, while a
+    whitespace-only line IS a record (one field of spaces) to both."""
+    rec: list[str] = []
     parity = 0
-    pos = 0
-    for line in data.split("\n"):
-        end = pos + len(line)
-        parity ^= line.count('"') & 1
-        if parity == 0:
-            return data[:end], data[end + 1 :]
-        pos = end + 1
-    return data, ""
+    pending = ""
+    text = head
+    while text:
+        *lines, pending = (pending + text).split("\n")
+        for line in lines:
+            rec.append(line)
+            parity ^= line.count('"') & 1
+            if not parity:
+                if rec != [""]:
+                    yield "\n".join(rec)
+                rec = []
+        text = stream.read(block)
+    if rec or pending:
+        yield "\n".join(rec + [pending])
 
 
-def _record_chunks(data: str, chunk_chars: int):
-    """Yield record-aligned text chunks of ~``chunk_chars``: the running
-    quote parity marks which newlines are record boundaries (even) vs
-    embedded in a quoted field (odd); chunks only break at the former."""
+def _chunks(records, chunk_chars: int):
+    """Join records into texts of at least ``chunk_chars`` (the last may
+    be shorter)."""
     buf: list[str] = []
     size = 0
-    parity = 0
-    for line in data.split("\n"):
-        buf.append(line)
-        size += len(line) + 1
-        parity ^= line.count('"') & 1
-        if parity == 0 and size >= chunk_chars:
+    for rec in records:
+        buf.append(rec)
+        size += len(rec) + 1
+        if size >= chunk_chars:
             yield "\n".join(buf)
             buf, size = [], 0
-    # suppress only a RECORD-FREE tail (every line truly empty — e.g.
-    # the split artifact after a final newline): a whitespace-only line
-    # IS a record (one field of spaces) to both the driver-side
-    # csv.reader and univocity, so .strip() here would silently drop it
-    # on the spill path only (ADVICE r9 parity break).
-    if any(ln != "" for ln in buf):
+    if buf:
         yield "\n".join(buf)
-
-
-def _read_csv_buffer_spilled(
-    spark: SparkSession,
-    data: str,
-    has_header: bool,
-    delimiter: str,
-    spill_threshold: int,
-    spill_dir: str | None,
-) -> DataFrame:
-    import io
-    import os
-    import tempfile
-
-    if has_header:
-        head, data = _split_first_record(data)
-        names = next(_pycsv.reader(io.StringIO(head), delimiter=delimiter))
-    else:
-        head, _ = _split_first_record(data)
-        names = [
-            f"col{i}"
-            for i in range(
-                len(next(_pycsv.reader(io.StringIO(head), delimiter=delimiter)))
-            )
-        ]
-    if not data.strip() and not has_header:
-        raise ValueError("empty CSV input: <buffer>")
-    schema = T.StructType([T.StructField(x, T.StringType(), True) for x in names])
-    if not data.strip():  # header-only buffer: empty frame, driver-path parity
-        return spark.createDataFrame([], schema)
-    d = spill_dir or tempfile.mkdtemp(prefix="c2s_stdin_spill_")
-    os.makedirs(d, exist_ok=True)
-    # chunk size targets one task per default-parallelism slot, floored
-    # at threshold/8 so a buffer just past the threshold doesn't shatter
-    # into thousands of tiny files (default threshold -> 4 MB floor)
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    chunk = max(len(data) // par + 1, spill_threshold // 8, 1)
-    n = 0
-    for i, text in enumerate(_record_chunks(data, chunk)):
-        with open(os.path.join(d, f"chunk-{i:05d}.csv"), "w", encoding="utf-8") as fh:
-            fh.write(text)
-        n += 1
-    if n == 0:
-        raise ValueError("empty CSV input: <buffer>")
-    return _spilled_scan(spark, d, names, delimiter)
-
-
-def _iter_lines(first: str, stream, block: int = 1 << 20):
-    """Line iterator over ``first`` followed by the rest of ``stream``,
-    read in ``block``-char pieces — constant memory (one block + one
-    pending partial line), and the seam between ``first`` and the
-    stream merges a split line correctly."""
-    pending = ""
-
-    def feed(text: str):
-        nonlocal pending
-        parts = (pending + text).split("\n")
-        pending = parts.pop()
-        yield from parts
-
-    yield from feed(first)
-    while True:
-        b = stream.read(block)
-        if not b:
-            break
-        yield from feed(b)
-    if pending:
-        yield pending
-
-
-def _spilled_scan(
-    spark: SparkSession, d: str, names: list[str], delimiter: str
-) -> DataFrame:
-    """Distributed FAILFAST scan over a directory of record-aligned
-    chunk files (shared by the buffer- and stream-spill paths)."""
-    schema = T.StructType([T.StructField(x, T.StringType(), True) for x in names])
-    df = (
-        spark.read.schema(schema)
-        .options(
-            header="false",
-            sep=delimiter,
-            mode="FAILFAST",
-            quote='"',
-            escape='"',
-            multiLine="true",
-        )
-        .csv(d)
-    )
-    return df.select(
-        *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in df.columns]
-    )
 
 
 def read_csv_stdin(
     spark: SparkSession,
-    stream=None,
+    stream,
     has_header: bool = True,
     delimiter: str = ",",
     spill_threshold: int = 32 << 20,
     spill_dir: str | None = None,
 ) -> DataFrame:
-    """CONSTANT-MEMORY stdin CSV source — the true parity with the
-    reference's streaming stdin loop (csv2db.go:174-176 never holds the
-    pipe in memory). Peeks ``spill_threshold`` chars: if the pipe ends
-    inside the peek, this IS ``read_csv_buffer`` on the small string
-    (driver-side parse, build-time ragged-row errors). A longer pipe
-    never materializes as one string: lines are assembled from
-    block-sized reads (one block + one pending line in memory at a
-    time), record-aligned chunks (quote-parity boundaries, exactly the
-    buffer spill's logic) stream to ``spill_dir`` as they fill, and the
-    return is the distributed FAILFAST scan over the chunk files —
-    executor-side parse of a pipe of ANY size, with driver memory
-    bounded by the chunk size."""
-    import itertools
-    import os
-    import sys
-    import tempfile
+    """CONSTANT-MEMORY CSV source over a text stream — the parity with
+    the reference's streaming stdin loop (csv2db.go:174-176 never holds
+    the pipe in memory); ``read_csv(spark, "-")`` calls it on the
+    decoded stdin. Peeks ``spill_threshold`` chars:
 
+    - A stream that ends inside the peek is parsed on the driver with
+      Python's csv module (full quoting, embedded newlines) and handed
+      over with ``createDataFrame`` — there is nothing to distribute
+      until the rows exist. Ragged rows raise at build time, like Go
+      encoding/csv's ErrFieldCount under the reference's FAILFAST.
+    - A longer stream never materializes as one string: its records
+      are joined into chunks of ``spill_threshold // 8`` chars, written
+      under ``spill_dir`` (a tempdir by default) as they fill, and read
+      back by ``scan_csv`` — one executor-side FAILFAST task per chunk,
+      with driver memory bounded by the chunk size. Ragged rows then
+      surface as Spark's FAILFAST read error at ACTION time, and the
+      chunk files live until the caller is done with the DataFrame —
+      pass ``spill_dir`` to own cleanup, else they age out with the
+      system tempdir.
+
+    Both paths give the same rows as ``read_csv`` on the same text in a
+    file (tests/test_ingest.py)."""
     if len(delimiter) != 1:
         raise ValueError(f"delimiter must be a single character, got {delimiter!r}")
-    stream = stream if stream is not None else sys.stdin
     head = stream.read(spill_threshold)
     if len(head) < spill_threshold:
-        return read_csv_buffer(
-            spark, head, has_header, delimiter, spill_threshold, spill_dir
-        )
-    import io as _io
-
-    lines = _iter_lines(head, stream)
-    # pull the first record off the line stream (quote-parity complete)
-    first_rec: list[str] = []
-    parity = 0
-    for ln in lines:
-        first_rec.append(ln)
-        parity ^= ln.count('"') & 1
-        if parity == 0:
-            break
-    first_fields = next(
-        _pycsv.reader(_io.StringIO("\n".join(first_rec)), delimiter=delimiter)
-    )
+        rows = [r for r in _pycsv.reader(io.StringIO(head), delimiter=delimiter) if r]
+        if not rows:
+            raise ValueError("empty CSV input: <stdin>")
+        names = rows[0] if has_header else [f"col{i}" for i in range(len(rows[0]))]
+        body = rows[1:] if has_header else rows
+        for i, r in enumerate(body):
+            if len(r) != len(names):
+                raise ValueError(
+                    f"record {i + 1} has {len(r)} fields, want {len(names)}"
+                )
+        return spark.createDataFrame([tuple(r) for r in body], _string_schema(names))
+    records = _records(head, stream)
+    first = next(records, None)
+    if first is None:
+        raise ValueError("empty CSV input: <stdin>")
+    fields = next(_pycsv.reader(io.StringIO(first), delimiter=delimiter))
     if has_header:
-        names = first_fields
+        names = fields
     else:
-        names = [f"col{i}" for i in range(len(first_fields))]
-        lines = itertools.chain(first_rec, lines)  # first record is data
+        names = [f"col{i}" for i in range(len(fields))]
+        records = itertools.chain([first], records)  # first record is data
     d = spill_dir or tempfile.mkdtemp(prefix="c2s_stdin_spill_")
     os.makedirs(d, exist_ok=True)
-    chunk_chars = max(spill_threshold // 8, 1)
-    buf: list[str] = []
-    size = 0
-    parity = 0
     n = 0
-
-    def flush() -> None:
-        nonlocal buf, size, n
-        text = "\n".join(buf)
-        # skip only record-free chunks (all-empty lines): whitespace-only
-        # lines are real one-field records on both parse paths (ADVICE r9)
-        if any(ln != "" for ln in buf):
-            with open(
-                os.path.join(d, f"chunk-{n:05d}.csv"), "w", encoding="utf-8"
-            ) as fh:
-                fh.write(text)
-            n += 1
-        buf, size = [], 0
-
-    for ln in lines:
-        buf.append(ln)
-        size += len(ln) + 1
-        parity ^= ln.count('"') & 1
-        if parity == 0 and size >= chunk_chars:
-            flush()
-    flush()
-    if n == 0:
-        raise ValueError("empty CSV input: <stdin>")
-    return _spilled_scan(spark, d, names, delimiter)
-
-
-def ingest_csv_stdin(
-    spark: SparkSession,
-    stream=None,
-    target: T.StructType | None = None,
-    has_header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """P1-P8 pipeline over stdin (or any text stream): constant-memory
-    read (``read_csv_stdin``) → reconcile → cast — what the CLI's
-    ``--input-file --`` runs, so a multi-GB pipe parses executor-side
-    instead of being held as one driver string."""
-    df = read_csv_stdin(spark, stream, has_header, delimiter)
-    if target is None:
-        return df
-    aligned = (
-        reconcile_by_name(df, target)
-        if has_header
-        else reconcile_by_index(df, target)
-    )
-    return cast_to_schema(aligned, target)
-
-
-def ingest_csv_buffer(
-    spark: SparkSession,
-    data: str,
-    target: T.StructType | None = None,
-    has_header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """P1-P8 pipeline over an in-memory buffer (stdin parity): read →
-    reconcile → cast, same semantics as ``ingest_csv``."""
-    df = read_csv_buffer(spark, data, has_header, delimiter)
-    if target is None:
-        return df
-    aligned = (
-        reconcile_by_name(df, target)
-        if has_header
-        else reconcile_by_index(df, target)
-    )
-    return cast_to_schema(aligned, target)
+    for n, text in enumerate(_chunks(records, max(spill_threshold // 8, 1)), 1):
+        with open(os.path.join(d, f"chunk-{n - 1:05d}.csv"), "w", encoding="utf-8") as fh:
+            fh.write(text)
+    if n == 0:  # header only: an empty frame, as on the driver path
+        return spark.createDataFrame([], _string_schema(names))
+    return scan_csv(spark.read, d, names, False, delimiter, multiline=True)
 
 
 # ---------------------------------------------------------------------------
@@ -736,6 +562,27 @@ def cast_to_schema(
     raise ValueError(f"on_error must be raise|drop|null, got {on_error!r}")
 
 
+def align_and_cast(
+    df: DataFrame,
+    target: T.StructType | None,
+    has_header: bool,
+    on_error: str = "raise",
+) -> DataFrame:
+    """P7 + P8 over an all-string CSV frame, batch or streaming: align by
+    name when the CSV has a header, else by ordinal, then cast with
+    ``on_error`` (see ``cast_to_schema``). With no target schema (table
+    doesn't exist → reference creates an all-string table,
+    csv2db.go:157), the all-string frame is returned as-is."""
+    if target is None:
+        return df
+    aligned = (
+        reconcile_by_name(df, target)
+        if has_header
+        else reconcile_by_index(df, target)
+    )
+    return cast_to_schema(aligned, target, on_error=on_error)
+
+
 def ingest_csv(
     spark: SparkSession,
     path: str,
@@ -746,21 +593,10 @@ def ingest_csv(
     on_error: str = "raise",
     multiline: bool = False,
 ) -> DataFrame:
-    """Full P1-P8 pipeline: read → reconcile → cast.
-
-    With no target schema (table doesn't exist → reference creates an
-    all-string table, csv2db.go:157), returns the all-string frame as-is.
-    ``on_error`` is the typed-cast error mode (see ``cast_to_schema``).
-    """
+    """Full P1-P8 pipeline: ``read_csv`` (a file, or stdin for ``-``/``--``)
+    → ``align_and_cast``."""
     df = read_csv(spark, path, has_header, delimiter, encoding, multiline=multiline)
-    if target is None:
-        return df
-    aligned = (
-        reconcile_by_name(df, target)
-        if has_header
-        else reconcile_by_index(df, target)
-    )
-    return cast_to_schema(aligned, target, on_error=on_error)
+    return align_and_cast(df, target, has_header, on_error)
 
 
 def read_fixed_width(
@@ -778,9 +614,8 @@ def read_fixed_width(
 
     The result is an all-string frame by design, exactly like the CSV
     reader's (reference P4 semantics) — feed it through
-    ``reconcile_by_name`` / ``cast_to_schema`` for typed loading; empty
-    slices become empty strings and follow the same empty→NULL-iff-
-    nullable rule there. Scale: text files split by line ranges like any
+    ``align_and_cast`` for typed loading; empty slices become empty
+    strings and follow the same empty→NULL-iff-nullable rule there. Scale: text files split by line ranges like any
     Spark text source; no shuffle, no Python."""
     lines = spark.read.text(path)
     if encoding.upper() not in ("UTF-8", "UTF8", "US-ASCII", "ASCII"):

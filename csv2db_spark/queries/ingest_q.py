@@ -169,12 +169,9 @@ def q_ingest_csv_latin1(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod.write.mode("overwrite").options(
         header=True, encoding="ISO-8859-1"
     ).csv(path)
-    from csv2db_spark.ingest import read_csv
+    from csv2db_spark.ingest import ingest_csv
 
-    df = read_csv(spark, path, has_header=True, encoding="ISO-8859-1")
-    from csv2db_spark.ingest import cast_to_schema, reconcile_by_name
-
-    typed = cast_to_schema(reconcile_by_name(df, NAME_SCHEMA), NAME_SCHEMA)
+    typed = ingest_csv(spark, path, NAME_SCHEMA, encoding="ISO-8859-1")
     return typed.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.length("c_name")).alias("total_chars"),

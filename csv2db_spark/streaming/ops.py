@@ -731,13 +731,14 @@ def streaming_ingest_csv(
     and every CSV dropped into it is parsed, reconciled and cast with the
     exact batch ingest semantics (ingest.py P1-P8: header naming,
     by-name/by-ordinal alignment, empty-string→NULL iff nullable,
-    FAILFAST on bad values), then appended to the sink.
+    FAILFAST on malformed rows and bad values), then appended to the
+    sink.
 
-    The reconcile/cast stages are plain column expressions, so the SAME
-    functions serve batch and streaming — one semantics, two execution
-    modes. At scale: the file source lists incrementally
-    (maxFilesPerTrigger batches), checkpointing gives exactly-once into
-    transactional sinks.
+    The scan (``ingest.scan_csv``, handed ``spark.readStream``) and the
+    reconcile/cast (``ingest.align_and_cast``) are the batch functions
+    themselves — one semantics, two execution modes. At scale: the file
+    source lists incrementally (maxFilesPerTrigger batches),
+    checkpointing gives exactly-once into transactional sinks.
 
     Header alignment: Spark's streaming CSV source applies a user schema
     POSITIONALLY and ignores header names, so the file's real column
@@ -751,50 +752,34 @@ def streaming_ingest_csv(
     load would be silent data corruption); files arriving later must
     match that layout, mirroring Spark's own one-schema-per-source model
     for streams. If the directory is empty at stream definition, names
-    fall back to target order.
+    fall back to target order. Headerless files take their width from a
+    file present at stream definition (else the target's), as batch
+    takes it from the first record.
     """
-    from pyspark.sql import types as T
+    from csv2db_spark.ingest import align_and_cast, scan_csv
 
-    from csv2db_spark.ingest import (
-        cast_to_schema,
-        reconcile_by_index,
-        reconcile_by_name,
-    )
-
-    ncols = len(target.fields)
+    headers = _sniff_headers(spark, watch_dir, delimiter)
+    layouts = {tuple(h) for h in headers.values()}
+    if has_header and len(layouts) > 1:
+        detail = "; ".join(
+            f"{path}: {', '.join(h)}" for path, h in sorted(headers.items())
+        )
+        raise ValueError(
+            f"inconsistent CSV headers in watch dir {watch_dir!r} — the "
+            "streaming CSV source binds one positional schema per "
+            f"directory, so all files must share one layout ({detail})"
+        )
+    first = next(iter(layouts), None)
     if has_header:
-        headers = _sniff_headers(spark, watch_dir, delimiter)
-        layouts = {tuple(h) for h in headers.values()}
-        if len(layouts) > 1:
-            detail = "; ".join(
-                f"{path}: {', '.join(h)}" for path, h in sorted(headers.items())
-            )
-            raise ValueError(
-                f"inconsistent CSV headers in watch dir {watch_dir!r} — the "
-                "streaming CSV source binds one positional schema per "
-                f"directory, so all files must share one layout ({detail})"
-            )
-        names = list(next(iter(layouts))) if layouts else [f.name for f in target.fields]
-        raw_schema = T.StructType(
-            [T.StructField(n, T.StringType(), True) for n in names]
-        )
+        names = list(first) if first else target.fieldNames()
     else:
-        raw_schema = T.StructType(
-            [T.StructField(f"col{i}", T.StringType(), True) for i in range(ncols)]
-        )
-    sdf = (
-        spark.readStream.schema(raw_schema)
-        .option("header", str(has_header).lower())
-        .option("sep", delimiter)
-        .option("emptyValue", "")
-        .csv(watch_dir)
-    )
-    aligned = (
-        reconcile_by_name(sdf, target)
-        if has_header
-        else reconcile_by_index(sdf, target)
-    )
-    return cast_to_schema(aligned, target)
+        # the FAILFAST scan rejects a row wider than the schema, so the
+        # width comes from the files like batch's first-record sniff, and
+        # reconcile_by_index drops the excess columns
+        width = len(first) if first else len(target.fields)
+        names = [f"col{i}" for i in range(width)]
+    sdf = scan_csv(spark.readStream, watch_dir, names, has_header, delimiter)
+    return align_and_cast(sdf, target, has_header)
 
 
 def _sniff_headers(

@@ -165,7 +165,7 @@ def test_end_to_end_parquet_store(spark, tmp_path, config_path):
 
 def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):
     url = "jdbc:derby:memory:clidb;create=true"
-    monkeypatch.setattr("sys.stdin", io.StringIO("a,b\n5,z\n"))
+    monkeypatch.setattr("sys.stdin", io.TextIOWrapper(io.BytesIO(b"a,b\n5,z\n")))
     rc = main(
         ["--url", url, "-t", "t", "-m", "create", "-i", "--", "--has-header"],
         spark=spark,
@@ -180,7 +180,7 @@ def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):
     )
     assert [(r[0], r[1]) for r in got] == [("5", "z")]
     # second load against the now-existing table resolves its schema (P5)
-    monkeypatch.setattr("sys.stdin", io.StringIO("a,b\n6,w\n"))
+    monkeypatch.setattr("sys.stdin", io.TextIOWrapper(io.BytesIO(b"a,b\n6,w\n")))
     assert main(["--url", url, "-t", "t", "-m", "as-is", "-i", "--", "--has-header"], spark=spark) == 0
     try:
         spark._jvm.java.sql.DriverManager.getConnection(
@@ -188,6 +188,25 @@ def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):
         )
     except Exception:
         pass
+
+
+def test_stdin_honours_encoding_like_a_file(spark, tmp_path, config_path, monkeypatch):
+    """``-e`` decodes stdin exactly as it decodes a file (P2,
+    csv2db.go:190-199): the same latin-1 bytes piped through ``-i --``
+    and read from a file store the same rows."""
+    data = "a,b\n1,café\n".encode("latin-1")
+    csv = tmp_path / "in.csv"
+    csv.write_bytes(data)
+    monkeypatch.setattr("sys.stdin", io.TextIOWrapper(io.BytesIO(data)))
+    stored = {}
+    for table, source in (("piped", "--"), ("filed", str(csv))):
+        url = f"parquet:{tmp_path / 'db'}"
+        flags = ["-t", table, "-m", "create", "--has-header", "-e", "ISO-8859-1"]
+        assert main(["--url", url, "-i", source, *flags], spark=spark) == 0
+        stored[table] = sorted(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / "db" / table)).collect()
+        )
+    assert stored["piped"] == stored["filed"] == [("1", "café")]
 
 
 def test_missing_required_args_fatal(spark, config_path):

@@ -8,6 +8,10 @@ the reconciled/cast DataFrame; the JDBC sink is replaced by collect()
 
 from __future__ import annotations
 
+import csv
+import glob
+import io
+
 import pytest
 from pyspark.errors.exceptions.captured import SparkRuntimeException
 from pyspark.sql import types as T
@@ -15,9 +19,8 @@ from pyspark.sql import types as T
 from csv2db_spark.ingest import (
     cast_to_schema,
     ingest_csv,
-    ingest_csv_buffer,
     read_csv,
-    read_csv_buffer,
+    read_csv_stdin,
     reconcile_by_index,
     reconcile_by_name,
 )
@@ -38,6 +41,18 @@ NO_HEADER = "1,2,qqq,{},2017-01-01\n,4,,,"
 HEADER = "a,b,c,d,e\n" + NO_HEADER
 HEADER_SHORT = "a,c,d,e\n1,qqq,{},2017-01-01\n,,,"
 HEADER_SCRAMBLED = "e,c,a,b,d\n2017-01-01,qqq,1,2,{}\n,,,4,"
+
+
+@pytest.fixture
+def stdin(monkeypatch):
+    """Feed bytes to ``sys.stdin`` (a text wrapper with a ``.buffer``,
+    like the real one)."""
+
+    def feed(data: str | bytes) -> None:
+        raw = data.encode("utf-8") if isinstance(data, str) else data
+        monkeypatch.setattr("sys.stdin", io.TextIOWrapper(io.BytesIO(raw)))
+
+    return feed
 
 
 @pytest.fixture
@@ -196,37 +211,54 @@ def test_latin1_typed_ingest_failfast(spark, tmp_path):
     ]
 
 
-# ------------------------------------------------- stdin-equivalent buffer
+# ------------------------------------------------------------ stdin (driver path)
 
 
-def test_buffer_header_and_types(spark):
-    df = ingest_csv_buffer(spark, HEADER, TARGET)
+def test_buffer_header_and_types(spark, stdin):
+    # a UTF-8 BOM is skipped, as the JVM reader skips it in a file
+    stdin(b"\xef\xbb\xbf" + HEADER.encode())
+    df = ingest_csv(spark, "-", TARGET)
     rows = df.collect()
     assert rows[0].a == 1 and rows[0].b == 2 and rows[0].c == "qqq"
     assert rows[1].a is None and rows[1].b == 4 and rows[1].c is None
 
 
-def test_buffer_headerless_names(spark):
-    df = read_csv_buffer(spark, NO_HEADER, has_header=False)
+def test_buffer_headerless_names(spark, stdin):
+    stdin(NO_HEADER)
+    df = read_csv(spark, "--", has_header=False)
     assert df.columns == ["col0", "col1", "col2", "col3", "col4"]
     assert df.collect()[0].col0 == "1"
 
 
-def test_buffer_quoted_newline(spark):
+def test_buffer_quoted_newline(spark, stdin):
     # the driver-side parser keeps full csv quoting semantics
-    df = read_csv_buffer(spark, 'a,b\n1,"two\nlines"\n2,x')
+    stdin('a,b\n1,"two\nlines"\n2,x')
+    df = read_csv(spark, "-")
     vals = {r.a: r.b for r in df.collect()}
     assert vals["1"] == "two\nlines" and vals["2"] == "x"
 
 
-def test_buffer_ragged_row_raises(spark):
+def test_buffer_ragged_row_raises(spark, stdin):
+    stdin("a,b\n1,2,3")
     with pytest.raises(ValueError, match="fields"):
-        read_csv_buffer(spark, "a,b\n1,2,3")
+        read_csv(spark, "-")
 
 
-def test_buffer_empty_raises(spark):
+def test_buffer_empty_raises(spark, stdin):
+    stdin("")
     with pytest.raises(ValueError, match="empty"):
-        read_csv_buffer(spark, "")
+        read_csv(spark, "-")
+
+
+def test_stdin_refuses_what_it_cannot_honour(spark, stdin):
+    """Stdin is parsed FAILFAST and decoded by Python's codecs: another
+    parse mode or a charset Python does not know raises instead of
+    being ignored."""
+    stdin("a\n1\n")
+    with pytest.raises(ValueError, match="FAILFAST"):
+        read_csv(spark, "-", mode="PERMISSIVE")
+    with pytest.raises(ValueError, match="decode stdin"):
+        read_csv(spark, "-", encoding="x-IBM930")
 
 
 def test_permissive_and_dropmalformed_modes(spark, csv_file):
@@ -240,66 +272,6 @@ def test_permissive_and_dropmalformed_modes(spark, csv_file):
     assert perm[1].b == "" and perm[1].c == ""
     drop = read_csv(spark, p, mode="DROPMALFORMED").collect()
     assert [tuple(r) for r in drop] == [("1", "2", "3"), ("4", "5", "6")]
-
-
-def test_read_csv_buffer_spill_path_matches_driver_path(spark, tmp_path):
-    """The distributed stdin spill (reference streams stdin
-    constant-memory, csv2db.go:174-176): past the threshold the buffer
-    is chunked at record boundaries to temp files and parsed
-    EXECUTOR-side — identical rows to the driver-side csv.reader path,
-    including quoted embedded newlines and commas that straddle chunk
-    boundaries, and genuinely multi-file so the parse parallelizes."""
-    import glob
-
-    rows = []
-    for i in range(2000):
-        if i % 7 == 0:
-            rows.append(f'{i},"line one\nline {i}, two",z{i}')
-        else:
-            rows.append(f"{i},plain {i},z{i}")
-    data = "a,b,c\n" + "\n".join(rows) + "\n"
-
-    want = {
-        tuple(r) for r in read_csv_buffer(spark, data).collect()
-    }  # driver path: len(data) < default threshold
-
-    spill = str(tmp_path / "spill")
-    got_df = read_csv_buffer(
-        spark, data, spill_threshold=1024, spill_dir=spill
-    )
-    assert got_df.columns == ["a", "b", "c"]
-    got = {tuple(r) for r in got_df.collect()}
-    assert got == want and len(got) == 2000
-    chunks = glob.glob(spill + "/chunk-*.csv")
-    assert len(chunks) >= 2, "spill must produce multiple executor splits"
-    # no chunk starts mid-record: every file parses standalone
-    for c in chunks:
-        with open(c) as fh:
-            assert fh.read(64).split(",")[0].isdigit()
-
-
-def test_read_csv_buffer_spill_headerless_and_ragged(spark, tmp_path):
-    got = read_csv_buffer(
-        spark,
-        "1,x\n2,y\n3,z\n",
-        has_header=False,
-        spill_threshold=4,
-        spill_dir=str(tmp_path / "s1"),
-    )
-    assert got.columns == ["col0", "col1"]
-    assert {tuple(r) for r in got.collect()} == {("1", "x"), ("2", "y"), ("3", "z")}
-    # FAILFAST posture survives the spill: ragged rows still abort (at
-    # action time — the distributed scan can't raise at build time)
-    import pytest as _pytest
-
-    bad = read_csv_buffer(
-        spark,
-        "a,b\n1,2\n3,4,5\n",
-        spill_threshold=4,
-        spill_dir=str(tmp_path / "s2"),
-    )
-    with _pytest.raises(Exception):
-        bad.collect()
 
 
 def test_charset_matrix_breadth(spark, tmp_path):
@@ -417,31 +389,113 @@ def test_charset_alias_does_not_enable_java_registry(spark, tmp_path):
     assert spark.conf.get("spark.sql.legacy.javaCharsets") == "true"
 
 
-def test_whitespace_only_rows_survive_spill(spark, tmp_path):
-    """ADVICE r9 parity break: a single-column CSV whose rows are
-    unquoted spaces kept those rows on the driver-side csv.reader path
-    but dropped them on the spill path (flush/_record_chunks skipped
-    whitespace-only chunk text). Both paths must agree."""
-    import io
+def _quoted_csv() -> str:
+    rows = []
+    for i in range(2000):
+        if i % 7 == 0:
+            rows.append(f'{i},"line one\nline {i}, two",z{i}')
+        else:
+            rows.append(f"{i},plain {i},z{i}")
+    return "a,b,c\n" + "\n".join(rows) + "\n"
 
-    from csv2db_spark.ingest import read_csv_buffer, read_csv_stdin
 
-    data = "c\n \nx\n  \ny\n"
-    small = read_csv_buffer(spark, data)
-    want = sorted(r.c for r in small.collect())
-    assert want == [" ", "  ", "x", "y"]
-    # force the spill path with a tiny threshold
-    spilled = read_csv_buffer(
-        spark, data, spill_threshold=2, spill_dir=str(tmp_path / "sp")
+# (name, text, has_header, spill_threshold of the spilled-stdin source)
+_SOURCE_CASES = [
+    # quoted newlines and commas straddle chunk boundaries
+    ("quoted", _quoted_csv(), True, 1024),
+    # headerless: the first record is data and must survive the peel-off
+    ("headerless", "1,x\n2,y\n3,z\n", False, 4),
+    # whitespace-only lines are one-field records, not blank lines
+    ("whitespace", "c\n \nx\n  \ny\n", True, 2),
+    # blank lines are skipped, as the univocity and Go readers skip them
+    ("blank_lines", "a,b\n1,2\n\n3,4\n\n", True, 4),
+]
+
+
+@pytest.mark.parametrize("source", ["file", "short_stdin", "spilled_stdin"])
+def test_csv_sources_give_identical_rows(spark, tmp_path, stdin, source):
+    """A file, a stdin that ends inside the peek (driver-side parse) and a
+    stdin past the spill threshold (record-aligned chunk files scanned
+    executor-side, constant memory like the reference's stdin loop,
+    csv2db.go:174-176) give the rows Python's csv module reads from the
+    same text — and FAILFAST survives on all three: a ragged row aborts
+    (at build time on the driver path, at action time otherwise)."""
+
+    def read(name, text, has_header, threshold):
+        if source == "file":
+            p = tmp_path / f"{name}.csv"
+            p.write_text(text)
+            return read_csv(spark, str(p), has_header, multiline=True)
+        if source == "short_stdin":
+            stdin(text)
+            return read_csv(spark, "-", has_header)
+        return read_csv_stdin(
+            spark,
+            io.StringIO(text),
+            has_header,
+            spill_threshold=threshold,
+            spill_dir=str(tmp_path / name),
+        )
+
+    for name, text, has_header, threshold in _SOURCE_CASES:
+        parsed = [tuple(r) for r in csv.reader(io.StringIO(text)) if r]
+        if has_header:
+            names, want = list(parsed[0]), parsed[1:]
+        else:
+            names, want = [f"col{i}" for i in range(len(parsed[0]))], parsed
+        df = read(name, text, has_header, threshold)
+        assert df.columns == names, name
+        assert sorted(tuple(r) for r in df.collect()) == sorted(want), name
+
+    with pytest.raises(Exception):
+        read("ragged", "a,b\n1,2\n3,4,5\n", True, 4).collect()
+
+
+def test_read_csv_buffer_spill_path_matches_driver_path(spark, tmp_path):
+    """Past the threshold stdin is chunked at record boundaries to temp
+    files and parsed EXECUTOR-side — identical rows to the driver-side
+    csv.reader path, including quoted embedded newlines and commas that
+    straddle chunk boundaries, and genuinely multi-file so the parse
+    parallelizes."""
+    data = _quoted_csv()
+    # driver path: len(data) < default threshold
+    want = {tuple(r) for r in read_csv_stdin(spark, io.StringIO(data)).collect()}
+
+    spill = str(tmp_path / "spill")
+    got_df = read_csv_stdin(
+        spark, io.StringIO(data), spill_threshold=1024, spill_dir=spill
     )
-    assert sorted(r.c for r in spilled.collect()) == want
-    streamed = read_csv_stdin(
+    assert got_df.columns == ["a", "b", "c"]
+    got = {tuple(r) for r in got_df.collect()}
+    assert got == want and len(got) == 2000
+    chunks = glob.glob(spill + "/chunk-*.csv")
+    assert len(chunks) >= 2, "spill must produce multiple executor splits"
+    # no chunk starts mid-record: every file parses standalone
+    for c in chunks:
+        with open(c) as fh:
+            assert fh.read(64).split(",")[0].isdigit()
+
+
+def test_read_csv_buffer_spill_headerless_and_ragged(spark, tmp_path):
+    got = read_csv_stdin(
         spark,
-        io.StringIO(data),
+        io.StringIO("1,x\n2,y\n3,z\n"),
+        has_header=False,
         spill_threshold=4,
-        spill_dir=str(tmp_path / "sp2"),
+        spill_dir=str(tmp_path / "s1"),
     )
-    assert sorted(r.c for r in streamed.collect()) == want
+    assert got.columns == ["col0", "col1"]
+    assert {tuple(r) for r in got.collect()} == {("1", "x"), ("2", "y"), ("3", "z")}
+    # FAILFAST posture survives the spill: ragged rows still abort (at
+    # action time — the distributed scan can't raise at build time)
+    bad = read_csv_stdin(
+        spark,
+        io.StringIO("a,b\n1,2\n3,4,5\n"),
+        spill_threshold=4,
+        spill_dir=str(tmp_path / "s2"),
+    )
+    with pytest.raises(Exception):
+        bad.collect()
 
 
 def test_read_csv_stdin_constant_memory_paths(spark, tmp_path):
@@ -449,10 +503,6 @@ def test_read_csv_stdin_constant_memory_paths(spark, tmp_path):
     path; a longer pipe streams to executor-parsed chunks without ever
     holding the whole input — including when the peek boundary cuts a
     QUOTED field mid-record (the head/stream seam)."""
-    import io
-
-    from csv2db_spark.ingest import read_csv_stdin
-
     rows = []
     for i in range(800):
         if i % 5 == 0:
@@ -474,38 +524,18 @@ def test_read_csv_stdin_constant_memory_paths(spark, tmp_path):
     )
     assert big.columns == ["a", "b", "c"]
     assert {tuple(r) for r in big.collect()} == want
-    import glob
-
     assert len(glob.glob(str(tmp_path / "sp" / "chunk-*.csv"))) >= 2
 
-    # headerless: first record is DATA and must survive the peel-off
-    hb = read_csv_stdin(
-        spark,
-        io.StringIO("1,x\n2,y\n3,z\n"),
-        has_header=False,
-        spill_threshold=4,
-        spill_dir=str(tmp_path / "sp2"),
-    )
-    assert hb.columns == ["col0", "col1"]
-    assert {tuple(r) for r in hb.collect()} == {("1", "x"), ("2", "y"), ("3", "z")}
 
-
-def test_cli_stdin_still_ingests(spark, tmp_path, monkeypatch):
-    """The CLI's -- path through ingest_csv_stdin keeps P1-P8 semantics
+def test_cli_stdin_still_ingests(spark, stdin):
+    """The CLI's -- path through ingest_csv keeps P1-P8 semantics
     (reconcile by name + typed cast + empty->NULL iff nullable)."""
-    import io
-
-    from pyspark.sql import types as T
-
-    from csv2db_spark.ingest import ingest_csv_stdin
-
     target = T.StructType(
         [
             T.StructField("a", T.LongType(), True),
             T.StructField("b", T.StringType(), True),
         ]
     )
-    got = ingest_csv_stdin(
-        spark, io.StringIO("b,a\nx,1\n,\n"), target=target
-    ).collect()
+    stdin("b,a\nx,1\n,\n")
+    got = ingest_csv(spark, "--", target).collect()
     assert {tuple(r) for r in got} == {(1, "x"), (None, None)}

@@ -69,6 +69,28 @@ def test_streaming_ingest_inconsistent_headers_raise(spark, tmp_path):
         streaming_ingest_csv(spark, str(watch), TARGET)
 
 
+def test_streaming_and_batch_agree_on_empty_cells(spark, tmp_path):
+    """An empty cell in a NOT NULL string column loads "" in batch (the
+    identity mapper, common/val_mapper.go:44-46); the stream must load
+    the same rows instead of failing on a NULL the reader made up."""
+    from csv2db_spark.ingest import ingest_csv
+
+    target = T.StructType(
+        [
+            T.StructField("a", T.LongType(), True),
+            T.StructField("s", T.StringType(), False),
+        ]
+    )
+    watch = tmp_path / "incoming_empty"
+    watch.mkdir()
+    (watch / "f.csv").write_text('a,s\n1,\n2,x\n3,""\n')
+    batch = ingest_csv(spark, str(watch / "f.csv"), target).collect()
+    out = streaming_ingest_csv(spark, str(watch), target)
+    streamed = run_to_df(out, spark, "append").collect()
+    assert sorted(tuple(r) for r in streamed) == sorted(tuple(r) for r in batch)
+    assert sorted(tuple(r) for r in batch) == [(1, ""), (2, "x"), (3, "")]
+
+
 def test_streaming_ingest_headerless_by_ordinal(spark, tmp_path):
     watch = tmp_path / "incoming2"
     watch.mkdir()
