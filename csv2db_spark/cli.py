@@ -442,27 +442,59 @@ def load_config(args: argparse.Namespace) -> Config:
 
 def _target_schema(spark, conf: Config, user=None, password=None):
     """P5: an existing destination table's schema drives reconcile+cast;
-    None → all-string load (reference all-TEXT create, csv2db.go:157)."""
-    from csv2db_spark.sink import ParquetTableStore, _jdbc_table_exists
+    None → all-string load (reference all-TEXT create, csv2db.go:157).
+
+    Types are Spark's JDBC dialect mapping. Nullability is the table's
+    own: Spark's JDBC source reads every column as nullable, and P8's
+    "empty → NULL iff nullable" would then turn an empty cell of a NOT
+    NULL column into a NULL the insert rejects. The zero-row ``SELECT *``
+    Spark also resolves its schema with gives the columns in the same
+    order, with ``ResultSetMetaData.isNullable``."""
+    from pyspark.sql import types as T
+
+    from csv2db_spark.sink import (
+        ParquetTableStore,
+        _jdbc_connection,
+        _jdbc_table_exists,
+    )
 
     if conf.db_url.startswith("parquet:"):
         store = ParquetTableStore(spark, conf.db_url.removeprefix("parquet:"))
         return store.schema(conf.table) if store.exists(conf.table) else None
+    table = conf.qualified_table
+    if not _jdbc_table_exists(spark, conf.db_url, table, user, password):
+        return None
     auth_opts = {
         k: v for k, v in (("user", user), ("password", password)) if v
     }
-    if _jdbc_table_exists(
-        spark, conf.db_url, conf.qualified_table, user, password
-    ):
-        return (
-            spark.read.format("jdbc")
-            .option("url", conf.db_url)
-            .option("dbtable", conf.qualified_table)
-            .options(**auth_opts)
-            .load()
-            .schema
-        )
-    return None
+    schema = (
+        spark.read.format("jdbc")
+        .option("url", conf.db_url)
+        .option("dbtable", table)
+        .options(**auth_opts)
+        .load()
+        .schema
+    )
+    conn = _jdbc_connection(spark, conf.db_url, user, password)
+    try:
+        st = conn.createStatement()
+        try:
+            md = st.executeQuery(f"SELECT * FROM {table} WHERE 1=0").getMetaData()
+            no_nulls = spark._jvm.java.sql.ResultSetMetaData.columnNoNulls
+            not_null = [
+                md.isNullable(i) == no_nulls
+                for i in range(1, md.getColumnCount() + 1)
+            ]
+        finally:
+            st.close()
+    finally:
+        conn.close()
+    return T.StructType(
+        [
+            T.StructField(f.name, f.dataType, not nn, f.metadata)
+            for f, nn in zip(schema.fields, not_null, strict=True)
+        ]
+    )
 
 
 def split_url_userinfo(url: str) -> tuple[str, str, str]:

@@ -17,10 +17,9 @@ Scale shapes (100 TB corpus):
   input, the bucket-histogram plan above the size threshold.
 - The twin-shape operators here (stratified_sample, quantile_filter,
   domain_cap, score_quantile_normalize, token_budget_sample) each pick
-  their shape once, from Catalyst's estimate of their input — for
-  quantile_filter, of the optional ``size_hint`` frame when given —
-  against the one ``spark.csv2db.adaptive.smallInputMaxBytes`` setting
-  (operators/ranking.small_shape). Both shapes return identical rows.
+  their shape once, with ``plans.small_input`` on their own input
+  against the one ``spark.csv2db.adaptive.smallInputMaxBytes`` setting.
+  Both shapes return identical rows.
 - incremental_dedup: digests of the existing corpus are md5 longs; the
   incoming side anti-joins on the digest — shuffle carries 16-byte keys,
   never document bodies.
@@ -32,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv2db_spark import plans
 from csv2db_spark.llm.dedup import shingle_table
 
 # Patterns deliberately restricted to syntax with identical semantics in
@@ -140,7 +140,7 @@ def stratified_sample(
     rank by md5 of the id within each stratum (uniform pseudo-random
     order, stable across runs and engines), keep rank <= k.
 
-    A small input (``small_shape(df)``) sorts each stratum
+    A small input (``plans.small_input(df)``) sorts each stratum
     in one window — the cheapest plan at fixture size, but the
     dominant stratum IS the corpus at 100 TB. Above the threshold the
     plan exploits that the admission key is a uniform md5, so it is its
@@ -150,10 +150,8 @@ def stratified_sample(
     and survivors rank inside their (stratum, bucket) — bounded tie
     sets, identical rows to the window shape
     (tests/test_runtime_ops.py)."""
-    from csv2db_spark.operators.ranking import small_shape
-
     rk = F.md5(F.col(id_col).cast("string"))
-    if small_shape(df):
+    if plans.small_input(df):
         w = Window.partitionBy(strata_col).orderBy(rk, F.col(id_col))
         return (
             df.withColumn("sample_rank", F.row_number().over(w))
@@ -320,7 +318,6 @@ def quantile_filter(
     drop_frac: float = 0.25,
     id_col: str = "doc_id",
     rank_bucket: Column | None = None,
-    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """Per-group quantile filtering — the CCNet-style curation step "drop
     the worst X% of documents *within each language/domain bucket*"
@@ -342,8 +339,8 @@ def quantile_filter(
     percent_rank (k/(n-1)) for reporting.
 
     Scale shape, picked once from the size of the (id, group, score)
-    projection it ranks, or of ``size_hint``: a small input gets ONE
-    window shuffle keyed by the group column — right at gate scale,
+    projection it ranks: a small input gets ONE window shuffle keyed
+    by the group column — right at gate scale,
     but a skewed group (one language dominating a web corpus) becomes
     a single-task total sort over most of the data. A large input gets
     the identical rank via operators/ranking.grouped_rank's
@@ -359,13 +356,12 @@ def quantile_filter(
     from csv2db_spark.operators.ranking import (
         _grouped_rank,
         join_totals_nullsafe,
-        small_shape,
     )
 
     scored = docs.select(
         F.col(id_col), F.col(group_col), score.alias("quality_score")
     )
-    small = small_shape(scored, size_hint)
+    small = plans.small_input(scored)
     ranked = _grouped_rank(
         scored, [group_col], "quality_score", id_col,
         descending=False, out_col="_rn", bucket=rank_bucket, small=small,
@@ -855,7 +851,7 @@ def domain_cap(
     salt change redraws it). Returns the surviving rows plus their
     ``cap_rank``.
 
-    Scale shape, by ``small_shape(docs)``: a small input is
+    Scale shape, by ``plans.small_input(docs)``: a small input is
     one window over the group — with power-law domain sizes the
     heaviest domain would be one sort task at corpus scale. A large one
     takes the stratified_sample plan, since the salted hash is its own
@@ -864,10 +860,10 @@ def domain_cap(
     before any sort, survivors rank within bounded (group, bucket) tie
     sets — identical rows AND cap_rank values
     (tests/test_runtime_ops.py)."""
-    from csv2db_spark.operators.ranking import checked_int_rank, small_shape
+    from csv2db_spark.operators.ranking import checked_int_rank
 
     h = F.md5(F.concat(F.lit(salt), F.lit("|"), F.col(id_col).cast("string")))
-    if small_shape(docs):
+    if plans.small_input(docs):
         w = Window.partitionBy(group_col).orderBy(h, F.col(id_col))
         return (
             docs.withColumn("cap_rank", F.row_number().over(w))
@@ -956,11 +952,11 @@ def score_quantile_normalize(
     exact integer ratio, one IEEE division, hash-checkable).
 
     NOTE the tie semantics: percent_rank() with id in the ORDER BY
-    (this function since round 4) already gives tied scores distinct
-    pct values, so the (rank-1)/(n-1) reconstruction is exact, not an
-    approximation of tie-averaged percent_rank.
+    already gives tied scores distinct pct values, so the
+    (rank-1)/(n-1) reconstruction is exact, not an approximation of
+    tie-averaged percent_rank.
 
-    A small input (``small_shape(df)``) gets one keyed
+    A small input (``plans.small_input(df)``) gets one keyed
     window per group — a single-reducer total sort of the dominant
     source at corpus scale, so a large input instead derives the
     identical pct from operators/ranking.grouped_rank's
@@ -970,10 +966,9 @@ def score_quantile_normalize(
     from csv2db_spark.operators.ranking import (
         _grouped_rank,
         join_totals_nullsafe,
-        small_shape,
     )
 
-    if small_shape(df):
+    if plans.small_input(df):
         w = Window.partitionBy(group_col).orderBy(score_col, id_col)
         return df.withColumn("pct", F.percent_rank().over(w))
     ranked = _grouped_rank(
@@ -1095,7 +1090,7 @@ def token_budget_sample(
     real mix tolerates).
 
     Output: (doc_id, group, n_tokens, cum_tokens) for admitted docs.
-    The shape is picked once by ``small_shape(docs)``. A
+    The shape is picked once by ``plans.small_input(docs)``. A
     small input gets one window sort per group over (16-byte rank,
     token count) pairs — token counts ride the scan (size(split)), the
     text never shuffles; the dominant group would be a single-task sort
@@ -1108,9 +1103,9 @@ def token_budget_sample(
     checkpointed first; each consumer would otherwise replan the
     upstream tokenize."""
     from csv2db_spark.llm.corpus import tokens
-    from csv2db_spark.operators.ranking import _grouped_prefix_sum, small_shape
+    from csv2db_spark.operators.ranking import _grouped_prefix_sum
 
-    small = small_shape(docs)
+    small = plans.small_input(docs)
     n_tok = F.size(tokens(text_col)).cast("long")
     sized = docs.select(
         "doc_id",
@@ -1148,10 +1143,10 @@ def dataset_card(docs: DataFrame) -> DataFrame:
     language share is floor-permille. The median comes straight off the
     per-(source, length) HISTOGRAM — the smallest length whose
     cumulative count reaches ⌈n/2⌉ — so the only window runs over
-    histogram rows (distinct lengths per source), never documents: the
-    round-4 row_number formulation sorted every source on one task, the
-    exact skew shape this round's cutpoint ranks exist to avoid, and an
-    order statistic needs no per-row rank at all."""
+    histogram rows (distinct lengths per source), never documents: a
+    per-row row_number would sort every source on one task, the exact
+    skew shape the cutpoint ranks exist to avoid, and an order
+    statistic needs no per-row rank at all."""
     toks = F.size(F.split(F.col("text"), " "))
     base = docs.select(
         "source",

@@ -77,19 +77,19 @@ def pq_codebook(
     assigned subvectors, floor division — empty cells keep their seed).
     Returns (m, code, code_iv). Deterministic end to end.
 
-    The returned table is EAGERLY CHECKPOINTED (round-14, guide §2.4):
-    it is M·K rows, but its plan contains the corpus-sized assignment
-    pass — and every consumer that broadcasts it (``pq_encode``'s
-    argmin join AND ``pq_query_codes``'s per-query distance table)
-    re-planned that whole subtree, so one ``pq_topk`` trained the
-    codebook twice and ``q_sim_ann_pq_persisted`` (inline + build)
-    three times. The checkpoint makes training run exactly once per
-    call. ``seeds`` (also M·K rows, two consumers: the assignment leg
-    and the empty-cell fallback join) is checkpointed for the same
-    reason — without it each consumer replans the seed-selection scan
-    of the corpus.
+    The returned table is EAGERLY CHECKPOINTED: it is M·K rows, but
+    its plan contains the corpus-sized assignment pass — and every
+    consumer that broadcasts it (``pq_encode``'s argmin join AND
+    ``pq_query_codes``'s per-query distance table) would re-plan that
+    whole subtree, so one ``pq_topk`` would train the codebook twice
+    and ``q_sim_ann_pq_persisted`` (inline + build) three times. The
+    checkpoint makes training run exactly once per call. ``seeds``
+    (also M·K rows, two consumers: the assignment leg and the
+    empty-cell fallback join) is checkpointed for the same reason —
+    without it each consumer replans the seed-selection scan of the
+    corpus.
 
-    Side effects (ADVICE r14): calling this — even just to inspect the
+    Side effects: calling this — even just to inspect the
     returned plan — RUNS Spark jobs (two eager localCheckpoints), and
     the two checkpoints' executor-cached blocks (2 × M·K skinny rows,
     a few KB at the defaults) stay cached until the RDDs are
@@ -140,9 +140,9 @@ def pq_codebook(
         .select("_vid", "m", "code", "sub_iv", _d2(F.col("sub_iv"), F.col("code_iv")).alias("_d2"))
     )
     # argmin per (vector, subspace) as a partially-aggregated min(struct)
-    # instead of a row_number window (round-14, guide §2.3): the window
-    # shuffled and sorted ALL n·M·K scored rows; min(struct(_d2, code,
-    # sub_iv)) combines map-side to one row per group before the exchange.
+    # instead of a row_number window: the window would shuffle and
+    # sort ALL n·M·K scored rows; min(struct(_d2, code, sub_iv))
+    # combines map-side to one row per group before the exchange.
     # Struct ordering is field-lexicographic and (d2, code) is unique in
     # each group (sub_iv is group-constant), so the winner — ties to the
     # lower code id — is bit-identical to the window form.
@@ -278,15 +278,14 @@ def pq_query_codes(
     )
     # ADC scans the WHOLE code table per query, so the scored table is
     # corpus-sized per query — rank in two stages like the exact
-    # searches (§3.12 precedent), never |corpus| rows on one task
-    # (single window when the code table is estimated small, see
+    # searches, never |corpus| rows on one task (single window when
+    # the scored table is estimated small, see
     # similarity._topk_per_query).
     return _topk_per_query(
         scored,
         k,
         [F.col("approx_d2"), F.col(id_col)],
         shard_on=id_col,
-        size_hint=codes,
     ).select("query_id", F.col(id_col).alias("neighbor_id"), "approx_d2", "rank")
 
 

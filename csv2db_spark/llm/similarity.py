@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv2db_spark import plans
+
 QUANT = 100_000_000  # 1e8: embedding components are in (-1, 1)
 QUANT_SQ = float(QUANT) * float(QUANT)
 
@@ -97,7 +99,6 @@ def _topk_per_query(
     order: list,
     shard_on: str = "neighbor_id",
     n_shards: int = 64,
-    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """Exact per-query top-k in TWO window stages, against skew: a
     single ``Window.partitionBy(query_id)`` over a
@@ -116,15 +117,13 @@ def _topk_per_query(
     The two-stage shape costs one extra exchange, which at fixture
     size outweighs the sort it parallelizes (−14% on cosine), so a
     small input takes the single window instead. The decision is
-    ``operators/ranking.small_shape(scored, size_hint)``: callers pass
-    the scan-level corpus as ``size_hint``, because ``scored`` sits
-    below a cross join whose size estimate multiplies. Both branches
-    are bit-identical (the equivalence argument above), so the switch
-    is invisible to every oracle; the threshold setting lets tests pin
+    ``plans.small_input(scored)``: ``scored`` sits below a cross join,
+    so it is sized by the leaves it reads (the corpus, the queries),
+    not by the join's product estimate. Both branches are
+    bit-identical (the equivalence argument above), so the switch is
+    invisible to every oracle; the threshold setting lets tests pin
     either shape."""
-    from csv2db_spark.operators.ranking import small_shape
-
-    if small_shape(scored, size_hint):
+    if plans.small_input(scored):
         w = Window.partitionBy("query_id").orderBy(*order)
         return scored.withColumn("rank", F.row_number().over(w)).where(
             F.col("rank") <= k
@@ -168,7 +167,6 @@ def cosine_topk(
         scored,
         k,
         [F.col("cos_sim").desc(), F.col("neighbor_id")],
-        size_hint=corpus,
     ).select("query_id", "neighbor_id", "cos_sim", "rank")
 
 
@@ -182,24 +180,6 @@ def _hyperplanes(dim: int, n_planes: int, n_tables: int, seed: int = 42):
 
     rng = np.random.RandomState(seed)
     return rng.randn(n_tables, n_planes, dim).astype("float64")
-
-
-def lsh_bucket(vec: Column, planes) -> Column:
-    """Sign-pattern bucket id for one table's planes: bit i = (v . p_i) > 0.
-    The dot products fold JVM-side over literal plane arrays."""
-    bits = []
-    for i, p in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(x)) for x in p])
-        d = F.aggregate(
-            F.zip_with(vec, lit_plane, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d > 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
 
 
 def _bucket_udf(planes):
@@ -646,13 +626,11 @@ def lsh_all_pairs_cosine(
     the verification stage is exact, so parameter choice affects only
     which candidates are seen, never their scores.
 
-    Round-15 (guide §2.4, VERDICT r14 item 6): the corpus is touched
-    ONCE. Previously the bucket UDF ran per self-join leg and the
-    quantized state per verify leg — four corpus passes (two of them
-    Arrow) for one result. Now a single staged table carries
-    (vid, x_iv, x_nrm2, per-table buckets) — one scan, one Arrow
-    matmul — and every leg reads the checkpoint. Values are computed
-    by the identical expressions, so results are bit-identical.
+    The corpus is touched ONCE: a single staged table carries (vid,
+    x_iv, x_nrm2, per-table buckets) — one scan, one Arrow matmul —
+    and every leg reads the checkpoint. Running the bucket UDF per
+    self-join leg and the quantized state per verify leg would make
+    four corpus passes (two of them Arrow) for one result.
     """
     from csv2db_spark.operators.stage import materialize_stage
 
@@ -864,7 +842,7 @@ def hyperplane_signatures(
     to bit 0. ``n_bits`` <= 62 keeps the packed code inside a signed
     long.
 
-    Shape at scale (round-14, guide §2.4/§4.2): the weights are
+    Shape at scale: the weights are
     CONSTANTS — the md5 parity depends only on (bit, position) — so the
     signature is a ROW-LOCAL function: quantize JVM-side (the exact
     decimal(9,8)·1e8 convention, unchanged), then one Arrow batch
@@ -878,8 +856,8 @@ def hyperplane_signatures(
     join — interpreted lambdas, the _bucket_udf lesson again — and
     rejected.) Bit-identical: integer addition is exact and order-free,
     ties (dot exactly 0) still round to bit 0; null/empty vectors are
-    dropped exactly as posexplode dropped them. Input contract
-    (ADVICE r14): vectors must be null-element-free and dim-length —
+    dropped exactly as posexplode dropped them. Input contract:
+    vectors must be null-element-free and dim-length —
     a ragged or null-element vector FAILS LOUDLY in the Arrow kernel
     (np.stack/astype raise), where the old join shape would silently
     sum the available terms; the fixture embeddings are fixed-dim by
@@ -954,12 +932,11 @@ def hamming_topk(
     )
     # two-stage exact top-k: the corpus-sized scored table never sorts
     # on one task per query (see _topk_per_query; single window when
-    # the signature table is estimated small)
+    # the scored table is estimated small)
     return _topk_per_query(
         scored,
         k,
         [F.col("hamming"), F.col("neighbor_id")],
-        size_hint=signatures,
     ).select("query_id", "neighbor_id", "hamming", "rank")
 
 

@@ -7,7 +7,7 @@ head/middle/tail), and at gate scale the plain window is the right
 plan. At 100 TB it is not: a web corpus is ~90% one language, so the
 "en" window partition is a SINGLE TASK doing a total sort over most of
 the corpus — the one plan shape that cannot be saved by adding
-executors (r8 VERDICT, scale caveat #2).
+executors.
 
 The cutpoint shape computes the SAME rank exactly, with no whole-group
 sort, by splitting the rank into two bounded pieces:
@@ -38,15 +38,16 @@ get ceil(n/k) rows, the rest floor(n/k) — so the scale shape derives it
 arithmetically from the cutpoint rank plus a broadcast of per-group
 totals.
 
-Each public operator picks its shape once, from Catalyst's size
-estimate against the one ``spark.csv2db.adaptive.smallInputMaxBytes``
-setting (``small_shape`` → ``plans.small_input``): the plain window
-below it, the cutpoint plan above. There is no per-call shape
-argument; tests force either shape through the setting. Operators
-whose input sits below a join take an optional ``size_hint`` frame
-(the scan the input came from), since a join subtree's estimate is the
-product of its children; the hint must be a frame the input derives
-from, or the estimate is for the wrong data.
+Each public operator picks its shape once, with
+``plans.small_input`` on its own input against the one
+``spark.csv2db.adaptive.smallInputMaxBytes`` setting: the plain window
+below it, the cutpoint plan above. The estimate reads the plan's
+leaves (scans, stored checkpoints), so an input that sits below a join
+is sized by what it reads, not by the join's product estimate. There
+is no per-call shape argument; tests force either shape through the
+setting. The cutpoint plan's extra exchanges cost ~0.2-0.5 s per gate
+at fixture size, while the window plan's whole-group single-task sort
+is the unscalable shape at corpus size.
 """
 
 from __future__ import annotations
@@ -56,25 +57,11 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from csv2db_spark import plans
+
 
 def _groups(group_cols: str | list[str]) -> list[str]:
     return [group_cols] if isinstance(group_cols, str) else list(group_cols)
-
-
-def small_shape(df: DataFrame, size_hint: DataFrame | None = None) -> bool:
-    """True when a twin operator over ``df`` should take its single-sort
-    shape: ``plans.small_input`` on ``size_hint``, or on ``df`` itself
-    when no hint is given. Both shapes are bit-identical (module doc),
-    so the answer only moves the plan: the cutpoint plan's extra
-    exchanges cost ~0.2-0.5 s per gate at fixture size, while the
-    window plan's whole-group single-task sort is the unscalable shape
-    at corpus size. Join subtrees OVERestimate (product of children)
-    and answer False, the scale-safe direction; callers whose twin
-    input sits below a join pass the scan-level frame as ``size_hint``
-    so the estimate stays faithful."""
-    from csv2db_spark import plans
-
-    return plans.small_input(df if size_hint is None else size_hint)
 
 
 _INT_MAX = 2_147_483_647
@@ -127,11 +114,10 @@ def grouped_rank(
     descending: bool = False,
     out_col: str = "_rn",
     bucket: Column | None = None,
-    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY group ORDER BY order_col
     [DESC], id_col)`` — exact, total (the id tiebreak), identical in
-    both shapes. A small input (``small_shape(df, size_hint)``) gets
+    both shapes. A small input (``plans.small_input(df)``) gets
     the plain window; a large one the histogram-offset + tie-rank plan
     with no whole-group DOC sort (see module doc). NULL scores order
     the way the window would (NULLS FIRST asc / NULLS LAST desc); the
@@ -152,7 +138,7 @@ def grouped_rank(
     IS the group.)"""
     return _grouped_rank(
         df, _groups(group_cols), order_col, id_col, descending, out_col,
-        bucket, small=small_shape(df, size_hint),
+        bucket, small=plans.small_input(df),
     )
 
 
@@ -224,7 +210,7 @@ def grouped_prefix_sum(
 ) -> DataFrame:
     """Inclusive running sum of ``value_col`` over (group) ordered by
     ``order_cols`` — the token-budget / admission-order shape. A small
-    input (``small_shape(df)``) gets the plain
+    input (``plans.small_input(df)``) gets the plain
     unbounded-preceding frame (one per-group total sort). A large one
     uses ``bucket``: an ORDER-COARSENING of ``order_cols[0]``
     (bucket(r1) < bucket(r2) must imply order(r1) < order(r2) — e.g. a
@@ -238,7 +224,7 @@ def grouped_prefix_sum(
     Bit-identical to the window shape (tests/test_runtime_ops.py)."""
     return _grouped_prefix_sum(
         df, _groups(group_cols), order_cols, value_col, bucket, out_col,
-        small=small_shape(df),
+        small=plans.small_input(df),
     )
 
 
@@ -300,10 +286,9 @@ def grouped_ntile(
     descending: bool = False,
     out_col: str = "bucket",
     bucket: Column | None = None,
-    size_hint: DataFrame | None = None,
 ) -> DataFrame:
     """``ntile(k) OVER (PARTITION BY group ORDER BY order_col [DESC],
-    id_col)`` in both shapes, picked by ``small_shape(df, size_hint)``.
+    id_col)`` in both shapes, picked by ``plans.small_input(df)``.
     The cutpoint shape reconstructs Spark's ntile arithmetic exactly:
     with n group rows, the first ``n % k`` buckets hold ``n // k + 1``
     rows, the rest ``n // k`` — a closed form over the cutpoint rank
@@ -311,7 +296,7 @@ def grouped_ntile(
     languages/domains, never corpus-sized). ``bucket`` passes through
     to ``grouped_rank`` (order-coarsening for continuous scores)."""
     gs = _groups(group_cols)
-    if small_shape(df, size_hint):
+    if plans.small_input(df):
         ordc = F.col(order_col).desc() if descending else F.col(order_col).asc()
         w = Window.partitionBy(*gs).orderBy(ordc, F.col(id_col).asc())
         return df.withColumn(out_col, F.ntile(k).over(w))

@@ -49,26 +49,6 @@ def sessionize(
     )
 
 
-def session_stats(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """One row per (user, session): event count, bounds, duration and
-    value sum. Duration uses naive timestampdiff — TZ-free."""
-    s = sessionize(events, gap, user_col, ts_col)
-    return s.groupBy(user_col, "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("start_ts"),
-        F.max(ts_col).alias("end_ts"),
-        F.expr(f"timestampdiff(SECOND, min({ts_col}), max({ts_col}))").alias(
-            "duration_sec"
-        ),
-        F.sum("value").alias("value_sum"),
-    )
-
-
 def active_users(
     events: DataFrame,
     window_days: int = 7,
@@ -149,11 +129,10 @@ def rfm_scores(
     total-order ntiles over the |users|-row aggregate. Users GROW with
     the corpus, so a plain unpartitioned ntile is a single-task global
     sort of the user dimension three times over; each ntile routes
-    through ``operators/ranking.grouped_ntile`` with the per-user
-    aggregate as its size hint (the later ntiles' inputs carry the
-    earlier ones' columns, so every ntile decides on the same frame):
-    the exact window at gate scale, the histogram-offset cutpoint
-    rank — bit-identical, no whole-table sort — above the threshold.
+    through ``operators/ranking.grouped_ntile``, which sizes its input
+    by the leaves it reads (the event scan): the exact window at gate
+    scale, the histogram-offset cutpoint rank — bit-identical, no
+    whole-table sort — above the threshold.
     Order coarsenings: day-truncated recency, the integer event count,
     and the floor of the decimal spend keep the cutpoint histograms
     bounded."""
@@ -181,7 +160,6 @@ def rfm_scores(
             descending=True,
             out_col=out_col,
             bucket=bucket,
-            size_hint=per_user,
         )
     n1 = n_tiles + 1
     return (

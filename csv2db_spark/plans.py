@@ -55,43 +55,69 @@ def plan_stats(df: DataFrame) -> dict:
 # (two-stage shard rank, histogram-offset cutpoint rank). Taking the
 # scale shapes unconditionally pays their extra exchanges at fixture
 # size (measured: cosine −14%, curation v2 −45%). So the shape is
-# picked here, and only here, from Catalyst's own size estimate of the
-# operator's input: below the threshold the single-sort shape is
-# strictly better (the whole input fits one task's sort comfortably);
-# above it the sharded shape is the only one that scales. Both
-# branches produce bit-identical rows, pinned by the modes-equal
-# tests, so the choice is invisible to every oracle. No operator takes
-# a per-call shape argument; tests and deployments move the threshold.
+# picked here, and only here, from an estimate of the operator's own
+# input: below the threshold the single-sort shape is strictly better
+# (the whole input fits one task's sort comfortably); above it the
+# sharded shape is the only one that scales. Both branches produce
+# bit-identical rows, pinned by the modes-equal tests, so the choice
+# is invisible to every oracle. No operator takes a per-call shape
+# argument or a frame to estimate instead of its input; tests and
+# deployments move the threshold.
 
 ADAPTIVE_SMALL_KEY = "spark.csv2db.adaptive.smallInputMaxBytes"
 ADAPTIVE_SMALL_DEFAULT = 256 * 1024 * 1024
 
 
-def est_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate in bytes. Driver-side
-    planning only — no job runs. File sources report real file sizes
-    scaled through projections (NOT through filters, see small_input),
-    and a localCheckpoint carries the stats of the plan it truncated
-    (Spark 4.1). JOIN estimates are
-    product-of-children OVERestimates (measured: a self-join of a
-    0.6 MB projection estimates 56 GB), which the adaptive rule reads
-    as NOT small — the scale-safe direction; callers wanting a faithful
-    signal should pass the scan-level input, not a join subtree."""
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+def _as_int(size) -> int:
     # py4j maps the underlying java.math.BigInteger to a Python int;
     # older bridges hand back the BigInt object itself
     return size if isinstance(size, int) else int(size.toString())
 
 
+def est_size_bytes(df: DataFrame) -> int:
+    """Estimated bytes of ``df``: the smaller of Catalyst's estimate
+    for the optimized plan's root and the sum over its leaves.
+    Driver-side planning only — no job runs.
+
+    - The root scales a scan's file size through projections (NOT
+      through filters, see small_input), but with CBO off a join
+      estimates the PRODUCT of its children (measured: a 500-row
+      self-join of ``documents`` estimates 4,019,803,780 B).
+    - The leaf sum counts each input once, so joins cannot inflate
+      it. A ``LogicalRDD`` leaf whose RDD the block manager holds (an
+      eager ``localCheckpoint``, e.g. ``materialize_stage``) counts the
+      memory plus disk bytes ``getRDDStorageInfo`` reports for it: the
+      checkpoint's own statistics are those of the plan it truncated,
+      join products included (that self-join stores 381,040 B). Every
+      other leaf counts its own ``sizeInBytes``."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    root = _as_int(plan.stats().sizeInBytes())
+    leaves = plan.collectLeaves()
+    stored = None
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            if stored is None:
+                infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+                stored = {info.id(): info for info in infos}
+            info = stored.get(leaf.rdd().id())
+            if info is not None:
+                total += info.memSize() + info.diskSize()
+                continue
+        total += _as_int(leaf.stats().sizeInBytes())
+    return min(root, total)
+
+
 def small_input(df: DataFrame) -> bool:
-    """True when ``df``'s estimated size is under
+    """True when ``est_size_bytes(df)`` is under
     ``spark.csv2db.adaptive.smallInputMaxBytes`` (default 256 MiB) —
     the gate for picking single-sort plan shapes over sharded ones.
-    The threshold is a session conf so a cluster deployment (or a test
-    pinning the scale shape) can move it without code changes; the
-    default keeps fixture-scale inputs on the fast local shape while
-    anything within an order of magnitude of a real corpus takes the
-    skew-safe shape.
+    Every twin operator calls it once, on its own input. The threshold
+    is a session conf so a cluster deployment (or a test pinning the
+    scale shape) can move it without code changes; the default keeps
+    fixture-scale inputs on the fast local shape while anything within
+    an order of magnitude of a real corpus takes the skew-safe shape.
 
     Filters do not shrink the estimate. With cost-based optimisation
     off (session.py leaves ``spark.sql.cbo.enabled`` at its default,
@@ -102,7 +128,12 @@ def small_input(df: DataFrame) -> bool:
     therefore reads as large and takes the scale shape — the
     scale-safe direction, pinned in tests/test_plan_shapes.py. Turning
     CBO on would let row-count estimates through filters and needs
-    this rule revisited."""
+    this rule revisited.
+
+    Known blind spot: the leaf sum does not see a join's fan-out, so a
+    many-to-many join over small leaves reads as small and takes the
+    single-sort shape however many rows it produces. That costs time
+    only — the twins are bit-equal, so the rows stay right."""
     conf = df.sparkSession.conf
     threshold = int(conf.get(ADAPTIVE_SMALL_KEY, str(ADAPTIVE_SMALL_DEFAULT)))
     return est_size_bytes(df) < threshold

@@ -1689,10 +1689,10 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded tie sorts. The scored table is checkpointed first: the
     # cutpoint plan has three consumers (histogram, tie-rank leg,
     # total), and each would otherwise replan the corpus-bigram LM
-    # scoring subtree (the v6 §3.10 lesson); four narrow columns.
-    # The shape is decided on the SCAN-level corpus (the LM join's
-    # estimate multiplies and overshoots) — single window at fixture
-    # size, cutpoint above the threshold.
+    # scoring subtree; four narrow columns. The shape is decided on
+    # the stored checkpoint's size, not on the LM join's product
+    # estimate it truncated — single window at fixture size, cutpoint
+    # above the threshold.
     scored = materialize_stage(
         quality.join(lm, "doc_id")
         .select("doc_id", "source", "n_words", "avg_next_token_prob")
@@ -1705,7 +1705,6 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
         out_col="rn",
-        size_hint=docs,
     )
     totals = scored.groupBy("_g").agg(F.count(F.lit(1)).alias("n"))
     survivors = join_totals_nullsafe(ranked, totals, ["_g"]).where(
@@ -3138,9 +3137,9 @@ def q_text_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_text_ccnet_buckets body. The tercile shape is decided on the
-    scan-level corpus: the LM-scored ntile input contains joins whose
-    size estimates multiply (21.9 GB estimated against 0.59 MB for the
-    ``documents`` scan at sf0.1)."""
+    leaves the LM-scored ntile input reads (its ``documents`` scans):
+    its joins' root estimate multiplies (21.9 GB estimated against
+    0.59 MB for the ``documents`` scan at sf0.1)."""
     from csv2db_spark.llm.text import bigram_lm_scores
     from csv2db_spark.operators.ranking import grouped_ntile
 
@@ -3166,7 +3165,6 @@ def ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # continuous [0,1] probability: the 4096-cell quantization keeps
         # the cutpoint histogram bucket-sized instead of corpus-sized
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
-        size_hint=docs,
     )
 
 
@@ -3607,9 +3605,6 @@ def q_curate_ccnet_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         # continuous [0,1] probability: 4096-cell order-coarsening keeps
         # the cutpoint histogram bucket-sized (see grouped_rank)
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
-        # decided on the scan-level corpus: the LM join's size estimate
-        # multiplies and overshoots
-        size_hint=docs,
     ).drop("avg_next_token_prob")
     coin = F.md5(
         F.concat(F.lit("ccnet-mid"), F.col("doc_id").cast("string"))

@@ -660,7 +660,8 @@ def q_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (histogram, tie-rank join leg, group totals), so it is
     # checkpointed first (three narrow columns, no text); the window
     # plan has one consumer chain, where the checkpoint would be pure
-    # overhead. quantile_filter decides on the same unstaged projection.
+    # overhead. quantile_filter then decides on the staged frame: the
+    # same frame at a small estimate, the stored checkpoint otherwise.
     from csv2db_spark import plans
     from csv2db_spark.operators.stage import materialize_stage
 
@@ -672,7 +673,6 @@ def q_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_col="lang",
         drop_frac=0.25,
         rank_bucket=F.floor(F.col("quality_score") * 4096),
-        size_hint=scored,
     ).select("doc_id")
     kept = samp.join(kept_ids, "doc_id")
     exact = kept.groupBy("lang", "text").agg(F.min("doc_id").alias("doc_id"))
@@ -1554,27 +1554,28 @@ def curation_v6_pipeline(
     an executor loss on a real cluster kills the truncated lineage and
     the job restarts); a 100 TB run passes 'reliable' + a staging dir so
     the boundary is durable parquet. The CCNet tercile plan is picked
-    from the size of the augmented corpus: the plain per-language ntile
-    at fixture size, operators/ranking.grouped_ntile's histogram-offset
-    rank with no whole-group sort above the threshold, where the window
-    would be a single-task sort of the dominant language. Both shapes
+    from the size of the two staged tables it joins: the plain
+    per-language ntile at fixture size, operators/ranking.grouped_ntile's
+    histogram-offset rank with no whole-group sort above the threshold,
+    where the window would be a single-task sort of the dominant
+    language. Both shapes
     are row-for-row equal (tests/test_plan_shapes.py), so the gate
     hashes identically."""
     from csv2db_spark.llm import dedup as D
     from csv2db_spark.llm.text import bigram_lm_scores
     from csv2db_spark.operators.stage import materialize_stage
 
-    # lang/source ride the augmented corpus from the scan (with_meta) —
-    # the survivor join-back to `documents` on doc_id % 100000 that r7
-    # shipped is gone (r7 VERDICT #6; A/B measured at sf0.1, PLANS.md
-    # round-8). The shingle subtree still reads only (doc_id, text):
-    # Catalyst prunes lang/source below the explode.
+    # lang/source ride the augmented corpus from the scan (with_meta),
+    # so survivors need no join back to `documents` on doc_id % 100000
+    # (A/B measured at sf0.1, PLANS.md). The shingle subtree still
+    # reads only (doc_id, text): Catalyst prunes lang/source below the
+    # explode.
     aug = augmented_docs(spark, sf_dir, with_meta=True)
     # distinct=False + pair_filter: containment_pairs dedups (doc_id, s)
-    # on its own shared postings exchange (round-14), and this pipeline
-    # only ever keeps the doc_a > doc_b direction, so the directed
-    # filter runs BEFORE the pair-count aggregate — half the pair
-    # shuffle for bit-identical drop decisions (guide §2.3).
+    # on its own shared postings exchange, and this pipeline only ever
+    # keeps the doc_a > doc_b direction, so the directed filter runs
+    # BEFORE the pair-count aggregate — half the pair shuffle for
+    # bit-identical drop decisions.
     ex = D.shingle_table(aug.select("doc_id", "text"), distinct=False)
     cont = D.containment_pairs(
         ex,
@@ -1601,15 +1602,17 @@ def curation_v6_pipeline(
         F.col("source").isin("src0", "src1", "src2", "src3", "src4")
     )
     scored = bigram_lm_scores(kept1, train_docs=ref)
-    # second stage boundary (round-14, guide §2.4): `scored` feeds the
-    # tercile histogram, the rank attach, AND (via n_bigrams) the final
-    # rollup — without it the sf0.1 plan evaluated the whole LM-scoring
-    # subtree (kept1 bigram explode + model join) THREE times. The
+    # second stage boundary: `scored` feeds the tercile histogram, the
+    # rank attach, AND (via n_bigrams) the final rollup — without it
+    # the sf0.1 plan evaluates the whole LM-scoring subtree (kept1
+    # bigram explode + model join) THREE times. The
     # table is |kept1| rows of four numbers, far lighter than the
     # text corpus the same knob already stages for kept1.
     scored = materialize_stage(scored, mode=materialize, path=stage_path)
     from csv2db_spark.operators.ranking import grouped_ntile
 
+    # the ntile input joins the two staged tables, so it is sized by
+    # their stored bytes, not by the join's product estimate
     bucketed = grouped_ntile(
         scored.join(kept1.select("doc_id", "lang", "source"), "doc_id"),
         "lang",
@@ -1621,10 +1624,6 @@ def curation_v6_pipeline(
         # order-coarsening for the continuous probability (see
         # operators/ranking.grouped_rank): histogram stays 4096 cells
         bucket=F.floor(F.col("avg_next_token_prob") * 4096),
-        # the tercile shape is decided on the augmented corpus: the
-        # ntile input contains joins, whose size estimates multiply and
-        # would always pick the scale shape
-        size_hint=aug,
     )
     return (
         bucketed.where(F.col("b") <= 2)

@@ -43,44 +43,3 @@ def get_spark(app_name: str = "csv2db-spark") -> SparkSession:
     )
     return builder.getOrCreate()
 
-
-def cluster_submit_conf(
-    executors: int = 1000,
-    executor_cores: int = 8,
-    executor_mem: str = "32g",
-) -> dict[str, str]:
-    """Reference spark-submit configuration for running this engine on a
-    real cluster at the ~100 TB scale it is designed for. Not used by the
-    local test harness — documents (and pins in one reviewable place) how
-    the local settings generalize.
-
-    Sizing rules encoded here:
-    - shuffle partitions ~ 2-3x total cores so AQE coalesces down rather
-      than tasks queueing up; skew-join splitting stays on.
-    - executor memory sized so a shuffle partition of
-      ``maxPartitionBytes`` (+ decimal/codegen overhead) fits with room
-      for 2 concurrent tasks per core of margin.
-    - RocksDB state store for streaming: state no longer bounded by heap.
-    - dynamic allocation for mixed workloads; Kryo for the shuffle wire.
-    """
-    total_cores = executors * executor_cores
-    return {
-        "spark.executor.instances": str(executors),
-        "spark.executor.cores": str(executor_cores),
-        "spark.executor.memory": executor_mem,
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.shuffle.partitions": str(total_cores * 2),
-        "spark.sql.files.maxPartitionBytes": "256m",
-        "spark.sql.autoBroadcastJoinThreshold": "64MB",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-        "spark.dynamicAllocation.enabled": "true",
-        "spark.dynamicAllocation.maxExecutors": str(executors),
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    }

@@ -22,8 +22,6 @@ every file.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,11 +82,6 @@ def read_pruned(
         spark.read.parquet(*keep)
         .where((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
     )
-
-
-def files_in_dir(path: str) -> int:
-    """Top-level parquet file count (test/diagnostic helper)."""
-    return len(list(Path(path).glob("*.parquet")))
 
 
 def build_bloom_manifest(

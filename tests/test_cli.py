@@ -190,6 +190,42 @@ def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):
         pass
 
 
+def test_not_null_varchar_empty_cell_loads_empty_string(spark, tmp_path, config_path):
+    """P8 takes "empty → NULL" only for a nullable target column, so the
+    target's NOT NULL must survive the schema probe (Spark's JDBC source
+    reads every column as nullable): an empty cell of a NOT NULL VARCHAR
+    loads "" instead of a NULL the insert rejects."""
+    name = "clinotnull"
+    url = f"jdbc:derby:memory:{name};create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().executeUpdate(
+            "CREATE TABLE nn (id INTEGER NOT NULL, s VARCHAR(5) NOT NULL)"
+        )
+    finally:
+        conn.close()
+    csv = tmp_path / "in.csv"
+    csv.write_text("ID,S\n1,\n2,b\n")  # Derby upper-cases unquoted names
+    try:
+        rc = main(
+            ["--url", url, "-t", "nn", "-m", "as-is", "-i", str(csv), "--has-header"],
+            spark=spark,
+        )
+        assert rc == 0
+        got = (
+            spark.read.format("jdbc").option("url", url).option("dbtable", "nn")
+            .load().collect()
+        )
+        assert sorted((r.ID, r.S) for r in got) == [(1, ""), (2, "b")]
+    finally:
+        try:
+            spark._jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:memory:{name};drop=true"
+            )
+        except Exception:
+            pass  # 08006 "database dropped" is Derby's success signal
+
+
 def test_stdin_honours_encoding_like_a_file(spark, tmp_path, config_path, monkeypatch):
     """``-e`` decodes stdin exactly as it decodes a file (P2,
     csv2db.go:190-199): the same latin-1 bytes piped through ``-i --``

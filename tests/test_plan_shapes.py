@@ -511,6 +511,29 @@ def test_filtered_scan_keeps_its_scan_estimate(spark, sf_dir, plan_shape):
     assert [r._rn for r in ranked.collect()] == [1]
 
 
+def test_checkpointed_small_join_reads_small(spark, sf_dir, plan_shape):
+    """A join's root estimate is the product of its children, and an
+    eager localCheckpoint keeps the estimate of the plan it truncated,
+    so a checkpointed 500-row self-join still reads as gigabytes at the
+    root. plans.est_size_bytes reads the checkpoint's stored bytes from
+    the block manager instead: the frame is small at the default
+    threshold, and threshold 0 still forces the scale shape."""
+    from csv2db_spark import plans
+    from csv2db_spark.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
+    joined = docs.alias("a").join(docs.alias("b"), "doc_id")
+    staged = joined.localCheckpoint(eager=True)
+    assert staged.count() == docs.count() == 500
+    root = staged._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(str(root)) >= plans.ADAPTIVE_SMALL_DEFAULT
+    with plan_shape(plans.ADAPTIVE_SMALL_DEFAULT):
+        assert plans.small_input(staged)
+        assert plans.small_input(joined)
+    with plan_shape("scale"):
+        assert not plans.small_input(staged)
+
+
 def test_ccnet_cutpoint_mode_has_no_whole_group_sort(spark, sf_dir, plan_shape):
     """The 100-TB CCNet plan (the scale shape): every row_number window
     over corpus rows must be keyed by (group, score) — tie sets, never

@@ -1175,3 +1175,39 @@ def test_domain_cap_modes_equal(spark, plan_shape):
                     for r in domain_cap(docs, k=k).collect()
                 }
         assert out["small"] == out["scale"]
+
+
+def test_topk_per_query_modes_equal(spark, plan_shape):
+    """The single-window and two-stage sharded top-k
+    (similarity._topk_per_query) give the same rows, through both of
+    its callers' compositions. The corpus repeats six vectors, so many
+    neighbours tie on score and the k cut falls inside tie sets: only
+    the neighbor_id tiebreak decides which rows survive."""
+    from csv2db_spark.llm.pq import pq_codebook, pq_encode, pq_query_codes
+    from csv2db_spark.llm.similarity import cosine_topk
+
+    patterns = [
+        [round(0.1 * ((p * 3 + j) % 7) - 0.3, 2) for j in range(8)]
+        for p in range(6)
+    ]
+    corpus = spark.createDataFrame(
+        [(i, patterns[i % 6]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    queries = corpus.where(F.col("vec_id") < 3)
+    codebook = pq_codebook(corpus, m=2, k=4, dim=8)
+    codes = pq_encode(corpus, codebook, m=2, dim=8)
+    builds = {
+        "cosine": lambda: cosine_topk(corpus, queries, k=5),
+        "pq": lambda: pq_query_codes(codebook, codes, queries, k=5, m=2, dim=8),
+    }
+    for name, build in builds.items():
+        out, plan = {}, {}
+        for shape in ("small", "scale"):
+            with plan_shape(shape):
+                df = build()
+            plan[shape] = df._jdf.queryExecution().executedPlan().toString()
+            out[shape] = sorted(map(tuple, df.collect()))
+        assert out["small"] == out["scale"], name
+        assert len(out["small"]) == 3 * 5, name
+        assert "_srn" in plan["scale"] and "_srn" not in plan["small"], name
