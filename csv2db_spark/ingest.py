@@ -431,17 +431,33 @@ def read_csv_stdin(
 def reconcile_by_name(df: DataFrame, target: T.StructType) -> DataFrame:
     """CSV has a header: match columns by name; DB side wins on type and
     nullability; extra CSV columns dropped with a warning; missing target
-    columns become NULL (common/schema.go:67-83)."""
-    tnames = set(target.fieldNames())
+    columns become NULL (common/schema.go:67-83).
+
+    Names match the way Spark's resolver does: case-insensitively unless
+    ``spark.sql.caseSensitive`` is true, since databases fold unquoted
+    identifiers (Derby to upper case, PostgreSQL to lower case). Two CSV
+    headers that match one target column raise ``ValueError``."""
+    exact = df.sparkSession.conf.get("spark.sql.caseSensitive").lower() == "true"
+    fold = (lambda n: n) if exact else str.lower
+    tnames = {fold(f.name): f.name for f in target.fields}
+    src: dict[str, str] = {}
     for c in df.columns:
-        if c not in tnames:
+        t = tnames.get(fold(c))
+        if t is None:
             log.warning("CSV column %r has no target column — dropped", c)
+        elif t in src:
+            raise ValueError(
+                f"CSV columns {src[t]!r} and {c!r} both match target column {t!r}"
+            )
+        else:
+            src[t] = c
     cols = []
     for f in target.fields:
-        if f.name in df.columns:
-            cols.append(F.col(f.name))
-        else:
+        c = src.get(f.name)
+        if c is None:
             cols.append(F.lit(None).cast("string").alias(f.name))
+        else:
+            cols.append(F.col(c) if c == f.name else F.col(c).alias(f.name))
     return df.select(*cols)
 
 

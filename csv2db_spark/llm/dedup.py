@@ -1,15 +1,19 @@
 """Deduplication operators: exact, MinHash+LSH, n-gram Jaccard, SimHash,
 embedding-cosine near-dup.
 
-All of these are compositions of built-in DataFrame ops (explode, hash,
-groupBy, self-join) — no Python in the row path — so they inherit
-Catalyst/Tungsten execution and scale by partitioning:
+Apart from the md5 MinHash signature pass (one Arrow batch per
+partition, see below) these are compositions of built-in DataFrame ops
+(explode, hash, groupBy, self-join) — no Python in the row path — so
+they inherit Catalyst/Tungsten execution and scale by partitioning:
 
 - exact dedup: one hash-shuffle on the digest.
-- MinHash: explode(shingles) → one groupBy(doc) computing K min-hash
-  aggregates in a single pass → band table → self-join on (band_id,
-  band_hash). At 100 TB the band join is the only pairwise step and only
-  collides candidates, never the full corpus.
+- MinHash: one signature row per document (``minhash_doc_signatures``:
+  md5 per 3-shingle, K Kirsch-Mitzenmacher mins and the shingle hash
+  set, computed row-locally with no shuffle) → band table → band-bucket
+  candidate pairs. At 100 TB the band join is the only pairwise step
+  and only collides candidates, never the full corpus. The xxhash64
+  twin computes signatures of the same shape (other hash values)
+  JVM-side, for clusters without Python workers.
 - SimHash: one groupBy(doc) with 64 bit-counter aggregates → band join on
   16-bit chunks (pigeonhole: hamming<=3 over 4 bands guarantees one equal
   band) → bit_count(xor) verify.
@@ -19,7 +23,8 @@ Catalyst/Tungsten execution and scale by partitioning:
   before the pairwise join, bounding per-shingle fan-out.
 
 Hash identity across engines: md5 hex strings (DuckDB md5() == Spark
-F.md5), so min-over-hex and band digests are comparable in oracle SQL.
+F.md5 == hashlib.md5), so min-hash values and band keys are comparable
+in oracle SQL.
 """
 
 from __future__ import annotations
@@ -29,7 +34,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from csv2db_spark.llm.corpus import shingles, tokens
+from csv2db_spark.llm.corpus import tokens
 
 # ------------------------------------------------------------------- exact
 
@@ -53,25 +58,27 @@ MINHASH_K = 12  # 4 bands x 3 rows
 BAND_ROWS = 3
 # largest prime below 2^48 — the min-hash value space
 MINHASH_P = (1 << 48) - 59
+# shingle hashes are 48-bit so the K-M arithmetic cannot overflow int64
+_H48 = (1 << 48) - 1
 
 
 def shingle_table(
     docs: DataFrame, text_col: str = "text", n: int = 3, distinct: bool = True
 ) -> DataFrame:
-    """Word n-grams per document as rows (doc_id, s).
+    """Word n-grams per document as rows (doc_id, s); docs with a NULL
+    text or fewer than n tokens emit none.
 
     Built ZERO-SHUFFLE in whole-stage codegen: arrays_zip of n shifted
     array slices + explode + concat_ws, all per-row expressions. Two
     earlier shapes lost: a higher-order ``transform`` lambda evaluates
-    interpreted (~4x slower, measured round 5), and posexplode + window
-    ``lead`` pays a per-doc window SHUFFLE before the consumer's own
-    (round-7 measurement in PLANS.md: the zip shape cut the containment
-    gate's shingle stage shuffle out entirely). Same idiom as
-    ``minhash_doc_signatures_xxh``'s signature pass.
+    interpreted (~4x slower), and posexplode + window ``lead`` pays a
+    per-doc window SHUFFLE before the consumer's own (PLANS.md: the zip
+    shape cut the containment gate's shingle stage shuffle out
+    entirely).
 
     ``distinct=False`` skips the per-doc dedup shuffle — correct for any
-    duplicate-insensitive consumer (min-hash aggregation); set consumers
-    (Jaccard) dedup their own, typically much smaller, slice."""
+    duplicate-insensitive consumer (min-hash aggregation, hash sets); set
+    consumers (Jaccard) dedup their own, typically much smaller, slice."""
     toks = tokens(text_col)
     m = F.size(toks) - (n - 1)
     z = F.arrays_zip(
@@ -90,22 +97,11 @@ def shingle_table(
     return out.dropDuplicates(["doc_id", "s"]) if distinct else out
 
 
-def shingle_hashes(exploded: DataFrame) -> DataFrame:
-    """ONE md5 per shingle, split into two independent 48-bit integers.
-    All K min-hash functions derive from (h1, h2) arithmetically
-    (Kirsch-Mitzenmacher double hashing), so the per-shingle hashing cost
-    is constant in K — at 100 TB this is the map-side hot loop."""
-    md5 = F.md5("s")
-    return exploded.select(
-        "doc_id",
-        F.conv(F.substring(md5, 1, 12), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(md5, 13, 12), 16, 10).cast("long").alias("h2"),
-    )
-
-
 def minhash_signatures(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """K min-hash values in ONE aggregation pass (map-side combinable):
-    h_i = min((h1 + i*h2 + i*i) mod P). Pure 64-bit arithmetic inside
+    """The Kirsch-Mitzenmacher fold as Column expressions: (doc_id, h1,
+    h2) shingle-hash rows → (doc_id, h0..h{k-1}) with h_i = min((h1 +
+    i*h2 + i*i) mod P), K min-hashes from two hashes per shingle in ONE
+    map-side-combinable aggregation. Pure 64-bit arithmetic inside
     whole-stage codegen — no string hashing per hash function."""
     aggs = [
         F.min((F.col("h1") + i * F.col("h2") + F.lit(i * i)) % F.lit(MINHASH_P)).alias(
@@ -116,25 +112,45 @@ def minhash_signatures(hashed: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+def _cpu_parallel(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, text) in at least ``defaultParallelism`` partitions.
+
+    The signature passes are CPU-bound: a small single-file corpus can
+    arrive in fewer partitions than cores (3 on the test fixture),
+    serializing them. The shuffled payload is only (doc_id, text), and at
+    real scale file splits already outnumber cores, making this a
+    no-op."""
+    slim = docs.select("doc_id", text_col)
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    if slim.rdd.getNumPartitions() < par:
+        slim = slim.repartition(par)
+    return slim
+
+
 def minhash_doc_signatures(
     docs: DataFrame, text_col: str = "text", k: int = MINHASH_K
 ) -> DataFrame:
-    """Per-document signatures in ONE Arrow pass — no shingle explode, no
-    shuffle: tokenize, shingle, md5 and reduce to K mins inside a
-    mapInPandas batch (hashlib's C md5 over ~50 shingles/doc). Also emits
-    the distinct-h1 set as an array column, so exact Jaccard verification
-    becomes `array_intersect` on candidate pairs — the corpus-wide
-    shingle table never materializes.
+    """The md5 MinHash signature kernel: (doc_id, hset, h0..h{k-1}).
 
-    Embarrassingly parallel: one input row -> one output row, scales with
-    partitions, zero shuffle until the (tiny) band join. Identical values
-    to the explode-based path (same md5, same K-M arithmetic, verified by
-    the shared DuckDB oracle).
+    Per document, inside one mapInPandas batch: split the text on single
+    spaces, md5 each distinct word 3-shingle (hashlib's C md5), read the
+    hex digest's first and second 12 digits as two 48-bit ints (h1, h2)
+    and fold them into K mins h_i = min((h1 + i*h2 + i*i) mod P).
+    ``hset`` is the sorted distinct h1 set, so exact Jaccard verification
+    is ``array_intersect`` on candidate pairs and the corpus-wide
+    shingle table never materializes. ``_sql_minhash_cte`` in
+    queries/llm.py is the DuckDB mirror of these values.
 
-    Docs with fewer than 3 tokens have no shingles and are omitted —
-    matching the groupBy-based path, which produces no group for them."""
-    import numpy as np  # noqa: F401 (worker side)
+    One input row → at most one output row, no aggregation shuffle:
+    measured faster than exploding shingles into a grouped Column fold
+    (1.06 s against 1.49 s for the pass alone at sf0.1, local[4]). The
+    pass sits above its only exchange, so Spark cannot reuse it across
+    consumers: a caller that reads the signatures more than once (both
+    legs of the band join, both directions of an edge union) persists
+    them.
 
+    Docs with a NULL text or fewer than 3 tokens have no shingles and
+    are omitted."""
     out_schema = "doc_id bigint, hset array<bigint>, " + ", ".join(
         f"h{i} bigint" for i in range(k)
     )
@@ -150,6 +166,8 @@ def minhash_doc_signatures(
         for pdf in batches:
             rows = []
             for did, text in zip(pdf["doc_id"], pdf[text_col]):
+                if text is None:
+                    continue
                 toks = text.split(" ")
                 if len(toks) < 3:
                     continue
@@ -163,160 +181,65 @@ def minhash_doc_signatures(
                 rows.append((did, np.unique(h1).tolist(), *mins))
             yield pd.DataFrame(rows, columns=cols)
 
-    slim = docs.select("doc_id", text_col)
-    # The pass is CPU-bound: a small single-file corpus can arrive in
-    # fewer partitions than cores (3 on the test fixture), serializing
-    # the UDF. Floor the parallelism — the shuffled payload is only
-    # (doc_id, text), and at real scale file splits already outnumber
-    # cores, making this branch a no-op.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if slim.rdd.getNumPartitions() < par:
-        slim = slim.repartition(par)
-    return slim.mapInPandas(batch, out_schema)
+    return _cpu_parallel(docs, text_col).mapInPandas(batch, out_schema)
 
 
 def minhash_doc_signatures_xxh(
     docs: DataFrame, text_col: str = "text", k: int = MINHASH_K
 ) -> DataFrame:
-    """Production twin of ``minhash_doc_signatures``: the same per-doc
-    zero-shuffle signature pass, but the shingle hash is Spark's native
-    ``xxhash64`` evaluated entirely JVM-side — no Python worker, no
-    Arrow transfer, no per-shingle ``hashlib.md5``. The md5 path stays
-    as the cross-engine parity gate (DuckDB has md5; it has no
-    Spark-compatible xxhash64) AND the measured-faster single-node
-    default — see PLANS.md round-6 profiling: the Arrow pass is ~0.6 s
-    of the ~2 s gate, NOT the bottleneck. This twin exists for
-    clusters where Python workers are unavailable or the constraint.
+    """JVM-hash twin of ``minhash_doc_signatures``: (doc_id,
+    h0..h{k-1}), the same K Kirsch-Mitzenmacher fold over the same
+    shingles, but each shingle's (h1, h2) is Spark's native ``xxhash64``
+    of (s) and of (s, 1), masked to 48 bits — no Python worker, no Arrow
+    transfer. The values differ from the md5 kernel's, so DuckDB (which
+    has no Spark-compatible xxhash64) cannot check them; the md5 kernel
+    stays the cross-engine parity path and, measured single-node (the
+    Arrow pass is ~0.6 s of the ~2 s gate, PLANS.md), the default. This
+    twin exists for clusters where Python workers are unavailable.
 
-    Contract: (doc_id, h0..h{k-1}) — K Kirsch-Mitzenmacher min-hashes
-    h_i = min((h1 + i*h2 + i*i) mod P) over 48-bit hashes (xxhash64
-    masked to 48 bits so the K-M arithmetic stays overflow-free in
-    int64, exactly like the 48-bit md5 slices). h2 derives from hashing
-    (s, 1) — a second independent xxhash64 stream. Docs with fewer than
-    n tokens are omitted, matching both sibling paths. UNLIKE the md5
-    twin this deliberately does NOT carry the per-doc hash set: at
+    Shape: ``shingle_table`` (codegen zip + explode, no distinct —
+    duplicate shingles cannot change a MIN), two codegen xxhash64 per
+    shingle, then ``minhash_signatures``' ONE groupBy(doc_id) with
+    map-side partial aggregation, so the shuffle carries ~one k-long
+    partial per doc per task, not the shingle rows. An all-HOF variant
+    (k zip_with/array_min folds per row) was measured 8x SLOWER at
+    sf0.1: lambda bodies evaluate interpreted.
+
+    Unlike the md5 kernel this does NOT carry the per-doc hash set: at
     corpus scale the sets dominate the shuffle (the k mins are 96
-    bytes/doc; the sets are ~8·|shingles| — measured ~25% of the whole
-    query when carried via collect_set), and exact-Jaccard verification
-    only ever needs them for docs that survive the band join — compute
-    those with ``minhash_doc_hashsets_xxh`` on the (bounded) candidate
-    doc set instead.
-
-    Scale shape: per-row shingle array (higher-order transform — no
-    window shuffle), explode, two codegen xxhash64 per shingle, then
-    ONE groupBy(doc_id) with map-side partial aggregation — the shuffle
-    carries ~one k-long partial per doc per task, not the shingle rows.
-    An all-HOF variant (k zip_with/array_min folds per row) was
-    measured 8x SLOWER at sf0.1: lambda bodies evaluate interpreted and
-    the hash arrays get re-evaluated per consumer; explode + hash + min
-    stays inside whole-stage codegen end to end. Downstream
-    (minhash_bands / minhash_candidates) is shared with the md5 twin."""
-    mask = (1 << 48) - 1
-    slim = docs.select("doc_id", text_col)
-    # same parallelism floor as the md5 twin: a small single-file corpus
-    # arrives in fewer partitions than cores, serializing the hash stage;
-    # at real scale file splits outnumber cores and this is a no-op
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if slim.rdd.getNumPartitions() < par:
-        slim = slim.repartition(par)
-    # Shingle build WITHOUT a higher-order function: arrays_zip of three
-    # shifted slices + explode + concat_ws — every expression is
-    # whole-stage codegen (the generic shingles() helper's transform()
-    # lambda is interpreted, the single biggest cost of this pass).
-    # array_distinct is deliberately dropped: duplicate shingles cannot
-    # change a MIN aggregate, so the signatures are bit-identical while
-    # the per-row distinct sort disappears.
-    w = tokens(text_col)
-    m = F.size(w) - 2
-    z = F.arrays_zip(
-        F.slice(w, 1, m).alias("a"),
-        F.slice(w, 2, m).alias("b"),
-        F.slice(w, 3, m).alias("c"),
+    bytes/doc; the sets ~8·|shingles|, measured ~25% of the whole query
+    when carried via collect_set), and exact-Jaccard verification only
+    needs them for docs that survive the band join — build those with
+    ``minhash_doc_hashsets_xxh`` on the bounded candidate doc set.
+    Docs with a NULL text or fewer than 3 tokens are omitted."""
+    s = shingle_table(_cpu_parallel(docs, text_col), text_col, distinct=False)
+    return minhash_signatures(
+        s.select(
+            "doc_id",
+            F.xxhash64("s").bitwiseAND(F.lit(_H48)).alias("h1"),
+            F.xxhash64("s", F.lit(1)).bitwiseAND(F.lit(_H48)).alias("h2"),
+        ),
+        k,
     )
-    ex = slim.where(F.size(w) >= 3).select(
-        "doc_id", F.explode(z).alias("st")
-    ).select(
-        "doc_id",
-        F.concat_ws(" ", F.col("st.a"), F.col("st.b"), F.col("st.c")).alias("s"),
-    )
-    h = ex.select(
-        "doc_id",
-        F.xxhash64("s").bitwiseAND(F.lit(mask)).alias("h1"),
-        F.xxhash64("s", F.lit(1)).bitwiseAND(F.lit(mask)).alias("h2"),
-    )
-    aggs = [
-        F.min(
-            (F.col("h1") + i * F.col("h2") + F.lit(i * i)) % F.lit(MINHASH_P)
-        ).alias(f"h{i}")
-        for i in range(k)
-    ]
-    return h.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_doc_hashsets_xxh(
     docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """(doc_id, hset) — distinct 48-bit xxhash64 shingle hashes per doc,
-    one higher-order-transform pass per ROW: zero shuffle, zero Python.
-    The single transform is consumed exactly once, so Catalyst's
-    project-collapse cannot duplicate the hash work (the trap that made
-    the k-consumer HOF signature variant 8x slower). Intended for the
-    docs surviving the band join (a bounded set — semi-join or
-    broadcast-filter the corpus first), where recomputing the set costs
-    one narrow scan instead of shuffling every doc's set corpus-wide.
-
-    The shingle-less-doc filter is a CHEAP token-count predicate on the
-    input side, NOT ``size(hset) > 0`` on the output: a filter phrased
-    over the transform gets predicate-pushed below the caller's
-    semi-join and re-evaluates the interpreted hash lambda for every
-    corpus row — measured 3.7 s vs ~0 s at sf0.1 for a ~700-doc
-    candidate set."""
-    mask = (1 << 48) - 1
-    sh = shingles(tokens(text_col))
-    return docs.where(F.size(tokens(text_col)) >= 3).select(
-        "doc_id",
-        F.array_distinct(
-            F.transform(sh, lambda s: F.xxhash64(s).bitwiseAND(F.lit(mask)))
-        ).alias("hset"),
+    """(doc_id, hset) — the distinct 48-bit xxhash64 shingle hashes per
+    doc (the xxh twin's h1), built all-codegen: ``shingle_table`` +
+    xxhash64 + one ``collect_set`` groupBy. Intended only for the
+    BOUNDED post-band-join doc set, where that shuffle is tiny; a
+    per-row higher-order ``transform`` builder measured 3.28 s against
+    2.31 s end to end for the xxh LSH gate at sf0.1 (PLANS.md). hset
+    element order is free (set semantics — ``array_intersect``
+    consumers are order-insensitive)."""
+    return (
+        shingle_table(docs, text_col, distinct=False)
+        .select("doc_id", F.xxhash64("s").bitwiseAND(F.lit(_H48)).alias("h"))
+        .groupBy("doc_id")
+        .agg(F.collect_set("h").alias("hset"))
     )
-
-
-def minhash_doc_hashsets_xxh_exploded(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """All-codegen alternative to ``minhash_doc_hashsets_xxh``: the same
-    (doc_id, hset) contract built with the signature pass's exploded
-    shape — arrays_zip of shifted slices + explode + codegen xxhash64 +
-    ``collect_set`` groupBy — instead of one interpreted ``transform``
-    per row. Trades the HOF's interpreted lambda for a candidate-set
-    shuffle (collect_set); intended only for the BOUNDED post-band-join
-    doc set, where the shuffle is tiny. Measured at sf0.1 (PLANS.md
-    round-7): 2.31 s vs 3.28 s end-to-end for the xxh LSH gate, same
-    pair set — this is now the gate's default; the HOF variant stays
-    for zero-shuffle call sites. hset element ORDER differs from the
-    HOF variant (set semantics — array_intersect consumers are
-    order-insensitive); membership is bit-identical."""
-    mask = (1 << 48) - 1
-    w = tokens(text_col)
-    m = F.size(w) - 2
-    z = F.arrays_zip(
-        F.slice(w, 1, m).alias("a"),
-        F.slice(w, 2, m).alias("b"),
-        F.slice(w, 3, m).alias("c"),
-    )
-    ex = (
-        docs.where(F.size(w) >= 3)
-        .select("doc_id", F.explode(z).alias("st"))
-        .select(
-            "doc_id",
-            F.xxhash64(
-                F.concat_ws(" ", F.col("st.a"), F.col("st.b"), F.col("st.c"))
-            )
-            .bitwiseAND(F.lit(mask))
-            .alias("h"),
-        )
-    )
-    return ex.groupBy("doc_id").agg(F.collect_set("h").alias("hset"))
 
 
 def minhash_bands(sig: DataFrame, k: int = MINHASH_K, rows: int = BAND_ROWS) -> DataFrame:
@@ -419,7 +342,7 @@ def jaccard_pairs(
     restriction); the hot list is a tiny aggregate, applied as a
     broadcast anti-join.
 
-    Round-14 shape for the UNRESTRICTED path (guide §2.4, the
+    Shape for the UNRESTRICTED path (guide §2.4, the
     containment_pairs fix applied here too): the postings fed FOUR
     consumers (df census, size census, both SMJ legs), each replanning
     the shingle-explode prep chain — the gate plan carried 46 Exchanges
@@ -545,7 +468,7 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     bands, any pair within hamming<=3 shares at least one identical band →
     the self-join only compares band-colliding docs.
 
-    The signature table is checkpointed first (round-14, guide §2.4):
+    The signature table is checkpointed first (guide §2.4):
     both self-join legs consume it, and each would otherwise replan the
     full signature computation — for the gate that means the corpus
     tokenize + 60-counter aggregate running TWICE per query. sig is two
@@ -598,7 +521,7 @@ def deletion_variants(c: Column) -> Column:
     This array form is the spec / ad-hoc helper; ``fuzzy_pairs`` inlines
     the explode-first equivalent so the substr+concat work runs codegen
     per row instead of interpreted per lambda element (measured 1.6x on
-    the gate, PLANS.md round-8 session 3)."""
+    the gate, PLANS.md)."""
     return F.concat(
         F.array(c),
         F.transform(
@@ -759,7 +682,7 @@ def _window_fingerprints(
     concat_ws + md5 run whole-stage-codegen per exploded row instead of
     interpreted per array element — the earlier sequence + per-index
     slice/array_join/md5 lambda was the interpreted-HOF-with-real-work
-    class this repo eliminates on sight (PLANS.md round-8)."""
+    class this repo eliminates on sight (PLANS.md)."""
     t = F.split(F.col(text_col), " ")
     m = F.size(t) - (w - 1)
     z = F.arrays_zip(*[F.slice(t, j + 1, m).alias(f"t{j}") for j in range(w)])
@@ -819,14 +742,14 @@ def remove_duplicated_spans(
     Output: (doc_id, clean_text, n_tokens) — documents whose every
     token fell inside a doomed span drop out entirely (both engines).
 
-    Shape at scale (round-14, guide §8 — decide with small rows, never
+    Shape at scale (guide §8 — decide with small rows, never
     move the payload): the occurrence ranking is a window over the
     digest shuffle (no join); doomed windows merge to spans per doc.
     The CUT then happens on the document's token ARRAY in place: the
     per-doc span list (small — sized by duplicated content, disjoint
     sorted intervals by construction of the island merge) joins back to
     the corpus on doc_id, and one row-local expression slices the kept
-    intervals out of the split array and rejoins them. The r13 shape
+    intervals out of the split array and rejoins them. The earlier shape
     instead exploded every corpus token, anti-joined positions against
     the spans, and re-shuffled ALL tokens by doc_id for a
     collect_list/array_sort rebuild — two corpus-sized token passes
@@ -834,7 +757,7 @@ def remove_duplicated_spans(
     the span table broadcasts. The per-row lambdas here iterate over a
     doc's SPANS (few), not its tokens — each slice() is one array copy,
     so the rebuild stays O(tokens) per doc with no interpreted
-    per-token work (the round-8 HOF rule is about corpus-sized
+    per-token work (the HOF rule is about corpus-sized
     per-element lambdas, which this is not)."""
     occ = _window_fingerprints(docs, text_col, w)
     rn = F.row_number().over(Window.partitionBy("h").orderBy("doc_id", "i"))
@@ -1118,7 +1041,7 @@ def containment_pairs(
     postings list. At 100 TB this runs after an LSH candidate pass the
     same way jaccard verification does.
 
-    Negative result (round 9, PLANS.md): rebuilding this as grouped
+    Negative result (PLANS.md): rebuilding this as grouped
     postings + in-group pair expansion (the minhash_candidates shape —
     sort_array(collect_set) per shingle, unordered pairs via nested
     ``transform``, directed rows emitted after the count) measured
@@ -1128,7 +1051,7 @@ def containment_pairs(
     them only to the tiny >=2-member band buckets. The two-sided SMJ
     stays.
 
-    Round-14 shape (guide §2.4 — share one exchange, materialize the
+    Shape (guide §2.4 — share one exchange, materialize the
     multi-consumer boundary): the postings table is consumed THREE
     times (both self-join legs + the size census) and its prep chain
     (per-doc dedup, df census, stop-shingle anti) was replanned per

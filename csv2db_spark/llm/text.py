@@ -756,9 +756,9 @@ def feature_hash_tf(
     needs it.
 
     Hash identity across engines: bucket and sign derive from the two
-    48-bit halves of md5(token) — the corpus-wide convention
-    (llm/dedup.shingle_hashes) — so the DuckDB oracle reproduces every
-    cell exactly.
+    48-bit halves of md5(token) — the corpus-wide convention, also the
+    (h1, h2) of llm/dedup.minhash_doc_signatures — so the DuckDB oracle
+    reproduces every cell exactly.
 
     Scale shape: explode -> hash -> ONE map-side-combined groupBy
     (doc_id, bucket); the shuffle carries <= n_features partials per

@@ -9,6 +9,7 @@ Dedup queries run on the deterministic augmented corpus
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -203,8 +204,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale) is ACTIVE and mirrored in the oracle, so the capped semantics
     themselves are hash-verified, not just the happy path.
     """
-    from pyspark import StorageLevel
-
     sig = D.minhash_doc_signatures(augmented_docs(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -242,11 +241,9 @@ def q_dedup_minhash_lsh_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus — so the one set-sized shuffle (the exploded builder's
     collect_set) is bounded by the candidate set, never the corpus.
     Single-node the two are within ~25% of each other (measured at
-    sf0.1; the md5 Arrow pass is NOT the bottleneck — see PLANS.md
-    round-6 profiling); this path exists for clusters where Python
-    workers are unavailable or the constraint."""
-    from pyspark import StorageLevel
-
+    sf0.1; the md5 Arrow pass is NOT the bottleneck — see the PLANS.md
+    profiling); this path exists for clusters where Python workers are
+    unavailable or the constraint."""
     docs = augmented_docs(spark, sf_dir)
     cand = D.minhash_candidates(
         D.minhash_bands(D.minhash_doc_signatures_xxh(docs)),
@@ -259,17 +256,13 @@ def q_dedup_minhash_lsh_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from csv2db_spark.operators.stage import materialize_stage
 
-    # exploded (all-codegen) hashset build: measured 2.31 s vs 3.28 s
-    # for the interpreted-HOF variant end-to-end at sf0.1, identical
-    # pair set — PLANS.md round-7 xxh measurement. The build is
-    # checkpointed because it feeds BOTH join legs (sa and sb): without
-    # the boundary each leg re-plans the corpus scan + shingle explode
-    # + collect_set, doubling the gate's corpus passes; the table is
-    # bounded by the candidate set, so the checkpoint is tiny.
+    # The hashset build is checkpointed because it feeds BOTH join legs
+    # (sa and sb): without the boundary each leg re-plans the corpus
+    # scan + shingle explode + collect_set, doubling the gate's corpus
+    # passes; the table is bounded by the candidate set, so the
+    # checkpoint is tiny.
     hs = materialize_stage(
-        D.minhash_doc_hashsets_xxh_exploded(
-            docs.join(F.broadcast(ids), "doc_id")
-        )
+        D.minhash_doc_hashsets_xxh(docs.join(F.broadcast(ids), "doc_id"))
     )
     sa = hs.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("ha"))
     sb = hs.select(F.col("doc_id").alias("doc_b"), F.col("hset").alias("hb"))
@@ -381,8 +374,9 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure by recursive CTE."""
     from csv2db_spark.operators.graph import connected_components
 
-    ex = D.shingle_table(augmented_docs(spark, sf_dir))
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(augmented_docs(spark, sf_dir)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b")
     w = Window.partitionBy("component")
@@ -1137,16 +1131,15 @@ def q_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = augmented_docs(spark, sf_dir)
     qual = docs.where(F.size(_tokens("text")) >= 30)
-    # Round-14 (guide §2.4): exact has two consumers (the shingle/LSH
-    # chain and the final anti join), each replanning the corpus
+    # Guide §2.4: exact has two consumers (the signature/LSH chain and
+    # the final anti join), each replanning the corpus
     # text-keyed dedup shuffle. One materialization, one dedup pass.
     from csv2db_spark.operators.stage import materialize_stage
 
     exact = materialize_stage(
         qual.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     )
-    exh = D.shingle_hashes(D.shingle_table(exact, distinct=False))
-    sig = D.minhash_signatures(exh)
+    sig = D.minhash_doc_signatures(exact).persist(StorageLevel.MEMORY_AND_DISK)
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b")
     losers = comp.where(F.col("component") != F.col("node")).select(
@@ -1428,8 +1421,9 @@ def q_graph_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between 200 and 8 rounds on a chain-shaped component."""
     from csv2db_spark.operators.graph import connected_components_star
 
-    ex = D.shingle_table(augmented_docs(spark, sf_dir))
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(augmented_docs(spark, sf_dir)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components_star(cand, src="doc_a", dst="doc_b")
     w = Window.partitionBy("component")
@@ -1578,8 +1572,6 @@ def q_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs a from-scratch run would (same band caps, same verification).
     Scale shape: per arrival, signature work is batch-sized; the band
     join touches the new bands' buckets only."""
-    from pyspark import StorageLevel
-
     corpus = augmented_docs(spark, sf_dir)
     sig_old = D.minhash_doc_signatures(
         corpus.where(F.col("doc_id") < 100000)
@@ -1647,8 +1639,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csv2db_spark.operators.graph import connected_components
 
     docs = augmented_docs(spark, sf_dir)
-    ex = D.shingle_table(docs)
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -1787,8 +1778,7 @@ def q_curate_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from csv2db_spark.operators.graph import connected_components
 
     docs = augmented_docs(spark, sf_dir)
-    ex = D.shingle_table(docs)
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(docs).persist(StorageLevel.MEMORY_AND_DISK)
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -2190,8 +2180,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold. Stop-shingle cap (df > 64) applied to numerator and
     denominator; threshold enforced by integer permille — every
     emitted pair hash-verified. distinct=False: containment_pairs
-    dedups (doc_id, s) itself on its shared postings exchange
-    (round-14), so the upstream dedup shuffle would be pure waste."""
+    dedups (doc_id, s) itself on its shared postings exchange, so the
+    upstream dedup shuffle would be pure waste."""
     ex = D.shingle_table(augmented_docs(spark, sf_dir), distinct=False)
     return D.containment_pairs(ex, min_permille=700, max_doc_freq=64)
 

@@ -226,6 +226,42 @@ def test_not_null_varchar_empty_cell_loads_empty_string(spark, tmp_path, config_
             pass  # 08006 "database dropped" is Derby's success signal
 
 
+def test_lower_case_header_loads_upper_case_table(spark, tmp_path, config_path):
+    """Derby stores unquoted identifiers upper-case, so a header written
+    ``id,s`` must still match columns ``ID, S`` (case-insensitive, as
+    Spark resolves names): with nullable targets a case-sensitive match
+    would drop every CSV column and load all-NULL rows."""
+    name = "clilowerhdr"
+    url = f"jdbc:derby:memory:{name};create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().executeUpdate(
+            "CREATE TABLE lh (id INTEGER, s VARCHAR(5))"
+        )
+    finally:
+        conn.close()
+    csv = tmp_path / "in.csv"
+    csv.write_text("id,s\n1,a\n2,b\n")
+    try:
+        rc = main(
+            ["--url", url, "-t", "lh", "-m", "as-is", "-i", str(csv), "--has-header"],
+            spark=spark,
+        )
+        assert rc == 0
+        got = (
+            spark.read.format("jdbc").option("url", url).option("dbtable", "lh")
+            .load().collect()
+        )
+        assert sorted((r.ID, r.S) for r in got) == [(1, "a"), (2, "b")]
+    finally:
+        try:
+            spark._jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:memory:{name};drop=true"
+            )
+        except Exception:
+            pass  # 08006 "database dropped" is Derby's success signal
+
+
 def test_stdin_honours_encoding_like_a_file(spark, tmp_path, config_path, monkeypatch):
     """``-e`` decodes stdin exactly as it decodes a file (P2,
     csv2db.go:190-199): the same latin-1 bytes piped through ``-i --``

@@ -126,6 +126,24 @@ def test_by_name_reorder(spark, csv_file):
     assert r2.b == 4 and r2.a is None
 
 
+def test_by_name_folds_case_like_spark(spark, csv_file):
+    # header names match target names case-insensitively unless
+    # spark.sql.caseSensitive is on; two headers folding to one target
+    # column are ambiguous and refused
+    df = ingest_csv(spark, csv_file(HEADER.replace("a,b,c", "A,B,c", 1)), TARGET)
+    assert df.columns == ["a", "b", "c", "d", "e"]
+    assert df.collect()[0].b == 2
+    dup = spark.createDataFrame([("1", "2")], "a string, A string")
+    with pytest.raises(ValueError, match="both match target column 'a'"):
+        reconcile_by_name(dup, TARGET)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        got = reconcile_by_name(spark.createDataFrame([("1",)], "A string"), TARGET)
+        assert got.collect()[0].a is None
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+
+
 def test_header_subset_null_fill(spark, csv_file):
     # manual_test_cases.md:207-228: CSV missing column b → NULL (target b
     # nullable in that scenario; a NOT NULL b would abort — next test)

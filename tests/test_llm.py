@@ -156,9 +156,7 @@ def test_band_bucket_cap_bounds_skew(spark):
         F.col("id").alias("doc_id"),
         F.lit("all documents carry exactly the same words here").alias("text"),
     )
-    bands = D.minhash_bands(
-        D.minhash_signatures(D.shingle_hashes(D.shingle_table(docs)))
-    )
+    bands = D.minhash_bands(D.minhash_doc_signatures(docs))
     assert D.minhash_candidates(bands, max_bucket=10).count() == 0
     assert (
         D.minhash_candidates(bands.where(F.col("doc_id") < 30)).count()
@@ -168,8 +166,7 @@ def test_band_bucket_cap_bounds_skew(spark):
 
 def test_minhash_finds_near_dups(spark, sf_dir):
     # truncated near-copies (doc_id+100000) must surface as candidates
-    ex = D.shingle_table(augmented_docs(spark, sf_dir))
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(augmented_docs(spark, sf_dir))
     cand = D.minhash_candidates(D.minhash_bands(sig))
     pairs = {(r.doc_a, r.doc_b) for r in cand.collect()}
     hits = sum((d, d + 100000) in pairs for d in range(50))
@@ -447,8 +444,10 @@ def test_ppjoin_matches_naive_jaccard_with_fewer_candidates(spark, sf_dir):
 
 
 def test_xxh_hashsets_match_explode_path(spark, sf_dir):
-    """Plan-diverse cross-check: the per-row HOF hash-set pass must equal
-    the explode + groupBy formulation of the same xxhash64&mask set."""
+    """Plan-diverse cross-check: the hash-set builder (shingle_table +
+    collect_set) must equal an independent reference built from the
+    array-form ``shingles`` helper, explode and a sorted collect_set of
+    the same xxhash64&mask values."""
     from csv2db_spark.llm.corpus import shingles, tokens
 
     docs = augmented_docs(spark, sf_dir).where(F.col("doc_id") < 50)
@@ -500,6 +499,40 @@ def test_xxh_signature_mins_match_python_km_fold(spark, sf_dir):
             for i in range(D.MINHASH_K)
         ]
         assert sig[did] == want
+
+
+def test_md5_signature_mins_match_python_km_fold(spark, sf_dir):
+    """The md5 kernel against a pure-Python replay: hashlib.md5 over each
+    doc's distinct word 3-shingles, the hex digest's two 48-bit halves
+    folded as min((h1 + i*h2 + i*i) mod P), and the sorted distinct h1
+    values as ``hset`` — all must match exactly. A NULL text and a
+    2-token text have no shingles, so neither doc may appear."""
+    base = augmented_docs(spark, sf_dir).where(F.col("doc_id") < 30)
+    extra = spark.createDataFrame(
+        [(-1, None), (-2, "two tokens")], "doc_id long, text string"
+    )
+    docs = base.select("doc_id", "text").unionByName(extra)
+    want = {}
+    for r in base.select("doc_id", "text").collect():
+        toks = r.text.split(" ")
+        hexes = {
+            hashlib.md5(" ".join(toks[i : i + 3]).encode()).hexdigest()
+            for i in range(len(toks) - 2)
+        }
+        hs = [(int(x[:12], 16), int(x[12:24], 16)) for x in hexes]
+        if hs:
+            want[r.doc_id] = (
+                sorted({h1 for h1, _ in hs}),
+                [
+                    min((h1 + i * h2 + i * i) % D.MINHASH_P for h1, h2 in hs)
+                    for i in range(D.MINHASH_K)
+                ],
+            )
+    got = {
+        r.doc_id: (list(r.hset), [r[f"h{i}"] for i in range(D.MINHASH_K)])
+        for r in D.minhash_doc_signatures(docs).collect()
+    }
+    assert want and got == want
 
 
 def test_minhash_xxh_gate_agrees_with_md5_gate(spark, sf_dir):
@@ -636,8 +669,7 @@ def test_leakage_safe_split_keeps_clusters_together(spark, sf_dir):
     from csv2db_spark.operators.graph import connected_components
 
     docs = augmented_docs(spark, sf_dir)
-    ex = D.shingle_table(docs)
-    sig = D.minhash_signatures(D.shingle_hashes(ex))
+    sig = D.minhash_doc_signatures(docs)
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -1080,21 +1112,6 @@ def test_sentence_split_indices_and_tail(spark):
     ]
     assert got[2] == [(1, "No terminator at all")]
     assert got[3] == [(1, "Only."), (2, "One.")]
-
-
-def test_xxh_hashsets_exploded_variant_set_identical(spark, sf_dir):
-    """The all-codegen exploded hashset builder must produce the SAME
-    sets as the HOF variant for every doc (element order is free)."""
-    docs = augmented_docs(spark, sf_dir).where(F.col("doc_id") < 50)
-    hof = {
-        r.doc_id: sorted(r.hset)
-        for r in D.minhash_doc_hashsets_xxh(docs).collect()
-    }
-    expl = {
-        r.doc_id: sorted(r.hset)
-        for r in D.minhash_doc_hashsets_xxh_exploded(docs).collect()
-    }
-    assert hof == expl and hof
 
 
 def test_decontaminate_semantic_argmax_tiebreak_and_flag(spark):

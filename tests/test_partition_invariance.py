@@ -46,14 +46,8 @@ def test_minhash_signatures_partition_invariant(spark, sf_dir):
     from csv2db_spark.llm.corpus import augmented_docs
 
     docs = augmented_docs(spark, sf_dir)
-    a = D.minhash_signatures(
-        D.shingle_hashes(D.shingle_table(docs, distinct=False))
-    ).collect()
-    b = D.minhash_signatures(
-        D.shingle_hashes(
-            D.shingle_table(docs.repartition(13), distinct=False)
-        )
-    ).collect()
+    a = D.minhash_doc_signatures(docs).collect()
+    b = D.minhash_doc_signatures(docs.repartition(13)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
