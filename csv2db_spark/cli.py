@@ -13,8 +13,9 @@ Mapping to the reference:
 - ``schema.table`` splits into schema + table (load_config.go:22-28);
   the qualified name is passed through to the database.
 - Presets (P23, config.go:100-165, load_config.go:9-64): a named config
-  saved to ``~/.csv2db_spark.json`` (JSON, not YAML — no YAML parser in
-  the stdlib; same shape otherwise). CLI args win; preset fills only
+  saved to ``~/.csv2db_spark.json`` (JSON, same shape as the reference's
+  YAML; a reference-written ``~/.csv2db.yaml`` is read with PyYAML when
+  no JSON config exists). CLI args win; preset fills only
   string fields left empty, exactly the reference's reflection merge
   (config.go:80-96); ``--store-preset`` saves the merged result.
 - Target schema resolution (P5, csv2db.go:133-150): an existing table's
@@ -32,6 +33,7 @@ import argparse
 import json
 import logging
 import os
+import re
 import sys
 from dataclasses import asdict, dataclass, fields, replace
 
@@ -98,212 +100,61 @@ _YAML_FIELD_MAP = {
 }
 
 
-# go-yaml double-quotes scalars that need escaping. Its emitter
-# (yaml.v2/v3 emitterc.go, yaml_emitter_write_double_quoted_scalar)
-# writes the FULL YAML 1.1 single-char escape set — not just \t/\n — so
-# the decoder must accept all of them or a preset holding e.g. a \a or
-# \e byte makes _yaml_scalar raise and the whole file gets
-# warn-and-ignored, dropping every preset. \xXX/\uXXXX/\UXXXXXXXX for
-# other non-printables are handled in _yaml_scalar.
-_DQ_ESCAPES = {
-    "0": "\0", "a": "\a", "b": "\b", "t": "\t", "n": "\n",
-    "v": "\v", "f": "\f", "r": "\r", "e": "\x1b", " ": " ",
-    '"': '"', "/": "/", "\\": "\\",
-    "N": "\u0085", "_": "\u00a0", "L": "\u2028", "P": "\u2029",
-    # go-yaml also escapes a literal TAB as "\t"; a raw tab inside the
-    # quotes (hand-edited file) is handled by the plain-char path.
-}
-
-
-def _yaml_scalar(val: str) -> object:
-    """Decode one flat YAML scalar: quoted (with go-yaml escapes inside
-    double quotes, '' inside single quotes), trailing inline comments,
-    bools. Raises ValueError on anything malformed — the caller
-    warns-and-ignores the whole file."""
-    if val[0] in "\"'":
-        q = val[0]
-        out: list[str] = []
-        i, n = 1, len(val)
-        while i < n:
-            ch = val[i]
-            if q == '"' and ch == "\\" and i + 1 < n:
-                tag = val[i + 1]
-                esc = _DQ_ESCAPES.get(tag)
-                if esc is not None:
-                    out.append(esc)
-                    i += 2
-                    continue
-                width = {"x": 2, "u": 4, "U": 8}.get(tag)
-                hexs = val[i + 2 : i + 2 + width] if width else ""
-                # strict hex only: int(, 16) alone would accept
-                # whitespace/'+'/'_' and silently decode a corrupted
-                # escape to the wrong char; lone surrogates are refused
-                # too — go strings are UTF-8 and the emitter can never
-                # produce one, and a surrogate-poisoned preset would
-                # crash far away on the first UTF-8 encode
-                if (
-                    width
-                    and len(hexs) == width
-                    and all(c in "0123456789abcdefABCDEF" for c in hexs)
-                ):
-                    cp = int(hexs, 16)
-                    if 0xD800 <= cp <= 0xDFFF or cp > 0x10FFFF:
-                        raise ValueError(
-                            f"bad \\{tag} escape in scalar: {val!r}"
-                        )
-                    out.append(chr(cp))
-                    i += 2 + width
-                    continue
-                # anything else: refusing beats silently dropping the
-                # backslash and corrupting the preset value
-                raise ValueError(f"unsupported escape in scalar: {val!r}")
-            if ch == q:
-                if q == "'" and i + 1 < n and val[i + 1] == "'":
-                    out.append("'")  # YAML single-quote escape: '' -> '
-                    i += 2
-                    continue
-                break
-            out.append(ch)
-            i += 1
-        else:
-            raise ValueError(f"unterminated quoted scalar: {val!r}")
-        rest = val[i + 1 :].strip()
-        if rest and not rest.startswith("#"):
-            raise ValueError(f"trailing content after quoted scalar: {val!r}")
-        return "".join(out)
-    # ASCII strip only: a Unicode-aware strip would delete trailing Zs
-    # spaces (U+2003, U+3000, ...) that are legal plain-scalar content
-    sval = val.split(" #")[0].strip(" \t")
-    if sval.lower() in ("true", "false"):
-        return sval.lower() == "true"
-    return sval
-
-
-def _quote_close_idx(s: str, q: str) -> int | None:
-    """Index of the quote CLOSING the scalar opened at s[0], or None if
-    the scalar stays open past the end of s (a folded line break).
-    Escape-aware: backslash escapes inside double quotes, '' pairs
-    inside single quotes."""
-    i, n = 1, len(s)
-    while i < n:
-        ch = s[i]
-        if q == '"' and ch == "\\":
-            i += 2
-            continue
-        if ch == q:
-            if q == "'" and i + 1 < n and s[i + 1] == "'":
-                i += 2
-                continue
-            return i
-        i += 1
-    return None
+def _yaml_mapping(node: object, what: str) -> dict:
+    """``node`` as a mapping with string keys; an empty value
+    (``presets:`` with nothing under it) is an empty mapping, as go-yaml
+    decodes it into an empty map. Anything else raises ValueError."""
+    if node is None or node == "":
+        return {}
+    if isinstance(node, dict) and all(isinstance(k, str) for k in node):
+        return node
+    raise ValueError(f"{what} is not a mapping: {node!r}")
 
 
 def _parse_flat_yaml(text: str) -> dict:
-    """Minimal parser for EXACTLY the shape go-yaml emits for the
-    reference's ConfigStorage (config.go:100-165: a two-level mapping —
-    ``presets:`` -> preset name -> flat scalar fields). Supports
-    comments, blank lines, single/double-quoted scalars (including
-    go-yaml backslash escapes like a "\\t" delimiter), trailing inline
-    comments, bools, and the emitter's WIDTH FOLDING (go-yaml breaks
-    any scalar longer than best_width=80 at a space — quoted or plain —
-    so without it a long file path makes the whole config
-    warn-and-ignored). Folding decodes per the YAML flow rules: one
-    break -> one space, n breaks -> n-1 newlines, an odd trailing
-    backslash in double quotes escapes the break, and a '\\ ' at a
-    continuation start is the emitter protecting a second space.
-    Anything structurally richer (lists, anchors, block scalars) — and
-    tab indentation, which is not YAML and would otherwise silently
-    flatten the mapping — raises ValueError and the caller
-    warns-and-ignores, matching the reference's
-    unreadable-config-is-a-warning contract. A stdlib-only subset beats
-    a vendored YAML dependency for one fixed file shape."""
-    root: dict = {}
-    stack: list[tuple[int, dict]] = [(-1, root)]
-    pending: tuple[int, str] | None = None
-    lines = text.splitlines()
-    li = 0
-    while li < len(lines):
-        ln = lines[li]
-        li += 1
-        if not ln.strip() or ln.lstrip().startswith("#"):
+    """Read the shape go-yaml emits for the reference's ConfigStorage
+    (config.go:100-165: ``presets:`` -> preset name -> flat fields) with
+    PyYAML, returning ``{"presets": {name: {field: value}}}``.
+
+    The loader resolves no implicit type but bool: ``true``/``false`` in
+    any case load as bools, every other plain scalar (``2024``, ``yes``,
+    ``~``) stays the string it reads as, since every ConfigStorage field
+    is a string or a bool. A YAML error, a ``presets`` that is not a
+    mapping of mappings, a value that is not a string or bool, and a
+    string that cannot encode to UTF-8 (a lone surrogate escape: go
+    strings are UTF-8, so the reference never writes one, and it would
+    fail far away on the first encode) all raise ValueError; the caller
+    warns and ignores the file, matching the reference's
+    unreadable-config-is-a-warning contract."""
+    import yaml
+
+    class Loader(yaml.SafeLoader):
+        yaml_implicit_resolvers: dict = {}
+
+    Loader.add_implicit_resolver(
+        "tag:yaml.org,2002:bool",
+        re.compile(r"^(?:true|false)$", re.IGNORECASE),
+        list("tTfF"),
+    )
+    try:
+        root = _yaml_mapping(yaml.load(text, Loader=Loader), "config")
+    except yaml.YAMLError as e:
+        raise ValueError(e) from None
+    presets = {}
+    for key, value in root.items():
+        if key.lower() != "presets":
             continue
-        leading = ln[: len(ln) - len(ln.lstrip(" \t"))]
-        if "\t" in leading:
-            raise ValueError(f"tab indentation is not valid yaml: {ln!r}")
-        indent = len(leading)
-        # strips are ASCII space/tab ONLY throughout this parser:
-        # Python's default str.strip() is Unicode-aware and would
-        # silently delete Zs spaces (U+2003, U+00A0, U+3000, ...) that
-        # go-yaml emits RAW (they are printable and not is_space to its
-        # emitter), corrupting the preset value — while YAML folding
-        # strips only space/tab
-        body = ln.strip(" \t")
-        if ":" not in body:
-            raise ValueError(f"unsupported yaml line: {ln!r}")
-        key, _, val = body.partition(":")
-        key, val = key.strip(" \t"), val.strip(" \t")
-        if val.startswith("#"):
-            val = ""
-        if pending is not None:
-            p_indent, p_key = pending
-            if indent > p_indent:  # the pending key was a mapping
-                child: dict = {}
-                stack[-1][1][p_key] = child
-                stack.append((p_indent, child))
-            else:
-                stack[-1][1][p_key] = ""
-            pending = None
-        while stack and indent <= stack[-1][0]:
-            stack.pop()
-        if not val:
-            pending = (indent, key)
-            continue
-        if val[0] in "\"'":
-            # absorb folded continuation lines until the quote closes
-            q, breaks = val[0], 0
-            while _quote_close_idx(val, q) is None:
-                if li >= len(lines):
-                    raise ValueError(f"unterminated quoted scalar: {val!r}")
-                chunk = lines[li].strip(" \t")
-                li += 1
-                if not chunk:  # only space/tab counts as blank
-                    breaks += 1  # blank line: extra break
-                    continue
-                joiner = " " if breaks == 0 else "\n" * breaks
-                if q == '"':
-                    nbs = len(val) - len(val.rstrip("\\"))
-                    if nbs % 2 == 1:  # odd run: the last \ escapes the break
-                        val = val[:-1]
-                        if breaks == 0:
-                            joiner = ""
-                val = val + joiner + chunk
-                breaks = 0
-        else:
-            # plain-scalar fold: a deeper-indented following line that
-            # cannot be a key line is the emitter's continuation (a
-            # plain scalar containing ': ' or ending ':' would have
-            # been quoted, so the discriminator is exact for go-yaml
-            # output)
-            while li < len(lines):
-                nxt = lines[li]
-                chunk = nxt.strip(" \t")
-                nindent = len(nxt) - len(nxt.lstrip(" \t"))
-                if (
-                    not chunk
-                    or chunk.startswith("#")
-                    or nindent <= indent
-                    or chunk.endswith(":")
-                    or ": " in chunk
-                    or "\t" in nxt[:nindent]
-                ):
-                    break
-                val = val + " " + chunk
-                li += 1
-        stack[-1][1][key] = _yaml_scalar(val)
-    if pending is not None:
-        stack[-1][1][pending[1]] = ""
-    return root
+        for name, preset in _yaml_mapping(value, key).items():
+            preset = presets[name] = _yaml_mapping(preset, f"preset {name!r}")
+            for field, v in preset.items():
+                if not isinstance(v, (str, bool)):
+                    raise ValueError(
+                        f"preset {name!r} field {field!r} is not a string or bool"
+                    )
+                for s in (name, field, v):
+                    if isinstance(s, str):
+                        s.encode("utf-8")  # UnicodeEncodeError is a ValueError
+    return {"presets": presets}
 
 
 def _yaml_path() -> str:
@@ -320,20 +171,16 @@ def _load_yaml_presets() -> dict:
             raw = _parse_flat_yaml(f.read())
     except FileNotFoundError:
         return {}
-    except (OSError, ValueError) as e:
+    except (OSError, ValueError, ImportError) as e:
+        # ImportError: PyYAML is not installed
         log.warning("cannot load config %s: %s", _yaml_path(), e)
         return {}
-    presets = {
-        k.lower(): v for k, v in raw.items() if isinstance(v, dict)
-    }.get("presets", {})
-    out = {}
-    for name, c in presets.items():
-        if isinstance(c, dict):
-            out[name] = {
-                _YAML_FIELD_MAP.get(k.lower(), k.lower()): v
-                for k, v in c.items()
-            }
-    return {"presets": out}
+    return {
+        "presets": {
+            name: {_YAML_FIELD_MAP.get(k.lower(), k.lower()): v for k, v in c.items()}
+            for name, c in raw["presets"].items()
+        }
+    }
 
 
 def load_presets() -> dict[str, Config]:

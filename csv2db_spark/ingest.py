@@ -6,8 +6,8 @@ Reference behaviors reproduced (file:line cites into /root/reference):
   (csv2db.go:170-205, config.go:67-72) → ``spark.read.csv`` options;
   stdin (``--input-file --``, csv2db.go:174-176) is the same
   ``read_csv`` call with path ``-``/``--``: constant-memory like the Go
-  loop — small pipes parse driver-side, larger ones stream into
-  record-aligned chunk files that the file scan parses executor-side.
+  loop — the pipe streams into record-aligned chunk files that the file
+  scan parses executor-side.
 - P2: charset decode via ``--encoding`` (csv2db.go:190-199) →
   ``.option("encoding", ...)``, widened to the full JVM charset
   registry (shift_jis/euc-kr/cp1251/... via legacy.javaCharsets) with
@@ -34,12 +34,14 @@ parsing accepts Spark's cast vocabulary (adds ``y/yes/n/no`` to Go's
 
 from __future__ import annotations
 
+import atexit
 import codecs
 import csv as _pycsv
 import io
 import itertools
 import logging
 import os
+import shutil
 import sys
 import tempfile
 
@@ -316,30 +318,35 @@ def read_csv(
     )
 
 
-def _records(head: str, stream, block: int = 1 << 20):
-    """Record texts of ``head`` followed by the rest of ``stream``, read
-    in ``block``-char pieces — constant memory (one block plus one
-    pending record). A newline with odd running quote parity lies inside
-    a quoted field and continues the record; doubled quotes ("") flip
-    the parity twice, which is exactly RFC-4180 escaping. Blank lines
-    are skipped, as the univocity and Go readers skip them, while a
-    whitespace-only line IS a record (one field of spaces) to both."""
+def _records(stream, block: int):
+    """Record texts of ``stream``, read in ``block``-char pieces —
+    constant memory (one block plus one pending record). A newline with
+    odd running quote parity lies inside a quoted field and continues the
+    record; doubled quotes ("") flip the parity twice, which is exactly
+    RFC-4180 escaping. The carriage return of a CRLF line end is dropped,
+    as the Go reader and the file scan drop it. Blank lines are skipped, as
+    the univocity and Go readers skip them, while a whitespace-only line
+    IS a record (one field of spaces) to both."""
     rec: list[str] = []
     parity = 0
     pending = ""
-    text = head
-    while text:
+    while True:
+        text = stream.read(block)
         *lines, pending = (pending + text).split("\n")
+        if not text:  # end of stream: the last line needs no newline
+            lines.append(pending)
         for line in lines:
+            line = line.removesuffix("\r")
             rec.append(line)
             parity ^= line.count('"') & 1
             if not parity:
                 if rec != [""]:
                     yield "\n".join(rec)
                 rec = []
-        text = stream.read(block)
-    if rec or pending:
-        yield "\n".join(rec + [pending])
+        if not text:
+            break
+    if rec:  # a quote still open at the end: FAILFAST rejects it
+        yield "\n".join(rec)
 
 
 def _chunks(records, chunk_chars: int):
@@ -362,47 +369,30 @@ def read_csv_stdin(
     stream,
     has_header: bool = True,
     delimiter: str = ",",
-    spill_threshold: int = 32 << 20,
+    chunk_chars: int = 4 << 20,
     spill_dir: str | None = None,
 ) -> DataFrame:
     """CONSTANT-MEMORY CSV source over a text stream — the parity with
     the reference's streaming stdin loop (csv2db.go:174-176 never holds
     the pipe in memory); ``read_csv(spark, "-")`` calls it on the
-    decoded stdin. Peeks ``spill_threshold`` chars:
+    decoded stdin.
 
-    - A stream that ends inside the peek is parsed on the driver with
-      Python's csv module (full quoting, embedded newlines) and handed
-      over with ``createDataFrame`` — there is nothing to distribute
-      until the rows exist. Ragged rows raise at build time, like Go
-      encoding/csv's ErrFieldCount under the reference's FAILFAST.
-    - A longer stream never materializes as one string: its records
-      are joined into chunks of ``spill_threshold // 8`` chars, written
-      under ``spill_dir`` (a tempdir by default) as they fill, and read
-      back by ``scan_csv`` — one executor-side FAILFAST task per chunk,
-      with driver memory bounded by the chunk size. Ragged rows then
-      surface as Spark's FAILFAST read error at ACTION time, and the
-      chunk files live until the caller is done with the DataFrame —
-      pass ``spill_dir`` to own cleanup, else they age out with the
-      system tempdir.
+    The stream is read in ``chunk_chars`` pieces and cut into records;
+    the first record gives the header (or, headerless, the column
+    count). The records are joined into chunk files of ``chunk_chars``
+    chars under ``spill_dir`` as they fill and read back by
+    ``scan_csv``, the scan that reads files: one executor-side FAILFAST
+    task per chunk, so a ragged row fails at action time with Spark's
+    FAILFAST error, and driver memory is bounded by the chunk size. The
+    chunk files live until the caller is done with the DataFrame: pass
+    ``spill_dir`` to own them, else a temporary directory holds them
+    and is removed at interpreter exit.
 
-    Both paths give the same rows as ``read_csv`` on the same text in a
-    file (tests/test_ingest.py)."""
+    The rows are those ``read_csv`` gives on the same text in a file
+    (tests/test_ingest.py)."""
     if len(delimiter) != 1:
         raise ValueError(f"delimiter must be a single character, got {delimiter!r}")
-    head = stream.read(spill_threshold)
-    if len(head) < spill_threshold:
-        rows = [r for r in _pycsv.reader(io.StringIO(head), delimiter=delimiter) if r]
-        if not rows:
-            raise ValueError("empty CSV input: <stdin>")
-        names = rows[0] if has_header else [f"col{i}" for i in range(len(rows[0]))]
-        body = rows[1:] if has_header else rows
-        for i, r in enumerate(body):
-            if len(r) != len(names):
-                raise ValueError(
-                    f"record {i + 1} has {len(r)} fields, want {len(names)}"
-                )
-        return spark.createDataFrame([tuple(r) for r in body], _string_schema(names))
-    records = _records(head, stream)
+    records = _records(stream, chunk_chars)
     first = next(records, None)
     if first is None:
         raise ValueError("empty CSV input: <stdin>")
@@ -412,14 +402,14 @@ def read_csv_stdin(
     else:
         names = [f"col{i}" for i in range(len(fields))]
         records = itertools.chain([first], records)  # first record is data
-    d = spill_dir or tempfile.mkdtemp(prefix="c2s_stdin_spill_")
+    d = spill_dir
+    if d is None:
+        d = tempfile.mkdtemp(prefix="c2s_stdin_spill_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
-    n = 0
-    for n, text in enumerate(_chunks(records, max(spill_threshold // 8, 1)), 1):
-        with open(os.path.join(d, f"chunk-{n - 1:05d}.csv"), "w", encoding="utf-8") as fh:
+    for n, text in enumerate(_chunks(records, chunk_chars)):
+        with open(os.path.join(d, f"chunk-{n:05d}.csv"), "w", encoding="utf-8") as fh:
             fh.write(text)
-    if n == 0:  # header only: an empty frame, as on the driver path
-        return spark.createDataFrame([], _string_schema(names))
     return scan_csv(spark.read, d, names, False, delimiter, multiline=True)
 
 

@@ -17,7 +17,7 @@ Scale notes:
   data stays distributed. This is the textbook pattern for iterative
   algorithms on Spark (driver steers, executors compute).
 - ``localCheckpoint`` truncates the lineage each round — without it the
-  plan doubles per iteration and the job DAG explodes by round 10.
+  plan doubles per iteration and the job DAG explodes within ten iterations.
 - Edges are symmetrized once up front; the per-round join shuffles on
   node id. At 100 TB-of-pairs you'd switch to the star-contraction
   variant (fewer rounds on high-diameter graphs); for dedup graphs the
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 def _stage_edges_by_key(edges: DataFrame, key: str) -> DataFrame:
     """Stage a loop-invariant edge list partitioned by its per-round
-    join key (round-14, guide §2.2).
+    join key.
 
     Two steps, because the partition WIDTH must come from the data, not
     from a conf constant: (1) an eager ``localCheckpoint`` under AQE —
@@ -74,8 +74,8 @@ def connected_components(
     Returns (node, component).
     """
     # the symmetric edge list is loop-invariant and every round joins it
-    # on ``b`` — stage it ONCE partitioned by the join key (round-14,
-    # guide §2.2, see _stage_edges_by_key): each round's join plans the
+    # on ``b`` — stage it ONCE partitioned by the join key (see
+    # _stage_edges_by_key): each round's join plans the
     # edge leg exchange-free and sort-free, so only the node-sized label
     # table moves per round.
     sym = _stage_edges_by_key(
@@ -90,7 +90,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    # convergence probe (round-14, guide §2.4): labels are MIN-monotone
+    # convergence probe: labels are MIN-monotone
     # (new = min(own, neighbors) can never increase), so the label set
     # is unchanged iff the exact sum of labels is unchanged — one
     # scalar aggregate over the fresh checkpoint instead of the old
@@ -210,7 +210,7 @@ def connected_components_star(
         nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
         rounds += 1
         # set fixpoint: same cardinality and no new edges. The previous
-        # round's count is carried instead of recounted (round-14); the
+        # round's count is carried instead of recounted; the
         # subtract only runs when cardinalities already match.
         nxt_cnt = nxt.count()
         if nxt_cnt == e_cnt and nxt.subtract(e).count() == 0:
@@ -268,10 +268,10 @@ def pagerank_step(
     executors (same pattern as connected_components above).
 
     ``nodes`` / ``out_deg`` let an iterating caller pass the
-    LOOP-INVARIANT node set and out-degree table in precomputed
-    (round-14, guide §2.4): both depend only on the edge list, so
-    recomputing them inside every power iteration paid two edge-list
-    aggregations per round for identical results. ``pagerank`` below
+    LOOP-INVARIANT node set and out-degree table in precomputed: both
+    depend only on the edge list, so recomputing them inside every power
+    iteration paid two edge-list aggregations per round for identical
+    results. ``pagerank`` below
     computes each once on the checkpointed edges.
     """
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
@@ -328,7 +328,7 @@ def pagerank(
     every iteration. Edges are reused across rounds — cache them
     upstream if the input is an expensive subquery.
     """
-    # round-14 (guide §2.2): every power iteration joins the edge list
+    # every power iteration joins the edge list
     # on ``_src`` — stage it once partitioned by the join key
     # (_stage_edges_by_key), so each round's contribution join plans the
     # edge leg exchange-free (only the node-sized rank table moves per
@@ -340,7 +340,6 @@ def pagerank(
     )
     # loop-invariant node set and out-degrees: one pass each over the
     # checkpointed edges instead of two edge aggregations per round
-    # (round-14, guide §2.4)
     nodes = (
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
@@ -410,15 +409,15 @@ def triangle_count(
       each corner's triangles exactly twice. Cost is |E| rows through a
       map-side join — no wedge materialization (the wedge set of a 43%-
       dense 1000-node graph is ~46M rows; the bitmap plan touches 215k).
-      The density term is measured, not guessed (PLANS.md round-13
-      A/B): the bitmap build pays O(n_words)=O(span/64) per edge row,
+      The density term is measured, not guessed (an A/B recorded in
+      PLANS.md): the bitmap build pays O(n_words)=O(span/64) per edge row,
       so a SPARSE graph inside the span cap loses to the wedge path —
       synthetic N=4000/E=200k (fill 2.5%) ran 3.9s bitmap vs 3.0s
       general, N=10000/E=200k at a widened span 16384 ran 7.0s vs 2.0s
-      (the VERDICT r12 "widen the span gate" suggestion, measured and
-      REJECTED), while dense N=1000/E=200k (fill 40%) ran 1.3s bitmap
-      vs 5.2s general. 16·|E| >= span² puts the crossover at avg degree
-      span/8, flat-region-safe at both measured boundaries.
+      (so widening the span gate was measured and rejected), while
+      dense N=1000/E=200k (fill 40%) ran 1.3s bitmap vs 5.2s general.
+      16·|E| >= span² puts the crossover at avg degree span/8,
+      flat-region-safe at both measured boundaries.
 
     - **General graphs** (any ID type, unbounded span): DEGREE-ORDERED
       wedge enumeration. Nodes are totally ordered by (degree, id) and
@@ -453,9 +452,9 @@ def triangle_count(
     # normalization puts every edge's smaller endpoint in lo. The dense
     # path is gated on INTEGRAL IDs first: int() on a string/date bound
     # raises at the driver, and fractional float IDs inside a small span
-    # would alias after the (v - mn) long cast — silently wrong counts
-    # (ADVICE r8); non-integral IDs always take the general path, which
-    # handles any orderable type via least/greatest.
+    # would alias after the (v - mn) long cast — silently wrong counts;
+    # non-integral IDs always take the general path, which handles any
+    # orderable type via least/greatest.
     if dict(e.dtypes)["lo"] in ("tinyint", "smallint", "int", "bigint"):
         bounds = e.agg(
             F.min("lo").alias("mn"),
@@ -482,8 +481,8 @@ def triangle_count(
     # credit all three corners by exploding ONE pass over the triangle
     # set — the 3-way unionAll shape replanned the wedge join (the
     # expensive subtree) once PER LEG, tripling the dominant cost
-    # (round-14, guide §2.4: share the subtree instead of re-deriving
-    # it per consumer). Same rows, same counts.
+    # (share the subtree instead of re-deriving it per consumer). Same
+    # rows, same counts.
     corners = tri.select(
         F.explode(F.array("a", "b", "c")).alias("node")
     )
@@ -554,7 +553,7 @@ def _triangle_count_bitmap(e: DataFrame, mn: int, span: int) -> DataFrame:
     # (observed at sf0.1: FOUR adjacency builds in one gate plan —
     # 2 legs x the 2-way corner union this path used to share with the
     # general path). Checkpoint once: span <= dense_node_span rows of
-    # n_words longs, KB-to-MB sized (round-14, guide §2.4).
+    # n_words longs, KB-to-MB sized.
     adj = adj.localCheckpoint(eager=True)
     a = adj.select(
         F.col("u").alias("lo"), *[F.col(f"w{w}").alias(f"a{w}") for w in range(n_words)]
@@ -573,7 +572,7 @@ def _triangle_count_bitmap(e: DataFrame, mn: int, span: int) -> DataFrame:
     )
     # one pass over per_edge, exploding the two endpoints — the 2-way
     # unionAll replanned the per-edge popcount join (and its adjacency
-    # builds) once per leg (round-14, guide §2.4)
+    # builds) once per leg
     corners = per_edge.select(
         F.explode(F.array("lo", "hi")).alias("node"), "c"
     )
@@ -684,13 +683,13 @@ def label_propagation(
     small constant (label coverage saturates geometrically), so the
     total is O(rounds·|E|) with no driver-side state.
     """
-    # round-14 loop hygiene (guide §2.4): the symmetric edge list is
+    # loop hygiene: the symmetric edge list is
     # consumed once per round and the label table three times per round
     # (votes join, freshness anti-join, next round's union) — without
     # boundaries round r replans every earlier round's vote/window
     # subtree per consumer. Both are checkpointed; labels re-checkpoints
     # each round to keep the union lineage flat.
-    # round-14 (guide §2.2): the per-round votes join keys the edge list
+    # the per-round votes join keys the edge list
     # on ``b`` — stage it once partitioned by the join key
     # (_stage_edges_by_key) so only the label frontier shuffles per
     # round.
@@ -756,7 +755,7 @@ def k_core(
     ).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).distinct()
-    # round-14 loop hygiene (guide §2.4): BOTH modes checkpoint per
+    # loop hygiene: BOTH modes checkpoint per
     # round. The bounded-rounds mode previously never truncated lineage,
     # so each round's TWO keep-list semi-joins replanned every earlier
     # round's degree aggregation — the per-round subtree count grew

@@ -7,13 +7,14 @@
 #                                             BASELINE.md (r1 bar: 7.162 s;
 #                                             valid only at load < 1)
 # Heavier tiers when needed:
-#   python -m pytest tests/ -q                      # full suite (~20 min)
+#   python -m pytest tests/ -q -m ""                # full suite (~20 min)
 #   python scripts/driver_sim.py /root/testdata/sf0.1   # full sweep at sf0.1
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== tier 1: fast pytest =="
 python -m pytest tests/ -q -m "not slow" -p no:warnings
+python3 -m pytest perfbench/test_tracing.py -q -p no:warnings
 
 echo "== tier 2: driver sim (sf0.01) =="
 python scripts/driver_sim.py

@@ -80,6 +80,40 @@ def test_reference_yaml_presets_fallback(config_path, tmp_path, monkeypatch):
     assert conf3.db_url == "jdbc:new"
 
 
+def test_yaml_presets_document_marker_and_quoted_key(
+    config_path, tmp_path, monkeypatch
+):
+    """A ``---`` document start and a quoted key are plain YAML that
+    go-yaml reads: a ~/.csv2db.yaml holding them loads every preset."""
+    monkeypatch.setenv("HOME", str(tmp_path))
+    (tmp_path / ".csv2db.yaml").write_text(
+        "---\n"
+        "presets:\n"
+        "  one:\n"
+        '    "dburl": jdbc:x\n'
+        "  two:\n"
+        "    tablemode: truncate\n"
+    )
+    assert parse(["-p", "one", "-t", "t"]).db_url == "jdbc:x"
+    assert parse(["-p", "two", "-t", "t"]).table_mode == "truncate"
+
+
+def test_yaml_preset_with_lone_surrogate_is_ignored(
+    config_path, tmp_path, monkeypatch, caplog
+):
+    """A lone surrogate escape cannot come from go-yaml (go strings are
+    UTF-8) and would fail on the first UTF-8 encode, so the file is
+    warned about and ignored, like any unreadable config."""
+    monkeypatch.setenv("HOME", str(tmp_path))
+    (tmp_path / ".csv2db.yaml").write_text(
+        'presets:\n  default:\n    dburl: jdbc:x\n    delimiter: "\\ud800"\n'
+    )
+    with caplog.at_level("WARNING", logger="csv2db_spark.cli"):
+        conf = parse(["-t", "t"])
+    assert conf.db_url == "" and conf.delimiter == ","
+    assert "cannot load config" in caplog.text
+
+
 def test_parse_flat_yaml_rejects_rich_structures():
     import pytest as _pytest
 
@@ -96,16 +130,16 @@ def test_parse_flat_yaml_rejects_rich_structures():
 
 
 def test_parse_flat_yaml_advice_r10_fixes():
-    """ADVICE r10: tab indentation must raise (not silently flatten the
-    mapping), a quoted scalar with a trailing inline comment must drop
-    both quotes and comment, and go-yaml escapes inside double quotes
-    must decode (a "\\t" delimiter preset must reach read_csv as one
-    tab character, not a two-char backslash-t)."""
+    """Tab indentation must raise (not silently flatten the mapping), a
+    quoted scalar with a trailing inline comment must drop both quotes
+    and comment, and go-yaml escapes inside double quotes must decode (a
+    "\\t" delimiter preset must reach read_csv as one tab character, not
+    a two-char backslash-t)."""
     import pytest as _pytest
 
     from csv2db_spark.cli import _parse_flat_yaml
 
-    with _pytest.raises(ValueError, match="tab indentation"):
+    with _pytest.raises(ValueError, match=r"found character '\\t'"):
         _parse_flat_yaml("presets:\n\ta:\n\t\tk: v\n")
     got = _parse_flat_yaml('presets:\n  a:\n    k: "x" # c\n')
     assert got["presets"]["a"]["k"] == "x"
@@ -119,9 +153,9 @@ def test_parse_flat_yaml_advice_r10_fixes():
         _parse_flat_yaml('presets:\n  a:\n    k: "x\n')
     with _pytest.raises(ValueError):
         _parse_flat_yaml('presets:\n  a:\n    k: "x" y\n')
-    # r12 (ADVICE r11): the FULL go-yaml emitter escape set decodes —
-    # \xXX/\uXXXX/\UXXXXXXXX included — so a preset holding any control
-    # or special char no longer gets the whole file warn-and-ignored
+    # the FULL go-yaml emitter escape set decodes — \xXX/\uXXXX/\UXXXXXXXX
+    # included — so a preset holding any control or special char does not
+    # get the whole file warn-and-ignored
     got = _parse_flat_yaml(
         'presets:\n  a:\n    k: "\\x1f\\a\\e\\v\\f\\N\\_\\L\\P\\u0101\\U0001f600"\n'
     )
@@ -129,8 +163,8 @@ def test_parse_flat_yaml_advice_r10_fixes():
         "\x1f\a\x1b\v\f\u0085\u00a0\u2028\u2029\u0101\U0001f600"
     )
     # escapes outside the go-yaml set still refuse rather than silently
-    # dropping the backslash (code-review r11), as do truncated hex forms
-    with _pytest.raises(ValueError, match="unsupported escape"):
+    # dropping the backslash, as do truncated hex forms
+    with _pytest.raises(ValueError, match="unknown escape character"):
         _parse_flat_yaml('presets:\n  a:\n    k: "\\q"\n')
     with _pytest.raises(ValueError):
         _parse_flat_yaml('presets:\n  a:\n    k: "\\u00"\n')
@@ -439,9 +473,9 @@ def test_parse_flat_yaml_roundtrip_property():
         min_size=1,
         max_size=20,
     ).filter(lambda s: s.lower() not in ("true", "false") and not s.startswith("#"))
-    # values go-yaml would double-quote-and-escape (ADVICE r10: a tab
-    # delimiter round-trips as "\t"); serialized below with the same
-    # escapes go-yaml emits
+    # values go-yaml would double-quote-and-escape (a tab delimiter
+    # round-trips as "\t"); serialized below with the same escapes
+    # go-yaml emits
     escaped = st.text(
         alphabet='abc\t\n"\\',
         min_size=1,
@@ -487,7 +521,7 @@ def test_parse_flat_yaml_roundtrip_property():
 
 
 def test_dq_escape_decoder_against_goyaml_emitter_model():
-    """Property (VERDICT r11 item 8): decode the exact double-quoted
+    """Property: decode the exact double-quoted
     encodings go-yaml's emitter can produce. The model below mirrors
     yaml.v2/v3 emitterc.go yaml_emitter_write_double_quoted_scalar with
     unicode=true (what yaml.Marshal uses): the YAML 1.1 single-char
@@ -495,8 +529,8 @@ def test_dq_escape_decoder_against_goyaml_emitter_model():
     for their code points, hex forms \\xXX / \\uXXXX / \\UXXXXXXXX for
     any other non-printable, and everything else literal. Any string a
     reference-written ~/.csv2db.yaml preset can contain must survive
-    encode->_parse_flat_yaml unchanged — the r11 failure mode was one
-    exotic escape poisoning the whole config file."""
+    encode->_parse_flat_yaml unchanged: one exotic escape must not
+    poison the whole config file."""
     import pytest as _pytest
 
     _pytest.importorskip("hypothesis")
@@ -578,12 +612,10 @@ def test_dq_escape_decoder_against_goyaml_emitter_model():
 
 
 def test_parse_flat_yaml_width_folding_cases():
-    """Explicit folds (code-review r12): go-yaml breaks scalars longer
-    than best_width=80 at a space — double-quoted, single-quoted, and
-    plain styles all fold. One poisoned long value used to take every
-    preset with it (the parser saw an 'unterminated quoted scalar' or
-    an 'unsupported yaml line' and warned-and-ignored the whole
-    file)."""
+    """Explicit folds: go-yaml breaks scalars longer than best_width=80
+    at a space — double-quoted, single-quoted, and plain styles all
+    fold. A long value that fails to unfold would take every preset with
+    it (the whole file is warned and ignored)."""
     from csv2db_spark.cli import _parse_flat_yaml
 
     long_path = "/data/" + " ".join(f"dir{i:02d}" for i in range(20)) + "/in.csv"
@@ -620,10 +652,9 @@ def test_parse_flat_yaml_width_folding_cases():
     # unterminated quote at EOF still refuses
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="unterminated"):
+    with _pytest.raises(ValueError, match="found unexpected end of stream"):
         _parse_flat_yaml('presets:\n  a:\n    k: "ab\n      cd\n')
-    # Unicode Zs spaces are CONTENT, not whitespace (code-review r12):
-    # go-yaml emits U+2003 etc. raw (printable, not is_space to its
+    # Unicode Zs spaces are CONTENT, not whitespace: go-yaml emits U+2003 etc. raw (printable, not is_space to its
     # emitter) and YAML folding strips only space/tab, so a Unicode-
     # aware strip() would silently corrupt the preset value
     got = _parse_flat_yaml('presets:\n  a:\n    k: "ab\u2003\n      \u2003cd"\n')
@@ -640,15 +671,13 @@ def test_parse_flat_yaml_width_folding_cases():
 
 
 def test_parse_flat_yaml_differential_vs_pyyaml():
-    """Differential property (code-review r12): on emitter-shaped config
-    files, _parse_flat_yaml must agree with a real YAML parser. PyYAML
-    serves as the reference implementation (available in this image;
-    importorskip keeps the suite portable). The generator emits the
+    """Differential property: on emitter-shaped config files,
+    _parse_flat_yaml (PyYAML with only the bool resolver, plus the shape
+    checks) must agree with PyYAML's safe_load. The generator emits the
     two-level ConfigStorage shape with values in all three styles the
     go-yaml emitter uses — plain, single-quoted, double-quoted with
-    escapes and width folds — so this cross-checks the fold decoding,
-    the escape map, and the Zs-content rule against an independent
-    implementation rather than only against our own emitter model."""
+    escapes and width folds — so this checks that the restricted loader
+    and the checks change no value a reference-written file holds."""
     import pytest as _pytest
 
     yaml = _pytest.importorskip("yaml")

@@ -229,7 +229,7 @@ def test_latin1_typed_ingest_failfast(spark, tmp_path):
     ]
 
 
-# ------------------------------------------------------------ stdin (driver path)
+# ------------------------------------------------------------ stdin
 
 
 def test_buffer_header_and_types(spark, stdin):
@@ -249,7 +249,7 @@ def test_buffer_headerless_names(spark, stdin):
 
 
 def test_buffer_quoted_newline(spark, stdin):
-    # the driver-side parser keeps full csv quoting semantics
+    # stdin is cut at record boundaries, so a quoted newline stays in its field
     stdin('a,b\n1,"two\nlines"\n2,x')
     df = read_csv(spark, "-")
     vals = {r.a: r.b for r in df.collect()}
@@ -257,9 +257,22 @@ def test_buffer_quoted_newline(spark, stdin):
 
 
 def test_buffer_ragged_row_raises(spark, stdin):
+    # the scan of the chunk files fails the load FAILFAST, as for a file
     stdin("a,b\n1,2,3")
-    with pytest.raises(ValueError, match="fields"):
-        read_csv(spark, "-")
+    df = read_csv(spark, "-")
+    with pytest.raises(Exception, match="Malformed|FAILFAST"):
+        df.collect()
+
+
+def test_stdin_gives_file_rows_on_stray_quote(spark, tmp_path, stdin):
+    """A quote that opens mid-field is not CSV quoting: stdin and a file
+    holding the same bytes load the same rows, because both go through
+    the same scan."""
+    data = 'a,b\n1,"x"y\n'
+    p = tmp_path / "in.csv"
+    p.write_text(data)
+    stdin(data)
+    assert read_csv(spark, "-").collect() == read_csv(spark, str(p)).collect()
 
 
 def test_buffer_empty_raises(spark, stdin):
@@ -417,7 +430,7 @@ def _quoted_csv() -> str:
     return "a,b,c\n" + "\n".join(rows) + "\n"
 
 
-# (name, text, has_header, spill_threshold of the spilled-stdin source)
+# (name, text, has_header, chunk_chars of the spilled-stdin source)
 _SOURCE_CASES = [
     # quoted newlines and commas straddle chunk boundaries
     ("quoted", _quoted_csv(), True, 1024),
@@ -427,19 +440,21 @@ _SOURCE_CASES = [
     ("whitespace", "c\n \nx\n  \ny\n", True, 2),
     # blank lines are skipped, as the univocity and Go readers skip them
     ("blank_lines", "a,b\n1,2\n\n3,4\n\n", True, 4),
+    # a \r\n line end is a line end, not a trailing \r in the last field
+    ("crlf", "a,b\r\n1,x\r\n2,y\r\n", True, 4),
 ]
 
 
 @pytest.mark.parametrize("source", ["file", "short_stdin", "spilled_stdin"])
 def test_csv_sources_give_identical_rows(spark, tmp_path, stdin, source):
-    """A file, a stdin that ends inside the peek (driver-side parse) and a
-    stdin past the spill threshold (record-aligned chunk files scanned
-    executor-side, constant memory like the reference's stdin loop,
-    csv2db.go:174-176) give the rows Python's csv module reads from the
-    same text — and FAILFAST survives on all three: a ragged row aborts
-    (at build time on the driver path, at action time otherwise)."""
+    """A file, stdin through ``read_csv`` (one chunk file at the default
+    chunk size) and stdin cut into many small chunk files (record-aligned,
+    scanned executor-side, constant memory like the reference's stdin
+    loop, csv2db.go:174-176) give the rows Python's csv module reads from
+    the same text — and FAILFAST survives on all three: a ragged row
+    aborts at action time."""
 
-    def read(name, text, has_header, threshold):
+    def read(name, text, has_header, chunk_chars):
         if source == "file":
             p = tmp_path / f"{name}.csv"
             p.write_text(text)
@@ -451,17 +466,17 @@ def test_csv_sources_give_identical_rows(spark, tmp_path, stdin, source):
             spark,
             io.StringIO(text),
             has_header,
-            spill_threshold=threshold,
+            chunk_chars=chunk_chars,
             spill_dir=str(tmp_path / name),
         )
 
-    for name, text, has_header, threshold in _SOURCE_CASES:
+    for name, text, has_header, chunk_chars in _SOURCE_CASES:
         parsed = [tuple(r) for r in csv.reader(io.StringIO(text)) if r]
         if has_header:
             names, want = list(parsed[0]), parsed[1:]
         else:
             names, want = [f"col{i}" for i in range(len(parsed[0]))], parsed
-        df = read(name, text, has_header, threshold)
+        df = read(name, text, has_header, chunk_chars)
         assert df.columns == names, name
         assert sorted(tuple(r) for r in df.collect()) == sorted(want), name
 
@@ -470,18 +485,16 @@ def test_csv_sources_give_identical_rows(spark, tmp_path, stdin, source):
 
 
 def test_read_csv_buffer_spill_path_matches_driver_path(spark, tmp_path):
-    """Past the threshold stdin is chunked at record boundaries to temp
-    files and parsed EXECUTOR-side — identical rows to the driver-side
-    csv.reader path, including quoted embedded newlines and commas that
-    straddle chunk boundaries, and genuinely multi-file so the parse
-    parallelizes."""
+    """Stdin is chunked at record boundaries to files and parsed
+    EXECUTOR-side — the rows Python's csv module reads, including quoted
+    embedded newlines and commas that straddle chunk boundaries, and
+    genuinely multi-file so the parse parallelizes."""
     data = _quoted_csv()
-    # driver path: len(data) < default threshold
-    want = {tuple(r) for r in read_csv_stdin(spark, io.StringIO(data)).collect()}
+    want = {tuple(r) for r in list(csv.reader(io.StringIO(data)))[1:]}
 
     spill = str(tmp_path / "spill")
     got_df = read_csv_stdin(
-        spark, io.StringIO(data), spill_threshold=1024, spill_dir=spill
+        spark, io.StringIO(data), chunk_chars=1024, spill_dir=spill
     )
     assert got_df.columns == ["a", "b", "c"]
     got = {tuple(r) for r in got_df.collect()}
@@ -499,7 +512,7 @@ def test_read_csv_buffer_spill_headerless_and_ragged(spark, tmp_path):
         spark,
         io.StringIO("1,x\n2,y\n3,z\n"),
         has_header=False,
-        spill_threshold=4,
+        chunk_chars=4,
         spill_dir=str(tmp_path / "s1"),
     )
     assert got.columns == ["col0", "col1"]
@@ -509,7 +522,7 @@ def test_read_csv_buffer_spill_headerless_and_ragged(spark, tmp_path):
     bad = read_csv_stdin(
         spark,
         io.StringIO("a,b\n1,2\n3,4,5\n"),
-        spill_threshold=4,
+        chunk_chars=4,
         spill_dir=str(tmp_path / "s2"),
     )
     with pytest.raises(Exception):
@@ -517,10 +530,9 @@ def test_read_csv_buffer_spill_headerless_and_ragged(spark, tmp_path):
 
 
 def test_read_csv_stdin_constant_memory_paths(spark, tmp_path):
-    """read_csv_stdin: a pipe ending inside the peek takes the driver
-    path; a longer pipe streams to executor-parsed chunks without ever
-    holding the whole input — including when the peek boundary cuts a
-    QUOTED field mid-record (the head/stream seam)."""
+    """read_csv_stdin streams a pipe to executor-parsed chunks without
+    ever holding the whole input — including when a read seam cuts a
+    QUOTED field mid-record."""
     rows = []
     for i in range(800):
         if i % 5 == 0:
@@ -529,15 +541,14 @@ def test_read_csv_stdin_constant_memory_paths(spark, tmp_path):
             rows.append(f"{i},plain {i},t{i}")
     data = "a,b,c\n" + "\n".join(rows) + "\n"
 
-    small = read_csv_stdin(spark, io.StringIO(data))  # fits in the peek
-    want = {tuple(r) for r in small.collect()}
+    want = {tuple(r) for r in list(csv.reader(io.StringIO(data)))[1:]}
     assert len(want) == 800
 
-    # threshold of 97 chars lands the seam inside a quoted field
+    # 97-char reads land seams inside quoted fields
     big = read_csv_stdin(
         spark,
         io.StringIO(data),
-        spill_threshold=97,
+        chunk_chars=97,
         spill_dir=str(tmp_path / "sp"),
     )
     assert big.columns == ["a", "b", "c"]
