@@ -11,10 +11,11 @@ Reference behaviors reproduced (file:line cites into /root/reference):
 - P2: charset decode via ``--encoding`` (csv2db.go:190-199) →
   ``.option("encoding", ...)``, widened to the full JVM charset
   registry (shift_jis/euc-kr/cp1251/... via legacy.javaCharsets) with
-  the header sniff decoding under the same charset; stdin bytes decode
+  the header decoded by the same JVM charset; stdin bytes decode
   under the same ``encoding`` before they are parsed.
 - P4: header row consumed as schema, else synthesized ``col0..colN``
-  names (common/schema.go:144-169) → header option + rename.
+  names (common/schema.go:144-169) → ``first_record`` on the driver,
+  and Spark checks every file's header against it.
 - P7: schema reconcile — intersect CSV columns with target columns by
   name or ordinal, drop extras with a warning, NULL-fill missing,
   reorder to target order (common/schema.go:67-105).
@@ -93,112 +94,75 @@ def _normalize_charset(encoding: str) -> tuple[str, bool]:
     return (native, False) if native else (encoding, True)
 
 
-def _sniff_local(
-    path: str, delimiter: str, encoding: str, multiline: bool = False
-) -> list[str] | None:
-    """Driver-local first-record sniff: ZERO Spark jobs.
-
-    The reference reads the header on the driver too (csv2db.go:88-106 —
-    one buffered read of the first record before the load starts), and a
-    Spark job just to learn the header costs two scheduler round-trips
-    per read (schema-inference pass + limit-1 collect, which doubled the
-    ingest bench). For the overwhelmingly common case — ONE concrete
-    local file — decode the first record in-process under the requested
-    codec, so non-ASCII header names stay correct. Returns None when the
-    path is not a single local file (glob, directory, remote scheme,
-    file:// with a non-local host) or the codec name is unknown to
-    Python, and — decoding STRICT, not errors='replace' — when the
-    header bytes are invalid in the requested charset (a silent U+FFFD
-    column name is worse than handing the decode to the JVM reader);
-    callers fall back to the CSV-reader sniff in every None case.
-    utf-8-sig for UTF-8 mirrors the JVM CSV reader's BOM skip."""
-    p = path
-    if path.startswith("file:"):
-        # all spellings: file:/p, file:///p, file://localhost/p — and
-        # file://otherhost/p, which is NOT this machine: fall back (an
-        # exact-prefix strip would leave 'file:/p' with its scheme
-        # attached and silently take the Spark path).
-        # Scheme/netloc are split BY HAND, not with urlparse: Hadoop's
-        # Path treats '?' and '#' in a file name literally, while
-        # urlparse would truncate u.path at them and the sniff would
-        # silently fall back on a perfectly local file.
-        # NO percent-decoding either: Path treats %XX literally, so
-        # unquoting here could sniff a DIFFERENT file than the JVM
-        # read loads — the exact sniff-vs-reader parity bug class.
-        rest = path[len("file:") :]
-        if rest.startswith("//"):
-            netloc, slash, tail = rest[2:].partition("/")
-            # RFC 3986 §3.2.2: host comparison is case-insensitive —
-            # file://LOCALHOST/p is this machine
-            if netloc.lower() not in ("", "localhost"):
-                return None
-            p = slash + tail
-        else:
-            p = rest
-    if any(ch in p for ch in "*?[{") or not os.path.isfile(p):
-        return None
-    try:
-        name = codecs.lookup(encoding).name
-    except LookupError:
-        return None
-    try:
-        with open(p, encoding="utf-8-sig" if name == "utf-8" else encoding,
-                  errors="strict", newline="") as fh:
-            if multiline:
-                # record semantics: a quoted newline keeps the record
-                # open, exactly like the multiLine=true reader below
-                for rec in _pycsv.reader(fh, delimiter=delimiter):
-                    if rec:  # univocity skips blank lines; match it
-                        return rec
-            else:
-                # line semantics: the multiLine=false reader treats each
-                # physical line as one record, so the sniff must too — a
-                # full-record csv parse here would swallow a (malformed)
-                # quoted newline the main read will NOT swallow
-                for line in fh:
-                    line = line.rstrip("\r\n")
-                    if line:
-                        return next(
-                            _pycsv.reader([line], delimiter=delimiter)
-                        )
-    except UnicodeDecodeError:
-        return None
-    raise ValueError(f"empty CSV input: {path}")
-
-
-def _sniff_first_line(
+def first_record(
     spark: SparkSession,
     path: str,
     delimiter: str,
     encoding: str = "UTF-8",
     multiline: bool = False,
-) -> list[str]:
-    """Fields of the first RECORD (schema binding is deferred to the
-    first row in the reference too — csv2db.go:88-106). The single
-    record serves both the column count and, with a header, the column
-    names. Single local files are sniffed driver-side with zero Spark
-    jobs (_sniff_local); globs/directories/remote paths go through the
-    CSV reader itself (not the UTF-8-only text source) so non-ASCII
-    header names decode correctly under any charset the data does."""
-    local = _sniff_local(path, delimiter, encoding, multiline)
-    if local is not None:
-        return local
-    first = (
-        spark.read.options(
-            header="false",
-            sep=delimiter,
-            encoding=encoding,
-            quote='"',
-            escape='"',
-            multiLine=str(multiline).lower(),
-        )
-        .csv(path)
-        .limit(1)
-        .collect()
-    )
-    if not first:
-        raise ValueError(f"empty CSV input: {path}")
-    return ["" if v is None else v for v in first[0]]
+) -> list[str] | None:
+    """Fields of the first record of the first data file of ``path``, or
+    None when ``path`` holds no record. The reference binds columns by the
+    first record, read once on the driver (csv2db.go:88-106); here
+    ``scan_csv`` then checks every file's header against these names.
+
+    The file is found, opened and decompressed through the Hadoop
+    FileSystem API the scan uses, so a path means what it means to Spark:
+    a glob is expanded, a directory is listed (not recursively), names
+    starting with ``_`` or ``.`` are skipped as Spark's file index skips
+    them, and files are read in sorted order until one holds a record.
+    The record is decoded by the JVM charset the scan uses; one that
+    holds U+FFFD, what a byte invalid in ``encoding`` decodes to, raises
+    ``ValueError`` instead of naming a column after it. A UTF-8 BOM is
+    dropped. With ``multiline`` a quoted newline continues the record;
+    otherwise the record is the first non-blank line, as the line-split
+    scan reads it."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    hpath = Path(path)
+    fs = hpath.getFileSystem(conf)
+    codecs_ = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+    charset = jvm.java.nio.charset.Charset.forName(encoding)
+
+    def files():
+        # globStatus returns sorted statuses; they are walked lazily, so
+        # only those up to the first file with a record cross the gateway
+        for st in fs.globStatus(hpath) or []:
+            if st.isDirectory():
+                yield from fs.globStatus(Path(st.getPath(), "*"))
+            else:
+                yield st
+
+    for st in files():
+        fpath = st.getPath()
+        if not st.isFile() or not st.getLen() or fpath.getName()[0] in "_.":
+            continue
+        stream = fs.open(fpath)
+        try:
+            codec = codecs_.getCodec(fpath)
+            if codec is not None:
+                stream = codec.createInputStream(stream)
+            reader = jvm.java.io.BufferedReader(
+                jvm.java.io.InputStreamReader(stream, charset)
+            )
+            reader.mark(1)
+            if reader.read() != 0xFEFF:
+                reader.reset()
+            lines = iter(reader.readLine, None)
+            if multiline:
+                recs = _pycsv.reader((s + "\n" for s in lines), delimiter=delimiter)
+                rec = next((r for r in recs if r), None)
+            else:
+                line = next((s for s in lines if s), None)
+                rec = line and next(_pycsv.reader([line], delimiter=delimiter))
+        finally:
+            stream.close()
+        if rec:
+            if any("\ufffd" in f for f in rec):
+                raise ValueError(f"CSV header of {fpath} is not valid {encoding}")
+            return rec
+    return None
 
 
 def _string_schema(names: list[str]) -> T.StructType:
@@ -221,7 +185,10 @@ def scan_csv(
     a quoted-empty one and a missing one all become "" — the Go csv
     reader yields "" for each and NULL never originates in the reader,
     so the cast owns the empty-vs-NULL decision per target nullability
-    (SURVEY.md §7.5 risk 1)."""
+    (SURVEY.md §7.5 risk 1). With a header, Spark checks each file's
+    header against ``names`` (``enforceSchema=false``) and fails the
+    scan on a file whose header differs, where it would otherwise bind
+    that file's columns by position."""
     df = (
         reader.schema(_string_schema(names))
         .options(
@@ -232,6 +199,7 @@ def scan_csv(
             quote='"',
             escape='"',
             multiLine=str(multiline).lower(),
+            enforceSchema="false",
         )
         .csv(path)
     )
@@ -256,8 +224,11 @@ def read_csv(
     modes for dirty corpora at scale. Stdin is read FAILFAST only; any
     other mode raises ValueError there.
 
-    Headerless inputs get ``col0..colN`` names (reference ``NColsSchema``,
-    common/schema.go:157-169).
+    The columns are named by the first record of the first file
+    (``first_record``), and every file of a directory or glob must
+    carry that header: a file whose header differs fails the load at
+    action time. Headerless inputs get ``col0..colN`` names (reference
+    ``NColsSchema``, common/schema.go:157-169).
 
     ``multiline=True`` parses quoted fields with embedded newlines —
     the Go encoding/csv reader (csv2db.go:84) ALWAYS supports these;
@@ -274,9 +245,9 @@ def read_csv(
     contract (csv2db.go:190-199): Spark 4's native CSV allowlist is
     UTF-8/16/32 + latin-1 + ascii, so other charsets (shift_jis,
     euc-kr, cp1251, ...) re-enable the full JVM registry via
-    ``spark.sql.legacy.javaCharsets`` — and the header sniff goes
-    through the CSV reader under the same encoding, so non-ASCII header
-    NAMES decode correctly too (tests/test_ingest.py charset matrix).
+    ``spark.sql.legacy.javaCharsets`` — and ``first_record`` decodes
+    the header with the same JVM charset, so non-ASCII header NAMES
+    decode correctly too (tests/test_ingest.py charset matrix).
     Stdin bytes are decoded by Python's codec of the same name (strict:
     an invalid byte raises instead of loading U+FFFD); a charset Python
     does not know raises ValueError there.
@@ -311,24 +282,49 @@ def read_csv(
         # result for native charsets), so leaving it on is
         # behavior-neutral for every other query on the session.
         spark.conf.set("spark.sql.legacy.javaCharsets", "true")
-    first = _sniff_first_line(spark, path, delimiter, encoding, multiline)
+    first = first_record(spark, path, delimiter, encoding, multiline)
+    if first is None:
+        raise ValueError(f"no CSV record at {path}")
     names = first if has_header else [f"col{i}" for i in range(len(first))]
     return scan_csv(
         spark.read, path, names, has_header, delimiter, encoding, mode, multiline
     )
 
 
-def _records(stream, block: int):
+def _quote_open(line: str, delimiter: str, inq: bool) -> bool:
+    """Whether a quoted field is open at the end of ``line``, given
+    whether one was open at its start. A quote opens a field only where
+    the field starts; inside one, "" is an escaped quote and the closing
+    quote leaves the rest of the field literal, as in ``1,"x"y``."""
+    i = 0
+    if not inq and line.startswith('"'):
+        inq, i = True, 1
+    while True:
+        if inq:
+            i = line.find('"', i)
+            while i >= 0 and line.startswith('""', i):
+                i = line.find('"', i + 2)
+            if i < 0:
+                return True
+            inq = False
+        i = line.find(delimiter, i)
+        if i < 0:
+            return False
+        i += 1
+        inq = line.startswith('"', i)
+        i += inq
+
+
+def _records(stream, block: int, delimiter: str):
     """Record texts of ``stream``, read in ``block``-char pieces —
-    constant memory (one block plus one pending record). A newline with
-    odd running quote parity lies inside a quoted field and continues the
-    record; doubled quotes ("") flip the parity twice, which is exactly
-    RFC-4180 escaping. The carriage return of a CRLF line end is dropped,
-    as the Go reader and the file scan drop it. Blank lines are skipped, as
-    the univocity and Go readers skip them, while a whitespace-only line
-    IS a record (one field of spaces) to both."""
+    constant memory (one block plus one pending record). A newline inside
+    a quoted field continues the record (``_quote_open``). The carriage
+    return of a CRLF line end is dropped, as the Go reader and the file
+    scan drop it. Blank lines are skipped, as the univocity and Go
+    readers skip them, while a whitespace-only line IS a record (one
+    field of spaces) to both."""
     rec: list[str] = []
-    parity = 0
+    inq = False
     pending = ""
     while True:
         text = stream.read(block)
@@ -338,8 +334,9 @@ def _records(stream, block: int):
         for line in lines:
             line = line.removesuffix("\r")
             rec.append(line)
-            parity ^= line.count('"') & 1
-            if not parity:
+            if inq or '"' in line:
+                inq = _quote_open(line, delimiter, inq)
+            if not inq:
                 if rec != [""]:
                     yield "\n".join(rec)
                 rec = []
@@ -392,7 +389,7 @@ def read_csv_stdin(
     (tests/test_ingest.py)."""
     if len(delimiter) != 1:
         raise ValueError(f"delimiter must be a single character, got {delimiter!r}")
-    records = _records(stream, chunk_chars)
+    records = _records(stream, chunk_chars, delimiter)
     first = next(records, None)
     if first is None:
         raise ValueError("empty CSV input: <stdin>")

@@ -233,8 +233,6 @@ def write_jdbc(
     mode: TableMode | str = TableMode.AS_IS,
     user: str | None = None,
     password: str | None = None,
-    batchsize: int | None = None,
-    num_partitions: int | None = None,
     atomic: bool = False,
 ) -> None:
     """Write ``df`` into a JDBC table under the reference's mode matrix
@@ -251,7 +249,7 @@ def write_jdbc(
     """
     mode = TableMode(mode)
     opts: dict[str, str] = {
-        "batchsize": str(batchsize or default_batchsize(len(df.columns))),
+        "batchsize": str(default_batchsize(len(df.columns))),
     }
     # auth resolution chain (reference auth.go:15-19): explicit arg ->
     # DB_USERNAME/DB_PASSWORD env; the interactive-prompt tail of the
@@ -262,8 +260,6 @@ def write_jdbc(
         opts["user"] = user
     if password:
         opts["password"] = password
-    if num_partitions and not atomic:
-        opts["numPartitions"] = str(num_partitions)
     if atomic:
         # single transaction per load, like the reference's one-tx sink
         df = df.coalesce(1)

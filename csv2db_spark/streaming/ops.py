@@ -51,6 +51,12 @@ _NTZ_FROM_TS = (
 )
 
 _MEMQ = itertools.count()
+
+# Hash buckets of the streaming MinHash store (``dk``/``bk`` partition
+# values). A layout constant, not a setting: a store written under one
+# count and probed under another silently misses its duplicates.
+STORE_BUCKETS = 16
+
 _STAGED: dict[str, str] = {}
 
 
@@ -741,37 +747,23 @@ def streaming_ingest_csv(
     checkpointing gives exactly-once into transactional sinks.
 
     Header alignment: Spark's streaming CSV source applies a user schema
-    POSITIONALLY and ignores header names, so the file's real column
-    order is sniffed from the watched directory (driver-side, Hadoop FS
-    API — works for hdfs:///s3:// watch dirs too) and the raw schema is
-    built in FILE order; ``reconcile_by_name`` then reorders to the
+    POSITIONALLY, so the raw schema is built in the order of the first
+    record of the first file in the watched directory (``first_record``,
+    the batch sniff) and ``reconcile_by_name`` then reorders to the
     target — a scrambled header aligns correctly, like the batch path.
-    Contract: every file in one watched directory shares one header
-    layout — the headers of ALL files present at stream definition are
-    checked and a mismatch raises up front (a positionally-misaligned
-    load would be silent data corruption); files arriving later must
-    match that layout, mirroring Spark's own one-schema-per-source model
-    for streams. If the directory is empty at stream definition, names
-    fall back to target order. Headerless files take their width from a
-    file present at stream definition (else the target's), as batch
-    takes it from the first record.
+    Every file, including one that arrives later, must carry that header:
+    the scan checks each file's header and a mismatch fails the stream
+    with Spark's ``CSV header does not conform to the schema`` error.
+    If the directory is empty at stream definition, names fall back to
+    target order. Headerless files take their width from a file present
+    at stream definition (else the target's), as batch takes it from the
+    first record.
     """
-    from csv2db_spark.ingest import align_and_cast, scan_csv
+    from csv2db_spark.ingest import align_and_cast, first_record, scan_csv
 
-    headers = _sniff_headers(spark, watch_dir, delimiter)
-    layouts = {tuple(h) for h in headers.values()}
-    if has_header and len(layouts) > 1:
-        detail = "; ".join(
-            f"{path}: {', '.join(h)}" for path, h in sorted(headers.items())
-        )
-        raise ValueError(
-            f"inconsistent CSV headers in watch dir {watch_dir!r} — the "
-            "streaming CSV source binds one positional schema per "
-            f"directory, so all files must share one layout ({detail})"
-        )
-    first = next(iter(layouts), None)
+    first = first_record(spark, watch_dir, delimiter)
     if has_header:
-        names = list(first) if first else target.fieldNames()
+        names = first or target.fieldNames()
     else:
         # the FAILFAST scan rejects a row wider than the schema, so the
         # width comes from the files like batch's first-record sniff, and
@@ -780,42 +772,6 @@ def streaming_ingest_csv(
         names = [f"col{i}" for i in range(width)]
     sdf = scan_csv(spark.readStream, watch_dir, names, has_header, delimiter)
     return align_and_cast(sdf, target, has_header)
-
-
-def _sniff_headers(
-    spark: SparkSession, watch_dir: str, delimiter: str
-) -> dict[str, list[str]]:
-    """Parsed first line of every data file currently in ``watch_dir``,
-    keyed by file path. Driver-side through the Hadoop FileSystem API (one
-    metadata listing + one first-line read per file — no full-file IO), so
-    it works for any scheme the Spark job itself can read. Hidden files
-    (``.``/``_`` prefixes) are skipped exactly as the file stream source
-    skips them."""
-    import csv as _pycsv
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(watch_dir)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out: dict[str, list[str]] = {}
-    if not fs.exists(hpath):
-        return out
-    for status in fs.listStatus(hpath):
-        name = status.getPath().getName()
-        if not status.isFile() or status.getLen() == 0 or name[0] in "._":
-            continue
-        stream = fs.open(status.getPath())
-        try:
-            reader = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(stream, "UTF-8")
-            )
-            line = reader.readLine()
-        finally:
-            stream.close()
-        if line:
-            out[str(status.getPath())] = next(
-                _pycsv.reader([line], delimiter=delimiter)
-            )
-    return out
 
 
 def static_enrich_join(stream: DataFrame, dim: DataFrame, on: str) -> DataFrame:
@@ -1039,7 +995,7 @@ def stream_minhash_dedup(
     band rows are computed ONCE, when their batch arrives — history is
     never re-banded (the r14 shape re-projected every stored signature
     into bands on every arrival). The batch's band-bucket set (<=
-    ``spark.csv2db.stream.storeBuckets`` ints, default 16) is collected
+    ``STORE_BUCKETS`` ints) is collected
     to a PLAN-TIME literal, so the standing band read prunes to the
     ``bk=`` directories the batch can possibly collide with —
     PartitionFilters on the scan, not a flat store pass; the same
@@ -1047,9 +1003,7 @@ def stream_minhash_dedup(
     buckets. The band join then BROADCASTS the batch's bands
     (batch_docs x 4 bands x 3 longs) against the pruned store, and the
     verify joins only docs appearing in surviving candidate pairs. At
-    100 TB the per-batch read is |store|/buckets per probed bucket —
-    raise storeBuckets with corpus size (it is a layout parameter of
-    the store, so pick it once per checkpoint lineage)."""
+    100 TB the per-batch read is |store|/buckets per probed bucket."""
     import os as _os
 
     handle = minhash_dedup_batch_handler(
@@ -1109,15 +1063,14 @@ def minhash_dedup_batch_handler(
     res_dir = _os.path.join(work_dir, "pairs")
     rows = _D.BAND_ROWS
     band_keys = ["band_id"] + [f"v{j}" for j in range(rows)]
-    n_buckets = int(spark.conf.get("spark.csv2db.stream.storeBuckets", "16"))
     # few write tasks: a micro-batch's store append is small by
     # definition, and each extra reduce task costs a launch + a file
     # commit (measured: 32 tasks ~1 s/write slower than 8 at fixture
     # size for the identical one-file-per-bucket layout)
-    n_write_tasks = max(2, min(n_buckets, 8))
+    n_write_tasks = 8
 
     def _bucket(*cols) -> Column:
-        return F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
+        return F.pmod(F.xxhash64(*cols), F.lit(STORE_BUCKETS))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         sig_new = _D.minhash_doc_signatures(
@@ -1152,7 +1105,7 @@ def minhash_dedup_batch_handler(
         # directories the batch can collide with are listed and
         # scanned. The set comes from the just-written directory names
         # (driver-side listing, zero Spark jobs); the bounded collect
-        # (<= storeBuckets ints) is the fallback when the store is not
+        # (<= STORE_BUCKETS ints) is the fallback when the store is not
         # on a locally listable filesystem
         probed = _partition_values(
             _os.path.join(band_dir, f"b={batch_id}"), "bk"

@@ -329,10 +329,9 @@ def test_charset_matrix_breadth(spark, tmp_path):
         assert got == want_rows, f"{enc}: {got}"
 
 
-def test_sniff_fallback_glob_non_ascii_header(spark, tmp_path):
-    """A glob path can't take the zero-job driver-local sniff, so it
-    exercises the CSV-reader fallback — which must still decode a
-    non-ASCII header under the requested charset (the r9 fix)."""
+def test_glob_non_ascii_header(spark, tmp_path):
+    """A glob's header is read from its first matching file and decoded
+    under the requested charset."""
     d = tmp_path / "sj"
     d.mkdir()
     (d / "part.csv").write_bytes("名前,都市\n太郎,東京\n".encode("shift_jis"))
@@ -341,58 +340,45 @@ def test_sniff_fallback_glob_non_ascii_header(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [("太郎", "東京")]
 
 
-def test_sniff_local_uri_spellings_and_strict_decode(spark, tmp_path):
-    """ADVICE r10 fixes: every file: URI spelling reaches the zero-job
-    local sniff (the old code stripped only the exact 'file://' prefix),
-    a file://HOST/ path falls back to the Spark sniff, and header bytes
-    invalid in the requested charset fall back instead of silently
-    minting U+FFFD column names."""
-    from csv2db_spark.ingest import _sniff_local
-
+def test_read_csv_uri_spellings_and_strict_decode(spark, tmp_path):
+    """Every path spelling Spark reads names the file Spark reads:
+    ``file:/p`` and ``file:///p``, a literal ``%20`` (Hadoop's Path does
+    not percent-decode, so the space-named decoy is not read) and a
+    ``#`` (not a URI fragment to Hadoop). Header bytes that are invalid
+    in the requested charset raise instead of naming a column U+FFFD."""
     p = tmp_path / "u.csv"
     p.write_text("a,b\n1,2\n")
-    assert _sniff_local(str(p), ",", "UTF-8") == ["a", "b"]
-    assert _sniff_local(f"file:{p}", ",", "UTF-8") == ["a", "b"]
-    assert _sniff_local(f"file://{p}", ",", "UTF-8") == ["a", "b"]
-    assert _sniff_local(f"file://localhost{p}", ",", "UTF-8") == ["a", "b"]
-    # RFC 3986 host comparison is case-insensitive (ADVICE r12: the
-    # hand split must lowercase like urlparse did)
-    assert _sniff_local(f"file://LOCALHOST{p}", ",", "UTF-8") == ["a", "b"]
-    assert _sniff_local(f"file://LocalHost{p}", ",", "UTF-8") == ["a", "b"]
-    assert _sniff_local(f"file://otherhost{p}", ",", "UTF-8") is None
-    assert _sniff_local(f"file://OTHERHOST{p}", ",", "UTF-8") is None
-    # %XX stays LITERAL, matching Hadoop Path semantics: the sniff must
-    # read the same file the JVM read will load (code-review r11) —
-    # with both x%20y.csv and x y.csv present, file://...x%20y.csv
-    # means the literal %20 file, never the space-named decoy
     pct = tmp_path / "x%20y.csv"
     pct.write_text("h1,h2\n1,2\n")
     (tmp_path / "x y.csv").write_text("w1,w2\n1,2\n")
-    assert _sniff_local(f"file://{pct}", ",", "UTF-8") == ["h1", "h2"]
-    # '#' in a file name is literal to Hadoop Path; urlparse would have
-    # truncated the URI at the fragment and silently skipped the local
-    # sniff (ADVICE r11). '?' stays a fallback — it's a Hadoop glob char.
     frag = tmp_path / "x#y.csv"
     frag.write_text("f1,f2\n1,2\n")
-    assert _sniff_local(f"file://{frag}", ",", "UTF-8") == ["f1", "f2"]
-    assert _sniff_local(f"file:{frag}", ",", "UTF-8") == ["f1", "f2"]
-    assert _sniff_local(str(frag), ",", "UTF-8") == ["f1", "f2"]
-    # invalid bytes under the requested codec: local sniff declines...
+    for spelling, names in [
+        (str(p), ["a", "b"]),
+        (f"file:{p}", ["a", "b"]),
+        (f"file://{p}", ["a", "b"]),
+        (f"file://{pct}", ["h1", "h2"]),
+        (f"file:{pct}", ["h1", "h2"]),
+        (str(frag), ["f1", "f2"]),
+        (f"file:{frag}", ["f1", "f2"]),
+        (f"file://{frag}", ["f1", "f2"]),
+    ]:
+        df = read_csv(spark, spelling)
+        assert df.columns == names, spelling
+        assert [tuple(r) for r in df.collect()] == [("1", "2")], spelling
     bad = tmp_path / "bad.csv"
     bad.write_bytes("名前,都市\nx,y\n".encode("shift_jis"))
-    assert _sniff_local(str(bad), ",", "UTF-8") is None
-    # ...and read_csv still works end-to-end via each path
-    df = read_csv(spark, f"file:{p}")
-    assert df.columns == ["a", "b"]
+    with pytest.raises(ValueError, match="not valid UTF-8"):
+        read_csv(spark, str(bad))
     df = read_csv(spark, str(bad), encoding="shift_jis")
     assert df.columns == ["名前", "都市"]
+    assert [tuple(r) for r in df.collect()] == [("x", "y")]
 
 
 def test_multiline_header_sniff_matches_reader_semantics(spark, tmp_path):
     """multiline=True: a quoted newline in a HEADER NAME spans lines in
-    both the sniff and the read; multiline=False: the header is one
-    physical line to both (the local sniff must not swallow a quoted
-    newline the line-based reader won't)."""
+    both the header read and the scan, and the scan's header check
+    accepts it."""
     p = tmp_path / "mh.csv"
     p.write_text('a,"b\nc"\n1,2\n')
     df = read_csv(spark, str(p), multiline=True)
@@ -400,10 +386,66 @@ def test_multiline_header_sniff_matches_reader_semantics(spark, tmp_path):
     assert [tuple(r) for r in df.collect()] == [("1", "2")]
 
 
+def test_mixed_headers_in_one_directory_raise(spark, tmp_path):
+    """Every file of a directory must carry the first file's header: a
+    file with its columns swapped fails the load instead of landing its
+    values in the wrong columns."""
+    d = tmp_path / "mixed"
+    d.mkdir()
+    (d / "f1.csv").write_text("a,b\n1,2\n")
+    (d / "f2.csv").write_text("b,a\n3,4\n")
+    df = read_csv(spark, str(d))
+    assert df.columns == ["a", "b"]
+    with pytest.raises(Exception, match="CSV header does not conform"):
+        df.collect()
+
+
+def test_header_quirks_load_under_the_header_check(spark, tmp_path):
+    """A BOM, an empty name and names with spaces still load once Spark
+    checks the header against the names read on the driver."""
+    for text, names in [
+        ("\ufeffa,b\n1,2\n", ["a", "b"]),
+        ("a,,b\n1,x,2\n", ["a", "", "b"]),
+        (" a , b\n1,2\n", [" a ", " b"]),
+    ]:
+        p = tmp_path / "q.csv"
+        p.write_text(text)
+        df = read_csv(spark, str(p))
+        assert df.columns == names, text
+        assert [(r[0], r[-1]) for r in df.collect()] == [("1", "2")], text
+
+
+def test_read_csv_builds_without_a_spark_job(spark, tmp_path):
+    """Building the frame reads the header on the driver and runs no
+    Spark job, for a file, a directory, a glob and a gzipped file."""
+    import gzip
+
+    d = tmp_path / "parts"
+    d.mkdir()
+    (d / "_SUCCESS").write_text("")
+    (d / ".hidden.csv").write_text("x,y\n")
+    (d / "p0.csv").write_text("a,b\n1,2\n")
+    (d / "p1.csv").write_text("a,b\n3,4\n")
+    gz = tmp_path / "g.csv.gz"
+    gz.write_bytes(gzip.compress(b"a,b\n5,6\n"))
+    sc = spark.sparkContext
+    for i, path in enumerate([d / "p0.csv", d, d / "p*.csv", gz]):
+        group = f"read_csv_build_{i}"
+        sc.setJobGroup(group, group)
+        try:
+            df = read_csv(spark, str(path))
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert df.columns == ["a", "b"], path
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], path
+    assert sorted(tuple(r) for r in df.collect()) == [("5", "6")]
+
+
 def test_charset_alias_does_not_enable_java_registry(spark, tmp_path):
-    """ADVICE r9: 'UTF8' / 'latin1' spellings are native charsets and
-    must NOT flip the session-wide legacy.javaCharsets conf; a genuinely
-    non-native charset on a non-local path still does."""
+    """'UTF8' / 'latin1' spellings are native charsets and must NOT flip
+    the session-wide legacy.javaCharsets conf; a genuinely non-native
+    charset still does."""
     p = tmp_path / "a.csv"
     p.write_text("a,b\n1,2\n")
     spark.conf.unset("spark.sql.legacy.javaCharsets")
@@ -412,7 +454,7 @@ def test_charset_alias_does_not_enable_java_registry(spark, tmp_path):
         assert (
             spark.conf.get("spark.sql.legacy.javaCharsets", None) is None
         ), alias
-    # non-native charset via the Spark-reader sniff (glob) sets it
+    # a non-native charset sets it
     d = tmp_path / "g"
     d.mkdir()
     (d / "x.csv").write_bytes("a,b\n1,2\n".encode("euc_kr"))
@@ -442,6 +484,9 @@ _SOURCE_CASES = [
     ("blank_lines", "a,b\n1,2\n\n3,4\n\n", True, 4),
     # a \r\n line end is a line end, not a trailing \r in the last field
     ("crlf", "a,b\r\n1,x\r\n2,y\r\n", True, 4),
+    # a quote inside an unquoted field opens no quoted field, so the
+    # quoted newline of the next row does not move a record cut
+    ("stray_quote", 'a,b\n1,5"\n2,"x\ny"\n3,z\n', True, 4),
 ]
 
 

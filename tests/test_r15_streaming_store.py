@@ -1,5 +1,5 @@
-"""Round-15 streaming minhash store: band-key-partitioned state
-(VERDICT r14 item 5). Pins the two properties the rewrite must keep:
+"""Streaming minhash store: band-key-partitioned state. Pins the
+properties the layout must keep:
 
 1. **At-least-once replay idempotence** — a batch owns its ``b=N``
    store partitions and rewrites them wholesale, so re-running a batch
@@ -9,6 +9,8 @@
    signature lookups carry PartitionFilters over the bucket columns
    instead of flat store scans (the scale property the layout exists
    for).
+3. **A fixed bucket count** — the session cannot change the buckets a
+   later batch probes away from those the store was written to.
 """
 
 from __future__ import annotations
@@ -96,3 +98,25 @@ def test_minhash_standing_reads_are_partition_pruned(spark, dedup_store):
     store = spark.read.parquet(sig_dir).where(F.col("dk").isin([0, 1, 2]))
     splan = store._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [dk" in splan, splan
+
+
+def test_store_buckets_do_not_follow_the_session_conf(spark, tmp_path):
+    """The store's bucket count is a layout constant: a handler created
+    after the session's ``spark.csv2db.stream.storeBuckets`` changed
+    (a restart with another setting) still probes the buckets the
+    earlier batch was written to, so a duplicate across the two batches
+    is found."""
+    text = "the quick brown fox jumps over the lazy dog " * 4
+    work = str(tmp_path / "store")
+    key = "spark.csv2db.stream.storeBuckets"
+
+    def docs(doc_id):
+        return spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
+
+    minhash_dedup_batch_handler(spark, work)(docs(1), 0)
+    spark.conf.set(key, "1000")
+    try:
+        minhash_dedup_batch_handler(spark, work)(docs(2), 1)
+    finally:
+        spark.conf.unset(key)
+    assert [(a, b) for a, b, _ in _pairs(spark, work)] == [(1, 2)]

@@ -3,6 +3,8 @@ streaming directory watch."""
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import types as T
 
 from csv2db_spark.streaming.ops import run_to_df, streaming_ingest_csv
@@ -14,6 +16,16 @@ TARGET = T.StructType(
         T.StructField("c", T.StringType(), True),
     ]
 )
+
+
+def _messages(exc) -> str:
+    """The message of a captured exception and of the JVM exceptions
+    that caused it, where Spark's reader errors sit."""
+    out = []
+    while exc is not None:
+        out.append(str(exc))
+        exc = getattr(exc, "_cause", None)
+    return "\n".join(out)
 
 
 def test_streaming_ingest_two_files(spark, tmp_path):
@@ -57,16 +69,31 @@ def test_streaming_ingest_header_subset_null_fills(spark, tmp_path):
 
 def test_streaming_ingest_inconsistent_headers_raise(spark, tmp_path):
     # the streaming CSV source binds ONE positional schema per directory;
-    # two layouts in the same watch dir would positionally corrupt one of
-    # them -> must fail loudly at stream definition
-    import pytest
-
+    # a second layout in the same watch dir would be loaded by position,
+    # so the scan's header check fails the stream instead
     watch = tmp_path / "incoming_mixed"
     watch.mkdir()
     (watch / "f1.csv").write_text("a,b,c\n1,2,x\n")
     (watch / "f2.csv").write_text("c,a,b\nx,1,2\n")
-    with pytest.raises(ValueError, match="inconsistent CSV headers"):
-        streaming_ingest_csv(spark, str(watch), TARGET)
+    out = streaming_ingest_csv(spark, str(watch), TARGET)
+    with pytest.raises(StreamingQueryException) as failed:
+        run_to_df(out, spark, "append")
+    assert "CSV header does not conform" in _messages(failed.value)
+
+
+def test_streaming_ingest_late_file_with_swapped_header_fails(spark, tmp_path):
+    """A file that reaches the watched directory after the stream is
+    defined is checked against the first file's header too: with two
+    columns swapped its values would cast cleanly into each other's
+    columns."""
+    watch = tmp_path / "incoming_late"
+    watch.mkdir()
+    (watch / "f1.csv").write_text("a,b,c\n1,2,x\n")
+    out = streaming_ingest_csv(spark, str(watch), TARGET)
+    (watch / "f2.csv").write_text("b,a,c\n3,4,y\n")
+    with pytest.raises(StreamingQueryException) as failed:
+        run_to_df(out, spark, "append")
+    assert "CSV header does not conform" in _messages(failed.value)
 
 
 def test_streaming_and_batch_agree_on_empty_cells(spark, tmp_path):
