@@ -126,8 +126,8 @@ def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
     combined min per doc, one bounded shuffle of 16-byte partials), not
     as an array ``transform`` lambda: higher-order functions evaluate
     interpreted, and md5-per-element is exactly the real-work body
-    where that costs 3-10× (same lesson as the r7 xxh verify rewrite;
-    measured 6.3 → ~1 s at sf0.1 on this gate, PLANS.md round-8).
+    where that costs 3-10× (measured 6.3 → ~1 s at sf0.1 on this
+    gate, PLANS.md).
     Docs with no shingles (< 3 tokens) keep a NULL fingerprint via the
     left join, matching the array path and the oracle."""
     sh = shingles(tokens(text_col))
@@ -258,7 +258,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # tagged structs (null when that gram doesn't exist at this
     # position) — the 2-way unionAll shape this replaces replanned the
     # explode+window subtree once per leg, doubling the dominant cost
-    # (round-14, guide §2.4)
+    # (guide §2.4)
     tagged = (
         grams.select(
             "doc_id",
@@ -381,7 +381,7 @@ def bm25_topk(
     a 1-row corpus-stats broadcast, and a TakeOrdered top-k with doc-id
     tiebreak. Linear in corpus size, output k rows.
 
-    Round-14 (guide §2.4): tf and dl are each consumed twice (tf by the
+    Shape (guide §2.4): tf and dl are each consumed twice (tf by the
     scoring join AND the df broadcast; dl by the length join AND the
     corpus-stats aggregate), and without a boundary each consumer
     replanned its whole corpus subtree — the sf0.1 plan parsed/split
@@ -658,14 +658,14 @@ def bigram_lm_scores(
         )
     # arrays_zip, not zip_with: the packing needs no lambda, and
     # zip_with's lambda body would run interpreted outside whole-stage
-    # codegen on every corpus row (see PLANS.md round-6 HOF pitfalls)
+    # codegen on every corpus row (see the HOF pitfalls in PLANS.md)
     occ = _occurrences(docs)
     model_occ = occ if train_docs is None else _occurrences(train_docs)
     # checkpoint the pair-count table: it feeds BOTH the prefix fold
     # and the scoring join, and without a boundary each consumer
     # replanned the model corpus' explode+aggregate — the sf0.1 gate
     # plan carried THREE corpus bigram explodes where two are the
-    # minimum (round-14, guide §2.4). The table is |distinct bigrams|
+    # minimum (guide §2.4). The table is |distinct bigrams|
     # rows — vocabulary-sized, far below the corpus it folds.
     pair_counts = model_occ.groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("cnt_pair")
@@ -807,9 +807,9 @@ def hashed_linear_classifier(
     pass, broadcast back; the corpus is tokenized ONCE: the per-doc tf
     table (<= |docs| x n_features numeric rows, _pos riding along as a
     doc-constant key) is eagerly checkpointed, and BOTH the per-bucket
-    class counts (train) and the per-doc scores (apply) fold from it —
-    round-14, guide §2.4: the previous shape planned the corpus
-    explode once per leg. The corpus is never joined against itself,
+    class counts (train) and the per-doc scores (apply) fold from it,
+    so the corpus explode is planned once, not once per leg (guide
+    §2.4). The corpus is never joined against itself,
     and per-doc scoring shuffles (doc_id, bucket) tf partials only. No
     vocabulary state, no OOV handling, no Python — pure codegen end to
     end."""

@@ -2,9 +2,9 @@
 operators/sessions.py): decontamination, stratified sampling, incremental
 dedup, PII scanning, domain mixing, sessionization, length histograms.
 
-Registered AFTER the round-2 CHECK_FIRST window (registry.py) — locally
-parity-tested now, rotated into the driver's 50-query correctness window
-next round.
+tests/test_parity.py checks each gate here against its DuckDB oracle
+where one exists; ``registry.CHECK_FIRST`` lists the gates in the
+driver's 50-query correctness window.
 """
 
 from __future__ import annotations
@@ -635,7 +635,7 @@ def q_curate_epoch_upsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-4 curation stages composed end-to-end: weighted domain
+    """Curation stages composed end-to-end: weighted domain
     sampling (downsample crawl-like sources) → per-language quantile
     quality filter (drop the worst 25% of each language) → exact dedup
     within (lang, text) → per-language document/token accounting. One
@@ -952,7 +952,7 @@ def q_curate_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pipeline_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-5 curation stages composed end-to-end: URL-level dedup
+    """Curation stages composed end-to-end: URL-level dedup
     (canonicalize synthesized refetch URLs, keep min doc_id per
     canonical) → Gopher-rule quality filter → leakage-safe md5 split
     assignment → per-(split, lang) document/token accounting. One
@@ -1425,7 +1425,7 @@ def q_pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("base_id"), "lang"
     )
-    # Round-14 (guide §2.4): labeled has three consumers (classifier
+    # guide §2.4: labeled has three consumers (classifier
     # tokenize, the keep join, the budget sampler via keep) — without a
     # boundary each replanned the span-removal subtree (28 scans of
     # documents.parquet in one gate plan). One materialization, the
@@ -2002,7 +2002,7 @@ def q_pipeline_curation_v7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pipeline_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation pipeline v8 — the round-7 operators composed end to end
+    """Curation pipeline v8 — text-quality operators composed end to end
     and replayed stage-for-stage by one SQL oracle: (1) encoding-quality
     filter (llm/text.encoding_anomaly_counts) drops every decode-damaged
     document from a deterministically damaged corpus; (2) benchmark

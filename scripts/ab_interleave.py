@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Interleaved A/B timer: legs alternate OLD/NEW within ONE session so
 host noise hits both shapes equally (OPTIMIZATION_r14.md protocol).
+Which leg runs first alternates from rep to rep, so neither leg always
+inherits the other's warm caches or pays for its garbage.
 
 The OLD leg is produced by monkeypatching a named toggle; the NEW leg
 is the tree as-is. Usage:
@@ -8,14 +10,16 @@ is the tree as-is. Usage:
     python scripts/ab_interleave.py <toggle> q_a [q_b ...] [--reps N]
 
 Toggles are registered in TOGGLES below: each entry is (apply_old,
-undo_old) callables. Prints one JSON line per query with both series
-and the steal delta per leg.
+undo_old) callables. Prints one JSON line per query with both series,
+each leg's median, quartiles and best, the steal delta per leg, and how
+many reps NEW won.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -126,8 +130,8 @@ def main() -> int:
             noop(qd.fn(spark, wd))
         res = {"old": {"series": [], "steal": 0},
                "new": {"series": [], "steal": 0}}
-        for _ in range(reps):
-            for leg in ("old", "new"):
+        for rep in range(reps):
+            for leg in ("old", "new") if rep % 2 == 0 else ("new", "old"):
                 if leg == "old":
                     apply_old()
                 try:
@@ -140,8 +144,17 @@ def main() -> int:
                     if leg == "old":
                         undo_old()
         for leg in res:
-            res[leg]["best"] = min(res[leg]["series"])
-        print(json.dumps({"query": name, "toggle": toggle_name, **res}),
+            series = res[leg]["series"]
+            res[leg]["median"] = round(statistics.median(series), 3)
+            if len(series) > 1:
+                q1, _, q3 = statistics.quantiles(series, n=4)
+                res[leg]["quartiles"] = [round(q1, 3), round(q3, 3)]
+            res[leg]["best"] = min(series)
+        new_wins = sum(
+            n < o for o, n in zip(res["old"]["series"], res["new"]["series"])
+        )
+        print(json.dumps({"query": name, "toggle": toggle_name, **res,
+                          "new_wins": new_wins, "reps": reps}),
               flush=True)
     return 0
 

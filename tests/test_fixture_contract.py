@@ -7,6 +7,8 @@ types, this test fails in ONE obvious place instead of as a pile of
 unrelated stack traces.
 
 The readers that consume these contracts:
+- sources/tables.py:SCHEMAS (the declared Spark schema of every table
+  but events; load_table checks each file's footer against it)
 - sources/tables.py:_load_events (nanos-bigint vs NTZ branch)
 - streaming/ops.py:events_stream (same branch, streaming side)
 - llm/similarity.py (embedding is list<float>)
@@ -14,8 +16,13 @@ The readers that consume these contracts:
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+
+from csv2db_spark.sources.tables import SCHEMAS, TABLES, load_table
 
 # table -> {column: physical arrow type string}. events.ts may be either
 # of the two types the fixture has actually shipped with; both are
@@ -103,3 +110,49 @@ def test_fixture_physical_schema(sf_dir, table):
             f"(expected one of {allowed}) — update the readers listed in "
             "this file's docstring along with this contract"
         )
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_declared_schemas_equal_inferred(spark, sf_dir, sf):
+    """Each declared schema is the one Spark infers from the file, at
+    every scale factor, and load_table builds every declared table
+    without launching a Spark job (an inferred read launches one)."""
+    root = os.path.join(os.path.dirname(sf_dir), sf)
+    if not os.path.isdir(root):
+        pytest.skip(f"no fixtures at {root}")
+    assert set(SCHEMAS) == set(TABLES) - {"events"}
+    sc = spark.sparkContext
+    for name, schema in SCHEMAS.items():
+        assert spark.read.parquet(f"{root}/{name}.parquet").schema == schema, name
+        group = f"load_table_{sf}_{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = load_table(spark, root, name)
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert df.schema == schema, name
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+
+@pytest.mark.parametrize(
+    "rewrite, column",
+    [
+        # read with the declared schema, a dropped column would load
+        # as 500 NULLs instead of failing
+        (lambda t: t.drop_columns(["n_chars"]), "n_chars"),
+        (
+            lambda t: t.set_column(0, "doc_id", t["doc_id"].cast(pa.int32())),
+            "doc_id",
+        ),
+        (lambda t: t.append_column("extra", t["n_chars"]), "extra"),
+    ],
+    ids=["dropped", "int32", "extra"],
+)
+def test_load_table_rejects_a_file_unlike_its_declaration(
+    spark, sf_dir, tmp_path, rewrite, column
+):
+    table = pq.read_table(f"{sf_dir}/documents.parquet")
+    pq.write_table(rewrite(table), tmp_path / "documents.parquet")
+    with pytest.raises(ValueError, match=f"table 'documents': column '{column}'"):
+        load_table(spark, str(tmp_path), "documents")
