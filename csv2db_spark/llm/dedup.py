@@ -34,7 +34,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from csv2db_spark import plans
 from csv2db_spark.llm.corpus import tokens
 
 # ------------------------------------------------------------------- exact
@@ -350,20 +349,15 @@ def jaccard_pairs(
     / 48 parquet scans. Now one ``repartition(key)`` exchange serves
     everything (census aggregates reuse the key clustering; the per-doc
     dedup — when the input is a multiset — and the df census run on it
-    too), the postings sort within partitions by ``key`` and
-    materialize once; above the small-input threshold the partitioning
-    is preserved, so the self-join legs plan exchange-free and
-    sort-free. The candidate-restricted path is left alone: its
-    postings are band-collision-sized and the broadcast join is the
-    fast path (a corpus repartition there would cost more than it
-    saves).
-
-    Below the threshold (``plans.small_input``) the stage is a plain
-    AQE-on checkpoint, as in ``containment_pairs``: preserving means an
-    AQE-off staging job over the fixed shuffle width, which a small
-    corpus pays for without needing. Measured at local[4]:
-    ``q_dedup_ngram_jaccard`` 2.67 s → 1.02 s at sf0.01 and 4.99 s →
-    2.64 s at sf0.1 with the small shape."""
+    too), and the postings materialize once as a plain eager
+    ``localCheckpoint`` with AQE on, as in ``containment_pairs`` (see
+    there for why the partitioning is not preserved); the self-join
+    legs re-shuffle the staged postings. Measured at local[4] against
+    the partition-preserving (AQE-off) stage: ``q_dedup_ngram_jaccard``
+    2.67 s → 1.02 s at sf0.01 and 4.99 s → 2.64 s at sf0.1. The
+    candidate-restricted path is left alone: its postings are
+    band-collision-sized and the broadcast join is the fast path (a
+    corpus repartition there would cost more than it saves)."""
     if candidate_pairs is None:
         from csv2db_spark.operators.stage import materialize_stage
 
@@ -381,10 +375,7 @@ def jaccard_pairs(
                 .select(key)
             )
             dd = dd.join(F.broadcast(hot), key, "anti")
-        dd = dd.sortWithinPartitions(key)
-        exploded = materialize_stage(
-            dd, preserve_partitioning=not plans.small_input(dd)
-        )
+        exploded = materialize_stage(dd)
     else:
         if max_doc_freq is not None:
             hot = (
@@ -1068,28 +1059,22 @@ def containment_pairs(
     consumer — the final AQE plan at sf0.1 carried 19 Exchanges / 21
     FileScans with only 2 reused. Now ONE ``repartition(key)`` exchange
     serves everything: the (doc_id, key) dedup and the df census both
-    reuse the key-clustering (aggregate keys ⊇ partition key), the
-    postings are sorted by ``key`` within partitions, and the prepared
-    table is materialized once (``operators/stage.materialize_stage``;
-    above the small-input threshold with ``preserve_partitioning=True``
-    — plain localCheckpoint under AQE reports UnknownPartitioning and
-    hands both exchanges and sorts right back, see stage.py), so the
-    SMJ legs need no exchange and no sort. Two corpus-sized exchanges
-    total: the repartition and the pair-count aggregate.
-    ``materialize='reliable'`` + ``stage_path`` stages via
-    durable parquet at cluster scale (same knob as curation v6);
+    reuse the key-clustering (aggregate keys ⊇ partition key), and the
+    prepared table is materialized once
+    (``operators/stage.materialize_stage``, an eager
+    ``localCheckpoint`` with AQE on). The checkpoint reports
+    UnknownPartitioning, so each SMJ leg re-shuffles and sorts the
+    staged postings. Preserving the partitioning instead
+    (``preserve_partitioning=True``) makes the legs exchange-free but
+    turns AQE off for the staging job, which then runs every partition
+    of the fixed shuffle width (32 partitions, 70 tasks for 580
+    documents at sf0.01) and costs more than the exchanges it saves.
+    Measured at local[4], build + run of the gate, median of 12
+    in-process rotations: 1.568 s preserved, 0.787 s AQE-on checkpoint,
+    0.955 s with no stage at all (the checkpoint won 12 of 12 against
+    the lazy plan). ``materialize='reliable'`` + ``stage_path`` stages
+    via durable parquet at cluster scale (same knob as curation v6);
     ``materialize='none'`` keeps the lazy recompute plan.
-
-    Why only above the threshold (``plans.small_input``): preserving
-    turns AQE off for the staging job, so that job runs at the fixed
-    shuffle width (32 partitions, 70 tasks for 580 documents at
-    sf0.01) and spends more than the two exchanges and sorts it saves
-    the self-join. Below the threshold
-    the stage is a plain eager ``localCheckpoint`` with AQE on and the
-    self-join re-shuffles the small postings. Measured at local[4],
-    build + run of the gate, median of 12 in-process rotations:
-    1.568 s preserved, 0.787 s AQE-on checkpoint, 0.955 s with no
-    stage at all (the checkpoint won 12 of 12 against the lazy plan).
 
     ``pair_filter='a_gt_b'`` restricts the join to doc_a > doc_b pairs
     BEFORE the pair-count aggregate (guide §2.3 — shuffle fewer bytes):
@@ -1114,14 +1099,8 @@ def containment_pairs(
             .select(key)
         )
         dd = dd.join(F.broadcast(hot), key, "anti")
-    dd = dd.sortWithinPartitions(key)
     if materialize != "none":
-        dd = materialize_stage(
-            dd,
-            mode=materialize,
-            path=stage_path,
-            preserve_partitioning=not plans.small_input(dd),
-        )
+        dd = materialize_stage(dd, mode=materialize, path=stage_path)
     sizes = dd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     e1, e2 = dd.alias("e1"), dd.alias("e2")
     # the postings self-join must NEVER broadcast: both sides are the
@@ -1129,9 +1108,7 @@ def containment_pairs(
     # intermediate undershoots badly enough to pick a corpus-sized
     # BroadcastExchange (observed OOM at sf0.1 inside a composed
     # pipeline). merge-hint pins the sort-merge plan — the only shape
-    # that survives 100 TB postings anyway (and over postings staged
-    # with their partitioning preserved it runs exchange-free and
-    # sort-free).
+    # that survives 100 TB postings anyway.
     if pair_filter not in (None, "a_gt_b"):
         raise ValueError(f"unknown pair_filter {pair_filter!r}")
     pair_cond = (

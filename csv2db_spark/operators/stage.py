@@ -71,19 +71,13 @@ def materialize_stage(
     so the build job does not depend on AQE coalescing; production
     sizes it via spark.sql.shuffle.partitions as usual.
 
-    The postings stages of ``llm/dedup.containment_pairs`` and
-    ``jaccard_pairs`` pass ``not plans.small_input(postings)``: the
-    AQE-off job runs every fixed-width partition (32 partitions and 70
-    tasks for 580 documents at sf0.01), which a small input pays for
-    without needing. Measured at local[4], with the AQE-on checkpoint
-    below the threshold: containment build + run 1.568 s → 0.787 s
-    (median of 12 in-process rotations), ``q_dedup_ngram_jaccard``
-    2.67 s → 1.02 s at sf0.01 and 4.99 s → 2.64 s at sf0.1. Above the
-    threshold the preserved stage is the only shape whose self-join
-    stays exchange-free at corpus size. ``operators/graph`` keeps
-    ``True`` at every size: its edge stage is joined once per loop
-    round, and preserving measured faster there (``q_dedup_clusters``
-    1.47 s vs 1.55 s at sf0.01, 1.83 s vs 1.95 s at sf0.1).
+    Only ``operators/graph`` passes ``True``: its edge stage is joined
+    once per loop round, and preserving measured faster there
+    (``q_dedup_clusters`` 1.47 s vs 1.55 s at sf0.01, 1.83 s vs 1.95 s
+    at sf0.1). The postings stages of ``llm/dedup.containment_pairs``
+    and ``jaccard_pairs`` are joined once, and there the AQE-off job
+    over every fixed-width partition cost more than the two exchanges
+    it saves (see their docstrings for the numbers).
     """
     if mode == "local":
         if not preserve_partitioning:

@@ -5,14 +5,13 @@ fully declarative so Catalyst applies column pruning and filter pushdown to
 the parquet reader (verify with ``df.explain``: ``PushedFilters`` /
 ``ReadSchema``).
 
-Every table but ``events`` is read with its declared schema
-(``SCHEMAS``), so building the scan runs no Spark job: an inferred
-parquet read launches one schema-inference job per call (measured at
-local[4]: 95 ms per call inferred, 17 ms declared). A declared column
-the file lacks would load as all-NULL, silently, so ``load_table``
-first compares the file's parquet footer (read on the driver with
-pyarrow, well under a millisecond) against the declaration and raises
-on any difference.
+Every table but ``events`` is read with the schema its parquet footer
+declares (read on the driver with pyarrow, well under a millisecond),
+so building the scan runs no Spark job: an inferred parquet read
+launches one schema-inference job per call (measured at local[4]:
+95 ms per call inferred, 17 ms with the footer's schema). The inferred
+read stays wherever the footer could not stand in for it (see
+``_footer_schema``).
 
 Special case — ``events``: the fixture stores ``ts`` as parquet
 TIMESTAMP(NANOS), which Spark's vectorized reader rejects outright
@@ -25,6 +24,9 @@ what DuckDB/pyarrow do on the same file.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,57 +46,6 @@ TABLES = (
     "embeddings",
 )
 
-
-def _schema(*cols: tuple[str, T.DataType]) -> T.StructType:
-    return T.StructType([T.StructField(n, t) for n, t in cols])
-
-
-_INT, _LONG, _DOUBLE = T.IntegerType(), T.LongType(), T.DoubleType()
-_STR, _NTZ = T.StringType(), T.TimestampNTZType()
-
-# The Spark schema each fixture file yields, as ``spark.read.parquet``
-# infers it (pinned at every scale factor in tests/test_fixture_contract.py).
-# ``events`` is absent: its ``ts`` column is rebuilt from whatever
-# physical type the file carries (see _load_events).
-SCHEMAS = {
-    "region": _schema(("r_regionkey", _INT), ("r_name", _STR)),
-    "nation": _schema(
-        ("n_nationkey", _INT), ("n_name", _STR), ("n_regionkey", _INT)
-    ),
-    "customer": _schema(
-        ("c_custkey", _LONG), ("c_name", _STR), ("c_nationkey", _INT),
-        ("c_acctbal", _DOUBLE), ("c_mktsegment", _STR),
-    ),
-    "supplier": _schema(
-        ("s_suppkey", _LONG), ("s_name", _STR), ("s_nationkey", _INT),
-        ("s_acctbal", _DOUBLE),
-    ),
-    "part": _schema(
-        ("p_partkey", _LONG), ("p_name", _STR), ("p_brand", _STR),
-        ("p_type", _STR), ("p_size", _INT), ("p_retailprice", _DOUBLE),
-    ),
-    "orders": _schema(
-        ("o_orderkey", _LONG), ("o_custkey", _LONG), ("o_orderstatus", _STR),
-        ("o_totalprice", _DOUBLE), ("o_orderdate", _NTZ),
-        ("o_orderpriority", _STR),
-    ),
-    "lineitem": _schema(
-        ("l_orderkey", _LONG), ("l_partkey", _LONG), ("l_suppkey", _LONG),
-        ("l_linenumber", _INT), ("l_quantity", _DOUBLE),
-        ("l_extendedprice", _DOUBLE), ("l_discount", _DOUBLE),
-        ("l_tax", _DOUBLE), ("l_returnflag", _STR), ("l_linestatus", _STR),
-        ("l_shipdate", _NTZ),
-    ),
-    "documents": _schema(
-        ("doc_id", _LONG), ("text", _STR), ("lang", _STR), ("source", _STR),
-        ("n_chars", _LONG),
-    ),
-    "embeddings": _schema(
-        ("vec_id", _LONG), ("embedding", T.ArrayType(T.FloatType())),
-        ("label", _INT),
-    ),
-}
-
 # Dimension tables small enough to broadcast at any realistic scale factor.
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
@@ -104,6 +55,19 @@ _NS_TO_NTZ = (
     "make_interval(0, 0, 0, 0, 0, 0, CAST({c} DIV 1000 AS DECIMAL(26,6)) / 1000000)"
 )
 
+# Arrow types whose Spark reading ``_reads_alike`` vouches for.
+_NESTED = (pa.types.is_list, pa.types.is_large_list, pa.types.is_struct, pa.types.is_map)
+_LEAVES = (
+    pa.types.is_boolean,
+    pa.types.is_signed_integer,
+    pa.types.is_float32,
+    pa.types.is_float64,
+    pa.types.is_string,
+    pa.types.is_large_string,
+    pa.types.is_date,
+    pa.types.is_decimal128,
+)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -111,32 +75,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
     path = f"{sf_dir}/{name}.parquet"
-    schema = SCHEMAS[name]
-    _check_footer(name, path, schema)
-    return spark.read.schema(schema).parquet(path)
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
-def _check_footer(name: str, path: str, declared: T.StructType) -> None:
-    """Raise ``ValueError`` naming the table and column unless the
-    parquet footer of ``path`` holds exactly the declared columns with
-    the declared types. Spark reads by name, so column order does not
-    matter; nullability does not either, since every parquet column
-    reads as nullable."""
-    footer = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
-    found = {f.name: f.dataType for f in footer}
-    for field in declared:
-        got = found.pop(field.name, None)
-        if got != field.dataType:
-            has = "no such column" if got is None else got.simpleString()
-            raise ValueError(
-                f"table {name!r}: column {field.name!r} is declared "
-                f"{field.dataType.simpleString()}, but {path} has {has}"
-            )
-    if found:
-        raise ValueError(
-            f"table {name!r}: column {next(iter(found))!r} in {path} "
-            f"is not declared"
-        )
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The Spark schema of the parquet file at ``path`` from its footer,
+    or None where Spark's inference could read it otherwise: ``path``
+    is not a local file (a directory of part files, an ``hdfs://`` or
+    ``file:`` URI), pyarrow cannot read it, or a column has a type
+    outside ``_reads_alike``."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        arrow = pq.read_schema(path)
+    except (OSError, pa.ArrowException):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    if not all(_reads_alike(f.type, ntz == "true") for f in arrow):
+        return None
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+
+
+def _reads_alike(t: pa.DataType, ntz: bool) -> bool:
+    """Whether Spark's parquet inference reads a column of arrow type
+    ``t`` as ``from_arrow_schema`` converts it. Not so, among others,
+    for unsigned ints (widened by Spark), durations (bigint), NULL
+    columns (int), timestamp[ns] (INT96 or TIMESTAMP(NANOS) in the
+    file: LTZ or an error), unannotated binary (string under
+    ``binaryAsString``), or naive timestamps when NTZ inference is off."""
+    if pa.types.is_timestamp(t):
+        return t.unit in ("ms", "us") and (ntz or t.tz is not None)
+    if pa.types.is_dictionary(t):
+        return _reads_alike(t.value_type, ntz)
+    if any(is_(t) for is_ in _NESTED):
+        return all(_reads_alike(t.field(i).type, ntz) for i in range(t.num_fields))
+    return any(is_(t) for is_ in _LEAVES)
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,8 +7,6 @@ types, this test fails in ONE obvious place instead of as a pile of
 unrelated stack traces.
 
 The readers that consume these contracts:
-- sources/tables.py:SCHEMAS (the declared Spark schema of every table
-  but events; load_table checks each file's footer against it)
 - sources/tables.py:_load_events (nanos-bigint vs NTZ branch)
 - streaming/ops.py:events_stream (same branch, streaming side)
 - llm/similarity.py (embedding is list<float>)
@@ -16,13 +14,14 @@ The readers that consume these contracts:
 
 from __future__ import annotations
 
+import datetime
 import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from csv2db_spark.sources.tables import SCHEMAS, TABLES, load_table
+from csv2db_spark.sources.tables import TABLES, load_table
 
 # table -> {column: physical arrow type string}. events.ts may be either
 # of the two types the fixture has actually shipped with; both are
@@ -112,47 +111,94 @@ def test_fixture_physical_schema(sf_dir, table):
         )
 
 
+def _load_table_jobs(spark, root, name):
+    """load_table's frame, and the Spark jobs building it launched."""
+    sc = spark.sparkContext
+    group = f"load_table_{abs(hash(root))}_{name}"
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, root, name)
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return df, sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
-def test_declared_schemas_equal_inferred(spark, sf_dir, sf):
-    """Each declared schema is the one Spark infers from the file, at
-    every scale factor, and load_table builds every declared table
-    without launching a Spark job (an inferred read launches one)."""
+def test_footer_schemas_equal_inferred(spark, sf_dir, sf):
+    """load_table builds every fixture table but events with the schema
+    Spark infers from the file, at every scale factor, without
+    launching a Spark job (an inferred read launches one)."""
     root = os.path.join(os.path.dirname(sf_dir), sf)
     if not os.path.isdir(root):
         pytest.skip(f"no fixtures at {root}")
-    assert set(SCHEMAS) == set(TABLES) - {"events"}
-    sc = spark.sparkContext
-    for name, schema in SCHEMAS.items():
-        assert spark.read.parquet(f"{root}/{name}.parquet").schema == schema, name
-        group = f"load_table_{sf}_{name}"
-        sc.setJobGroup(group, group)
-        try:
-            df = load_table(spark, root, name)
-        finally:
-            sc.setJobGroup("", "")
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        assert df.schema == schema, name
-        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+    for name in TABLES:
+        if name == "events":
+            continue
+        df, jobs = _load_table_jobs(spark, root, name)
+        assert df.schema == spark.read.parquet(f"{root}/{name}.parquet").schema, name
+        assert jobs == [], name
+
+
+_US = datetime.datetime(2024, 1, 2, 3, 4, 5, 6)
 
 
 @pytest.mark.parametrize(
-    "rewrite, column",
+    "column, footer_read",
     [
-        # read with the declared schema, a dropped column would load
-        # as 500 NULLs instead of failing
-        (lambda t: t.drop_columns(["n_chars"]), "n_chars"),
-        (
-            lambda t: t.set_column(0, "doc_id", t["doc_id"].cast(pa.int32())),
-            "doc_id",
-        ),
-        (lambda t: t.append_column("extra", t["n_chars"]), "extra"),
+        (pa.array([[1.5]], pa.list_(pa.float32())), True),
+        (pa.array([[("k", 1)]], pa.map_(pa.string(), pa.int64())), True),
+        (pa.array([{"a": 1}]), True),
+        (pa.array(["a"]).dictionary_encode(), True),
+        (pa.array([_US], pa.timestamp("ms")), True),
+        (pa.array([_US], pa.timestamp("us", tz="UTC")), True),
+        # types Spark infers otherwise than from_arrow_schema converts
+        (pa.array([_US], pa.timestamp("us")), False),  # written as INT96
+        (pa.array([1], pa.uint32()), False),
+        (pa.array([1], pa.duration("us")), False),
+        (pa.array([b"a"]), False),
+        (pa.nulls(1), False),
     ],
-    ids=["dropped", "int32", "extra"],
+    ids=[
+        "list", "map", "struct", "dictionary", "timestamp_ms", "timestamp_utc",
+        "int96", "uint32", "duration", "binary", "null",
+    ],
 )
-def test_load_table_rejects_a_file_unlike_its_declaration(
-    spark, sf_dir, tmp_path, rewrite, column
+def test_load_table_reads_what_spark_infers(
+    spark, tmp_path, column, footer_read
 ):
+    """Any column type loads with the schema and rows Spark infers:
+    through the footer when its conversion agrees, else through the
+    inferred read (one Spark job)."""
+    int96 = pa.types.is_timestamp(column.type) and not footer_read
+    pq.write_table(
+        pa.table({"doc_id": pa.array([7], pa.int64()), "c": column}),
+        tmp_path / "documents.parquet",
+        use_deprecated_int96_timestamps=int96,
+    )
+    df, jobs = _load_table_jobs(spark, str(tmp_path), "documents")
+    inferred = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert df.schema == inferred.schema
+    assert df.collect() == inferred.collect()
+    assert (jobs == []) == footer_read
+
+
+def test_load_table_has_no_column_the_file_lacks(spark, sf_dir, tmp_path):
+    """A fixture copy without n_chars loads without it, rather than with
+    an all-NULL n_chars as a read with a fixed schema would."""
     table = pq.read_table(f"{sf_dir}/documents.parquet")
-    pq.write_table(rewrite(table), tmp_path / "documents.parquet")
-    with pytest.raises(ValueError, match=f"table 'documents': column '{column}'"):
-        load_table(spark, str(tmp_path), "documents")
+    pq.write_table(table.drop_columns(["n_chars"]), tmp_path / "documents.parquet")
+    df = load_table(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "text", "lang", "source"]
+    assert df.count() == table.num_rows
+
+
+def test_load_table_reads_a_spark_written_directory(spark, sf_dir, tmp_path):
+    """A directory of part files, as Spark writes a table, is no file
+    pyarrow opens alone: load_table reads it the way the inferred read
+    does."""
+    docs = load_table(spark, sf_dir, "documents")
+    docs.repartition(3).write.parquet(str(tmp_path / "documents.parquet"))
+    df = load_table(spark, str(tmp_path), "documents")
+    assert df.schema == docs.schema
+    assert sorted(df.collect()) == sorted(docs.collect())

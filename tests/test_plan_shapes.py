@@ -312,71 +312,6 @@ def test_jaccard_unrestricted_postings_join_never_broadcasts(spark, sf_dir):
     assert "SortMergeJoin" in plan
 
 
-def _plan_nodes(node):
-    """Every node of an executed plan, descending into AQE's final plan
-    and through its query stages to the exchanges they wrap."""
-    yield node
-    name = node.nodeName()
-    if name == "AdaptiveSparkPlan":
-        kids = [node.executedPlan()]
-    elif "QueryStage" in name:
-        kids = [node.plan()]
-    else:
-        seq = node.children()
-        kids = [seq.apply(i) for i in range(seq.size())]
-    for kid in kids:
-        yield from _plan_nodes(kid)
-
-
-def _postings_leg_exchanges(df) -> list[int]:
-    """Exchanges under each leg of the postings self-join (the
-    sort-merge join on the shingle key ``s``) of an executed ``df``."""
-    (smj,) = [
-        n
-        for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
-        if n.nodeName() == "SortMergeJoin"
-        and n.verboseString(1).startswith("SortMergeJoin [s#")
-    ]
-    legs = smj.children()
-    return [
-        sum("Exchange" in n.nodeName() for n in _plan_nodes(legs.apply(i)))
-        for i in range(legs.size())
-    ]
-
-
-@pytest.mark.parametrize(
-    "name, join_in_plan",
-    [
-        ("q_dedup_containment", True),
-        ("q_dedup_ngram_jaccard", True),
-        # v6 checkpoints the containment survivors while it is built, so
-        # its postings join runs in that job, not in the frame's plan
-        ("q_pipeline_curation_v6", False),
-    ],
-)
-def test_postings_stage_twins_equal(spark, sf_dir, plan_shape, name, join_in_plan):
-    """The postings stage follows plans.small_input: at the default
-    threshold the fixture postings are small and stage as a plain
-    AQE-on checkpoint, so each self-join leg re-shuffles them; at
-    threshold 0 they stage with their partitioning preserved and
-    neither leg has an Exchange. Both shapes give the same rows, bit
-    for bit."""
-    from csv2db_spark import plans
-
-    rows, legs = {}, {}
-    for shape in (plans.ADAPTIVE_SMALL_DEFAULT, "scale"):
-        with plan_shape(shape):
-            df = QUERIES[name].fn(spark, sf_dir)
-        rows[shape] = sorted((tuple(r) for r in df.collect()), key=repr)
-        if join_in_plan:
-            legs[shape] = _postings_leg_exchanges(df)
-    assert rows[plans.ADAPTIVE_SMALL_DEFAULT] == rows["scale"]
-    assert rows["scale"], "the gate must produce rows to compare"
-    if join_in_plan:
-        assert legs["scale"] == [0, 0]
-        assert legs[plans.ADAPTIVE_SMALL_DEFAULT] == [1, 1]
-
-
 def test_shingle_table_is_window_free(spark, sf_dir):
     """The n-gram build must stay a pure per-row codegen projection
     (arrays_zip of shifted slices + explode): the earlier posexplode +
