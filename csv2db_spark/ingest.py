@@ -37,14 +37,15 @@ from __future__ import annotations
 
 import atexit
 import codecs
-import csv as _pycsv
 import io
 import itertools
+import json
 import logging
 import os
 import shutil
 import sys
 import tempfile
+from types import SimpleNamespace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,6 +95,56 @@ def _normalize_charset(encoding: str) -> tuple[str, bool]:
     return (native, False) if native else (encoding, True)
 
 
+# Java's String.trim strips these; Spark's line-mode scan skips a line
+# that trims to nothing (CSVExprUtils.filterCommentAndEmpty).
+_JAVA_BLANK = "".join(map(chr, range(0x21)))
+# JVM class handles and parser settings, resolved once per gateway: each
+# ``jvm.a.b.C`` lookup costs a gateway round trip per package segment.
+_JVM_CSV: dict = {}
+
+
+def _jvm_csv(spark: SparkSession) -> SimpleNamespace:
+    gateway = spark.sparkContext._gateway
+    h = _JVM_CSV.get(gateway)
+    if h is None:
+        jvm = spark._jvm
+        h = _JVM_CSV[gateway] = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            Charset=jvm.java.nio.charset.Charset,
+            BufferedReader=jvm.java.io.BufferedReader,
+            InputStreamReader=jvm.java.io.InputStreamReader,
+            CsvParser=jvm.com.univocity.parsers.csv.CsvParser,
+            CSVOptions=jvm.org.apache.spark.sql.catalyst.csv.CSVOptions,
+            to_scala_map=jvm.org.apache.spark.api.python.PythonUtils.toScalaMap,
+            json=jvm.com.fasterxml.jackson.databind.ObjectMapper(),
+            # built once: a factory loads every codec class it lists
+            codecs=jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(
+                spark._jsparkSession.sessionState().newHadoopConf()
+            ),
+            settings={},
+        )
+    return h
+
+
+def _tokenizer(h: SimpleNamespace, delimiter: str, encoding: str, multiline: bool):
+    """A univocity parser under the settings Spark's CSV scan derives
+    from ``scan_csv``'s options (``CSVOptions.asParserSettings``), so a
+    record splits here as Spark's header check splits it."""
+    key = (delimiter, encoding, multiline)
+    settings = h.settings.get(key)
+    if settings is None:
+        opts = _scan_options(True, delimiter, encoding, "FAILFAST", multiline)
+        settings = h.settings[key] = h.CSVOptions(
+            h.to_scala_map(opts), False, "UTC"
+        ).asParserSettings()
+    return h.CsvParser(settings)
+
+
+def _fields(h: SimpleNamespace, record) -> list[str] | None:
+    """A Java ``String[]`` as a list, in one gateway round trip."""
+    return None if record is None else json.loads(h.json.writeValueAsString(record))
+
+
 def first_record(
     spark: SparkSession,
     path: str,
@@ -111,26 +162,26 @@ def first_record(
     a glob is expanded, a directory is listed (not recursively), names
     starting with ``_`` or ``.`` are skipped as Spark's file index skips
     them, and files are read in sorted order until one holds a record.
-    The record is decoded by the JVM charset the scan uses; one that
-    holds U+FFFD, what a byte invalid in ``encoding`` decodes to, raises
-    ``ValueError`` instead of naming a column after it. A UTF-8 BOM is
-    dropped. With ``multiline`` a quoted newline continues the record;
-    otherwise the record is the first non-blank line, as the line-split
-    scan reads it."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
+    The record is decoded by the JVM charset the scan uses and split by
+    the univocity parser under the scan's own settings; one that holds
+    U+FFFD, what a byte invalid in ``encoding`` decodes to, raises
+    ``ValueError`` instead of naming a column after it. With
+    ``multiline`` the parser reads the stream as Spark's multi-line scan
+    does (a quoted newline continues the record, a UTF-8 BOM is
+    skipped); otherwise the record is the first line that is not blank,
+    less a BOM, as the line-split scan reads it."""
+    h = _jvm_csv(spark)
     conf = spark._jsparkSession.sessionState().newHadoopConf()
-    hpath = Path(path)
+    hpath = h.Path(path)
     fs = hpath.getFileSystem(conf)
-    codecs_ = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
-    charset = jvm.java.nio.charset.Charset.forName(encoding)
+    charset = h.Charset.forName(encoding)
 
     def files():
         # globStatus returns sorted statuses; they are walked lazily, so
         # only those up to the first file with a record cross the gateway
         for st in fs.globStatus(hpath) or []:
             if st.isDirectory():
-                yield from fs.globStatus(Path(st.getPath(), "*"))
+                yield from fs.globStatus(h.Path(st.getPath(), "*"))
             else:
                 yield st
 
@@ -140,22 +191,21 @@ def first_record(
             continue
         stream = fs.open(fpath)
         try:
-            codec = codecs_.getCodec(fpath)
+            codec = h.codecs.getCodec(fpath)
             if codec is not None:
                 stream = codec.createInputStream(stream)
-            reader = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(stream, charset)
-            )
-            reader.mark(1)
-            if reader.read() != 0xFEFF:
-                reader.reset()
-            lines = iter(reader.readLine, None)
+            parser = _tokenizer(h, delimiter, encoding, multiline)
             if multiline:
-                recs = _pycsv.reader((s + "\n" for s in lines), delimiter=delimiter)
-                rec = next((r for r in recs if r), None)
+                parser.beginParsing(stream, charset)
+                rec = _fields(h, parser.parseNext())
+                parser.stopParsing()
             else:
-                line = next((s for s in lines if s), None)
-                rec = line and next(_pycsv.reader([line], delimiter=delimiter))
+                reader = h.BufferedReader(h.InputStreamReader(stream, charset))
+                lines = iter(reader.readLine, None)
+                first = next(lines, "").removeprefix("\ufeff")
+                lines = itertools.chain([first], lines)
+                line = next((s for s in lines if s.strip(_JAVA_BLANK)), None)
+                rec = line and _fields(h, parser.parseLine(line))
         finally:
             stream.close()
         if rec:
@@ -167,6 +217,21 @@ def first_record(
 
 def _string_schema(names: list[str]) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+
+
+def _scan_options(
+    has_header: bool, delimiter: str, encoding: str, mode: str, multiline: bool
+) -> dict[str, str]:
+    return {
+        "header": str(has_header).lower(),
+        "sep": delimiter,
+        "encoding": encoding,
+        "mode": mode,
+        "quote": '"',
+        "escape": '"',
+        "multiLine": str(multiline).lower(),
+        "enforceSchema": "false",
+    }
 
 
 def scan_csv(
@@ -191,16 +256,7 @@ def scan_csv(
     that file's columns by position."""
     df = (
         reader.schema(_string_schema(names))
-        .options(
-            header=str(has_header).lower(),
-            sep=delimiter,
-            encoding=encoding,
-            mode=mode,
-            quote='"',
-            escape='"',
-            multiLine=str(multiline).lower(),
-            enforceSchema="false",
-        )
+        .options(**_scan_options(has_header, delimiter, encoding, mode, multiline))
         .csv(path)
     )
     return df.select(*[F.coalesce(F.col(n), F.lit("")).alias(n) for n in df.columns])
@@ -393,7 +449,8 @@ def read_csv_stdin(
     first = next(records, None)
     if first is None:
         raise ValueError("empty CSV input: <stdin>")
-    fields = next(_pycsv.reader(io.StringIO(first), delimiter=delimiter))
+    h = _jvm_csv(spark)
+    fields = _fields(h, _tokenizer(h, delimiter, "UTF-8", True).parseLine(first))
     if has_header:
         names = fields
     else:

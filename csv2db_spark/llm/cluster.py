@@ -272,10 +272,10 @@ def covariance_matrix(
     # (twice, as si/sj) the per-dim sums, and without a boundary each
     # consumer replanned the whole corpus MapInPandas pass — the sf0.1
     # plan ran THREE full Arrow passes over the embeddings for one
-    # fold (round-14, guide §2.4). The table is |batches| x 2080 rows
-    # of five numbers — trivially executor-cache-sized at any corpus
-    # scale, which is what makes the "corpus touched once" claim above
-    # actually hold in the physical plan.
+    # fold. The table is |batches| x 2080 rows of five numbers —
+    # trivially executor-cache-sized at any corpus scale, which is what
+    # makes the "corpus touched once" claim above actually hold in the
+    # physical plan.
     partials = q.mapInPandas(
         gram_partials, schema="i int, j int, s long, si long, n long"
     ).localCheckpoint(eager=True)

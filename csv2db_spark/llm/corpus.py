@@ -41,7 +41,7 @@ def shingles(toks: Column, n: int = 3) -> Column:
     access + one concat_ws. The earlier sequence + per-index
     element_at×n body evaluated interpreted per element and measured
     8.7× slower at sf0.1 (2.95 → 0.34 s for the size-only projection,
-    element-identical output; PLANS.md round-8)."""
+    element-identical output)."""
     m = F.size(toks) - (n - 1)
     z = F.arrays_zip(*[F.slice(toks, j + 1, m).alias(f"t{j}") for j in range(n)])
     make = F.array_distinct(

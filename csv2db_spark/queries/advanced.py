@@ -1,4 +1,4 @@
-"""Round-2 operator additions, each oracle-checked:
+"""Operator additions, each oracle-checked:
 
 - k-means (assign + one exact Lloyd step) over embeddings — an "ML"
   operator the gate can hash-verify because every distance/mean is exact
@@ -256,7 +256,7 @@ def q_src_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = spark.createDataFrame(
         [(i, f"s{i}") for i in range(10, 20)], "id long, y string"
     )
-    # repartition(1), NOT coalesce(1) (round-14, guide §2.6): coalescing a
+    # repartition(1), NOT coalesce(1): coalescing a
     # parallelized local collection makes ONE task compute all
     # defaultParallelism parent partitions sequentially, each paying a
     # Python-worker round-trip (~5 s/write measured at local[32]);
@@ -1589,7 +1589,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded label propagation (operators/graph.label_propagation) over
     the supplier↔customer trade graph: every 10th supplier is seeded
     with its nation, then two synchronous rounds spread the label —
-    round 1 reaches the customers of seeded suppliers, round 2 the
+    the first reaches the customers of seeded suppliers, the second the
     remaining suppliers through shared customers. Modal-label voting
     with (count desc, label) tie-break and clamped seeds make every
     assignment deterministic, so the oracle unrolls both rounds in SQL.

@@ -240,7 +240,7 @@ def q_agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB switch to approx_percentile (t-digest) and accept the rows-only
     gate."""
     li = load_table(spark, sf_dir, "lineitem")
-    # ONE percentile buffer via the array form (round-14, guide §1.2):
+    # ONE percentile buffer via the array form:
     # four scalar percentile() aggregates each collected the full group
     # into their own buffer — 4x the state and merge traffic for the
     # same sorted walk; the values are identical (same function, same

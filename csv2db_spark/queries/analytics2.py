@@ -1681,10 +1681,9 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     flags = gopher_quality(mixed).where("keep").select("doc_id", "n_words")
     quality = mixed.join(flags, "doc_id")
     lm = bigram_lm_scores(quality)
-    # Round-14 (guide §2.5): the original plan ranked with
-    # row_number() OVER (ORDER BY prob, doc_id) — an UNPARTITIONED
-    # window, i.e. the whole quality-filtered corpus total-sorted on
-    # ONE task. The cutpoint rank over a constant group computes the
+    # Ranking with row_number() OVER (ORDER BY prob, doc_id) — an
+    # UNPARTITIONED window — total-sorts the whole quality-filtered
+    # corpus on ONE task. The cutpoint rank over a constant group computes the
     # identical (prob, doc_id) rank with a 4096-cell histogram +
     # bounded tie sorts. The scored table is checkpointed first: the
     # cutpoint plan has three consumers (histogram, tie-rank leg,
@@ -2000,7 +1999,7 @@ def q_events_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact Jaccard — the discretized-trajectory similarity of the top-k
     similarity-search literature, on behavioral cells.
 
-    Shape (round-8 rewrite, measured): the cell vocabulary is BOUNDED
+    Shape (measured): the cell vocabulary is BOUNDED
     (|types|·24), so each user's cell set packs into a fixed-width
     BITMAP (a few plain long columns — the bitset-join trick this repo
     uses for prefilters, applied to the similarity itself). Pairwise
@@ -2009,7 +2008,7 @@ def q_events_user_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(AND) popcounts: intersection and union are exact longs,
     one IEEE division each. The previous cell-equi-join shape generated
     Σ_c users(c)² ≈ 1e9 pre-aggregation rows for the same ~12.5M real
-    pairs (14.6 s at sf0.1 vs ~2 s for this plan — PLANS.md round-8).
+    pairs (14.6 s at sf0.1 vs ~2 s for this plan).
     At web scale all-pairs is the wrong tool regardless — the LSH/ANN
     family is the scale path; this gate is the exact dense-cohort
     answer, linear in pairs with no join blow-up."""
@@ -2749,8 +2748,8 @@ def q_events_ab_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------- driver-visible approx-gate bounds
-# Round-6 continuation of the empty-oracle upgrade (see q_sim_ann_lsh_recall
-# in queries/llm.py): the PQ family and PCA stay rows-only for their raw
+# The empty-oracle pattern of q_sim_ann_lsh_recall (queries/llm.py): the
+# PQ family and PCA stay rows-only for their raw
 # outputs, but their accuracy/algebra contracts become hash-checked
 # violations views against an empty oracle.
 

@@ -760,13 +760,13 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = os.path.join(work, "in")
     os.makedirs(stage)
     try:
-        # one corpus pass stages all four batch files (round-15, guide
-        # §2.4): the per-batch filter+coalesce(1) loop it replaces
-        # scanned the corpus FOUR times (measured 1.0 -> 0.37 s warm at
-        # sf0.1). partitionBy strips the _b routing column, so each
-        # staged file carries the identical (doc_id, text) rows the
-        # filter produced — row order differs, which the signature pass
-        # and the oracle are both invariant to.
+        # one corpus pass stages all four batch files: the per-batch
+        # filter+coalesce(1) loop it replaces scanned the corpus FOUR
+        # times (measured 1.0 -> 0.37 s warm at sf0.1). partitionBy
+        # strips the _b routing column, so each staged file carries the
+        # identical (doc_id, text) rows the filter produced — row order
+        # differs, which the signature pass and the oracle are both
+        # invariant to.
         tmp = os.path.join(work, "w")
         (
             aug.withColumn("_b", (F.col("doc_id") % 4).cast("int"))

@@ -696,7 +696,7 @@ def q_tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 4: the remaining TPC-H shapes. Q3/Q5/Q6/Q13/Q15/Q18 are direct
+# The remaining TPC-H shapes. Q3/Q5/Q6/Q13/Q15/Q18 are direct
 # analogues; Q2/Q11/Q20 need the partsupp table the fixture does not ship,
 # so their *optimizer shapes* (correlated per-group MIN, global-fraction
 # threshold, nested above-average semi chain) are kept and the supply facts

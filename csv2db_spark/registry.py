@@ -44,23 +44,15 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
 
 
 # The grading driver's correctness gate checks the FIRST 50 entries of
-# __spark_entry__.queries() in dict order.  Round-15 rotation (VERDICT
-# r14 item 7, the standing freshness plan): after the green r14 the
-# oldest driver records sit at r08 — (a) ALL 34 gates whose newest
-# green record is r08 (computed from the CORRECTNESS_r01..r14 union)
-# rotate in, including q_stream_minhash_dedup (whose store layout this
-# round rebuilds); (b) 16 r09-stratum picks fill the window, chosen by
-# the touched-operator convention: the two _revenue() consumers the
-# r14 verdict ordered re-proven (q_join_inner_topk,
-# q_join_multiway_revenue — the latter's newest record is r12, taken
-# anyway per the verdict), the adaptive-rank/top-k consumers this
-# round changes (q_sim_cosine_topk, q_pipeline_curation_v2,
-# q_pipeline_curation_v6), the r14-touched aggregates/graph/simhash
-# gates (q_agg_percentiles, q_graph_triangles, q_dedup_simhash), and
-# the remaining oldest r09 names across families. After a green r15
-# no gate's newest record predates r09.
+# __spark_entry__.queries() in dict order, so the window is spent where
+# a fresh check is worth most: (a) every gate whose last green driver
+# record is the oldest, and (b) gates whose operators changed most
+# recently — the two _revenue() consumers, the adaptive-rank/top-k
+# consumers, the aggregates/graph/simhash gates — then the oldest
+# remaining names across families. Rows-only gates (no oracle) are never
+# placed here: they can only record ``no_oracle``.
 CHECK_FIRST: tuple[str, ...] = (
-    # (a) the complete r08-last-green stratum (34)
+    # (a) the gates with the oldest green record (34)
     "q_curate_decontaminate_semantic", "q_curate_encoding_anomalies",
     "q_curate_leakage_safe_split", "q_ingest_csv_gzip",
     "q_ingest_tsv_delimiter", "q_join_asof_forward",
@@ -78,7 +70,7 @@ CHECK_FIRST: tuple[str, ...] = (
     "q_stream_minhash_dedup", "q_stream_trend_rollup",
     "q_text_code_detect", "q_text_hashed_classifier",
     "q_text_sentence_split",
-    # (b) 16 r09-stratum picks (touched-operator convention)
+    # (b) recently changed operators, then the next-oldest records (16)
     "q_join_inner_topk", "q_join_multiway_revenue",
     "q_sim_cosine_topk", "q_pipeline_curation_v2",
     "q_pipeline_curation_v6", "q_agg_groupby_multi",

@@ -978,9 +978,8 @@ def stream_minhash_dedup(
     partitioning of the corpus equals the from-scratch whole-corpus
     run — which is exactly what the gate's oracle checks.
 
-    State layout under ``work_dir`` (round-15, VERDICT r14 item 5 —
-    the band-key-partitioned store the r14 docstring named but did not
-    build): ``sig/b=N/dk=H`` (per-batch signatures, sub-partitioned by
+    State layout under ``work_dir`` (a band-key-partitioned store):
+    ``sig/b=N/dk=H`` (per-batch signatures, sub-partitioned by
     a doc-id hash bucket), ``bands/b=N/bk=H`` (per-batch PRECOMPUTED
     band rows, sub-partitioned by a band-key hash bucket) and
     ``pairs/b=N`` (per-batch verified pairs). Idempotence needs no
@@ -1135,7 +1134,7 @@ def minhash_dedup_batch_handler(
             # bounded candidate set consumed FIVE times below (the dk
             # probe, both id legs + both verify joins); without the
             # boundary each consumer replanned the whole band join over
-            # the store (round-14, guide §2.4)
+            # the store
             .localCheckpoint(eager=True)
         )
         ids = (

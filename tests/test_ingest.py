@@ -415,6 +415,39 @@ def test_header_quirks_load_under_the_header_check(spark, tmp_path):
         assert [(r[0], r[-1]) for r in df.collect()] == [("1", "2")], text
 
 
+@pytest.mark.parametrize(
+    "text, names",
+    [('"a"b,c\n1,2\n', ['"a"b', "c"]), ('"a" ,b\n1,2\n', ["a", "b"])],
+)
+def test_stray_quote_headers_split_as_the_header_check_splits_them(
+    spark, tmp_path, stdin, text, names
+):
+    """The header is split by univocity under the scan's own settings,
+    as Spark's header check splits it: text after a closing quote stays
+    in the name, a space after it is dropped. A file read either way and
+    stdin load under the same names."""
+    p = tmp_path / "q.csv"
+    p.write_text(text)
+    for multiline in (False, True):
+        df = read_csv(spark, str(p), multiline=multiline)
+        assert df.columns == names, multiline
+        assert [tuple(r) for r in df.collect()] == [("1", "2")]
+    stdin(text)
+    df = read_csv(spark, "-")
+    assert df.columns == names
+    assert [tuple(r) for r in df.collect()] == [("1", "2")]
+
+
+def test_blank_lines_before_the_header_are_skipped(spark, tmp_path):
+    """Spark's line-split scan skips lines that trim to nothing before
+    the header, so the header read skips them too."""
+    p = tmp_path / "b.csv"
+    p.write_text("\n  \t\na,b\n1,2\n")
+    df = read_csv(spark, str(p))
+    assert df.columns == ["a", "b"]
+    assert [tuple(r) for r in df.collect()] == [("1", "2")]
+
+
 def test_read_csv_builds_without_a_spark_job(spark, tmp_path):
     """Building the frame reads the header on the driver and runs no
     Spark job, for a file, a directory, a glob and a gzipped file."""
