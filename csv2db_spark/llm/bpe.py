@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv2db_spark.operators import stage
+
 END = "</w>"  # word-end marker: merges never cross word boundaries
 
 
@@ -97,7 +99,8 @@ def bpe_train(
     """Learn ``n_merges`` BPE merges from the corpus. Returns
     [(rank, left, right, weighted_count), ...] in merge order."""
     spark = docs.sparkSession
-    vocab = _word_vocab(docs, text_col).localCheckpoint()
+    # loop: the first merge round's vocabulary
+    vocab = _word_vocab(docs, text_col).transform(stage.materialize_stage)
     merges: list[tuple[int, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         n1 = F.greatest(F.size("syms") - 1, F.lit(0))
@@ -119,9 +122,10 @@ def bpe_train(
         row = best[0]
         left, right, cnt = row.p.a, row.p.b, row.cnt
         merges.append((rank, left, right, int(cnt)))
+        # loop: each round reads only the previous round's vocabulary
         vocab = vocab.select(
             _apply_merge(F.col("syms"), left, right).alias("syms"), "n"
-        ).localCheckpoint()
+        ).transform(stage.materialize_stage)
     return merges
 
 

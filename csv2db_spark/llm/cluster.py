@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from csv2db_spark.llm.similarity import QUANT, cos_from_parts, dot_iv, quantize
+from csv2db_spark.operators import stage
 
 
 def kmeans_assign(
@@ -268,17 +269,11 @@ def covariance_matrix(
                 }
             )
 
-    # checkpoint the partials: they are consumed by the gram fold AND
-    # (twice, as si/sj) the per-dim sums, and without a boundary each
-    # consumer replanned the whole corpus MapInPandas pass — the sf0.1
-    # plan ran THREE full Arrow passes over the embeddings for one
-    # fold. The table is |batches| x 2080 rows of five numbers —
-    # trivially executor-cache-sized at any corpus scale, which is what
-    # makes the "corpus touched once" claim above actually hold in the
-    # physical plan.
+    # reuse: the gram fold and the per-dim sums (twice, as si/sj) read
+    # the partials; each would run its own Arrow pass over the corpus
     partials = q.mapInPandas(
         gram_partials, schema="i int, j int, s long, si long, n long"
-    ).localCheckpoint(eager=True)
+    ).transform(stage.materialize_stage)
     gram = partials.groupBy("i", "j").agg(
         F.sum("s").alias("gram_scaled"), F.sum("n").alias("n")
     )

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from csv2db_spark import plans
 from csv2db_spark.llm.dedup import shingle_table
+from csv2db_spark.operators import stage
 
 # Patterns deliberately restricted to syntax with identical semantics in
 # Java regex (Spark) and RE2 (DuckDB): character classes, +, {m,}, no
@@ -1099,9 +1100,7 @@ def token_budget_sample(
     prefix — the admission key is uniform by construction, so the 256
     buckets split every group's sort ~evenly (bit-equal,
     tests/test_runtime_ops.py). That plan consumes the sized table
-    (4 narrow columns, no text) twice (histogram + join leg), so it is
-    checkpointed first; each consumer would otherwise replan the
-    upstream tokenize."""
+    (4 narrow columns, no text) twice (histogram + join leg)."""
     from csv2db_spark.llm.corpus import tokens
     from csv2db_spark.operators.ranking import _grouped_prefix_sum
 
@@ -1114,7 +1113,8 @@ def token_budget_sample(
         F.md5(F.col("doc_id").cast("string")).alias("_rk"),
     )
     if not small:
-        sized = sized.localCheckpoint(eager=True)
+        # reuse: the histogram and the join leg read the sized table
+        sized = stage.materialize_stage(sized)
     sized = _grouped_prefix_sum(
         sized,
         ["group"],

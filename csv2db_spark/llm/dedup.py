@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from csv2db_spark.llm.corpus import tokens
+from csv2db_spark.operators import stage
 
 # ------------------------------------------------------------------- exact
 
@@ -359,8 +360,6 @@ def jaccard_pairs(
     band-collision-sized and the broadcast join is the fast path (a
     corpus repartition there would cost more than it saves)."""
     if candidate_pairs is None:
-        from csv2db_spark.operators.stage import materialize_stage
-
         dd = exploded.repartition(F.col(key))
         if not distinct_input:
             dd = dd.dropDuplicates(["doc_id", key])
@@ -375,7 +374,8 @@ def jaccard_pairs(
                 .select(key)
             )
             dd = dd.join(F.broadcast(hot), key, "anti")
-        exploded = materialize_stage(dd)
+        # reuse: the size census and both self-join legs read the postings
+        exploded = stage.materialize_stage(dd)
     else:
         if max_doc_freq is not None:
             hot = (
@@ -474,7 +474,8 @@ def simhash_pairs(sig: DataFrame, max_hamming: int = 3) -> DataFrame:
     full signature computation — for the gate that means the corpus
     tokenize + 60-counter aggregate running TWICE per query. sig is two
     longs per document, the cheapest possible boundary."""
-    sig = sig.localCheckpoint(eager=True)
+    # reuse: both self-join legs read the signatures
+    sig = stage.materialize_stage(sig)
     bands = []
     mask = (1 << _BAND_WIDTH) - 1
     for b in range(SIMHASH_BANDS):
@@ -850,13 +851,9 @@ def ppjoin_pairs(
     to sum(df_prefix^2) — the stop-shingle problem solved by
     construction rather than by a cap.
     """
-    # the exploded shingle table feeds the frequency count, the prefix
-    # build, AND the exact verify — materialize it once (the v6
-    # stage-boundary discipline; |docs|*~shingles rows of short strings,
-    # executor-cache-sized relative to the corpus it derives from)
-    sh = shingle_table(docs, text_col=text_col, n=n).localCheckpoint(
-        eager=True
-    )
+    # reuse: the frequency count, the prefix build and the exact verify
+    # read the shingle table
+    sh = stage.materialize_stage(shingle_table(docs, text_col=text_col, n=n))
     dfreq = sh.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     # the consistent global order the prefix theorem needs is (df, s)
     # used DIRECTLY: per-doc positions come from a doc-partitioned
@@ -1086,8 +1083,6 @@ def containment_pairs(
     here (on the shared exchange), so callers should pass
     ``shingle_table(..., distinct=False)`` and skip the upstream
     dedup shuffle entirely."""
-    from csv2db_spark.operators.stage import materialize_stage
-
     dd = exploded.repartition(F.col(key)).dropDuplicates(["doc_id", key])
     if max_doc_freq is not None:
         # after the per-doc dedup, doc frequency is a plain count —
@@ -1100,7 +1095,8 @@ def containment_pairs(
         )
         dd = dd.join(F.broadcast(hot), key, "anti")
     if materialize != "none":
-        dd = materialize_stage(dd, mode=materialize, path=stage_path)
+        # reuse: the size census and both self-join legs read the postings
+        dd = stage.materialize_stage(dd, mode=materialize, path=stage_path)
     sizes = dd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     e1, e2 = dd.alias("e1"), dd.alias("e2")
     # the postings self-join must NEVER broadcast: both sides are the

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from csv2db_spark.llm.similarity import _topk_per_query, quantize
-from csv2db_spark.operators.stage import materialize_stage
+from csv2db_spark.operators import stage
 
 
 def _subvectors(df: DataFrame, id_alias: str, m: int, sub: int) -> DataFrame:
@@ -77,21 +77,11 @@ def pq_codebook(
     assigned subvectors, floor division — empty cells keep their seed).
     Returns (m, code, code_iv). Deterministic end to end.
 
-    The returned table is EAGERLY CHECKPOINTED: it is M·K rows, but
-    its plan contains the corpus-sized assignment pass — and every
-    consumer that broadcasts it (``pq_encode``'s argmin join AND
-    ``pq_query_codes``'s per-query distance table) would re-plan that
-    whole subtree, so one ``pq_topk`` would train the codebook twice
-    and ``q_sim_ann_pq_persisted`` (inline + build) three times. The
-    checkpoint makes training run exactly once per call. ``seeds``
-    (also M·K rows, two consumers: the assignment leg and the
-    empty-cell fallback join) is checkpointed for the same reason —
-    without it each consumer replans the seed-selection scan of the
-    corpus.
+    The returned table is staged, so training runs once per call.
 
     Side effects: calling this — even just to inspect the
-    returned plan — RUNS Spark jobs (two eager localCheckpoints), and
-    the two checkpoints' executor-cached blocks (2 × M·K skinny rows,
+    returned plan — RUNS Spark jobs (two eager stages), and
+    the two stages' executor-cached blocks (2 × M·K skinny rows,
     a few KB at the defaults) stay cached until the RDDs are
     garbage-collected; PySpark exposes no public handle to unpersist a
     localCheckpoint early, and freeing the seeds blocks before the
@@ -133,7 +123,9 @@ def pq_codebook(
             F.col("_s.sub_iv").alias("code_iv"),
         )
     )
-    seeds = materialize_stage(seeds)
+    # reuse: the assignment leg and the empty-cell fallback read the
+    # seeds, and each would re-scan the corpus to pick them
+    seeds = stage.materialize_stage(seeds)
     subs = _subvectors(q, "_vid", m, sub)
     asn = (
         subs.join(F.broadcast(seeds), "m")
@@ -172,8 +164,10 @@ def pq_codebook(
             F.transform(F.col("_ps"), lambda s: s.getField("mv")).alias("code_iv"),
         )
     )
-    # empty cells (no assignment) keep their seed
-    return materialize_stage(
+    # reuse: pq_encode and pq_query_codes both broadcast the codebook,
+    # and each would re-plan the corpus-sized assignment pass. Empty
+    # cells (no assignment) keep their seed.
+    return stage.materialize_stage(
         seeds.alias("s")
         .join(refined.alias("r"), ["m", "code"], "left")
         .select(

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from csv2db_spark import plans
+from csv2db_spark.operators import stage
 
 QUANT = 100_000_000  # 1e8: embedding components are in (-1, 1)
 QUANT_SQ = float(QUANT) * float(QUANT)
@@ -627,16 +628,13 @@ def lsh_all_pairs_cosine(
     which candidates are seen, never their scores.
 
     The corpus is touched ONCE: a single staged table carries (vid,
-    x_iv, x_nrm2, per-table buckets) — one scan, one Arrow matmul —
-    and every leg reads the checkpoint. Running the bucket UDF per
-    self-join leg and the quantized state per verify leg would make
-    four corpus passes (two of them Arrow) for one result.
+    x_iv, x_nrm2, per-table buckets) — one scan, one Arrow matmul.
     """
-    from csv2db_spark.operators.stage import materialize_stage
-
     planes = _hyperplanes(dim, n_planes, n_tables)
     budf = _bucket_udf(planes)
-    state = materialize_stage(
+    # reuse: both self-join legs and both verify legs read the state;
+    # each would run its own corpus pass, two of them Arrow
+    state = stage.materialize_stage(
         vecs.select(
             F.col(id_col).alias("vid"),
             F.transform(F.col(vec_col), _iel).alias("x_iv"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from csv2db_spark.llm.corpus import shingles, tokens
+from csv2db_spark.operators import stage
 
 # ------------------------------------------------------------- token stats
 
@@ -381,14 +382,10 @@ def bm25_topk(
     a 1-row corpus-stats broadcast, and a TakeOrdered top-k with doc-id
     tiebreak. Linear in corpus size, output k rows.
 
-    Shape (guide §2.4): tf and dl are each consumed twice (tf by the
-    scoring join AND the df broadcast; dl by the length join AND the
-    corpus-stats aggregate), and without a boundary each consumer
-    replanned its whole corpus subtree — the sf0.1 plan parsed/split
-    the corpus text FOUR times. Both are checkpointed once: tf is tiny
-    (docs containing a query term x |terms|), dl is |docs| rows of two
-    longs; the corpus is now read and split exactly twice (the explode
-    pass and the length pass), the minimum this shape needs.
+    tf and dl each have two consumers (tf the scoring join and the df
+    broadcast; dl the length join and the corpus-stats aggregate) and
+    are not staged: staging them measured no faster than replanning
+    them, and cost three jobs at build time.
     """
     toks = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("t")
@@ -396,7 +393,7 @@ def bm25_topk(
     dl = docs.select(
         F.col(id_col),
         F.size(F.split(F.col(text_col), " ")).alias("dl"),
-    ).localCheckpoint(eager=True)
+    )
     stats = F.broadcast(
         dl.agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -407,7 +404,6 @@ def bm25_topk(
         toks.where(F.col("t").isin(*terms))
         .groupBy(id_col, "t")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
     )
     df_t = F.broadcast(
         tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
@@ -661,15 +657,10 @@ def bigram_lm_scores(
     # codegen on every corpus row (see the HOF pitfalls in PLANS.md)
     occ = _occurrences(docs)
     model_occ = occ if train_docs is None else _occurrences(train_docs)
-    # checkpoint the pair-count table: it feeds BOTH the prefix fold
-    # and the scoring join, and without a boundary each consumer
-    # replanned the model corpus' explode+aggregate — the sf0.1 gate
-    # plan carried THREE corpus bigram explodes where two are the
-    # minimum (guide §2.4). The table is |distinct bigrams|
-    # rows — vocabulary-sized, far below the corpus it folds.
+    # reuse: the prefix fold and the scoring join read the pair counts
     pair_counts = model_occ.groupBy("a", "b").agg(
         F.count(F.lit(1)).alias("cnt_pair")
-    ).localCheckpoint(eager=True)
+    ).transform(stage.materialize_stage)
     prefix_counts = pair_counts.groupBy("a").agg(
         F.sum("cnt_pair").alias("cnt_prefix")
     )
@@ -828,10 +819,12 @@ def hashed_linear_classifier(
     # _pos is doc-constant, so grouping by it too yields the same
     # groups as (doc_id, bucket) while keeping the label on the row;
     # per-token class counts then fold from tf (sum of counts = count)
-    tf = hashed.groupBy("doc_id", "_pos", "bucket").agg(
-        F.count(F.lit(1)).alias("tf")
+    # reuse: the per-bucket class counts and the per-doc scores read tf
+    tf = stage.materialize_stage(
+        hashed.groupBy("doc_id", "_pos", "bucket").agg(
+            F.count(F.lit(1)).alias("tf")
+        )
     )
-    tf = tf.localCheckpoint(eager=True)
     per_bucket = tf.groupBy("bucket").agg(
         F.sum(F.when(F.col("_pos"), F.col("tf")).otherwise(0)).alias(
             "cnt_pos"

@@ -16,8 +16,9 @@ Scale notes:
 - The driver-side loop only checks a CONVERGENCE COUNT per round; all
   data stays distributed. This is the textbook pattern for iterative
   algorithms on Spark (driver steers, executors compute).
-- ``localCheckpoint`` truncates the lineage each round — without it the
-  plan doubles per iteration and the job DAG explodes within ten iterations.
+- A stage (``materialize_stage``) truncates the lineage each round —
+  without it the plan doubles per iteration and the job DAG explodes
+  within ten iterations.
 - Edges are symmetrized once up front; the per-round join shuffles on
   node id. At 100 TB-of-pairs you'd switch to the star-contraction
   variant (fewer rounds on high-diameter graphs); for dedup graphs the
@@ -30,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from csv2db_spark.operators import stage
 
 
 def _stage_edges_by_key(edges: DataFrame, key: str) -> DataFrame:
@@ -49,14 +52,14 @@ def _stage_edges_by_key(edges: DataFrame, key: str) -> DataFrame:
     node-sized table moves per round. The second exchange reads
     executor-cached blocks, and it replaces one edge-sized exchange PER
     ROUND, so it pays for itself from round two."""
-    from csv2db_spark.operators.stage import materialize_stage
-
-    flat = edges.localCheckpoint(eager=True)
+    # loop: the edge list every round joins, at the width AQE gives it
+    flat = stage.materialize_stage(edges)
     # floor at 2: the planner treats a single-partition side like
     # SinglePartition and re-shuffles BOTH join legs to the conf
     # default (measured on 4.1) — any width >= 2 is reused as-is
     n = max(2, flat.rdd.getNumPartitions())
-    return materialize_stage(
+    # loop: every round joins this stage exchange-free and sort-free
+    return stage.materialize_stage(
         flat.repartition(n, F.col(key)).sortWithinPartitions(key),
         preserve_partitioning=True,
     )
@@ -84,11 +87,12 @@ def connected_components(
         .distinct(),
         "b",
     )
+    # loop: the first round's label table
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
-        .localCheckpoint(eager=True)
+        .transform(stage.materialize_stage)
     )
     # convergence probe: labels are MIN-monotone
     # (new = min(own, neighbors) can never increase), so the label set
@@ -108,11 +112,12 @@ def connected_components(
             sym.join(labels, sym.b == labels.node)
             .select(F.col("a").alias("node"), "component")
         )
+        # loop: each round reads only the previous round's labels
         new_labels = (
             labels.unionByName(neighbor)
             .groupBy("node")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
+            .transform(stage.materialize_stage)
         )
         cur_sum = _label_sum(new_labels)
         labels = new_labels
@@ -189,6 +194,7 @@ def connected_components_star(
     a fixpoint edge are component minima (or isolated after self-loop
     removal) and label themselves.
     """
+    # loop: the first round's edge set
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
@@ -196,18 +202,18 @@ def connected_components_star(
         )
         .where(F.col("lo") != F.col("hi"))  # self-loops carry no info
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(stage.materialize_stage)
     )
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     rounds = 0
     e_cnt = e.count()
     for _ in range(max_iter):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
+        # loop: each round reads only the previous round's edges
+        nxt = _small_star(_large_star(e)).transform(stage.materialize_stage)
         rounds += 1
         # set fixpoint: same cardinality and no new edges. The previous
         # round's count is carried instead of recounted; the
@@ -272,7 +278,7 @@ def pagerank_step(
     depend only on the edge list, so recomputing them inside every power
     iteration paid two edge-list aggregations per round for identical
     results. ``pagerank`` below
-    computes each once on the checkpointed edges.
+    builds each once over its staged edges.
     """
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     if nodes is None:
@@ -324,7 +330,7 @@ def pagerank(
     Driver-steering pattern shared with ``connected_components``: the
     loop runs on the driver but touches only a 1-row convergence
     aggregate per round; rank vectors stay distributed.
-    ``localCheckpoint`` truncates lineage so the plan doesn't double
+    A stage per round truncates lineage so the plan doesn't double
     every iteration. Edges are reused across rounds — cache them
     upstream if the input is an expensive subquery.
     """
@@ -338,21 +344,17 @@ def pagerank(
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
         "_src",
     )
-    # loop-invariant node set and out-degrees: one pass each over the
-    # checkpointed edges instead of two edge aggregations per round
     nodes = (
         e.select(F.col("_src").alias("node"))
         .unionByName(e.select(F.col("_dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    out_deg = (
-        e.groupBy(F.col("_src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint(eager=True)
+    out_deg = e.groupBy(F.col("_src").alias("node")).agg(
+        F.count(F.lit(1)).alias("out_deg")
     )
     ranks = None
     for _ in range(max_iter):
+        # loop: each round reads only the previous round's ranks
         new_ranks = pagerank_step(
             e,
             ranks=ranks,
@@ -361,7 +363,7 @@ def pagerank(
             damping=damping,
             nodes=nodes,
             out_deg=out_deg,
-        ).localCheckpoint(eager=True)
+        ).transform(stage.materialize_stage)
         # tol <= 0 pins exactly max_iter rounds (the q_graph_pagerank_k3
         # contract): the L-inf delta can never go below a non-positive
         # tol, so skip its per-round |nodes| join + driver collect
@@ -433,18 +435,15 @@ def triangle_count(
       centers, celebrity nodes, and boilerplate hubs land on the
       receiving side of their edges.
     """
-    # materialize the normalized edge set ONCE: every strategy consumes
-    # it multiple times, and without the boundary Spark re-plans the
-    # caller's whole edge-derivation subtree per leg (the v6
-    # stage-boundary lesson; measured 3x a lineitem self-join in
-    # q_graph_triangles)
+    # reuse: the bounds probe and every leg of either strategy read the
+    # normalized edge set
     e = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(stage.materialize_stage)
     )
     # bounded driver-side scalars (justified-collect class): the ID span
     # picks the physical strategy, exactly like AQE picks join strategy
@@ -493,8 +492,7 @@ def _orient_by_degree(e: DataFrame) -> DataFrame:
     """Orient the normalized (lo, hi) edge set by the total order
     (degree, id): every edge points from its lower-ranked endpoint x to
     the higher y. Returns (x, y, ky) where ky is y's rank key (a
-    comparable struct), materialized once — the wedge join consumes the
-    result three times. The two degree-attach joins are |E| ⋈ |V| hash
+    comparable struct). The two degree-attach joins are |E| ⋈ |V| hash
     joins; nothing here is proportional to wedge count."""
     deg = (
         e.select(F.col("lo").alias("n"))
@@ -509,13 +507,14 @@ def _orient_by_degree(e: DataFrame) -> DataFrame:
     # two endpoints of one edge (lo != hi on a simple graph)
     klo = F.struct(F.col("dl").alias("d"), F.col("lo").alias("n"))
     khi = F.struct(F.col("dh").alias("d"), F.col("hi").alias("n"))
+    # reuse: the wedge join reads the oriented edges three times
     return (
         ranked.select(
             F.when(klo < khi, F.col("lo")).otherwise(F.col("hi")).alias("x"),
             F.when(klo < khi, F.col("hi")).otherwise(F.col("lo")).alias("y"),
             F.when(klo < khi, khi).otherwise(klo).alias("ky"),
         )
-        .localCheckpoint(eager=True)
+        .transform(stage.materialize_stage)
     )
 
 
@@ -547,14 +546,8 @@ def _triangle_count_bitmap(e: DataFrame, mn: int, span: int) -> DataFrame:
             for w in range(n_words)
         ]
     )
-    # the adjacency table is consumed by BOTH broadcast legs below; its
-    # build is the 2|E|-row x n_words-expression aggregate, and without
-    # a boundary each leg replans it into its own BroadcastExchange
-    # (observed at sf0.1: FOUR adjacency builds in one gate plan —
-    # 2 legs x the 2-way corner union this path used to share with the
-    # general path). Checkpoint once: span <= dense_node_span rows of
-    # n_words longs, KB-to-MB sized.
-    adj = adj.localCheckpoint(eager=True)
+    # reuse: both broadcast legs below read the adjacency table
+    adj = stage.materialize_stage(adj)
     a = adj.select(
         F.col("u").alias("lo"), *[F.col(f"w{w}").alias(f"a{w}") for w in range(n_words)]
     )
@@ -605,7 +598,7 @@ def resolve_hierarchy(
     Scale shape: each round is ONE self-join of the |nodes|-row pointer
     table on the ancestor key + a 1-row convergence aggregate on the
     driver (the justified-collect class of pagerank's loop);
-    localCheckpoint truncates lineage each round."""
+    a stage per round truncates lineage."""
     children = edges.select(
         F.col(child_col).alias("node"), F.col(parent_col).alias("anc")
     )
@@ -614,15 +607,17 @@ def resolve_hierarchy(
         .distinct()
         .join(edges.select(F.col(child_col).alias("node")).distinct(), "node", "left_anti")
     )
+    # loop: the first round's pointer table
     ptr = children.select("node", "anc", F.lit(1).cast("long").alias("dist")).unionByName(
         roots.select("node", F.col("node").alias("anc"), F.lit(0).cast("long").alias("dist"))
-    ).localCheckpoint()
+    ).transform(stage.materialize_stage)
     for _ in range(max_rounds):
         hop = ptr.select(
             F.col("node").alias("_anc_node"),
             F.col("anc").alias("_anc_anc"),
             F.col("dist").alias("_anc_dist"),
         )
+        # loop: each round reads only the previous round's pointers
         nxt = (
             ptr.join(hop, ptr.anc == F.col("_anc_node"))
             .select(
@@ -630,7 +625,7 @@ def resolve_hierarchy(
                 F.col("_anc_anc").alias("anc"),
                 (F.col("dist") + F.col("_anc_dist")).alias("dist"),
             )
-            .localCheckpoint()
+            .transform(stage.materialize_stage)
         )
         # converged when no pointer moved (every ancestor is a root,
         # whose self-pointer has dist 0)
@@ -683,27 +678,21 @@ def label_propagation(
     small constant (label coverage saturates geometrically), so the
     total is O(rounds·|E|) with no driver-side state.
     """
-    # loop hygiene: the symmetric edge list is
-    # consumed once per round and the label table three times per round
-    # (votes join, freshness anti-join, next round's union) — without
-    # boundaries round r replans every earlier round's vote/window
-    # subtree per consumer. Both are checkpointed; labels re-checkpoints
-    # each round to keep the union lineage flat.
-    # the per-round votes join keys the edge list
-    # on ``b`` — stage it once partitioned by the join key
-    # (_stage_edges_by_key) so only the label frontier shuffles per
-    # round.
+    # the per-round votes join keys the edge list on ``b`` — stage it once
+    # partitioned by the join key (_stage_edges_by_key) so only the label
+    # frontier shuffles per round.
     sym = _stage_edges_by_key(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct(),
         "b",
     )
+    # loop: the first round's label table
     labels = seeds.select(
         F.col(node_col).alias("node"),
         F.col(label_col).alias("label"),
         F.lit(0).alias("round_assigned"),
-    ).localCheckpoint(eager=True)
+    ).transform(stage.materialize_stage)
     from pyspark.sql import Window
 
     for r in range(1, rounds + 1):
@@ -723,7 +712,8 @@ def label_propagation(
             .select("node", "label", F.lit(r).alias("round_assigned"))
         )
         fresh = picked.join(labels.select("node"), "node", "left_anti")
-        labels = labels.unionByName(fresh).localCheckpoint(eager=True)
+        # loop: each round reads only the previous round's labels
+        labels = labels.unionByName(fresh).transform(stage.materialize_stage)
     return labels
 
 
@@ -755,21 +745,14 @@ def k_core(
     ).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     ).distinct()
-    # loop hygiene: BOTH modes checkpoint per
-    # round. The bounded-rounds mode previously never truncated lineage,
-    # so each round's TWO keep-list semi-joins replanned every earlier
-    # round's degree aggregation — the per-round subtree count grew
-    # multiplicatively with rounds (measured: the rounds=3 gate cost
-    # ~12 s at sf0.1; ~1.6 s with boundaries). ``keep`` is checkpointed
-    # too (it is node-sized) so the degree aggregation runs once per
-    # round, not once per semi-join; its eager count doubles as the
-    # fixpoint probe, replacing the separate distinct-count pass.
-    cur = sym.localCheckpoint(eager=True)
+    # loop: the first round's edge list. Without per-round stages each
+    # round's semi-joins replanned every earlier round (the rounds=3
+    # gate cost ~12 s at sf0.1; ~1.6 s with them).
+    cur = stage.materialize_stage(sym)
     r = 0
     while True:
         r += 1
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        deg = deg.localCheckpoint(eager=True)
         keep = deg.where(F.col("deg") >= k).select("a")
         if rounds is None:
             # fixpoint reached iff no node falls below k: the semi-joins
@@ -777,10 +760,11 @@ def k_core(
             # one row per surviving node, so both counts are deg-local.
             if deg.count() == keep.count():
                 break
+        # loop: each round reads only the previous round's edges
         cur = (
             cur.join(keep, "a", "semi")
             .join(keep.select(F.col("a").alias("b")), "b", "semi")
-            .localCheckpoint(eager=True)
+            .transform(stage.materialize_stage)
         )
         if rounds is not None and r >= rounds:
             break

@@ -1,11 +1,21 @@
-"""Stage-boundary materialization for composed pipelines.
+"""Stage-boundary materialization: the one place the package stages an
+intermediate result.
 
-A multi-stage pipeline whose intermediate feeds SEVERAL downstream
-consumers (e.g. curation v6: the dedup survivor set feeds LM training,
-LM scoring, AND the final join) must materialize that boundary once —
-otherwise every consumer re-plans the whole upstream subtree and their
-exchanges stay live simultaneously (observed heap OOM at sf0.1 in a
-long-lived session; see queries/curation.py).
+Every stage calls ``materialize_stage`` through this module at call
+time, so one swap of the attribute reaches all of them (the
+``lazy_stages`` toggle of ``scripts/ab_interleave.py`` times each against
+its lazy plan). A stage stays for one of three reasons, named in the
+one comment at its call site:
+
+- **lifetime**: its rows outlive a temp dir removed before the query
+  returns (the snapshot, streaming and persisted-index gates);
+- **loop**: it bounds a loop's lineage, so round r does not replan
+  rounds 1..r-1 (graph iterations, BPE merges);
+- **reuse**: it feeds more than one consumer, each of which would
+  re-run the subtree below it. Live exchanges of such consumers have
+  run a long-lived session out of heap at sf0.1 (curation v6). A reuse
+  stage stays only while it measures faster than its lazy plan, or when
+  a ``plans.small_input`` decision downstream reads its stored bytes.
 
 Two modes, because the right mechanism changes with the deployment:
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from csv2db_spark.llm.cluster import kmeans_step
 from csv2db_spark.llm.curation import pack_sequences
+from csv2db_spark.operators import stage
 from csv2db_spark.operators.profile import profile_columns
 from csv2db_spark.operators.sketch import CMS_P, countmin_build, countmin_estimate
 from csv2db_spark.llm.text import repetition_stats
@@ -1388,7 +1389,8 @@ def q_src_bloom_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _os.path.isdir(d):
         load_table(spark, sf_dir, "orders").repartition(16).write.parquet(d)
     manifest = build_bloom_manifest(spark, d, "o_orderkey", log2m=20)
-    manifest = manifest.localCheckpoint(eager=True)  # reuse across probes
+    # reuse: each of the three probes reads the manifest
+    manifest = stage.materialize_stage(manifest)
     parts = [
         read_bloom_pruned(spark, manifest, "o_orderkey", k, log2m=20)
         for k in (32, 4000, 29987)

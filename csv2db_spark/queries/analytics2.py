@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from csv2db_spark.operators import stage
 from csv2db_spark.registry import query
 from csv2db_spark.sources import load_table
 
@@ -811,7 +812,8 @@ def q_sim_ann_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("side"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        return stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -1672,8 +1674,6 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped_rank,
         join_totals_nullsafe,
     )
-    from csv2db_spark.operators.stage import materialize_stage
-
     docs = load_table(spark, sf_dir, "documents")
     mixed = temperature_mix(docs, target_frac=0.7).select(
         "doc_id", "text", "source"
@@ -1685,14 +1685,10 @@ def q_pipeline_curation_v4(spark: SparkSession, sf_dir: str) -> DataFrame:
     # UNPARTITIONED window — total-sorts the whole quality-filtered
     # corpus on ONE task. The cutpoint rank over a constant group computes the
     # identical (prob, doc_id) rank with a 4096-cell histogram +
-    # bounded tie sorts. The scored table is checkpointed first: the
-    # cutpoint plan has three consumers (histogram, tie-rank leg,
-    # total), and each would otherwise replan the corpus-bigram LM
-    # scoring subtree; four narrow columns. The shape is decided on
-    # the stored checkpoint's size, not on the LM join's product
-    # estimate it truncated — single window at fixture size, cutpoint
-    # above the threshold.
-    scored = materialize_stage(
+    # bounded tie sorts.
+    # reuse: the cutpoint plan's histogram, tie-rank leg and total read
+    # the scored table, and its shape is decided on the stored bytes
+    scored = stage.materialize_stage(
         quality.join(lm, "doc_id")
         .select("doc_id", "source", "n_words", "avg_next_token_prob")
         .withColumn("_g", F.lit(0))

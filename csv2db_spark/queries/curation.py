@@ -17,6 +17,7 @@ from csv2db_spark.llm import curation as C
 from csv2db_spark.llm.corpus import SQL_AUG, SQL_SHINGLES, augmented_docs
 from csv2db_spark.llm.text import MOJIBAKE_PATTERNS, encoding_anomaly_counts
 from csv2db_spark.operators import relational as R
+from csv2db_spark.operators import stage
 from csv2db_spark.operators.sessions import sessionize
 from csv2db_spark.registry import query
 from csv2db_spark.sources import load_table
@@ -656,17 +657,13 @@ def q_pipeline_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tie-rank exchanges cost ~0.4 s at fixture size (0.475→0.865 s
     # measured), so it only runs when the scored projection is not
     # small. Both shapes are bit-identical (tests/test_runtime_ops.py).
-    # The cutpoint plan has three consumers of the scored sample
-    # (histogram, tie-rank join leg, group totals), so it is
-    # checkpointed first (three narrow columns, no text); the window
-    # plan has one consumer chain, where the checkpoint would be pure
-    # overhead. quantile_filter then decides on the staged frame: the
-    # same frame at a small estimate, the stored checkpoint otherwise.
     from csv2db_spark import plans
-    from csv2db_spark.operators.stage import materialize_stage
-
     scored = samp.select("doc_id", "lang", score.alias("quality_score"))
-    staged = scored if plans.small_input(scored) else materialize_stage(scored)
+    # reuse: the cutpoint plan's histogram, tie-rank leg and group totals
+    # read the scored sample; the window plan reads it once
+    staged = (
+        scored if plans.small_input(scored) else stage.materialize_stage(scored)
+    )
     kept_ids = C.quantile_filter(
         staged,
         F.col("quality_score"),
@@ -1416,8 +1413,6 @@ def q_pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     final token counts)."""
     from csv2db_spark.llm import dedup as D
     from csv2db_spark.llm import text as X
-    from csv2db_spark.operators.stage import materialize_stage
-
     docs = augmented_docs(spark, sf_dir)
     trimmed = D.remove_duplicated_spans(docs, w=5).select(
         "doc_id", F.col("clean_text").alias("text")
@@ -1425,12 +1420,8 @@ def q_pipeline_curation_v5(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("base_id"), "lang"
     )
-    # guide §2.4: labeled has three consumers (classifier
-    # tokenize, the keep join, the budget sampler via keep) — without a
-    # boundary each replanned the span-removal subtree (28 scans of
-    # documents.parquet in one gate plan). One materialization, the
-    # dedup runs once.
-    labeled = materialize_stage(
+    # reuse: the classifier and the keep join read labeled
+    labeled = stage.materialize_stage(
         trimmed.join(
             F.broadcast(base), trimmed["doc_id"] % 100000 == base["base_id"]
         ).select(
@@ -1563,8 +1554,6 @@ def curation_v6_pipeline(
     hashes identically."""
     from csv2db_spark.llm import dedup as D
     from csv2db_spark.llm.text import bigram_lm_scores
-    from csv2db_spark.operators.stage import materialize_stage
-
     # lang/source ride the augmented corpus from the scan (with_meta),
     # so survivors need no join back to `documents` on doc_id % 100000
     # (A/B measured at sf0.1, PLANS.md). The shingle subtree still
@@ -1591,24 +1580,15 @@ def curation_v6_pipeline(
         .distinct()
     )
     kept1 = aug.join(dropped, "doc_id", "left_anti")
-    # stage boundary: kept1 feeds three downstream consumers (LM train,
-    # LM score, final lang/source join); without materialization each
-    # re-plans the whole containment subtree and its exchanges stay
-    # live simultaneously — observed heap OOM at sf0.1 in a long-lived
-    # session. Real pipelines materialize between stages for the same
-    # reason; the mode knob picks executor-cached vs durable staging.
-    kept1 = materialize_stage(kept1, mode=materialize, path=stage_path)
+    # reuse: LM training, LM scoring and the final join read kept1
+    kept1 = stage.materialize_stage(kept1, mode=materialize, path=stage_path)
     ref = kept1.where(
         F.col("source").isin("src0", "src1", "src2", "src3", "src4")
     )
     scored = bigram_lm_scores(kept1, train_docs=ref)
-    # second stage boundary: `scored` feeds the tercile histogram, the
-    # rank attach, AND (via n_bigrams) the final rollup — without it
-    # the sf0.1 plan evaluates the whole LM-scoring subtree (kept1
-    # bigram explode + model join) THREE times. The
-    # table is |kept1| rows of four numbers, far lighter than the
-    # text corpus the same knob already stages for kept1.
-    scored = materialize_stage(scored, mode=materialize, path=stage_path)
+    # reuse: the tercile histogram, the rank attach and the rollup read
+    # scored
+    scored = stage.materialize_stage(scored, mode=materialize, path=stage_path)
     from csv2db_spark.operators.ranking import grouped_ntile
 
     # the ntile input joins the two staged tables, so it is sized by
@@ -2029,11 +2009,9 @@ def q_pipeline_curation_v8(spark: SparkSession, sf_dir: str) -> DataFrame:
         decontaminate_ngram(corpus, bench)
         .where(F.col("overlap_ratio") >= 0.05)
         .select("doc_id")
-        # materialize the (bounded-by-near-benchmark-docs) drop list once
-        # so the size-gated broadcast decision below doesn't recompute
-        # the decontamination scan — and so the 100 TB plan computes the
-        # contamination set exactly once however many consumers read it
-        .localCheckpoint(eager=True)
+        # reuse: the broadcast gate's count and the anti join read the
+        # drop list
+        .transform(stage.materialize_stage)
     )
     # size-gated broadcast: small drop list (the normal case) keeps the
     # corpus TEXT off any doc_id shuffle; an unbounded one falls back to

@@ -18,6 +18,7 @@ from csv2db_spark.llm import text as X
 from csv2db_spark.llm import similarity as S
 from csv2db_spark.llm.corpus import SQL_AUG, SQL_SHINGLES, augmented_docs, tokens
 from csv2db_spark.operators import relational as R
+from csv2db_spark.operators import stage
 from csv2db_spark.registry import query
 from csv2db_spark.sources import load_table
 
@@ -254,14 +255,8 @@ def q_dedup_minhash_lsh_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(cand.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    from csv2db_spark.operators.stage import materialize_stage
-
-    # The hashset build is checkpointed because it feeds BOTH join legs
-    # (sa and sb): without the boundary each leg re-plans the corpus
-    # scan + shingle explode + collect_set, doubling the gate's corpus
-    # passes; the table is bounded by the candidate set, so the
-    # checkpoint is tiny.
-    hs = materialize_stage(
+    # reuse: both join legs (sa, sb) read the hash sets
+    hs = stage.materialize_stage(
         D.minhash_doc_hashsets_xxh(docs.join(F.broadcast(ids), "doc_id"))
     )
     sa = hs.select(F.col("doc_id").alias("doc_a"), F.col("hset").alias("ha"))
@@ -306,12 +301,8 @@ def q_dedup_minhash_xxh_precision(spark: SparkSession, sf_dir: str) -> DataFrame
         .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    from csv2db_spark.operators.stage import materialize_stage
-
-    # checkpointed for the same two-consumer reason as the gate's hset
-    # build: sa and sb would otherwise each re-plan the corpus scan +
-    # string-shingle set build; bounded by the emitted pair set.
-    ss = materialize_stage(
+    # reuse: both join legs (sa, sb) read the shingle sets
+    ss = stage.materialize_stage(
         docs.join(F.broadcast(ids), "doc_id")
         .where(F.size(tokens("text")) >= 3)
         .select(
@@ -845,8 +836,8 @@ def q_sim_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("side"),
             )
         )
-        # the index dir is deleted on return: materialize first
-        return out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        return stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
@@ -913,7 +904,8 @@ def q_sim_ann_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("side"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        return stage.materialize_stage(out)
     finally:
         shutil.rmtree(w_inc, ignore_errors=True)
         shutil.rmtree(w_full, ignore_errors=True)
@@ -1131,14 +1123,7 @@ def q_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = augmented_docs(spark, sf_dir)
     qual = docs.where(F.size(_tokens("text")) >= 30)
-    # Guide §2.4: exact has two consumers (the signature/LSH chain and
-    # the final anti join), each replanning the corpus
-    # text-keyed dedup shuffle. One materialization, one dedup pass.
-    from csv2db_spark.operators.stage import materialize_stage
-
-    exact = materialize_stage(
-        qual.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
-    )
+    exact = qual.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
     sig = D.minhash_doc_signatures(exact).persist(StorageLevel.MEMORY_AND_DISK)
     cand = D.minhash_candidates(D.minhash_bands(sig))
     comp = connected_components(cand, src="doc_a", dst="doc_b")
@@ -1150,7 +1135,7 @@ def q_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rides a doc_id shuffle; a web-corpus-scale loser set (a large
     # corpus fraction is normal there) falls back to Spark's own
     # size-based planning instead of a forced driver-OOM broadcast.
-    # The gating count is cheap: comp's labels are localCheckpointed
+    # The gating count is cheap: comp's labels are staged
     # inside connected_components.
     final = R.anti_join_drop_list(exact, losers, "doc_id")
     return final.select(

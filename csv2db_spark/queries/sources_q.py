@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from csv2db_spark.functions.numeric import dsum, sql_dsum
+from csv2db_spark.operators import stage
 from csv2db_spark.operators.merge import upsert
 from csv2db_spark.registry import query
 from csv2db_spark.sources import load_table
@@ -360,7 +361,8 @@ def q_sink_snapshot_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("version", "n", "min_key", "max_key", "sum_price")
 
         out = agg(1).unionByName(agg(2)).unionByName(agg(3))
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -398,7 +400,8 @@ def q_sink_snapshot_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("o_orderkey").alias("max_key"),
             dsum("o_totalprice", 12, 2).alias("sum_price"),
         )
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -443,7 +446,8 @@ def q_sink_snapshot_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum("o_totalprice", 12, 2).alias("sum_price"),
             ).select("version", "n", "min_key", "max_key", "sum_price")
 
-        out = agg(1).unionByName(agg(2)).localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = agg(1).unionByName(agg(2)).transform(stage.materialize_stage)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -492,7 +496,8 @@ def q_sink_snapshot_pruned_delete(spark: SparkSession, sf_dir: str) -> DataFrame
                 dsum("o_totalprice", 12, 2).alias("sum_price"),
             ).select("version", "n", "min_key", "max_key", "sum_price")
 
-        out = agg(1).unionByName(agg(2)).localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = agg(1).unionByName(agg(2)).transform(stage.materialize_stage)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -526,6 +531,7 @@ def q_sink_snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, os.path.join(root, "orders"), stats_cols=["o_orderkey"]
         )
         t.create(orders.repartitionByRange(8, "o_orderkey"))
+        # lifetime: the rows outlive the temp dir removed below
         out = (
             t.read_where("o_orderkey", 1000, 3999)
             .agg(
@@ -534,7 +540,7 @@ def q_sink_snapshot_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.max("o_orderkey").alias("max_key"),
                 dsum("o_totalprice", 12, 2).alias("sum_price"),
             )
-            .localCheckpoint(eager=True)
+            .transform(stage.materialize_stage)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -622,12 +628,13 @@ def q_sink_snapshot_schema_evolution(
                 F.lit(len(df.columns)).alias("n_cols"),
             ).select("version", "n", "sum_price", "n_null_prio", "n_cols")
 
+        # lifetime: the rows outlive the temp dir removed below
         out = (
             agg(1)
             .unionByName(agg(2))
             .unionByName(agg(3))
             .unionByName(agg(4))
-            .localCheckpoint(eager=True)
+            .transform(stage.materialize_stage)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -693,7 +700,8 @@ def q_sink_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dsum("o_totalprice", 12, 2).alias("sum_price"),
             ).select("version", "n", "min_key", "max_key", "sum_price")
 
-        out = agg(1).unionByName(agg(2)).localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = agg(1).unionByName(agg(2)).transform(stage.materialize_stage)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -749,7 +757,8 @@ def q_sink_snapshot_asof_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("as_of", "n", "min_key", "max_key", "sum_price")
 
         out = agg(150).unionByName(agg(250)).unionByName(agg(999))
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out

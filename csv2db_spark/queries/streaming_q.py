@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv2db_spark.operators import stage
 from csv2db_spark.registry import query
 from csv2db_spark.streaming import (
     events_stream,
@@ -342,10 +343,8 @@ def q_stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         regs = spark.read.parquet(store).select("event_type", "_j", "m_j")
         out = hll_estimate_from_registers(regs, ["event_type"])
-        # materialize DISTRIBUTED (executor blocks, lineage cut) so the
-        # temp store can be removed without a driver-side collect in the
-        # gate plan — the only collect-free way to outlive the rmtree
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out
@@ -536,9 +535,8 @@ def q_stream_histogram_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = histogram_quantile_from_cells(
             cells, LO, HI, NB, (50, 90, 99), ["event_type"]
         )
-        # distributed materialization (see q_stream_hll_rollup): no
-        # driver collect in the gate plan, store removable right after
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out
@@ -599,9 +597,8 @@ def q_stream_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint=f"{work}/ckpt",
         )
         cells = spark.read.parquet(store).select("j", "bucket", "cnt")
-        # distributed materialization (see q_stream_hll_rollup): no
-        # driver collect in the gate plan, store removable right after
-        out = cells.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(cells)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out
@@ -723,8 +720,8 @@ def q_stream_trend_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stats = spark.read.parquet(store)
         out = trend_from_stats(stats, ["user_id"])
-        # distributed materialization (see q_stream_hll_rollup)
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out
@@ -757,8 +754,8 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     aug = augmented_docs(spark, sf_dir).select("doc_id", "text")
     work = tempfile.mkdtemp(prefix="c2s_stream_minhash_")
-    stage = os.path.join(work, "in")
-    os.makedirs(stage)
+    batches = os.path.join(work, "in")
+    os.makedirs(batches)
     try:
         # one corpus pass stages all four batch files: the per-batch
         # filter+coalesce(1) loop it replaces scanned the corpus FOUR
@@ -781,18 +778,19 @@ def q_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f for f in os.listdir(d) if f.endswith(".parquet")
             )
             os.rename(
-                os.path.join(d, part), os.path.join(stage, f"batch_{b}.parquet")
+                os.path.join(d, part), os.path.join(batches, f"batch_{b}.parquet")
             )
         stream = (
             spark.readStream.schema(aug.schema)
             .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+            .parquet(batches)
         )
         stream_minhash_dedup(stream, work)
         out = spark.read.parquet(os.path.join(work, "pairs")).select(
             "doc_a", "doc_b", "jaccard"
         )
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out
@@ -872,6 +870,7 @@ def q_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             is None
         )
+        # lifetime: the rows outlive the temp dir removed below
         out = (
             t.read()
             .agg(
@@ -883,7 +882,7 @@ def q_stream_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("double")
                 .alias("sum_value"),
             )
-            .localCheckpoint(eager=True)
+            .transform(stage.materialize_stage)
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -999,7 +998,8 @@ def _cdc_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             is None
         )
-        out = _cdc_agg(t.read()).localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = _cdc_agg(t.read()).transform(stage.materialize_stage)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -1106,7 +1106,8 @@ def q_stream_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows",
             F.col("sum_value").cast("double").alias("sum_value"),
         )
-        out = out.localCheckpoint(eager=True)
+        # lifetime: the rows outlive the temp dir removed below
+        out = stage.materialize_stage(out)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return out

@@ -192,16 +192,35 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-def _promote_archive(proc: subprocess.Popen, tmp: Path) -> None:
-    """At interpreter exit: let the driver JVM exit (it stops on EOF on
-    its stdin), wait while it writes the archive, and rename a complete
-    one to ``<key>.<bytes>.jsa``. A JVM that did not exit with status 0
-    leaves no archive."""
+def stop_spark(spark: SparkSession) -> None:
+    """Stop ``spark`` and wait for its driver JVM to exit. ``spark.stop()``
+    alone leaves PySpark's gateway JVM running until EOF on its stdin,
+    which comes only when this process exits."""
+    gateway = SparkContext._gateway
+    spark.stop()
+    if gateway is not None:
+        _wait_jvm(gateway.proc)
+        SparkContext._gateway = SparkContext._jvm = None
+
+
+def _wait_jvm(proc: subprocess.Popen) -> int | None:
+    """Let the driver JVM exit (it stops on EOF on its stdin) and wait for
+    it, while it writes an archive too. Its exit status, or None when it
+    did not exit in time."""
     try:
         proc.stdin.close()
-        rc = proc.wait(timeout=_DUMP_WAIT_S)
+        return proc.wait(timeout=_DUMP_WAIT_S)
     except (OSError, subprocess.TimeoutExpired) as e:
-        log.debug("CDS archive not promoted: %s", e)
+        log.debug("driver JVM did not exit: %s", e)
+        return None
+
+
+def _promote_archive(proc: subprocess.Popen, tmp: Path) -> None:
+    """At interpreter exit: wait for the driver JVM and rename a complete
+    archive to ``<key>.<bytes>.jsa``. A JVM that did not exit with status
+    0 leaves no archive."""
+    rc = _wait_jvm(proc)
+    if rc is None:
         return  # a later start deletes the temp file once this pid is gone
     try:
         size = tmp.stat().st_size if rc == 0 else 0

@@ -44,6 +44,8 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from csv2db_spark.operators import stage
+
 # naive-UTC NTZ from a TIMESTAMP instant: epoch + micros, session-TZ-free
 _NTZ_FROM_TS = (
     "TIMESTAMP_NTZ '1970-01-01 00:00:00' + "
@@ -1131,11 +1133,9 @@ def minhash_dedup_batch_handler(
                 F.greatest("a.doc_id", "n.doc_id").alias("doc_b"),
             )
             .distinct()
-            # bounded candidate set consumed FIVE times below (the dk
-            # probe, both id legs + both verify joins); without the
-            # boundary each consumer replanned the whole band join over
-            # the store
-            .localCheckpoint(eager=True)
+            # reuse: the dk probe, both id legs and both verify joins
+            # read the candidate set
+            .transform(stage.materialize_stage)
         )
         ids = (
             cand.select(F.col("doc_a").alias("doc_id"))

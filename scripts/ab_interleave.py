@@ -7,12 +7,17 @@ inherits the other's warm caches or pays for its garbage.
 The OLD leg is produced by monkeypatching a named toggle; the NEW leg
 is the tree as-is. Usage:
 
-    python scripts/ab_interleave.py <toggle> q_a [q_b ...] [--reps N]
+    python scripts/ab_interleave.py <toggle> q_a [q_b ...] [--reps=N]
+        [--site=FUNCTION]
 
 Toggles are registered in TOGGLES below: each entry is (apply_old,
 undo_old) callables. Prints one JSON line per query with both series,
 each leg's median, quartiles and best, the steal delta per leg, and how
 many reps NEW won.
+
+Every staging site calls ``stage.materialize_stage`` through the module
+attribute at call time, so a toggle that swaps that attribute reaches
+all of them.
 """
 
 from __future__ import annotations
@@ -43,23 +48,64 @@ def _toggle_preserve_partitioning():
 
     def apply_old():
         stage.materialize_stage = old
-        # consumers import the symbol inside the function body, so the
-        # module attribute swap is sufficient
+
     def undo_old():
         stage.materialize_stage = orig
 
     return apply_old, undo_old
 
 
+def _toggle_lazy_stages():
+    """OLD = every stage is its lazy plan: ``materialize_stage`` returns
+    its input. ``--site=FUNCTION[:LINE][,...]`` limits the OLD leg to the
+    stages called from those functions (or lines of them), so a reuse
+    stage can be timed while the loop stages around it stay eager. An OLD
+    leg in which no selected stage ran is an error: both legs would run
+    the same plan."""
+    import csv2db_spark.operators.stage as stage
+
+    orig = stage.materialize_stage
+    matched = []
+    sites = next(
+        (a.split("=", 1)[1].split(",") for a in sys.argv
+         if a.startswith("--site=")),
+        None,
+    )
+
+    def caller() -> tuple[str, str]:
+        f = sys._getframe(2)
+        if f.f_code.co_name == "transform" and "pyspark" in f.f_code.co_filename:
+            f = f.f_back  # called as df.transform(stage.materialize_stage)
+        return f.f_code.co_name, f"{f.f_code.co_name}:{f.f_lineno}"
+
+    def old(df, *args, **kwargs):
+        if sites is None or set(caller()) & set(sites):
+            matched.append(True)
+            return df
+        return orig(df, *args, **kwargs)
+
+    def apply_old():
+        matched.clear()
+        stage.materialize_stage = old
+
+    def undo_old():
+        stage.materialize_stage = orig
+        if not matched:
+            raise SystemExit("lazy_stages: no selected stage ran in the OLD leg")
+
+    return apply_old, undo_old
+
+
 def _toggle_staged_edges():
-    """OLD = graph loops checkpoint the edge list unpartitioned (the
-    pre-round-14 shape: a fresh edge shuffle in every round's join)."""
+    """OLD = graph loops stage the edge list unpartitioned (a fresh edge
+    shuffle in every round's join)."""
     import csv2db_spark.operators.graph as graph
+    import csv2db_spark.operators.stage as stage
 
     orig = graph._stage_edges_by_key
 
     def old(edges, key):
-        return edges.localCheckpoint(eager=True)
+        return stage.materialize_stage(edges)
 
     def apply_old():
         graph._stage_edges_by_key = old
@@ -98,6 +144,7 @@ def _toggle_scale_shapes():
 
 
 TOGGLES = {
+    "lazy_stages": _toggle_lazy_stages,
     "preserve_partitioning": _toggle_preserve_partitioning,
     "scale_shapes": _toggle_scale_shapes,
     "staged_edges": _toggle_staged_edges,

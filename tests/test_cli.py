@@ -6,6 +6,10 @@ from __future__ import annotations
 
 import io
 import json
+import os
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
 
@@ -195,6 +199,41 @@ def test_end_to_end_parquet_store(spark, tmp_path, config_path):
         for r in spark.read.parquet(str(tmp_path / "db" / "t")).collect()
     )
     assert got == [("1", "x"), ("2", "y")]  # all-string create, like the ref
+
+
+MAIN_PROBE = """
+import json, sys
+from pyspark import SparkContext
+import csv2db_spark
+from csv2db_spark import cli, session
+procs, start = [], session.get_spark
+def spy(*args, **kwargs):
+    spark = start(*args, **kwargs)
+    procs.append(SparkContext._gateway.proc)
+    return spark
+csv2db_spark.get_spark = session.get_spark = spy
+rc = cli.main(["--url", "parquet:" + sys.argv[2], "-t", "t", "-m", "create",
+               "-i", sys.argv[1], "--has-header"])
+print(json.dumps({"rc": rc, "exited": [p.poll() is not None for p in procs]}))
+"""
+
+
+def test_main_returns_after_its_jvm_exits(tmp_path, config_path):
+    """A load that starts its own session stops it, and its driver JVM
+    has exited by the time ``main`` returns: back-to-back CLI loads never
+    hold two JVMs."""
+    csv = tmp_path / "in.csv"
+    csv.write_text("a,b\n1,x\n")
+    env = {**os.environ, "PYTHONPATH": str(Path(__file__).resolve().parents[1]),
+           "SPARK_GRAFT_CPUS": "1"}
+    out = subprocess.run(
+        [sys.executable, "-c", MAIN_PROBE, str(csv), str(tmp_path / "db")],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == {
+        "rc": 0, "exited": [True]
+    }
 
 
 def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):

@@ -938,6 +938,20 @@ def test_materialize_stage_validation(spark):
     assert materialize_stage(df, mode="local").count() == 3
 
 
+def test_only_the_stage_module_calls_local_checkpoint():
+    """Every stage goes through ``operators/stage.materialize_stage``, so
+    each one can be found, timed and made lazy in one place."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "csv2db_spark"
+    callers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if "localCheckpoint(" in p.read_text(encoding="utf-8")
+    )
+    assert callers == ["operators/stage.py"]
+
+
 def test_vacuum_stages_age_gated(spark, tmp_path):
     """vacuum_stages reclaims only stage dirs older than the grace
     window: a live run's fresh stage survives the default sweep; an
