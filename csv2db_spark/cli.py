@@ -30,7 +30,6 @@ Mapping to the reference:
 from __future__ import annotations
 
 import argparse
-import functools
 import json
 import logging
 import os
@@ -515,35 +514,36 @@ def run_sql_command(argv: list[str], spark=None) -> int:
 def main(argv: list[str] | None = None, spark=None) -> int:
     """Run one CLI command. A session this call starts is stopped before
     it returns, and its driver JVM has exited by then."""
-    argv = list(sys.argv[1:] if argv is None else argv)
-    if argv and argv[0] == "sql":
-        command = functools.partial(run_sql_command, argv[1:])
-    else:
-        # the reference's stdin marker is '--' (csv2db.go:174-176), which
-        # argparse reserves as the end-of-options separator — rewrite the
-        # one directly following -i/--input-file; '-' is accepted as an
-        # alias
-        for i, a in enumerate(argv[:-1]):
-            if a in ("-i", "--input-file") and argv[i + 1] == "--":
-                argv[i + 1] = "-"
-        args = build_parser().parse_args(argv)
-        logging.basicConfig(
-            level=getattr(logging, args.log_level.upper(), logging.INFO)
-        )
-        command = functools.partial(
-            run, load_config(args), password=args.password
-        )
     from pyspark import SparkContext
 
-    if spark is not None or SparkContext._active_spark_context is not None:
-        return command(spark=spark)
-    from csv2db_spark.session import get_spark, stop_spark
-
-    spark = get_spark("csv2db-spark-cli")
+    was_active = SparkContext._active_spark_context is not None
     try:
-        return command(spark=spark)
+        return _command(argv, spark)
     finally:
-        stop_spark(spark)
+        if (spark is None and not was_active
+                and SparkContext._active_spark_context is not None):
+            from pyspark.sql import SparkSession
+
+            from csv2db_spark.session import stop_spark
+
+            stop_spark(SparkSession.getActiveSession())
+
+
+def _command(argv: list[str] | None, spark) -> int:
+    argv = list(sys.argv[1:] if argv is None else argv)
+    if argv and argv[0] == "sql":
+        return run_sql_command(argv[1:], spark=spark)
+    # the reference's stdin marker is '--' (csv2db.go:174-176), which
+    # argparse reserves as the end-of-options separator — rewrite the one
+    # directly following -i/--input-file; '-' is accepted as an alias
+    for i, a in enumerate(argv[:-1]):
+        if a in ("-i", "--input-file") and argv[i + 1] == "--":
+            argv[i + 1] = "-"
+    args = build_parser().parse_args(argv)
+    logging.basicConfig(
+        level=getattr(logging, args.log_level.upper(), logging.INFO)
+    )
+    return run(load_config(args), spark=spark, password=args.password)
 
 
 if __name__ == "__main__":

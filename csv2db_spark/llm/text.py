@@ -381,29 +381,27 @@ def bm25_topk(
     non-query terms), (doc, term) tf counts, a |terms|-row df broadcast,
     a 1-row corpus-stats broadcast, and a TakeOrdered top-k with doc-id
     tiebreak. Linear in corpus size, output k rows.
-
-    tf and dl each have two consumers (tf the scoring join and the df
-    broadcast; dl the length join and the corpus-stats aggregate) and
-    are not staged: staging them measured no faster than replanning
-    them, and cost three jobs at build time.
     """
     toks = docs.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("t")
     )
+    # reuse: the length join and the corpus-stats aggregate read dl
     dl = docs.select(
         F.col(id_col),
         F.size(F.split(F.col(text_col), " ")).alias("dl"),
-    )
+    ).transform(stage.materialize_stage)
     stats = F.broadcast(
         dl.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("dl").alias("total_dl"),
         )
     )
+    # reuse: the scoring join and the df broadcast read tf
     tf = (
         toks.where(F.col("t").isin(*terms))
         .groupBy(id_col, "t")
         .agg(F.count(F.lit(1)).alias("tf"))
+        .transform(stage.materialize_stage)
     )
     df_t = F.broadcast(
         tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))

@@ -245,8 +245,6 @@ def pagerank_step(
     src: str = "src",
     dst: str = "dst",
     damping: float = 0.85,
-    nodes: DataFrame | None = None,
-    out_deg: DataFrame | None = None,
 ) -> DataFrame:
     """One PageRank power-iteration over a directed edge list — the
     canonical link-graph quality signal for web-scale corpus curation
@@ -272,27 +270,18 @@ def pagerank_step(
     nothing; nodes with no in-edges get the (1-d) floor via the
     right-side union. Driver steers iterations, data never leaves
     executors (same pattern as connected_components above).
-
-    ``nodes`` / ``out_deg`` let an iterating caller pass the
-    LOOP-INVARIANT node set and out-degree table in precomputed: both
-    depend only on the edge list, so recomputing them inside every power
-    iteration paid two edge-list aggregations per round for identical
-    results. ``pagerank`` below
-    builds each once over its staged edges.
     """
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
-    if nodes is None:
-        nodes = (
-            e.select(F.col("_src").alias("node"))
-            .unionByName(e.select(F.col("_dst").alias("node")))
-            .distinct()
-        )
+    nodes = (
+        e.select(F.col("_src").alias("node"))
+        .unionByName(e.select(F.col("_dst").alias("node")))
+        .distinct()
+    )
     if ranks is None:
         ranks = nodes.withColumn("rank", F.lit(1.0))
-    if out_deg is None:
-        out_deg = e.groupBy(F.col("_src").alias("node")).agg(
-            F.count(F.lit(1)).alias("out_deg")
-        )
+    out_deg = e.groupBy(F.col("_src").alias("node")).agg(
+        F.count(F.lit(1)).alias("out_deg")
+    )
     contrib = (
         e.join(ranks.join(out_deg, "node"), F.col("_src") == F.col("node"))
         .select(
@@ -338,31 +327,17 @@ def pagerank(
     # on ``_src`` — stage it once partitioned by the join key
     # (_stage_edges_by_key), so each round's contribution join plans the
     # edge leg exchange-free (only the node-sized rank table moves per
-    # round) and the out-degree aggregate below rides the same
+    # round) and each round's out-degree aggregate rides the same
     # partitioning without its own exchange.
     e = _stage_edges_by_key(
         edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
         "_src",
     )
-    nodes = (
-        e.select(F.col("_src").alias("node"))
-        .unionByName(e.select(F.col("_dst").alias("node")))
-        .distinct()
-    )
-    out_deg = e.groupBy(F.col("_src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    )
     ranks = None
     for _ in range(max_iter):
         # loop: each round reads only the previous round's ranks
         new_ranks = pagerank_step(
-            e,
-            ranks=ranks,
-            src="_src",
-            dst="_dst",
-            damping=damping,
-            nodes=nodes,
-            out_deg=out_deg,
+            e, ranks=ranks, src="_src", dst="_dst", damping=damping
         ).transform(stage.materialize_stage)
         # tol <= 0 pins exactly max_iter rounds (the q_graph_pagerank_k3
         # contract): the L-inf delta can never go below a non-positive
@@ -731,14 +706,15 @@ def k_core(
     leaf nodes peel away, the cohesive core stays.
 
     Returns (node, degree) for the surviving subgraph (degree = within-
-    core degree). Per round: one degree aggregation + two semi-joins to
-    restrict the edge list — O(|E|) per round, same cost shape as a
+    core degree). Per round: one degree aggregation (fixpoint mode's
+    probe runs a second) + two semi-joins to restrict the edge list —
+    O(|E|) per round, same cost shape as a
     PageRank step. Peeling is confluent (the k-core is unique and
     independent of removal order), so bounded-round results are a
     deterministic OVER-approximation that shrinks monotonically to the
     true core; fixpoint mode stops when an iteration removes nothing
-    (checked with a |nodes|-count per round, the connected_components
-    loop discipline).
+    (checked with a one-row count of below-k nodes per round, the
+    connected_components loop discipline).
     """
     sym = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
@@ -756,9 +732,9 @@ def k_core(
         keep = deg.where(F.col("deg") >= k).select("a")
         if rounds is None:
             # fixpoint reached iff no node falls below k: the semi-joins
-            # would keep every edge, so stop before paying them. deg has
-            # one row per surviving node, so both counts are deg-local.
-            if deg.count() == keep.count():
+            # would keep every edge, so stop before paying them
+            low = deg.agg(F.count_if(F.col("deg") < k)).first()[0]
+            if low == 0:
                 break
         # loop: each round reads only the previous round's edges
         cur = (
