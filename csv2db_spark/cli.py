@@ -301,7 +301,7 @@ def _target_schema(spark, conf: Config, user=None, password=None):
 
     from csv2db_spark.sink import (
         ParquetTableStore,
-        _jdbc_connection,
+        _jdbc_statement,
         _jdbc_table_exists,
     )
 
@@ -322,20 +322,13 @@ def _target_schema(spark, conf: Config, user=None, password=None):
         .load()
         .schema
     )
-    conn = _jdbc_connection(spark, conf.db_url, user, password)
-    try:
-        st = conn.createStatement()
-        try:
-            md = st.executeQuery(f"SELECT * FROM {table} WHERE 1=0").getMetaData()
-            no_nulls = spark._jvm.java.sql.ResultSetMetaData.columnNoNulls
-            not_null = [
-                md.isNullable(i) == no_nulls
-                for i in range(1, md.getColumnCount() + 1)
-            ]
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    with _jdbc_statement(spark, conf.db_url, user, password) as st:
+        md = st.executeQuery(f"SELECT * FROM {table} WHERE 1=0").getMetaData()
+        no_nulls = spark._jvm.java.sql.ResultSetMetaData.columnNoNulls
+        not_null = [
+            md.isNullable(i) == no_nulls
+            for i in range(1, md.getColumnCount() + 1)
+        ]
     return T.StructType(
         [
             T.StructField(f.name, f.dataType, not nn, f.metadata)
@@ -404,7 +397,7 @@ def resolve_auth(
 
 def run(conf: Config, spark=None, password: str = "") -> int:
     from csv2db_spark.ingest import STDIN_PATHS, ingest_csv
-    from csv2db_spark.sink import ParquetTableStore, write_jdbc
+    from csv2db_spark.sink import ParquetTableStore, _jdbc_statement, write_jdbc
 
     if spark is None:
         from csv2db_spark import get_spark
@@ -457,9 +450,6 @@ def run(conf: Config, spark=None, password: str = "") -> int:
             store.write(df, conf.table, conf.table_mode)
         n = store.read(conf.table).count()
     else:
-        auth_opts = {
-            k: v for k, v in (("user", user), ("password", pw)) if v
-        }
         with ProgressMeter(spark, in_bytes):
             write_jdbc(
                 df,
@@ -469,14 +459,12 @@ def run(conf: Config, spark=None, password: str = "") -> int:
                 user=user,
                 password=pw,
             )
-        n = (
-            spark.read.format("jdbc")
-            .option("url", conf.db_url)
-            .option("dbtable", conf.qualified_table)
-            .options(**auth_opts)
-            .load()
-            .count()
-        )
+        # one statement: Spark's JDBC source does not push a count down
+        # to Derby, and would ship every loaded row back through one task
+        with _jdbc_statement(spark, conf.db_url, user, pw) as st:
+            rs = st.executeQuery(f"SELECT COUNT(*) FROM {conf.qualified_table}")
+            rs.next()
+            n = rs.getLong(1)
     log.info("loaded %s: table %s now has %d rows", conf.file_name, conf.qualified_table, n)
     return 0
 

@@ -66,7 +66,8 @@ class ProgressMeter:
         while not self._stop.wait(self._interval):
             try:
                 done, total = self._poll_once()
-            except Exception:  # session torn down mid-poll: stop quietly
+            except Exception:  # e.g. the session torn down mid-poll
+                log.debug("progress meter stopped", exc_info=True)
                 return
             if total:
                 self.samples.append((done, total))

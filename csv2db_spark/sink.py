@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 from enum import Enum
 from pathlib import Path
 
@@ -146,14 +147,28 @@ def create_table_column_types(schema: T.StructType, dialect: str = "") -> str:
 def _jdbc_connection(spark: SparkSession, url: str, user, password):
     """Raw java.sql connection through the session's JVM — for the few
     statements Spark's writer cannot express (existence probe, DELETE
-    FROM). Works with any driver jar on the Spark classpath; Derby ships
-    with Spark, so the path is testable embedded."""
+    FROM, row count). Works with any driver jar on the Spark classpath;
+    Derby ships with Spark, so the path is testable embedded."""
     props = spark._jvm.java.util.Properties()
     if user:
         props.setProperty("user", user)
     if password:
         props.setProperty("password", password)
     return spark._jvm.java.sql.DriverManager.getConnection(url, props)
+
+
+@contextmanager
+def _jdbc_statement(spark: SparkSession, url: str, user, password):
+    """A java.sql Statement on a fresh connection; both closed on exit."""
+    conn = _jdbc_connection(spark, url, user, password)
+    try:
+        st = conn.createStatement()
+        try:
+            yield st
+        finally:
+            st.close()
+    finally:
+        conn.close()
 
 
 # SQLStates that mean "that relation is not there" for the dialects the
@@ -198,9 +213,7 @@ def _jdbc_table_exists(spark: SparkSession, url: str, table: str, user, password
     identifier resolution as Spark's own generated DDL/DML. Only a
     missing-relation SQLState counts as "does not exist"; every other
     failure re-raises."""
-    conn = _jdbc_connection(spark, url, user, password)
-    try:
-        st = conn.createStatement()
+    with _jdbc_statement(spark, url, user, password) as st:
         try:
             st.executeQuery(f"SELECT 1 AS probe FROM {table} WHERE 1=0")
             return True
@@ -208,22 +221,11 @@ def _jdbc_table_exists(spark: SparkSession, url: str, table: str, user, password
             if _sql_state(exc) in _MISSING_RELATION_SQLSTATES:
                 return False
             raise
-        finally:
-            st.close()
-    finally:
-        conn.close()
 
 
 def _jdbc_execute(spark: SparkSession, url: str, sql: str, user, password) -> None:
-    conn = _jdbc_connection(spark, url, user, password)
-    try:
-        st = conn.createStatement()
-        try:
-            st.executeUpdate(sql)
-        finally:
-            st.close()
-    finally:
-        conn.close()
+    with _jdbc_statement(spark, url, user, password) as st:
+        st.executeUpdate(sql)
 
 
 def write_jdbc(

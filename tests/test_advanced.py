@@ -162,6 +162,26 @@ def test_progress_meter_samples(spark):
     assert m2.samples == [] and m2._thread is None
 
 
+def test_progress_meter_logs_the_error_that_stops_it(caplog):
+    """A failed poll stops the meter, and the error is logged, not lost."""
+    import logging
+    import time
+
+    from csv2db_spark.progress import ProgressMeter
+
+    class Gone:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("session torn down")
+
+    with caplog.at_level(logging.DEBUG, logger="csv2db_spark.progress"):
+        with ProgressMeter(Gone(), interval=0.01) as m:
+            time.sleep(0.2)
+    assert not m._thread.is_alive() and m.samples == []
+    (rec,) = [r for r in caplog.records if r.name == "csv2db_spark.progress"]
+    assert rec.levelno == logging.DEBUG and "session torn down" in rec.exc_text
+
+
 def test_interpolate_linear_crafted(spark):
     import datetime as dt
 

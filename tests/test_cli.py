@@ -263,6 +263,59 @@ def test_end_to_end_stdin_to_derby(spark, tmp_path, config_path, monkeypatch):
         pass
 
 
+def test_jdbc_readback_counts_rows_without_a_spark_job(
+    spark, tmp_path, config_path, monkeypatch, caplog
+):
+    """After the write, the loaded row count comes from one COUNT(*) on
+    the database: Spark's JDBC source does not push a count down to
+    Derby, and a Spark count would read every row back through a task."""
+    import logging
+
+    from csv2db_spark import sink
+
+    name = "clireadback"
+    url = f"jdbc:derby:memory:{name};create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        conn.createStatement().executeUpdate("CREATE TABLE rb (id INTEGER, s VARCHAR(5))")
+    finally:
+        conn.close()
+    csv = tmp_path / "in.csv"
+    csv.write_text("ID,S\n1,a\n2,b\n3,c\n")
+    sc = spark.sparkContext
+    group = "spark.jobGroup.id"
+    write = sink.write_jdbc
+
+    def write_then_mark(*args, **kwargs):
+        write(*args, **kwargs)
+        sc.setLocalProperty(group, "cli-after-write")
+
+    monkeypatch.setattr(sink, "write_jdbc", write_then_mark)
+    prior = sc.getLocalProperty(group)
+    sc.setLocalProperty(group, "cli-until-write")
+    try:
+        with caplog.at_level(logging.INFO, logger="csv2db_spark.cli"):
+            rc = main(
+                ["--url", url, "-t", "rb", "-m", "as-is", "-i", str(csv), "--has-header"],
+                spark=spark,
+            )
+        assert rc == 0
+        tracker = sc.statusTracker()
+        assert tracker.getJobIdsForGroup("cli-until-write")  # the write's jobs
+        assert tracker.getJobIdsForGroup("cli-after-write") == []
+        assert any(
+            r.getMessage().endswith("table rb now has 3 rows") for r in caplog.records
+        ), [r.getMessage() for r in caplog.records]
+    finally:
+        sc.setLocalProperty(group, prior)
+        try:
+            spark._jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:memory:{name};drop=true"
+            )
+        except Exception:
+            pass  # 08006 "database dropped" is Derby's success signal
+
+
 def test_not_null_varchar_empty_cell_loads_empty_string(spark, tmp_path, config_path):
     """P8 takes "empty → NULL" only for a nullable target column, so the
     target's NOT NULL must survive the schema probe (Spark's JDBC source

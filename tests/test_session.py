@@ -1,10 +1,12 @@
-"""The driver JVM's class-data-sharing archive. Each test starts a fresh
+"""The engine session: the driver's per-call gateway cost, and the driver
+JVM's class-data-sharing archive. Each archive test starts a fresh
 Python process with its own ``XDG_CACHE_HOME``, since only a process that
 has not started a JVM yet can pick the JVM's options, and checks that the
 session loads rows whatever the cache holds."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 import shutil
@@ -152,3 +154,50 @@ def test_unwritable_cache_starts_normally(tmp_path):
     res = _session(tmp_path, cache)
     assert res["rows"] == 3
     assert res["cds"] == []
+
+
+# Py4J commands sent to build the load's cast over the 6 columns of
+# perfbench's load table: about 980 with PySpark's call-site capture,
+# 360 without it.
+CAST_BUILD_MAX_COMMANDS = 600
+
+
+def test_session_skips_call_site_capture(spark, tmp_path, monkeypatch):
+    """PySpark captures a Python call site on every Column method call
+    unless ``spark.python.sql.dataFrameDebugging.enabled`` is off, at
+    about 10 gateway round trips each. The engine session turns it off,
+    so building the load's cast stays under a bound on gateway commands."""
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import types as T
+
+    from csv2db_spark.ingest import align_and_cast, read_csv
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key, None) == "false"
+    assert is_debugging_enabled() is False
+
+    csv = tmp_path / "load.csv"
+    csv.write_text("ID,QTY,AMOUNT,TS,CODE,NOTE\n1,2,3.5,2020-01-01 00:00:00,A,b\n")
+    target = T.StructType([
+        T.StructField("ID", T.LongType(), False),
+        T.StructField("QTY", T.IntegerType()),
+        T.StructField("AMOUNT", T.DoubleType()),
+        T.StructField("TS", T.TimestampType()),
+        T.StructField("CODE", T.StringType(), False),
+        T.StructField("NOTE", T.StringType(), False),
+    ])
+    raw = read_csv(spark, str(csv), True)
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, []
+
+    def counting(*args, **kwargs):
+        sent.append(args[0])
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    df = align_and_cast(raw, target, True)
+    monkeypatch.undo()
+    assert len(sent) < CAST_BUILD_MAX_COMMANDS, len(sent)
+    assert df.collect() == [
+        (1, 2, 3.5, dt.datetime(2020, 1, 1), "A", "b")
+    ]
